@@ -66,13 +66,10 @@ def _ice_sequences(run_ids) -> list[int]:
 def last_extracted_sequence(spark: SparkSession, out_dir: str) -> int | None:
     """Highest snapshot sequence with a COMMITTED ice run, None if none.
 
-    The runs table is one tiny row per run; collecting it is O(#runs)
-    driver-side — the same class of metadata work as reading a version
-    file, not a data scan."""
-    committed = lineage.committed_run_ids(spark, out_dir)
-    if committed is None:
-        return None
-    return max(_ice_sequences(r.run_id for r in committed.collect()), default=None)
+    The runs table is one tiny object per run; reading it is O(#runs)
+    driver-side object reads — the same class of metadata work as reading
+    a version file, not a data scan."""
+    return max(_ice_sequences(lineage.committed_id_set(out_dir)), default=None)
 
 
 _DUP_BROADCAST_LIMIT = 2_000_000  # urls; ~100 MB broadcast worst case
@@ -181,10 +178,7 @@ def run_html_extraction_ice(
     # since >= tip as up_to_date, silently never extracting the published
     # delta (the CLAUDE.md published-sequence invariant)
     tip = table.published_sequence()
-    committed = lineage.committed_run_ids(spark, out_dir)
-    committed_ids = (
-        [r.run_id for r in committed.collect()] if committed is not None else []
-    )
+    committed_ids = lineage.committed_id_set(out_dir)
     committed_seq = max(_ice_sequences(committed_ids), default=None)
     since = None if full else committed_seq
     run_id = run_id_for(tip)
@@ -299,11 +293,7 @@ def apply_takedown(
     if not already:
         summary["table_delete"] = table.delete_rows(keys, sequence=sequence)
     run_id = f"{_TAKEDOWN_PREFIX}{sequence:012d}"
-    committed = lineage.committed_run_ids(spark, out_dir)
-    committed_ids = (
-        {r.run_id for r in committed.collect()} if committed is not None else set()
-    )
-    if run_id not in committed_ids:
+    if run_id not in lineage.committed_id_set(out_dir):
         keys.select("url").dropDuplicates().write.mode("overwrite").parquet(
             runfs.spark_path(f"{out_dir}/takedowns/run_id={run_id}")
         )

@@ -26,15 +26,20 @@ the sandbox has no Iceberg catalog, so plain parquet paths stand in):
     out_dir/lineage/
     out_dir/processed_docs/
     out_dir/quarantine/
+    out_dir/runs/            one marker object per committed run, put by the
+                             driver through runfs (no Spark job)
 """
 
 from __future__ import annotations
 
 import os
 import time
+import uuid
 from typing import Iterator
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
@@ -131,26 +136,32 @@ def require_supported_store(out_dir: str) -> None:
 require_local_store = require_supported_store
 
 
-def _exists(path: str) -> bool:
-    """True iff the dir holds COMMITTED parquet data Spark will read.
-    Files under Spark's in-flight `_temporary` (or any other _-/.-prefixed)
-    directories must not count: a crash mid-write leaves only those, and
-    treating them as data makes the read-back throw UNABLE_TO_INFER_SCHEMA
-    on every retry — wedging the exactly-once resume this module exists
-    for. Spark's own readers skip _-/.-prefixed paths; mirror that.
-    Runs on the store's runfs control plane (a recursive prefix listing),
-    so URI-schemed stores probe correctly."""
-    fs = runfs.fs_for(path)
+def _data_files(fs, path: str) -> list[str]:
+    """Paths RELATIVE to ``path`` of the committed parquet files Spark
+    will read under it. Files under Spark's in-flight `_temporary` (or any
+    other _-/.-prefixed) directories must not count: a crash mid-write
+    leaves only those, and treating them as data makes the read-back throw
+    UNABLE_TO_INFER_SCHEMA on every retry — wedging the exactly-once resume
+    this module exists for. Spark's own readers skip _-/.-prefixed paths;
+    mirror that. Runs on the store's runfs control plane (a recursive
+    prefix listing), so URI-schemed stores probe correctly."""
     if not fs.exists(path):
-        return False
+        return []
+    out = []
     for rel in fs.list_files(path):
         parts = rel.split("/")
         if any(p.startswith(("_", ".")) for p in parts):
             continue
         f = parts[-1]
         if f.endswith(".parquet") or f.startswith("part-"):
-            return True
-    return False
+            out.append(rel)
+    return out
+
+
+def _exists(path: str) -> bool:
+    """True iff the dir holds COMMITTED parquet data Spark will read
+    (see :func:`_data_files` for the skip rule)."""
+    return bool(_data_files(runfs.fs_for(path), path))
 
 
 def derive_replay_run_id(committed_ids, base_id: str) -> str:
@@ -181,6 +192,13 @@ def clear_stale_run_dirs(out_dir: str, run_id: str, tables) -> None:
 
 
 RUNS_MARKER_SCHEMA = "run_id string, input_pages long, questions_written long"
+_RUNS_MARKER_ARROW = pa.schema(
+    [
+        ("run_id", pa.string()),
+        ("input_pages", pa.int64()),
+        ("questions_written", pa.int64()),
+    ]
+)
 
 
 def append_run_marker(
@@ -194,34 +212,87 @@ def append_run_marker(
     every exactly-once store in the engine appends LAST. One source of
     truth: a schema or semantics change that landed in one hand-copied
     site but not another would silently desync the commit protocol the
-    whole design hangs on (review finding, round 3)."""
-    spark.createDataFrame(
-        [(run_id, int(input_pages), int(questions_written))],
-        RUNS_MARKER_SCHEMA,
-    ).write.mode("append").parquet(runfs.spark_path(f"{out_dir}/runs"))
+    whole design hangs on (review finding, round 3).
+
+    The row is serialized on the driver and published as one parquet
+    object through the store's runfs ``write_bytes`` — an atomic
+    whole-object put on every implementation, so a reader sees the whole
+    marker or none of it — under a name unique per call, which keeps the
+    table append-only. No Spark job runs (``spark`` is unused; the
+    signature is shared with every caller). Spark reads the file back with
+    exactly ``RUNS_MARKER_SCHEMA``."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(
+        pa.table(
+            {
+                "run_id": [run_id],
+                "input_pages": [int(input_pages)],
+                "questions_written": [int(questions_written)],
+            },
+            schema=_RUNS_MARKER_ARROW,
+        ),
+        buf,
+    )
+    runfs.fs_for(out_dir).write_bytes(
+        f"{out_dir}/runs/part-{uuid.uuid4().hex}.parquet",
+        buf.getvalue().to_pybytes(),
+    )
+
+
+def committed_id_set(out_dir: str) -> set[str]:
+    """run_ids of every COMMITTED run (empty when none): the ``run_id``
+    column of each marker file under ``runs/``, listed through runfs with
+    the :func:`_data_files` skip rule and read with pyarrow on the driver —
+    no Spark job. Reads markers written by this module and by the older
+    Spark append writer alike (same columns)."""
+    path = f"{out_dir}/runs"
+    fs = runfs.fs_for(path)
+    ids: set[str] = set()
+    for rel in _data_files(fs, path):
+        table = pq.read_table(
+            pa.BufferReader(fs.read_bytes(f"{path}/{rel}")), columns=["run_id"]
+        )
+        ids.update(table.column("run_id").to_pylist())
+    return ids
 
 
 def committed_run_ids(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = f"{out_dir}/runs"
-    if not _exists(path):
+    """The committed run_ids as a one-column ``run_id`` frame for
+    semi-joins, or None when nothing is committed. The frame is a
+    snapshot of :func:`committed_id_set` taken at call time, held in the
+    plan as a local relation: evaluating or joining it reads no file and
+    runs no scan job."""
+    ids = committed_id_set(out_dir)
+    if not ids:
         return None
-    return spark.read.parquet(runfs.spark_path(path)).select("run_id").distinct()
+    return spark.createDataFrame(
+        pa.table({"run_id": sorted(ids)}), "run_id string"
+    )
 
 
-def processed_doc_ids(spark: SparkSession, out_dir: str) -> DataFrame | None:
+def processed_doc_ids(
+    spark: SparkSession, out_dir: str, doc_id_type: str | None = None
+) -> DataFrame | None:
     """doc_ids of documents completed by COMMITTED runs only.
 
     A run's side outputs live under run_id=<id> directories; the tiny
     ``runs`` marker row is appended last and is the commit point. A crash
     anywhere before it leaves orphan run_id directories that neither this
     resume check nor `committed_questions` will ever read, and a retried
-    run with the same run_id overwrites them wholesale."""
+    run with the same run_id overwrites them wholesale.
+
+    ``doc_id_type`` (a Spark SQL type name) is the caller's known doc_id
+    type: the read then takes its schema as given instead of inferring it
+    from a footer, which costs a Spark job per call."""
     path = f"{out_dir}/processed_docs"
     committed = committed_run_ids(spark, out_dir)
     if committed is None or not _exists(path):
         return None
+    reader = spark.read
+    if doc_id_type is not None:
+        reader = reader.schema(f"doc_id {doc_id_type}, run_id string")
     return (
-        spark.read.parquet(runfs.spark_path(path))
+        reader.parquet(runfs.spark_path(path))
         .join(committed, "run_id", "left_semi")
         .select("doc_id")
         .distinct()
@@ -275,11 +346,7 @@ def run_extraction(
     Calling again over the same pages with a NEW run_id is a no-op: every
     document already committed is anti-joined away and nothing is written."""
     require_supported_store(out_dir)
-    prior = committed_run_ids(spark, out_dir)
-    if prior is not None:
-        run_id = derive_replay_run_id(
-            {r["run_id"] for r in prior.collect()}, run_id
-        )
+    run_id = derive_replay_run_id(committed_id_set(out_dir), run_id)
     if cfg.dedup_pages:
         # the batch entry point must honor the flag exactly like
         # extract_pages does — a duplicated re-crawl page otherwise doubles
@@ -292,7 +359,7 @@ def run_extraction(
     valid, quarantined = split_quarantine(meta)
     pv = valid.filter((F.col("kind") == "PV") & (F.col("page_idx") >= 1))
 
-    done = processed_doc_ids(spark, out_dir)
+    done = processed_doc_ids(spark, out_dir, "string")
     if done is not None:
         # no broadcast hint: processed_docs grows without bound across runs;
         # AQE broadcasts while it is small, shuffles (skew-free key) after
@@ -419,7 +486,7 @@ def run_extraction(
         )
 
         # COMMIT POINT — everything above is invisible to resume/readers
-        # until this tiny append lands. Quarantine-only runs commit too:
+        # until this tiny marker put lands. Quarantine-only runs commit too:
         # their rows must become visible to readers and to the dedup above.
         append_run_marker(spark, out_dir, run_id, n_pages, n_questions)
     finally:
@@ -577,13 +644,9 @@ def run_html_extraction(
     always pass an uncommitted id, so the guard is an identity for them
     and their pre-written fetch_log dirs keep their names)."""
     require_supported_store(out_dir)
-    prior = committed_run_ids(spark, out_dir)
-    if prior is not None:
-        run_id = derive_replay_run_id(
-            {r["run_id"] for r in prior.collect()}, run_id
-        )
+    run_id = derive_replay_run_id(committed_id_set(out_dir), run_id)
     work = pages.select("doc_id", "url", "html")
-    done = processed_doc_ids(spark, out_dir)
+    done = processed_doc_ids(spark, out_dir, "bigint")
     # definitely-missing detection: prior committed runs exist and the
     # anchors table does not -> those docs will never appear in it
     backfill_needed = bool(

@@ -49,11 +49,10 @@ Implementations:
 
 A real S3 port is this file plus ~60 lines of boto: implement the six
 primitives (`create_exclusive` = `put_object(..., IfNoneMatch="*")`),
-register under the scheme, and point `spark_path` at `s3a://`. One
-caveat carries over from Hadoop itself: `append_run_marker` publishes
-the commit object through a Spark append write, so a real object-store
-deployment should enable an object-store committer (e.g. the S3A
-magic committer) exactly as any Spark-on-S3 job does.
+register under the scheme, and point `spark_path` at `s3a://`. The
+commit object itself (`lineage.append_run_marker`) is a plain
+`write_bytes` put from the driver, never a Spark write, so the commit
+point needs no object-store committer.
 """
 
 from __future__ import annotations
@@ -81,8 +80,13 @@ def _atomic_publish(local_path: str, data: bytes, exclusive: bool) -> None:
     create-then-write window would let a concurrent reader observe, or a
     crash leave behind, a truncated object). pid alone is NOT
     attempt-unique — two concurrent commits in one driver process would
-    share the tmp file and the winner could publish the LOSER's payload."""
-    tmp = f"{local_path}.tmp.{os.getpid()}.{uuid.uuid4().hex[:12]}"
+    share the tmp file and the winner could publish the LOSER's payload.
+    The tmp name is dot-prefixed: a crash before the publish leaves it in
+    the target directory, where every reader (Spark's and
+    `lineage._data_files`) skips _-/.-prefixed names — a `part-*` leftover
+    would otherwise be read as a committed object."""
+    head, tail = os.path.split(local_path)
+    tmp = os.path.join(head, f".{tail}.tmp.{os.getpid()}.{uuid.uuid4().hex[:12]}")
     with open(tmp, "wb") as fh:
         fh.write(data)
         fh.flush()

@@ -346,7 +346,7 @@ def _read_staged(
     return out
 
 
-def _next_flush_run_id(spark: SparkSession, out_dir: str) -> str:
+def _next_flush_run_id(out_dir: str) -> str:
     """Unique flush run_id per invocation: ``flush_<n>`` with n = 1 + the
     highest committed flush index. Reusing a constant 'flush' id would make
     a second streaming invocation over the same --output (the supported
@@ -357,15 +357,13 @@ def _next_flush_run_id(spark: SparkSession, out_dir: str) -> str:
     correctly replayed under the same id (overwrite semantics)."""
     import re
 
-    from .lineage import committed_run_ids
+    from .lineage import committed_id_set
 
-    committed = committed_run_ids(spark, out_dir)
     last = -1
-    if committed is not None:
-        for r in committed.collect():
-            m = re.fullmatch(r"flush(?:_(\d+))?", r["run_id"])
-            if m:
-                last = max(last, int(m.group(1) or 0))
+    for run_id in committed_id_set(out_dir):
+        m = re.fullmatch(r"flush(?:_(\d+))?", run_id)
+        if m:
+            last = max(last, int(m.group(1) or 0))
     return f"flush_{last + 1}"
 
 
@@ -390,7 +388,7 @@ def flush_staging(
         return None
     staged = staged.select(*[f.name for f in PAGES_SCHEMA.fields])
     if run_id is None:
-        run_id = _next_flush_run_id(spark, out_dir)
+        run_id = _next_flush_run_id(out_dir)
     return run_extraction(spark, staged, cfg, out_dir, run_id=run_id)
 
 
@@ -443,7 +441,7 @@ def compact_staging(spark: SparkSession, out_dir: str) -> int:
         )
         live = live.join(qurls, "url", "left_anti")
     pv_live = live.filter(F.col("kind") == "PV")
-    done = processed_doc_ids(spark, out_dir)
+    done = processed_doc_ids(spark, out_dir, "string")
     if done is not None:
         pv_live = pv_live.join(done, "doc_id", "left_anti")
     unk_live = live.filter(F.col("kind").isNull())
@@ -493,11 +491,7 @@ def start_document_stream(
     whose (year, day, color) has no staged GB page is held back for an
     extra ``key_grace_s`` of event time before being released with the
     MISSING_ANSWER literal (the reference's own no-key behavior)."""
-    from .lineage import (
-        committed_run_ids,
-        derive_replay_run_id,
-        run_extraction,
-    )
+    from .lineage import committed_id_set, derive_replay_run_id, run_extraction
 
     staging = f"{out_dir}/staging"
     gb_store = f"{out_dir}/gb_store"
@@ -627,18 +621,14 @@ def start_document_stream(
         # batch_0 would overwrite the old incarnation's committed
         # questions/processed_docs while its marker still stands (the
         # html stream's documented derive_replay_run_id hazard)
-        committed = committed_run_ids(spark, out_dir)
-        ids = (
-            {r.run_id for r in committed.collect()}
-            if committed is not None
-            else set()
-        )
         run_extraction(
             spark,
             ready.select(*[f.name for f in PAGES_SCHEMA.fields]),
             cfg,
             out_dir,
-            run_id=derive_replay_run_id(ids, f"batch_{batch_id}"),
+            run_id=derive_replay_run_id(
+                committed_id_set(out_dir), f"batch_{batch_id}"
+            ),
         )
         if compact:
             compact_staging(spark, out_dir)
@@ -767,20 +757,11 @@ def start_html_stream(
         # (the f-suffix sorts after the base and before the next batch, so
         # current_main_content's string-ordered recency stays correct).
         base_id = f"html_batch_{batch_id:012d}"
-        committed = lineage.committed_run_ids(spark, out_dir)
-        # collect ONLY this batch family's ids — the full marker table
-        # grows by one row per batch forever, and an unfiltered collect
-        # per batch would be quadratic over a long tail's lifetime
-        ids = (
-            set()
-            if committed is None
-            else {
-                r.run_id
-                for r in committed.filter(
-                    F.col("run_id").startswith(base_id)
-                ).collect()
-            }
-        )
+        # keep ONLY this batch family's ids: the stats fold below reads
+        # the family's committed dirs
+        ids = {
+            i for i in lineage.committed_id_set(out_dir) if i.startswith(base_id)
+        }
         run_id = lineage.derive_replay_run_id(ids, base_id)
         summary = run_html_extraction(
             spark,

@@ -298,6 +298,90 @@ def test_quarantine_only_run_commits(spark, tmp_path):
     assert s2["quarantined"] == 0
 
 
+def _spark_jobs_started(spark, fn) -> int:
+    """Spark jobs ``fn`` starts, counted through the status tracker under
+    a fresh job group. A control job runs last in the same group: the
+    tracker is fed asynchronously and in order, so once the control job
+    is visible every earlier job of the group is too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-count probe")
+    try:
+        fn()
+        sc.parallelize([0], 1).count()  # control: exactly one job
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.time() + 30
+    while not (ids := sc.statusTracker().getJobIdsForGroup(group)):
+        assert time.time() < deadline, "control job never reached the tracker"
+        time.sleep(0.05)
+    return len(ids) - 1
+
+
+def test_marker_commit_and_committed_reads_run_no_spark_job(spark, tmp_path):
+    """The commit ledger is driver-side: publishing a marker and reading
+    the committed ids (as a set, as a frame, and collected) start no
+    Spark job, and neither does a known-schema resume read."""
+    from enem_spark import lineage
+
+    out = str(tmp_path / "ledger")
+    spark.createDataFrame([("d1",), ("d2",)], "doc_id string").write.parquet(
+        f"{out}/processed_docs/run_id=r1"
+    )
+
+    def commit_and_read():
+        lineage.append_run_marker(spark, out, "r1", 5, 3)
+        assert lineage.committed_id_set(out) == {"r1"}
+        ids = lineage.committed_run_ids(spark, out)
+        assert [r.run_id for r in ids.collect()] == ["r1"]
+        lineage.processed_doc_ids(spark, out, "string")
+
+    assert _spark_jobs_started(spark, commit_and_read) == 0
+    # the probe sees jobs when there are some
+    assert _spark_jobs_started(
+        spark, lambda: spark.read.parquet(f"{out}/processed_docs").collect()
+    ) >= 1
+    done = lineage.processed_doc_ids(spark, out, "string")
+    assert sorted(r.doc_id for r in done.collect()) == ["d1", "d2"]
+    assert done.schema.simpleString() == "struct<doc_id:string>"
+
+
+def test_driver_marker_reads_back_through_spark_with_marker_schema(spark, tmp_path):
+    import pyspark.sql.types as T
+
+    from enem_spark import lineage
+
+    out = str(tmp_path / "ledger")
+    lineage.append_run_marker(spark, out, "r1", 7, 4)
+    runs = spark.read.parquet(f"{out}/runs")
+    assert runs.schema == T._parse_datatype_string(lineage.RUNS_MARKER_SCHEMA)
+    assert [tuple(r) for r in runs.collect()] == [("r1", 7, 4)]
+
+
+def test_legacy_spark_marker_and_driver_marker_both_committed(spark, tmp_path):
+    """A runs/ table written by the older Spark append writer stays
+    readable next to driver-written markers."""
+    from enem_spark import lineage
+
+    out = str(tmp_path / "ledger")
+    spark.createDataFrame([("old", 1, 1)], lineage.RUNS_MARKER_SCHEMA).write.mode(
+        "append"
+    ).parquet(f"{out}/runs")
+    lineage.append_run_marker(spark, out, "new", 2, 2)
+    assert lineage.committed_id_set(out) == {"old", "new"}
+    committed = lineage.committed_run_ids(spark, out)
+    assert sorted(r.run_id for r in committed.collect()) == ["new", "old"]
+    both = spark.read.parquet(f"{out}/runs")
+    assert sorted(tuple(r) for r in both.collect()) == [
+        ("new", 2, 2),
+        ("old", 1, 1),
+    ]
+
+
 def test_document_stream_page_at_a_time(spark, pages_df, tmp_path):
     """Pages of one document straddle two micro-batches; the completeness
     horizon delays its release until all pages are staged, and the lineage

@@ -19,7 +19,10 @@ from pyspark.sql import functions as F
 from enem_spark import corpus, runfs
 from enem_spark.extract import ExtractorConfig, extract_questions
 from enem_spark.lineage import (
+    append_run_marker,
+    committed_id_set,
     committed_questions,
+    committed_run_ids,
     require_supported_store,
     run_extraction,
 )
@@ -84,6 +87,46 @@ def test_prefix_ops_are_idempotent_and_recursive(mockfs):
     assert not mockfs.exists(f"{base}/run_id=r1")
 
 
+def test_crashed_marker_put_leftover_is_invisible(spark, tmp_path, monkeypatch):
+    """A crash between the temp write and the publish of a marker put
+    leaves the temp file in ``runs/``. Its name must be one every reader
+    skips: a ``part-*`` leftover would read as a commit (or, truncated,
+    fail the read)."""
+    out = str(tmp_path / "out")
+    append_run_marker(spark, out, "r1")
+    temps = []
+    real_replace = os.replace
+
+    def spy(src, dst):
+        temps.append(src)
+        return real_replace(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(runfs.os, "replace", spy)
+        append_run_marker(spark, out, "r2")
+    assert len(temps) == 1
+    assert os.path.dirname(temps[0]) == f"{out}/runs"
+    # plant leftovers under that exact temp name: one holding a whole
+    # marker of a run that never committed, one truncated
+    other = str(tmp_path / "other")
+    append_run_marker(spark, other, "never")
+    (blob,) = os.listdir(f"{other}/runs")
+    with open(f"{other}/runs/{blob}", "rb") as fh:
+        whole = fh.read()
+    with open(temps[0], "wb") as fh:
+        fh.write(whole)
+    with open(f"{temps[0]}x", "wb") as fh:
+        fh.write(whole[:10])
+
+    assert committed_id_set(out) == {"r1", "r2"}
+    assert sorted(r.run_id for r in committed_run_ids(spark, out).collect()) == [
+        "r1",
+        "r2",
+    ]
+    read = spark.read.parquet(f"{out}/runs")
+    assert sorted(r.run_id for r in read.collect()) == ["r1", "r2"]
+
+
 def test_unregistered_scheme_refused_loudly(pages_df, spark):
     """s3:// (or any unregistered scheme) still fails FAST — the old
     silent-degradation mode (os.path returning False on URIs, resume
@@ -131,7 +174,8 @@ def test_mock_store_rerun_noop_and_resume(spark, pages_df, mockfs, tmp_path):
 
     # the control plane really went through the interface
     ops = {op for op, _ in mockfs.ops}
-    assert {"exists", "list_files", "delete_prefix"} <= ops
+    # (put/read: the runs marker is published and read back as objects)
+    assert {"exists", "list_files", "delete_prefix", "put", "read"} <= ops
     # and the data plane landed under the backing root, not a literal
     # 'mock:' directory in the cwd
     assert os.path.isdir(os.path.join(mockfs.root, "bucket", "run"))
