@@ -42,6 +42,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import runfs
 from .extract import (
@@ -191,14 +192,15 @@ def clear_stale_run_dirs(out_dir: str, run_id: str, tables) -> None:
         fs.delete_prefix(f"{out_dir}/{table}/run_id={run_id}")
 
 
-RUNS_MARKER_SCHEMA = "run_id string, input_pages long, questions_written long"
-_RUNS_MARKER_ARROW = pa.schema(
+RUNS_MARKER_SCHEMA = T.StructType(
     [
-        ("run_id", pa.string()),
-        ("input_pages", pa.int64()),
-        ("questions_written", pa.int64()),
+        T.StructField("run_id", T.StringType()),
+        T.StructField("input_pages", T.LongType()),
+        T.StructField("questions_written", T.LongType()),
     ]
 )
+# the file-level form of the same schema, derived so the two cannot drift
+_RUNS_MARKER_ARROW = to_arrow_schema(RUNS_MARKER_SCHEMA)
 
 
 def append_run_marker(
@@ -239,21 +241,38 @@ def append_run_marker(
     )
 
 
+# runs/ path -> {marker file (relative) -> the run_ids it holds}
+_MARKER_IDS: dict[str, dict[str, tuple[str, ...]]] = {}
+
+
 def committed_id_set(out_dir: str) -> set[str]:
     """run_ids of every COMMITTED run (empty when none): the ``run_id``
     column of each marker file under ``runs/``, listed through runfs with
     the :func:`_data_files` skip rule and read with pyarrow on the driver —
     no Spark job. Reads markers written by this module and by the older
-    Spark append writer alike (same columns)."""
+    Spark append writer alike (same columns).
+
+    A marker object is immutable under a unique name (a whole-object put,
+    never rewritten), so each file's ids are cached by name: a call costs
+    one listing plus reads of the markers that appeared since the last
+    call, not one read per commit ever made. The listing stays the source
+    of truth — a file that is gone drops out of the result and the
+    cache."""
     path = f"{out_dir}/runs"
     fs = runfs.fs_for(path)
-    ids: set[str] = set()
+    known = _MARKER_IDS.get(path, {})
+    current: dict[str, tuple[str, ...]] = {}
     for rel in _data_files(fs, path):
-        table = pq.read_table(
-            pa.BufferReader(fs.read_bytes(f"{path}/{rel}")), columns=["run_id"]
-        )
-        ids.update(table.column("run_id").to_pylist())
-    return ids
+        ids = known.get(rel)
+        if ids is None:
+            table = pq.read_table(
+                pa.BufferReader(fs.read_bytes(f"{path}/{rel}")),
+                columns=["run_id"],
+            )
+            ids = tuple(table.column("run_id").to_pylist())
+        current[rel] = ids
+    _MARKER_IDS[path] = current
+    return {i for ids in current.values() for i in ids}
 
 
 def committed_run_ids(spark: SparkSession, out_dir: str) -> DataFrame | None:
@@ -271,7 +290,7 @@ def committed_run_ids(spark: SparkSession, out_dir: str) -> DataFrame | None:
 
 
 def processed_doc_ids(
-    spark: SparkSession, out_dir: str, doc_id_type: str | None = None
+    spark: SparkSession, out_dir: str, doc_id_type: str
 ) -> DataFrame | None:
     """doc_ids of documents completed by COMMITTED runs only.
 
@@ -282,17 +301,15 @@ def processed_doc_ids(
     run with the same run_id overwrites them wholesale.
 
     ``doc_id_type`` (a Spark SQL type name) is the caller's known doc_id
-    type: the read then takes its schema as given instead of inferring it
-    from a footer, which costs a Spark job per call."""
+    type: the read takes its schema as given instead of inferring it from
+    a footer, which would cost a Spark job per call."""
     path = f"{out_dir}/processed_docs"
     committed = committed_run_ids(spark, out_dir)
     if committed is None or not _exists(path):
         return None
-    reader = spark.read
-    if doc_id_type is not None:
-        reader = reader.schema(f"doc_id {doc_id_type}, run_id string")
     return (
-        reader.parquet(runfs.spark_path(path))
+        spark.read.schema(f"doc_id {doc_id_type}, run_id string")
+        .parquet(runfs.spark_path(path))
         .join(committed, "run_id", "left_semi")
         .select("doc_id")
         .distinct()

@@ -54,23 +54,12 @@ def sig_run_id(perms: int, bands: int, n: int) -> str:
     return f"sig{perms}x{bands}_{n:06d}"
 
 
-def _committed_sig_runs(
-    spark: SparkSession,
-    out_dir: str,
-    committed: DataFrame | None = None,
-) -> list[tuple[int, int, int]]:
-    """(perms, bands, n) per COMMITTED sig run. The runs table is one tiny
-    row per run — collecting it is driver-side metadata work, same class as
-    icerun.last_extracted_sequence. Pass ``committed`` (the
-    committed_run_ids frame) when the caller already read it — the table
-    is tiny, but one metadata scan per call beats three."""
-    if committed is None:
-        committed = lineage.committed_run_ids(spark, out_dir)
-    if committed is None:
-        return []
+def _committed_sig_runs(committed: set[str]) -> list[tuple[int, int, int]]:
+    """(perms, bands, n) per COMMITTED sig run, parsed from the run ids of
+    a lineage.committed_id_set snapshot."""
     out = []
-    for r in committed.collect():
-        m = _RUN_RE.match(r.run_id)
+    for run_id in committed:
+        m = _RUN_RE.match(run_id)
         if m:
             out.append((int(m.group(1)), int(m.group(2)), int(m.group(3))))
     return out
@@ -93,15 +82,16 @@ def committed_signatures(
     out_dir: str,
     perms: int = textops.MINHASH_PERMS,
     bands: int = textops.LSH_BANDS,
-    committed: DataFrame | None = None,
+    committed: set[str] | None = None,
 ) -> DataFrame | None:
     """Reader view of the signature store restricted to committed runs:
     (doc_id, mh0..mh{perms-1}), or None when no committed sig run exists.
-    Pass ``committed`` (the committed_run_ids frame) when the caller
-    already read it — one runs-table scan per maintenance step, not three."""
+    Pass ``committed`` (the lineage.committed_id_set snapshot) when the
+    caller already read it — one ledger listing per maintenance step, not
+    three."""
     if committed is None:
-        committed = lineage.committed_run_ids(spark, out_dir)
-    runs = _committed_sig_runs(spark, out_dir, committed)
+        committed = lineage.committed_id_set(out_dir)
+    runs = _committed_sig_runs(committed)
     _check_config(runs, perms, bands)
     path = f"{out_dir}/{SIG_TABLE}"
     fs = runfs.fs_for(out_dir)
@@ -113,11 +103,10 @@ def committed_signatures(
     # runs only), and a bare directory read would let schema inference
     # resolve that orphan's narrower/wider mh column set — an
     # AnalysisException on mh{perms-1}, or silently null-padded signatures
-    run_ids = {r.run_id for r in committed.select("run_id").collect()}
     paths = [
         runfs.spark_path(f"{path}/{d}")
         for d in fs.list_names(path)
-        if d.startswith("run_id=") and d.split("=", 1)[1] in run_ids
+        if d.startswith("run_id=") and d.split("=", 1)[1] in committed
     ]
     if not paths:
         return None
@@ -145,8 +134,8 @@ def update_signature_index(
     dir must not erase a previous attempt's output — lineage invariant);
     there is no watermark to advance here because the anti-join IS the
     resume cursor."""
-    committed = lineage.committed_run_ids(spark, out_dir)
-    runs = _committed_sig_runs(spark, out_dir, committed)
+    committed = lineage.committed_id_set(out_dir)
+    runs = _committed_sig_runs(committed)
     _check_config(runs, perms, bands)
     if source is None:
         main = lineage.committed_main_content(spark, out_dir)

@@ -459,10 +459,10 @@ def _store_assignments(
     from . import lineage
 
     spark = base.sparkSession
-    # ONE committed-runs snapshot for both readers: halves the runs-table
-    # metadata jobs per query AND pins cents + assignments to the same
-    # commit point (two default-None reads each re-collect the table)
-    committed = lineage.committed_run_ids(spark, index_store)
+    # ONE committed-runs snapshot for both readers: halves the ledger
+    # reads per query AND pins cents + assignments to the same commit
+    # point (two default-None reads each re-list the ledger)
+    committed = lineage.committed_id_set(index_store)
     cents = vecindex.committed_centroids(
         spark, index_store, n_cells, dim, committed
     )

@@ -62,20 +62,13 @@ def stats_run_id(p: int, sub_bits: int, n: int, compaction: bool = False) -> str
 
 
 def _committed_stats_runs(
-    spark: SparkSession,
-    out_dir: str,
-    committed: DataFrame | None = None,
+    committed: set[str],
 ) -> list[tuple[int, int, int, bool]]:
-    """(hll_p, sub_bits, n, is_compaction) per COMMITTED stats run (tiny
-    driver-side metadata collect, same class as
-    sigindex._committed_sig_runs)."""
-    if committed is None:
-        committed = lineage.committed_run_ids(spark, out_dir)
-    if committed is None:
-        return []
+    """(hll_p, sub_bits, n, is_compaction) per COMMITTED stats run, parsed
+    from the run ids of a lineage.committed_id_set snapshot."""
     out = []
-    for r in committed.collect():
-        m = _RUN_RE.match(r.run_id)
+    for run_id in committed:
+        m = _RUN_RE.match(run_id)
         if m:
             out.append(
                 (
@@ -179,14 +172,14 @@ def committed_stats(
     out_dir: str,
     p: int = textops.HLL_P,
     sub_bits: int = textops.QSKETCH_SUB_BITS,
-    committed: DataFrame | None = None,
+    committed: set[str] | None = None,
 ) -> DataFrame | None:
     """MERGED state over all committed runs: one row per (grp, sketch,
     slot) — max for hll registers, sum for histograms/counters. None when
     no committed stats run exists."""
     if committed is None:
-        committed = lineage.committed_run_ids(spark, out_dir)
-    runs = _committed_stats_runs(spark, out_dir, committed)
+        committed = lineage.committed_id_set(out_dir)
+    runs = _committed_stats_runs(committed)
     _check_config(runs, p, sub_bits)
     state = _active_table(
         spark, out_dir, STATS_TABLE, _active_run_ids(runs)
@@ -237,8 +230,8 @@ def update_corpus_stats(
     "up_to_date": bool}. Empty deltas write nothing and commit nothing
     (lineage invariant: an empty overwrite of a reused run_id dir must not
     erase a previous attempt's output)."""
-    committed = lineage.committed_run_ids(spark, out_dir)
-    runs = _committed_stats_runs(spark, out_dir, committed)
+    committed = lineage.committed_id_set(out_dir)
+    runs = _committed_stats_runs(committed)
     _check_config(runs, p, sub_bits)
     docs = source.select("doc_id", group_col, "text", "n_chars")
     seen = _active_table(spark, out_dir, DOCS_TABLE, _active_run_ids(runs))
@@ -289,8 +282,8 @@ def folded_doc_ids(spark: SparkSession, out_dir: str) -> DataFrame | None:
     store is supposed to profile detects a backfill gap (runs committed
     before profiling was turned on). Refuses a mixed-config store
     (:func:`_require_single_config`)."""
-    committed = lineage.committed_run_ids(spark, out_dir)
-    runs = _committed_stats_runs(spark, out_dir, committed)
+    committed = lineage.committed_id_set(out_dir)
+    runs = _committed_stats_runs(committed)
     _require_single_config({(p, s) for p, s, _, _ in runs}, "stats")
     return _active_table(spark, out_dir, DOCS_TABLE, _active_run_ids(runs))
 
@@ -318,8 +311,8 @@ def compact_stats(
     active set reaches that many runs (default 2 = whenever there is
     anything to merge — right for an end-of-stream-job compaction of many
     micro-batch runs, too eager for a nightly tick over a huge table)."""
-    committed = lineage.committed_run_ids(spark, out_dir)
-    runs = _committed_stats_runs(spark, out_dir, committed)
+    committed = lineage.committed_id_set(out_dir)
+    runs = _committed_stats_runs(committed)
     _check_config(runs, p, sub_bits)
     active = _active_run_ids(runs)
     if len(active) < max(min_runs, 2):
@@ -453,17 +446,11 @@ def term_run_id(
 
 
 def _committed_term_runs(
-    spark: SparkSession,
-    out_dir: str,
-    committed: DataFrame | None = None,
+    committed: set[str],
 ) -> list[tuple[int, int, int, int, bool]]:
-    if committed is None:
-        committed = lineage.committed_run_ids(spark, out_dir)
-    if committed is None:
-        return []
     out = []
-    for r in committed.collect():
-        m = _TERM_RUN_RE.match(r.run_id)
+    for run_id in committed:
+        m = _TERM_RUN_RE.match(run_id)
         if m:
             out.append(
                 tuple(int(g) for g in m.groups()[:4]) + (m.group(5) == "c",)
@@ -510,8 +497,8 @@ def folded_term_doc_ids(spark: SparkSession, out_dir: str) -> DataFrame | None:
     the stores share only the runs marker table). Lets callers pre-filter
     a corpus frame to the unfolded delta before materializing text.
     Refuses a mixed-config store (:func:`_require_single_config`)."""
-    committed = lineage.committed_run_ids(spark, out_dir)
-    runs = _committed_term_runs(spark, out_dir, committed)
+    committed = lineage.committed_id_set(out_dir)
+    runs = _committed_term_runs(committed)
     _require_single_config({r[:3] for r in runs}, "term")
     return _active_table(
         spark, out_dir, TERM_DOCS_TABLE, _active_term_ids(runs)
@@ -532,8 +519,8 @@ def update_term_sketch(
     registers and its sampled tokens to the candidate set. State written
     per run: <= depth*width register rows per group + the delta's sampled
     vocabulary — never the token stream."""
-    committed = lineage.committed_run_ids(spark, out_dir)
-    runs = _committed_term_runs(spark, out_dir, committed)
+    committed = lineage.committed_id_set(out_dir)
+    runs = _committed_term_runs(committed)
     _check_term_config(runs, depth, width, sample_mod)
     docs = source.select("doc_id", group_col, "text")
     seen = _active_table(
@@ -583,8 +570,8 @@ def top_term_report(
     candidates by distinct union, then the same estimate+rank kernel as
     the one-shot cms_topk (shared functions, so the two paths cannot
     drift). Never re-reads committed text."""
-    committed = lineage.committed_run_ids(spark, out_dir)
-    runs = _committed_term_runs(spark, out_dir, committed)
+    committed = lineage.committed_id_set(out_dir)
+    runs = _committed_term_runs(committed)
     _check_term_config(runs, depth, width, sample_mod)
     if not runs:
         raise ValueError(f"no committed term run under {out_dir}")
@@ -622,8 +609,8 @@ def compact_terms(
     rule: a crash after the commit leaves invisible garbage, never a
     double count. Same ``min_runs`` amortization: the rewrite is
     O(cursor + sampled vocabulary), so fire it once enough runs accrue."""
-    committed = lineage.committed_run_ids(spark, out_dir)
-    runs = _committed_term_runs(spark, out_dir, committed)
+    committed = lineage.committed_id_set(out_dir)
+    runs = _committed_term_runs(committed)
     _check_term_config(runs, depth, width, sample_mod)
     active = _active_term_ids(runs)
     if len(active) < max(min_runs, 2):

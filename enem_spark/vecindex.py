@@ -73,20 +73,12 @@ def srp_run_id(bits: int, tables: int, dim: int, n: int) -> str:
     return f"srp{bits}x{tables}d{dim}_{n:06d}"
 
 
-def _committed_ivf_runs(
-    spark: SparkSession,
-    out_dir: str,
-    committed: DataFrame | None = None,
-) -> list[tuple[int, int, int]]:
-    """(n_cells, dim, n) per COMMITTED ivf run — driver-side metadata work
-    over the tiny runs table, same class as sigindex._committed_sig_runs."""
-    if committed is None:
-        committed = lineage.committed_run_ids(spark, out_dir)
-    if committed is None:
-        return []
+def _committed_ivf_runs(committed: set[str]) -> list[tuple[int, int, int]]:
+    """(n_cells, dim, n) per COMMITTED ivf run, parsed from the run ids of
+    a lineage.committed_id_set snapshot."""
     out = []
-    for r in committed.collect():
-        m = _RUN_RE.match(r.run_id)
+    for run_id in committed:
+        m = _RUN_RE.match(run_id)
         if m:
             out.append((int(m.group(1)), int(m.group(2)), int(m.group(3))))
     return out
@@ -105,10 +97,9 @@ def _check_config(
 
 
 def _committed_run_dirs(
-    spark: SparkSession,
     out_dir: str,
     table: str,
-    committed: DataFrame,
+    committed: set[str],
 ) -> list[str]:
     """Spark paths of ``table``'s run dirs restricted to COMMITTED run ids
     — never a bare directory read: a crashed attempt under a different
@@ -118,11 +109,10 @@ def _committed_run_dirs(
     fs = runfs.fs_for(out_dir)
     if not fs.exists(path):
         return []
-    run_ids = {r.run_id for r in committed.select("run_id").collect()}
     return [
         runfs.spark_path(f"{path}/{d}")
         for d in fs.list_names(path)
-        if d.startswith("run_id=") and d.split("=", 1)[1] in run_ids
+        if d.startswith("run_id=") and d.split("=", 1)[1] in committed
     ]
 
 
@@ -131,19 +121,19 @@ def committed_centroids(
     out_dir: str,
     n_cells: int = simsearch.IVF_CELLS,
     dim: int = simsearch.SRP_DIM,
-    committed: DataFrame | None = None,
+    committed: set[str] | None = None,
 ) -> DataFrame | None:
     """The pinned centroid table (cent_id, cvec, cnorm), or None when no
     committed ivf run exists. Written once by the creation run (n=1);
     doubles round-trip parquet exactly, so scores against stored
     centroids are bit-identical to scores against fresh ones."""
     if committed is None:
-        committed = lineage.committed_run_ids(spark, out_dir)
-    runs = _committed_ivf_runs(spark, out_dir, committed)
+        committed = lineage.committed_id_set(out_dir)
+    runs = _committed_ivf_runs(committed)
     _check_config(runs, n_cells, dim)
     if not runs:
         return None
-    paths = _committed_run_dirs(spark, out_dir, CENT_TABLE, committed)
+    paths = _committed_run_dirs(out_dir, CENT_TABLE, committed)
     if not paths:
         return None
     return spark.read.parquet(*paths)
@@ -154,17 +144,17 @@ def committed_assignments(
     out_dir: str,
     n_cells: int = simsearch.IVF_CELLS,
     dim: int = simsearch.SRP_DIM,
-    committed: DataFrame | None = None,
+    committed: set[str] | None = None,
 ) -> DataFrame | None:
     """Reader view of the assignment store restricted to committed runs:
     (vec_id, cell), or None when no committed ivf run exists."""
     if committed is None:
-        committed = lineage.committed_run_ids(spark, out_dir)
-    runs = _committed_ivf_runs(spark, out_dir, committed)
+        committed = lineage.committed_id_set(out_dir)
+    runs = _committed_ivf_runs(committed)
     _check_config(runs, n_cells, dim)
     if not runs:
         return None
-    paths = _committed_run_dirs(spark, out_dir, ASSIGN_TABLE, committed)
+    paths = _committed_run_dirs(out_dir, ASSIGN_TABLE, committed)
     if not paths:
         return None
     return spark.read.parquet(*paths)
@@ -189,8 +179,8 @@ def update_ivf_index(
     deltas write nothing and commit nothing (lineage invariant); the
     anti-join IS the resume cursor."""
     dim = simsearch._resolve_dim(source, dim)
-    committed = lineage.committed_run_ids(spark, out_dir)
-    runs = _committed_ivf_runs(spark, out_dir, committed)
+    committed = lineage.committed_id_set(out_dir)
+    runs = _committed_ivf_runs(committed)
     _check_config(runs, n_cells, dim)
     creating = not runs
     base = simsearch.with_norm(source)
@@ -249,19 +239,13 @@ def update_ivf_index(
 
 
 def _committed_srp_runs(
-    spark: SparkSession,
-    out_dir: str,
-    committed: DataFrame | None = None,
+    committed: set[str],
 ) -> list[tuple[int, int, int, int]]:
     """(bits, tables, dim, n) per COMMITTED srp run; ivf-family ids fall
     through the regex, so the two families never see each other."""
-    if committed is None:
-        committed = lineage.committed_run_ids(spark, out_dir)
-    if committed is None:
-        return []
     out = []
-    for r in committed.collect():
-        m = _SRP_RUN_RE.match(r.run_id)
+    for run_id in committed:
+        m = _SRP_RUN_RE.match(run_id)
         if m:
             out.append(tuple(int(m.group(i)) for i in (1, 2, 3, 4)))
     return out
@@ -287,19 +271,19 @@ def committed_srp_tags(
     bits: int = simsearch.SRP_BITS,
     tables: int = simsearch.SRP_TABLES,
     dim: int = simsearch.SRP_DIM,
-    committed: DataFrame | None = None,
+    committed: set[str] | None = None,
 ) -> DataFrame | None:
     """Reader view of the tag store restricted to committed runs:
     (vec_id, table, bucket) — ``tables`` rows per vector, each bucket a
     ``bits``-char sign string — or None when no committed srp run
     exists."""
     if committed is None:
-        committed = lineage.committed_run_ids(spark, out_dir)
-    runs = _committed_srp_runs(spark, out_dir, committed)
+        committed = lineage.committed_id_set(out_dir)
+    runs = _committed_srp_runs(committed)
     _check_srp_config(runs, bits, tables, dim)
     if not runs:
         return None
-    paths = _committed_run_dirs(spark, out_dir, SRP_TABLE, committed)
+    paths = _committed_run_dirs(out_dir, SRP_TABLE, committed)
     if not paths:
         return None
     return spark.read.parquet(*paths)
@@ -320,8 +304,8 @@ def update_srp_index(
     (simsearch.srp_config_vectors), which is exactly what the run-id
     config pin guarantees the store was built with."""
     dim = simsearch._resolve_dim(source, dim)
-    committed = lineage.committed_run_ids(spark, out_dir)
-    runs = _committed_srp_runs(spark, out_dir, committed)
+    committed = lineage.committed_id_set(out_dir)
+    runs = _committed_srp_runs(committed)
     _check_srp_config(runs, bits, tables, dim)
     base = simsearch.with_norm(source)
     existing = committed_srp_tags(spark, out_dir, bits, tables, dim, committed)

@@ -358,7 +358,7 @@ def test_driver_marker_reads_back_through_spark_with_marker_schema(spark, tmp_pa
     out = str(tmp_path / "ledger")
     lineage.append_run_marker(spark, out, "r1", 7, 4)
     runs = spark.read.parquet(f"{out}/runs")
-    assert runs.schema == T._parse_datatype_string(lineage.RUNS_MARKER_SCHEMA)
+    assert runs.schema == lineage.RUNS_MARKER_SCHEMA
     assert [tuple(r) for r in runs.collect()] == [("r1", 7, 4)]
 
 

@@ -127,6 +127,40 @@ def test_crashed_marker_put_leftover_is_invisible(spark, tmp_path, monkeypatch):
     assert sorted(r.run_id for r in read.collect()) == ["r1", "r2"]
 
 
+def test_committed_reads_fetch_only_new_markers(spark, mockfs):
+    """A long-lived out_dir gains one marker per commit. Re-reading the
+    ledger lists runs/ once and fetches only markers it has not read
+    before, so a call does not cost one GET per commit ever made."""
+    out = "mock://bucket/ledger"
+    for i in range(30):
+        append_run_marker(spark, out, f"r{i:02d}")
+
+    def reads(fn):
+        start = len(mockfs.ops)
+        got = fn()
+        new = mockfs.ops[start:]
+        return got, sum(op == "read" for op, _ in new), new
+
+    every = {f"r{i:02d}" for i in range(30)}
+    got, n_first, _ = reads(lambda: committed_id_set(out))
+    assert got == every and n_first <= 30
+    got, n, ops = reads(lambda: committed_id_set(out))
+    assert got == every and n == 0
+    assert [op for op, _ in ops if op == "list_files"] == ["list_files"]
+
+    append_run_marker(spark, out, "r30")
+    got, n, _ = reads(lambda: committed_id_set(out))
+    assert got == every | {"r30"} and n == 1
+
+    # the listing stays the source of truth: a vanished marker drops out
+    # (crash-before-commit replays delete runs/ wholesale)
+    mockfs.delete_prefix(f"{out}/runs")
+    got, n, _ = reads(lambda: committed_id_set(out))
+    assert got == set() and n == 0
+    append_run_marker(spark, out, "r00")
+    assert committed_id_set(out) == {"r00"}
+
+
 def test_unregistered_scheme_refused_loudly(pages_df, spark):
     """s3:// (or any unregistered scheme) still fails FAST — the old
     silent-degradation mode (os.path returning False on URIs, resume
