@@ -703,132 +703,6 @@ def update_big_md(summary: dict, path: str = "BENCH.md") -> None:
     )
 
 
-def run_regression_ab(sf_dir: str, cpus: str, trials: int = 5) -> dict:
-    """Matched-probe jitter A/B for the three r3->r4 raw per-query
-    regressions (bucketed_join 1.27x, kmeans_clusters 1.13x,
-    html_clean_corpus 1.09x — VERDICT r4 "What's wrong" #1): run each
-    query ``trials`` times in ONE session with hardware probes
-    bracketing each query's block, after untimed staging. The exoneration
-    logic: r3's window probed 7.13 M-ops/s vs r4's ~20 — ~2.8x slower
-    hardware — yet these queries got SLOWER raw in r4, so they are
-    driver-latency-bound (planning, scheduling, catalog), where probe
-    normalization does not apply; what decides the question is the
-    WITHIN-WINDOW jitter band (max/min over back-to-back identical
-    trials): a cross-round delta smaller than the same-window band
-    carries no code-change signal. bucketed_join additionally gets the
-    structural fix (store staging split out of the timed cell, reported
-    as ``stage_bucketed_sec``)."""
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    import statistics
-
-    import __spark_entry__ as entry_mod
-    from enem_spark import bucketstore
-    from enem_spark.session import get_spark
-
-    n_cores = int(cpus) if str(cpus).isdigit() else (os.cpu_count() or 8)
-    spark = get_spark("enem_spark_regab", cores=cpus)
-    qmap = entry_mod.queries()
-    t0 = time.perf_counter()
-    bucketstore.stage_bucketed_pair(spark, sf_dir)
-    stage_bucketed_sec = round(time.perf_counter() - t0, 3)
-
-    out_rows = []
-    for name in ("bucketed_join", "kmeans_clusters", "html_clean_corpus"):
-        qmap[name](spark, sf_dir).count()  # warm codegen/workers, untimed
-        spark.catalog.clearCache()
-        probe_before = _mp_probe(min(n_cores, os.cpu_count() or 8))
-        times = []
-        for _ in range(trials):
-            t1 = time.perf_counter()
-            qmap[name](spark, sf_dir).count()
-            times.append(round(time.perf_counter() - t1, 3))
-            spark.catalog.clearCache()
-        probe_after = _mp_probe(min(n_cores, os.cpu_count() or 8))
-        out_rows.append(
-            {
-                "query": name,
-                "trials_sec": times,
-                "min": min(times),
-                "median": round(statistics.median(times), 3),
-                "max": max(times),
-                "jitter_band": round(max(times) / min(times), 3),
-                "hw_probe_before": probe_before,
-                "hw_probe_after": probe_after,
-            }
-        )
-    return {
-        "sf": _sf_from_dir(sf_dir),
-        "cpus": cpus,
-        "trials": trials,
-        "stage_bucketed_sec": stage_bucketed_sec,
-        "rows": out_rows,
-        "r3_raw": {
-            "bucketed_join": 0.806,
-            "kmeans_clusters": 2.866,
-            "html_clean_corpus": 1.544,
-        },
-        "r4_raw": {
-            "bucketed_join": 1.026,
-            "kmeans_clusters": 3.236,
-            "html_clean_corpus": 1.679,
-        },
-    }
-
-
-def update_regression_ab_md(summary: dict, path: str = "BENCH.md") -> None:
-    lines = [
-        "## Per-query regression A/B (r3->r4 raw deltas)",
-        "",
-        "The three r3->r4 raw regressions re-measured: back-to-back",
-        f"identical trials ({summary['trials']} per query) in one session,",
-        "hardware probes bracketing each query's block, after untimed",
-        "staging. bucketed_join's one-time bucketBy store write is now",
-        "split out of the timed cell in run_bench (reported as",
-        f"`stage_bucketed_pair` beside ice_setup; here {summary['stage_bucketed_sec']} s).",
-        "",
-        "| query | r3 raw s | r4 raw s | r4/r3 | now min s | now median s | now max s | same-window jitter (max/min) | probes |",
-        "|---|---|---|---|---|---|---|---|---|",
-    ]
-    for r in summary["rows"]:
-        q = r["query"]
-        r3v, r4v = summary["r3_raw"][q], summary["r4_raw"][q]
-        lines.append(
-            f"| {q} | {r3v} | {r4v} | {round(r4v / r3v, 2)} | {r['min']} | "
-            f"{r['median']} | {r['max']} | {r['jitter_band']} | "
-            f"{r['hw_probe_before']}/{r['hw_probe_after']} |"
-        )
-    bands = {r["query"]: r["jitter_band"] for r in summary["rows"]}
-    covered = [
-        q
-        for q in bands
-        if bands[q] >= summary["r4_raw"][q] / summary["r3_raw"][q]
-    ]
-    back_at_r3 = [
-        r["query"]
-        for r in summary["rows"]
-        if r["min"] <= summary["r3_raw"][r["query"]]
-    ]
-    lines += [
-        "",
-        "Reading: r3's probe (7.13 M-ops/s) vs r4's (~20) says r4's window",
-        "had ~2.8x FASTER hardware, yet these queries ran slower raw — so",
-        "they are dominated by driver-side latency (planning, scheduling,",
-        "catalog), where CPU-probe normalization does not apply. The",
-        "decidable question is whether the cross-round delta exceeds the",
-        "same-window jitter of back-to-back identical runs. Queries whose",
-        f"r4/r3 ratio sits inside the measured band: {', '.join(covered) or 'none'}.",
-        "Queries whose CURRENT best run is at-or-below the r3 raw value",
-        f"(i.e. back at r3 speed in this window): {', '.join(back_at_r3) or 'none'}.",
-        "For bucketed_join the r4 number additionally included the one-time",
-        "bucketBy store writes (fresh session catalog) now excluded",
-        "structurally from the sweep.",
-        "",
-    ]
-    _upsert_section(
-        path, "## Per-query regression A/B (r3->r4 raw deltas)", "\n".join(lines)
-    )
-
-
 def run_sig_store_ab(sf_dir: str, cpus: str, mult: int = 4, trials: int = 2) -> dict:
     """A/B the LSH pair stage re-signing the corpus per query (fresh)
     against reading the committed signature index (``sig_store=`` — the
@@ -1298,7 +1172,7 @@ def run_html_bench(sf_dir: str, cpus: str) -> dict:
 def run_streaming_bench(sf_dir: str, cpus: str) -> dict:
     """Streaming-ingest throughput: the SAME stored html pages table as
     run_html_bench, but driven through `start_html_stream`'s exactly-once
-    foreachBatch protocol — availableNow catch-up in ~8 micro-batches,
+    foreachBatch protocol — availableNow catch-up in a few micro-batches,
     each paying extraction + the event-time fetch_log + the run-marker
     commit, with url dedup state held inside the watermark. Every timed
     run uses a FRESH output + checkpoint: the protocol's resume would
@@ -1352,11 +1226,10 @@ def run_streaming_bench(sf_dir: str, cpus: str) -> dict:
         [f for f in os.listdir(store) if f.endswith(".parquet")]
     )
     per_trigger = max(1, n_files // target)
-    n_batches = -(-n_files // per_trigger)
     runs = []
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     base = tempfile.mkdtemp(prefix="enem_streambench_")
-    n_main = 0
+    n_main = n_batches = 0
     try:
         # run 0 is the untimed warmup (worker spin-up, codegen, Arrow)
         for i in range(n_runs + 1):
@@ -1368,11 +1241,18 @@ def run_streaming_bench(sf_dir: str, cpus: str) -> dict:
             q = start_html_stream(stream, out, f"{out}/_checkpoint")
             q.awaitTermination()
             wall = round(time.perf_counter() - t0, 3)
+            # observed, not planned: batches that read input
+            n_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
             main = committed_main_content(spark, out)
             n_main = main.count() if main is not None else 0
-            if n_main <= 0:
-                # a zero-commit "run" would report infinite throughput
-                raise RuntimeError("streaming run committed no rows")
+            if n_main != n_rows:
+                # every stored page has its own url, so each must commit
+                # exactly one main_content row; a short (or zero-commit)
+                # run would report a throughput it did not deliver
+                raise RuntimeError(
+                    f"streaming run committed {n_main} main_content rows, "
+                    f"expected {n_rows}"
+                )
             if i > 0:
                 runs.append(wall)
             shutil.rmtree(out, ignore_errors=True)
@@ -1642,22 +1522,16 @@ def run_bench(sf_dir: str, cpus: str, extract_only: bool = False) -> dict:
     mult = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "8"))
     store, n_pages = _pages_store(spark, sf_dir, mult)
     pages = spark.read.parquet(store)
-    cfg = ExtractorConfig(
-        output_type="json",
-        # A/B hook for the numbering-shuffle experiment (BENCH.md): ship
-        # 3 ints per page through the doc_id exchange instead of whole rows
-        numbering_narrow=os.environ.get("SPARK_GRAFT_NUMBERING_NARROW", "")
-        not in ("", "0"),
-    )
+    cfg = ExtractorConfig(output_type="json")
     # warm EVERY core's Python worker + the broadcast machinery with one full
     # untimed pass (a limit() warmup only touches one partition, leaving the
     # other workers to fork+import pandas inside the first timed run). Worker
     # spawn is a per-executor constant, not steady-state throughput — mirrors
     # the reference's avg-of-3 methodology, benchmarks.md:5.
     def timed_extract() -> tuple[int, float]:
-        # persist-with-owner: narrow/salted numbering feeds the post-UDF
-        # frame to both sides of a join — without an owned persist the page
-        # UDF would run twice and the A/B would penalize those modes 2x
+        # persist-with-owner: salted numbering feeds the post-stage frame
+        # to both sides of a join — without an owned persist the page
+        # stage would run twice
         owned: list = []
         t0 = time.perf_counter()
         n = extract_questions(pages, cfg, persist_to=owned).count()
@@ -1771,7 +1645,6 @@ def _one_config(
     cpus: int,
     mult: int,
     flag: str = "--extract-only",
-    extra_env: dict | None = None,
 ) -> dict:
     env = dict(
         os.environ,
@@ -1780,7 +1653,6 @@ def _one_config(
         SPARK_GRAFT_SCALE_MULT=str(mult),
         SPARK_GRAFT_BENCH_RUNS="2",  # longer runs need fewer repetitions
         SPARK_GRAFT_SKIP_HW_PROBE="1",  # parent probes this window itself
-        **(extra_env or {}),
     )
     out = subprocess.run(
         [sys.executable, os.path.abspath(__file__), flag],
@@ -1879,107 +1751,12 @@ def run_scaling(
     return summary
 
 
-def run_numbering_ab(
-    sf_dir: str, levels=(8, 32), mult: int = 24, trials: int = 2
-) -> dict:
-    """A/B the plain numbering window (whole page rows through the doc_id
-    exchange) against the narrow-projection + broadcast-join variant
-    (3 ints per page through the exchange; wide rows never shuffle) —
-    VERDICT r3 #6. Each (cores, mode) cell is a fresh bench child over the
-    same replicated store; adjacent hardware probes bracket every trial so
-    a shared-VM load swing can't masquerade as a mode effect."""
-    rows = []
-    for cpus in levels:
-        for t in range(trials):
-            cells = {}
-            probe_before = _mp_probe(min(cpus, os.cpu_count() or 8))
-            for mode, env in (
-                # plain explicitly CLEARS the flag: a value exported in the
-                # parent shell would otherwise leak through dict(os.environ)
-                # and silently turn the A/B into narrow-vs-narrow
-                ("plain", {"SPARK_GRAFT_NUMBERING_NARROW": ""}),
-                ("narrow", {"SPARK_GRAFT_NUMBERING_NARROW": "1"}),
-            ):
-                r = _one_config(sf_dir, cpus, mult, extra_env=env)
-                cells[mode] = round(
-                    r["n_pages"] / min(r["extract_runs_sec"]), 2
-                )
-                n_pages = r["n_pages"]
-            probe_after = _mp_probe(min(cpus, os.cpu_count() or 8))
-            rows.append(
-                {
-                    "cpus": cpus,
-                    "trial": t,
-                    "plain_docs_s": cells["plain"],
-                    "narrow_docs_s": cells["narrow"],
-                    "narrow_over_plain": round(
-                        cells["narrow"] / cells["plain"], 3
-                    ),
-                    "hw_probe_before": probe_before,
-                    "hw_probe_after": probe_after,
-                    "probe_drift": round(probe_after / probe_before, 3),
-                    "n_pages": n_pages,
-                }
-            )
-    # matched-probe verdict per level: best trial by probe stability
-    verdict = {}
-    for cpus in levels:
-        lv = [r for r in rows if r["cpus"] == cpus]
-        best = min(lv, key=lambda r: abs(1 - r["probe_drift"]))
-        verdict[str(cpus)] = best["narrow_over_plain"]
-    return {"rows": rows, "verdict_narrow_over_plain": verdict, "mult": mult}
-
-
-def update_numbering_ab_md(summary: dict, path: str = "BENCH.md") -> None:
-    lines = [
-        "## Numbering shuffle A/B",
-        "",
-        "Plain doc_id window (whole page rows through the exchange) vs the",
-        "narrow `(doc_id, page_idx, q_count)` projection + broadcast-join",
-        "variant (`ExtractorConfig(numbering_narrow=True)`): same replicated",
-        f"store (mult {summary['mult']}), fresh bench child per cell,",
-        "hardware probes bracketing every trial.",
-        "",
-        "| cores | trial | plain docs/s | narrow docs/s | narrow/plain | probe drift |",
-        "|---|---|---|---|---|---|",
-    ]
-    for r in summary["rows"]:
-        lines.append(
-            f"| {r['cpus']} | {r['trial']} | {r['plain_docs_s']} | "
-            f"{r['narrow_docs_s']} | {r['narrow_over_plain']} | "
-            f"{r['probe_drift']} |"
-        )
-    v = summary["verdict_narrow_over_plain"]
-    adopted = all(x >= 1.10 for x in v.values())
-    lines += [
-        "",
-        "Matched-probe verdict (most probe-stable trial per level): "
-        + ", ".join(f"{k} cores -> {x}x" for k, x in v.items())
-        + ". Adoption rule: flip the default only if narrow wins >=1.10x",
-        "(the broadcast additionally bounds the mode to driver-sized",
-        "page-count tables, so it can never be the 10^12-page default).",
-        (
-            "Outcome: threshold MET at every level — flip"
-            " ExtractorConfig.numbering_narrow to True for bounded corpora"
-            " and update this line once the default lands (the flag itself"
-            " is NOT flipped by this bench)."
-            if adopted
-            else "Outcome: NOT adopted — plain window stays the default; the"
-            " owned MEMORY_AND_DISK persist of the post-UDF frame (needed so"
-            " the UDF doesn't run for both join sides) plus the broadcast"
-            " materialization cost more than the wide-row window exchange"
-            " saves at this row width; mode stays available for genuinely"
-            " bandwidth-starved clusters."
-        ),
-        "",
-    ]
-    _upsert_section(path, "## Numbering shuffle A/B", "\n".join(lines))
-
-
 # canonical BENCH.md section order: every upsert replaces its own heading
 # in place and inserts before the first LATER section present, so
 # alternating --*-scaling reruns never churn the document order, and
-# write_bench_md preserves everything from the first known section on
+# write_bench_md preserves everything from the first known section on.
+# "Numbering shuffle A/B" and "Per-query regression A/B" are frozen history
+# (their modes are retired); they stay listed so they keep their place.
 _BENCH_SECTIONS = [
     "## Numbering shuffle A/B",
     "## Skew evidence",
@@ -2809,14 +2586,10 @@ def main() -> None:
     ap.add_argument("--dedup-scaling", action="store_true")
     ap.add_argument("--stats-incremental", action="store_true")
     ap.add_argument("--dedup-extract-only", action="store_true")
-    ap.add_argument("--numbering-ab", action="store_true",
-                    help="plain vs narrow numbering window A/B -> BENCH.md")
     ap.add_argument("--ivf-store-ab", action="store_true",
                     help="ANN assignment A/B: fresh re-score vs committed ivf index")
     ap.add_argument("--sig-store-ab", action="store_true",
                     help="LSH re-sign vs committed signature index A/B -> BENCH.md")
-    ap.add_argument("--regression-ab", action="store_true",
-                    help="jitter A/B for the three r3->r4 raw regressions -> BENCH.md")
     ap.add_argument("--big-headline", action="store_true",
                     help="sf-equivalent-1.0 extraction + top-10 queries -> BENCH.md")
     # N=2 / 4N=8 is the measurement-valid range on this host: CLAUDE.md's
@@ -2969,14 +2742,6 @@ def main() -> None:
         update_big_md(summary)
         print(json.dumps(summary))
         return
-    if args.regression_ab:
-        summary = run_regression_ab(
-            sf_dir, cpus,
-            trials=args.trials if args.trials is not None else 5,
-        )
-        update_regression_ab_md(summary)
-        print(json.dumps(summary))
-        return
     if args.ivf_store_ab:
         summary = run_ivf_store_ab(
             sf_dir, cpus,
@@ -2993,15 +2758,6 @@ def main() -> None:
             trials=args.trials if args.trials is not None else 2,
         )
         update_sig_ab_md(summary)
-        print(json.dumps(summary))
-        return
-    if args.numbering_ab:
-        summary = run_numbering_ab(
-            sf_dir,
-            mult=args.mult if args.mult is not None else 24,
-            trials=args.trials if args.trials is not None else 2,
-        )
-        update_numbering_ab_md(summary)
         print(json.dumps(summary))
         return
     if args.lineage:

@@ -6,8 +6,8 @@ one Arrow crossing for the per-page string state machines:
     scan pages(url, warc_ts, html, text, lang)
      -> filter lang / filename-contract quarantine          [codegen]
      -> project url-derived metadata (regexp_extract)       [codegen]
-     -> PAGE_UDF: layout reconstruction + preprocessing +
-        segmentation + alternative parsing                  [ArrowEvalPython, 1 pass]
+     -> page stage: layout reconstruction + preprocessing +
+        segmentation + alternative parsing                  [MapInPandas, 1 pass]
      -> window running question-count (plain or salted)     [shuffle by doc_id]
      -> posexplode(question candidates)                     [Generate]
      -> broadcast join answer keys                          [no shuffle]
@@ -26,16 +26,19 @@ Scale notes (100 TB / 10^12 docs):
     single window partition, this can.
   * the answer-key table is ~180 rows/exam — always broadcast.
   * filters (lang, kind, page_idx>=1, has_marker) are plain Catalyst filters
-    and push below the UDF projection where possible; column pruning drops
-    `html` as soon as the UDF has consumed it.
+    below the page stage; the stage's output carries no `html`, so nothing
+    downstream ships it.
 """
 
 from __future__ import annotations
 
 import json
+import time
 from dataclasses import dataclass
+from typing import Iterator
 
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, Window as W, functions as F, types as T
 
 from . import oracle
@@ -74,12 +77,6 @@ class ExtractorConfig:
     # dropDuplicatesWithinWatermark, and the extra url shuffle is not free —
     # enable for batch runs over raw re-crawled corpora.
     dedup_pages: bool = False
-    # plain-window variant: number on a narrow (doc_id, page_idx, q_count)
-    # projection and broadcast the numbers back so wide page rows never
-    # shuffle (see with_page_numbering). Opt-in: the broadcast bounds it
-    # to driver-sized page-count tables; benched in BENCH.md "Numbering
-    # shuffle A/B". Ignored when salting engages.
-    numbering_narrow: bool = False
 
     def __post_init__(self):
         if self.output_type not in ("txt", "json", "markdown"):
@@ -164,7 +161,8 @@ PAGE_STRUCT = T.StructType(
 
 
 def _process_one_page(url, html, text, cfg: ExtractorConfig) -> dict:
-    """Pure per-page function shared by the pandas UDF and unit tests."""
+    """Pure per-page function shared by instrumented_page_stage, the
+    materialized oracle (expected.py) and unit tests."""
     if text is None:
         text, n_images = reconstruct_page(html)
     elif html is not None:
@@ -227,21 +225,50 @@ def _process_one_page(url, html, text, cfg: ExtractorConfig) -> dict:
     }
 
 
-def make_page_udf(cfg: ExtractorConfig):
-    """Scalar pandas UDF (Arrow-vectorized): (url, html, text) -> PAGE_STRUCT."""
+_META_COLS = ["url", "doc_id", "page_idx", "year", "day", "color"]
 
-    def _page_batch(batch: pd.DataFrame) -> pd.DataFrame:
-        out = [
-            _process_one_page(u, h, t, cfg)
-            for u, h, t in zip(batch["url"], batch["html"], batch["text"])
-        ]
-        return pd.DataFrame(out)
+INSTRUMENTED_SCHEMA = T.StructType(
+    [
+        T.StructField("url", T.StringType()),
+        T.StructField("doc_id", T.StringType()),
+        T.StructField("page_idx", T.IntegerType()),
+        T.StructField("year", T.IntegerType()),
+        T.StructField("day", T.StringType()),
+        T.StructField("color", T.StringType()),
+        *PAGE_STRUCT.fields,
+        T.StructField("part_id", T.IntegerType()),
+        T.StructField("wall_ms", T.DoubleType()),
+    ]
+)
 
-    @F.pandas_udf(PAGE_STRUCT)
-    def page_udf(url: pd.Series, html: pd.Series, text: pd.Series) -> pd.DataFrame:
-        return _page_batch(pd.DataFrame({"url": url, "html": html, "text": text}))
 
-    return page_udf
+def instrumented_page_stage(pv: DataFrame, cfg: ExtractorConfig) -> DataFrame:
+    """THE page stage: _process_one_page over Arrow batches, in ONE
+    mapInPandas crossing, plus the task partition id and the batch wall time
+    amortized per row — so a plain groupBy(part_id) over the output yields
+    per-partition lineage without a second pass. extract_pages and
+    lineage.run_extraction both run it; callers that keep no lineage drop
+    part_id and wall_ms."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ctx = TaskContext.get()
+        part_id = ctx.partitionId() if ctx is not None else -1
+        for pdf in batches:
+            t0 = time.perf_counter()
+            recs = [
+                _process_one_page(u, h, t, cfg)
+                for u, h, t in zip(pdf["url"], pdf["html"], pdf["text"])
+            ]
+            ms = (time.perf_counter() - t0) * 1000.0
+            out = pd.DataFrame(recs)
+            for c in _META_COLS:
+                out[c] = pdf[c].values
+            out["part_id"] = part_id
+            out["wall_ms"] = ms / max(len(pdf), 1)
+            yield out[[f.name for f in INSTRUMENTED_SCHEMA.fields]]
+
+    cols = _META_COLS + ["html", "text"]
+    return pv.select(*cols).mapInPandas(run, INSTRUMENTED_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -313,7 +340,6 @@ def with_page_numbering(
     salt_chunk_size: int = 0,
     cache: bool = True,
     persist_to: list | None = None,
-    narrow_window: bool = False,
 ) -> DataFrame:
     """page_first_question = 1 + questions on earlier pages of the document.
 
@@ -322,19 +348,8 @@ def with_page_numbering(
     equi-join of per-doc chunk offsets (AQE broadcasts it only when small)
     reproduce the same value without ever sorting a whole pathological
     document inside one task. The input is persisted in salted mode because
-    it feeds both sides of the offsets join — without it the page-UDF
-    subtree upstream would execute twice.
-
-    ``narrow_window`` (plain mode only): evaluate the window on a
-    (doc_id, page_idx, q_count) projection and broadcast-join the numbers
-    back, so the WIDE page rows (text + candidate structs) never cross an
-    exchange — the doc_id shuffle ships 3 ints per page instead of whole
-    pages. Bandwidth-bound hosts win; the explicit broadcast bounds the
-    mode to corpora whose (doc_id, page_idx) table fits the driver
-    (~12 bytes/page — hundreds of millions of pages), so it stays opt-in
-    rather than the 10^12-scale default. The input feeds both join sides:
-    pass persist_to (same ownership contract as salted mode) or the page
-    UDF runs twice."""
+    it feeds both sides of the offsets join — without it the page stage
+    upstream would execute twice."""
     if salt_chunk_size == AUTO_SALT:
         # direct callers get the probe on this frame; extract_pages /
         # lineage pre-resolve on a cheaper (pre-UDF or persisted) frame
@@ -345,66 +360,6 @@ def with_page_numbering(
             .orderBy("page_idx")
             .rowsBetween(W.unboundedPreceding, -1)
         )
-        if narrow_window:
-            if cache and persist_to is not None:
-                from pyspark import StorageLevel
-
-                pages = pages.persist(StorageLevel.MEMORY_AND_DISK)
-                persist_to.append(pages)
-            # the join-back key must be UNIQUE: duplicate (doc_id,
-            # page_idx) rows would fan out quadratically (and a
-            # synthetic row-uid is not stable across branch recomputes
-            # of an unpersisted/evicted frame — monotonically_increasing_id
-            # depends on shuffle-fetch order). Numbering over duplicate
-            # page keys is undefined anyway (the plain window serializes
-            # the copies in nondeterministic tie order), so the mode
-            # REFUSES them: run dedup_latest_per_url / dedup_pages first.
-            # The guard lives IN the plan (a per-key count window feeding
-            # raise_error) rather than an eager driver collect: an
-            # unowned caller (persist_to=None) would otherwise execute
-            # the full page-UDF subtree one extra time per call just to
-            # check uniqueness. Consequence: the refusal surfaces at
-            # ACTION time as a SparkRuntimeException wrapping the
-            # "unique (doc_id, page_idx)" message, not at plan build.
-            # Both windows partition-compatibly on doc_id, so the guard
-            # adds no exchange.
-            dupcnt = F.count("*").over(
-                W.partitionBy("doc_id", "page_idx")
-            )
-            nums = (
-                pages.select("doc_id", "page_idx", "q_count")
-                .withColumn(
-                    "page_first_question",
-                    F.when(
-                        dupcnt > 1,
-                        F.raise_error(
-                            F.concat_ws(
-                                "",
-                                F.lit(
-                                    "numbering_narrow requires unique "
-                                    "(doc_id, page_idx) rows; found "
-                                    "duplicate "
-                                ),
-                                F.col("doc_id").cast("string"),
-                                F.lit("/"),
-                                F.col("page_idx").cast("string"),
-                                F.lit(
-                                    " — dedup pages first "
-                                    "(cfg.dedup_pages) or use the "
-                                    "plain/salted window"
-                                ),
-                            )
-                        ).cast("int"),
-                    ).otherwise(
-                        (
-                            F.coalesce(F.sum("q_count").over(w), F.lit(0))
-                            + 1
-                        ).cast("int")
-                    ),
-                )
-                .drop("q_count")
-            )
-            return pages.join(F.broadcast(nums), ["doc_id", "page_idx"])
         return pages.withColumn(
             "page_first_question",
             (F.coalesce(F.sum("q_count").over(w), F.lit(0)) + 1).cast("int"),
@@ -564,7 +519,7 @@ def extract_pages(
     persist_to: list | None = None,
     pre_deduped: bool = False,
 ) -> DataFrame:
-    """Per-page stage: metadata, quarantine, layout+parse UDF, numbering.
+    """Per-page pipeline: metadata, quarantine, the page stage, numbering.
 
     Returns one row per kept PV page with page_text (the per-url extracted
     main content — the byte-identity invariant), q_count, candidate
@@ -574,41 +529,24 @@ def extract_pages(
     meta = with_url_metadata(pages.filter(F.col("lang") == "pt"))
     valid, _ = split_quarantine(meta)
     pv = valid.filter((F.col("kind") == "PV") & (F.col("page_idx") >= 1))  # F2
-    # F3 as a cheap codegen prefilter BELOW the UDF: a page yields q_count>0
-    # iff its text carries the marker (either case — P1 normalizes Questão).
-    # Filtering on the UDF output instead would make Catalyst push the filter
-    # under the projection and evaluate the ArrowEvalPython twice.
+    # F3 as a cheap codegen prefilter BELOW the page stage: a page yields
+    # q_count>0 iff its text carries the marker (either case — P1
+    # normalizes Questão), so unmarked pages never cross into Python.
     has_marker = (
         F.col("text").contains(oracle.QUESTION_MARKER)
         | F.col("text").contains("Questão")
         | (F.col("text").isNull() & F.col("html").isNotNull())
     )
     pv = pv.filter(has_marker)
-    page_udf = make_page_udf(cfg)
-    paged = (
-        pv.withColumn("page", page_udf("url", "html", "text"))
-        .select(
-            "url",
-            "doc_id",
-            "page_idx",
-            "year",
-            "day",
-            "color",
-            "page.*",
-        )
-    )
+    paged = instrumented_page_stage(pv, cfg).drop("part_id", "wall_ms")
     # numbering needs every marker-bearing page (image pages included: their
     # count advances numbering even though they emit nothing — F4). Rare
     # q_count=0 survivors (html-only pages with no marker) add 0 to the
     # running sum and explode to nothing, so no post-UDF filter is needed.
     # resolve AUTO salting on the PRE-UDF frame: the probe then scans only
-    # the url-derived doc_id column, never the page UDF subtree
+    # the url-derived doc_id column, never the page stage subtree
     chunk = resolve_salt_chunk(pv, cfg.salt_chunk_size)
-    counted = with_page_numbering(
-        paged, chunk, persist_to=persist_to,
-        narrow_window=cfg.numbering_narrow,
-    )
-    return counted
+    return with_page_numbering(paged, chunk, persist_to=persist_to)
 
 
 def extract_questions(

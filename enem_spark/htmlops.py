@@ -43,9 +43,12 @@ import hashlib
 import html as html_mod
 import os
 import re
+import time
 from html.parser import HTMLParser
+from typing import Iterator
 
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
 # Densitometric operating point (Boilerpipe NumWordsRules uses 10 words /
@@ -611,12 +614,11 @@ def synth_html_pages(documents: DataFrame) -> DataFrame:
 
 
 def main_frame(doc_ids, urls, mains) -> pd.DataFrame:
-    """THE definition of the main-content output frame, shared by the
-    operator (extract_main_content), the instrumented lineage stage
-    (lineage.instrumented_html_stage), and the staged oracle
-    (stage_html_tables) — one place to change the column set, so the
-    lineage table and the materialized oracle cannot silently diverge from
-    the operator. `mains` = extract_main_py result tuples."""
+    """THE definition of the main-content output frame, shared by the HTML
+    stage (instrumented_html_stage, behind both extract_main_content and
+    the lineage runs) and the staged oracle (stage_html_tables) — one place
+    to change the column set, so the materialized oracle cannot silently
+    diverge from the stage. `mains` = extract_main_py result tuples."""
     return pd.DataFrame(
         {
             "doc_id": pd.Series(list(doc_ids), dtype="int64"),
@@ -642,18 +644,84 @@ def extract_mains(payloads) -> list[tuple[str, int, int]]:
     ]
 
 
+_ANCHOR_STRUCT = T.ArrayType(
+    T.StructType(
+        [
+            T.StructField("pos", T.IntegerType()),
+            T.StructField("href", T.StringType()),
+            T.StructField("anchor_text", T.StringType()),
+        ]
+    )
+)
+
+HTML_INSTRUMENTED_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType()),
+        T.StructField("url", T.StringType()),
+        T.StructField("main_text", T.StringType()),
+        T.StructField("n_blocks", T.IntegerType()),
+        T.StructField("n_content_blocks", T.IntegerType()),
+        T.StructField("main_chars", T.IntegerType()),
+        T.StructField("anchors", _ANCHOR_STRUCT),
+        T.StructField("part_id", T.IntegerType()),
+        T.StructField("wall_ms", T.DoubleType()),
+    ]
+)
+
+
+def instrumented_html_stage(
+    pages: DataFrame, with_anchors: bool = False
+) -> DataFrame:
+    """THE HTML stage: extract_main_py (+ anchor_texts_py when
+    ``with_anchors``) + metrics in ONE mapInPandas crossing — the web
+    sibling of extract.instrumented_page_stage. Carrying anchors as a
+    nested array column (field names pinned to ANCHORS_SCHEMA) means the
+    lineage anchors side table costs no second html decode; when the flag
+    is off, the second parser pass is skipped entirely so the default hot
+    path pays nothing for it."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ctx = TaskContext.get()
+        part_id = ctx.partitionId() if ctx is not None else -1
+        for pdf in batches:
+            t0 = time.perf_counter()
+            out = main_frame(pdf["doc_id"], pdf["url"], extract_mains(pdf["html"]))
+            if with_anchors:
+                out["anchors"] = [
+                    [
+                        {"pos": pos, "href": href, "anchor_text": text}
+                        for pos, (href, text) in enumerate(
+                            anchor_texts_py(
+                                # replace, not strict — same crash-safety
+                                # rule as extract_mains
+                                p.decode("utf-8", "replace")
+                                if p is not None
+                                else ""
+                            )
+                        )
+                    ]
+                    for p in pdf["html"]
+                ]
+            else:
+                out["anchors"] = [[] for _ in range(len(pdf))]
+            ms = (time.perf_counter() - t0) * 1000.0
+            out["part_id"] = part_id
+            out["wall_ms"] = ms / max(len(pdf), 1)
+            yield out
+
+    return pages.select("doc_id", "url", "html").mapInPandas(
+        run, HTML_INSTRUMENTED_SCHEMA
+    )
+
+
 def extract_main_content(pages: DataFrame) -> DataFrame:
     """DOM-heuristic main-content extraction: (doc_id, url, html) ->
     (doc_id, url, main_text, n_blocks, n_content_blocks, main_chars).
 
-    One Arrow crossing, no shuffle; each row is parsed independently so the
-    operator scales linearly with pages and is safe under AQE repartition."""
-
-    def run(batches):
-        for pdf in batches:
-            yield main_frame(pdf["doc_id"], pdf["url"], extract_mains(pdf["html"]))
-
-    return pages.select("doc_id", "url", "html").mapInPandas(run, MAIN_SCHEMA)
+    The HTML stage projected to the MAIN_SCHEMA columns: one Arrow
+    crossing, no shuffle; each row is parsed independently so the operator
+    scales linearly with pages and is safe under AQE repartition."""
+    return instrumented_html_stage(pages).select(*MAIN_SCHEMA.fieldNames())
 
 
 # JVM-side entity map shared with the DuckDB twin (html.escape's output set;
@@ -902,9 +970,10 @@ ANCHORS_SCHEMA = T.StructType(
 
 def anchor_frame(doc_ids, htmls) -> pd.DataFrame:
     """THE definition of the anchor row fan-out, shared by the operator
-    (extract_anchor_texts), the staged oracle (stage_html_tables), and the
-    lineage side table builder — one place to change the row shape.
-    `htmls` are decoded strings."""
+    (extract_anchor_texts) and the staged oracle (stage_html_tables) — one
+    place to change the row shape. (The lineage anchors table is exploded
+    from instrumented_html_stage's nested column instead.) `htmls` are
+    decoded strings."""
     ids, poss, hrefs, texts = [], [], [], []
     for doc_id, raw in zip(doc_ids, htmls):
         for pos, (href, text) in enumerate(anchor_texts_py(raw)):

@@ -5,10 +5,10 @@ per-partition lineage + metrics". The reference has neither (it is a
 single-process script, re-run from zero on failure — pdf_extraction_test.py
 just loops `extract_pdf`); this module adds both, Spark-first:
 
-  * **lineage**: the page stage runs through an Arrow-batched ``mapInPandas``
-    wrapper that stamps each row with its task partition id and amortized
-    batch wall time; a per-partition aggregate is appended to a ``lineage``
-    parquet table next to the outputs (run_id, part_id, input_pages,
+  * **lineage**: the page stage (``extract.instrumented_page_stage``, one
+    Arrow-batched ``mapInPandas``) stamps each row with its task partition
+    id and amortized batch wall time; a per-partition aggregate is appended
+    to a ``lineage`` parquet table next to the outputs (run_id, part_id, input_pages,
     marker_pages, q_candidates, parse_failures, wall_ms).
   * **checkpoint-resume**: the unit of work is the *document* (page numbering
     is a running sum across a document's pages — resuming mid-document would
@@ -32,74 +32,25 @@ the sandbox has no Iceberg catalog, so plain parquet paths stand in):
 
 from __future__ import annotations
 
-import os
-import time
 import uuid
-from typing import Iterator
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from . import runfs
 from .extract import (
     ExtractorConfig,
-    PAGE_STRUCT,
-    _process_one_page,
     build_answer_keys,
+    instrumented_page_stage,
     questions_from_counted,
     resolve_salt_chunk,
     split_quarantine,
     with_page_numbering,
     with_url_metadata,
 )
-
-_META_COLS = ["url", "doc_id", "page_idx", "year", "day", "color"]
-
-INSTRUMENTED_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("doc_id", T.StringType()),
-        T.StructField("page_idx", T.IntegerType()),
-        T.StructField("year", T.IntegerType()),
-        T.StructField("day", T.StringType()),
-        T.StructField("color", T.StringType()),
-        *PAGE_STRUCT.fields,
-        T.StructField("part_id", T.IntegerType()),
-        T.StructField("wall_ms", T.DoubleType()),
-    ]
-)
-
-def instrumented_page_stage(pv: DataFrame, cfg: ExtractorConfig) -> DataFrame:
-    """Page UDF + metrics in ONE Arrow crossing.
-
-    Identical per-page semantics to extract.make_page_udf (both call
-    _process_one_page); additionally emits the task partition id and the
-    batch wall time amortized per row, so a plain groupBy(part_id) over the
-    output yields per-partition lineage without a second pass."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx is not None else -1
-        for pdf in batches:
-            t0 = time.perf_counter()
-            recs = [
-                _process_one_page(u, h, t, cfg)
-                for u, h, t in zip(pdf["url"], pdf["html"], pdf["text"])
-            ]
-            ms = (time.perf_counter() - t0) * 1000.0
-            out = pd.DataFrame(recs)
-            for c in _META_COLS:
-                out[c] = pdf[c].values
-            out["part_id"] = part_id
-            out["wall_ms"] = ms / max(len(pdf), 1)
-            yield out[[f.name for f in INSTRUMENTED_SCHEMA.fields]]
-
-    cols = _META_COLS + ["html", "text"]
-    return pv.select(*cols).mapInPandas(run, INSTRUMENTED_SCHEMA)
+from .htmlops import instrumented_html_stage
 
 
 def partition_lineage(paged: DataFrame) -> DataFrame:
@@ -124,17 +75,13 @@ def require_supported_store(out_dir: str) -> None:
     exists for the store's scheme (plain POSIX paths and file:// are
     built in; object-store schemes must be registered — see
     enem_spark/runfs.py for the six-primitive port contract). Until
-    round 5 this was `require_local_store`, a blanket POSIX-only refusal:
+    round 5 this was a blanket POSIX-only refusal:
     the protocol's control plane called `os` directly, so on s3:// every
     probe silently returned False and exactly-once degraded to
     re-extracting everything with no resume. The control plane now runs
     through `runfs.fs_for(out_dir)` everywhere, so the only thing left
     to check is that such an implementation exists."""
     runfs.require_supported_store(out_dir)
-
-
-# backward-compat alias (docs/jobs referenced the old name)
-require_local_store = require_supported_store
 
 
 def _data_files(fs, path: str) -> list[str]:
@@ -424,8 +371,7 @@ def run_extraction(
             # read, no UDF re-execution)
             chunk = resolve_salt_chunk(paged, cfg.salt_chunk_size)
             counted = with_page_numbering(
-                paged.filter(F.col("q_count") > 0), chunk, cache=False,
-                narrow_window=cfg.numbering_narrow,
+                paged.filter(F.col("q_count") > 0), chunk, cache=False
             )
             # keys from ALL pages (no lang filter), matching
             # extract_questions: an answer-key page is mostly digit/letter
@@ -524,78 +470,6 @@ def run_extraction(
 # ---------------------------------------------------------------------------
 # HTML main-content extraction under the same exactly-once protocol
 # ---------------------------------------------------------------------------
-
-_ANCHOR_STRUCT = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("pos", T.IntegerType()),
-            T.StructField("href", T.StringType()),
-            T.StructField("anchor_text", T.StringType()),
-        ]
-    )
-)
-
-HTML_INSTRUMENTED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("main_text", T.StringType()),
-        T.StructField("n_blocks", T.IntegerType()),
-        T.StructField("n_content_blocks", T.IntegerType()),
-        T.StructField("main_chars", T.IntegerType()),
-        T.StructField("anchors", _ANCHOR_STRUCT),
-        T.StructField("part_id", T.IntegerType()),
-        T.StructField("wall_ms", T.DoubleType()),
-    ]
-)
-
-
-def instrumented_html_stage(
-    pages: DataFrame, with_anchors: bool = False
-) -> DataFrame:
-    """htmlops.extract_main_py (+ anchor_texts_py when ``with_anchors``)
-    + metrics in ONE Arrow crossing — the web sibling of
-    instrumented_page_stage (same per-row semantics as
-    htmlops.extract_main_content / extract_anchor_texts, same shared pure
-    functions). Carrying anchors as a nested array column (field names
-    pinned to htmlops.ANCHORS_SCHEMA) means the anchors side table costs
-    no second html decode; when the flag is off, the second parser pass is
-    skipped entirely so the default hot path pays nothing for it."""
-    from .htmlops import anchor_texts_py, extract_mains, main_frame
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        part_id = ctx.partitionId() if ctx is not None else -1
-        for pdf in batches:
-            t0 = time.perf_counter()
-            out = main_frame(pdf["doc_id"], pdf["url"], extract_mains(pdf["html"]))
-            if with_anchors:
-                out["anchors"] = [
-                    [
-                        {"pos": pos, "href": href, "anchor_text": text}
-                        for pos, (href, text) in enumerate(
-                            anchor_texts_py(
-                                # replace, not strict — same crash-safety
-                                # rule as htmlops.extract_mains
-                                p.decode("utf-8", "replace")
-                                if p is not None
-                                else ""
-                            )
-                        )
-                    ]
-                    for p in pdf["html"]
-                ]
-            else:
-                out["anchors"] = [[] for _ in range(len(pdf))]
-            ms = (time.perf_counter() - t0) * 1000.0
-            out["part_id"] = part_id
-            out["wall_ms"] = ms / max(len(pdf), 1)
-            yield out
-
-    return pages.select("doc_id", "url", "html").mapInPandas(
-        run, HTML_INSTRUMENTED_SCHEMA
-    )
-
 
 def committed_main_content(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """Reader view of the main_content table restricted to committed runs."""

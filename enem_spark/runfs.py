@@ -6,7 +6,7 @@ the signature index, icetable metadata) follows one protocol: write side
 outputs under per-run directories, then publish a tiny commit object LAST.
 Until round 4 the protocol's *control plane* — existence probes, stale-dir
 clears, the icetable exclusive version-file create — called `os` directly,
-so `lineage.require_local_store` refused any URI-schemed out_dir: on
+so lineage refused any URI-schemed out_dir (a blanket POSIX-only check): on
 `s3://...` those calls silently return False and the exactly-once layer
 would degrade to re-extracting everything with no resume.
 
@@ -192,7 +192,7 @@ class FileUriRunFS(LocalRunFS):
     """``file:///abs/path`` URIs: Spark resolves them natively, so the
     data plane passes through unchanged; the control plane strips the
     scheme (`os.path` treats 'file:///x' as a RELATIVE path — the silent
-    degradation `require_local_store` used to refuse outright)."""
+    degradation the old POSIX-only store check used to refuse outright)."""
 
     def _local(self, path: str) -> str:
         u = urlparse(path)

@@ -236,50 +236,29 @@ def test_salted_numbering_equals_plain(spark, pages_df):
     assert sorted((r["url"], r["page_first_question"]) for r in a) == sorted(
         (r["url"], r["page_first_question"]) for r in b
     )
-
-
-def test_narrow_numbering_equals_plain(spark, pages_df):
-    """The narrow-projection + broadcast-join variant must be value-identical
-    to the plain window (it is a pure shuffle-payload optimization), and the
-    broadcast join must not drop or duplicate pages."""
-    plain = ExtractorConfig(output_type="json", salt_chunk_size=0)
-    narrow = ExtractorConfig(
-        output_type="json", salt_chunk_size=0, numbering_narrow=True
-    )
-    a = extract_pages(pages_df, plain).select(
-        "url", "page_first_question"
-    ).collect()
-    owned = []
-    b = extract_pages(pages_df, narrow, persist_to=owned).select(
-        "url", "page_first_question"
-    ).collect()
-    for df in owned:
-        df.unpersist()
-    assert sorted((r["url"], r["page_first_question"]) for r in a) == sorted(
-        (r["url"], r["page_first_question"]) for r in b
-    )
-    # end-to-end: full question extraction agrees too
-    qa = extract_questions(pages_df, plain).select("ID", "question_text").collect()
-    qb = extract_questions(pages_df, narrow).select("ID", "question_text").collect()
-    assert sorted(map(tuple, qa)) == sorted(map(tuple, qb))
+    # end-to-end: full question extraction agrees across the two modes, and
+    # with extract_pages — every question's number falls inside its page's
+    # [page_first_question, page_first_question + q_count) range
+    pages = {
+        r["url"]: (r["page_first_question"], r["q_count"])
+        for r in extract_pages(pages_df, plain).collect()
+    }
+    qa = extract_questions(pages_df, plain).select("url", "seq", "ID", "question_text")
+    qb = extract_questions(pages_df, salted).select("url", "seq", "ID", "question_text")
+    qa, qb = qa.collect(), qb.collect()
+    assert qa and sorted(map(tuple, qa)) == sorted(map(tuple, qb))
+    for r in qa:
+        first, q_count = pages[r["url"]]
+        assert first <= r["seq"] < first + q_count, r
     # duplicate (doc_id, page_idx) rows (raw re-crawl, dedup off): the
-    # key join would fan out quadratically and per-copy numbering is
-    # undefined even for the plain window, so narrow mode REFUSES loudly
+    # plain window neither drops nor fans out rows
     from enem_spark.extract import with_page_numbering
 
     dup = spark.createDataFrame(
         [("d1", 1, 2), ("d1", 1, 2), ("d1", 2, 3), ("d2", 1, 1)],
         "doc_id string, page_idx int, q_count int",
     )
-    assert len(with_page_numbering(dup, 0).collect()) == 4  # plain copes
-    import pytest as _pytest
-
-    # the guard is IN the plan (raise_error under a per-key count window,
-    # not an eager driver collect — advice finding, round 4), so the
-    # refusal surfaces at ACTION time as a Spark execution error wrapping
-    # the message
-    with _pytest.raises(Exception, match="unique"):
-        with_page_numbering(dup, 0, narrow_window=True).collect()
+    assert len(with_page_numbering(dup, 0).collect()) == 4
 
 
 def test_extracted_page_text_per_url(spark, docs, pages_df):

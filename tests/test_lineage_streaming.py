@@ -135,13 +135,13 @@ def test_committed_run_id_reuse_never_destroys(spark, pages_df, tmp_path):
 def test_require_local_store_rejects_object_store(spark, pages_df):
     import pytest as _pytest
 
-    from enem_spark.lineage import require_local_store
+    from enem_spark.lineage import require_supported_store
 
     cfg = ExtractorConfig(output_type="json")
     with _pytest.raises(ValueError, match="s3"):
         run_extraction(spark, pages_df, cfg, "s3://bucket/out", "r1")
-    require_local_store("/plain/posix/path")  # no raise
-    require_local_store("relative/path")
+    require_supported_store("/plain/posix/path")  # no raise
+    require_supported_store("relative/path")
 
 
 def test_quarantine_table_written(spark, pages_df, tmp_path):

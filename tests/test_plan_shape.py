@@ -31,10 +31,12 @@ def plan(spark, tmp_path_factory):
 
 
 def test_page_udf_evaluates_once(plan):
-    """Exactly ONE ArrowEvalPython node: filtering on the UDF's struct
-    output makes Catalyst push the filter under the projection and run the
-    pandas UDF twice per page (regression caught by explain audit)."""
-    assert plan.count("ArrowEvalPython") == 1, plan
+    """Exactly ONE Python crossing: the page stage's single MapInPandas
+    node, and no ArrowEvalPython beside it — a second crossing (a scalar
+    UDF, or the stage planned twice) would run the page function twice
+    per page."""
+    assert plan.count("MapInPandas") == 1, plan
+    assert "ArrowEvalPython" not in plan, plan
 
 
 def test_scan_pushdown_present(plan):

@@ -1,7 +1,7 @@
 """The exactly-once commit protocol on URI-schemed stores (runfs port).
 
 Round-4 verdict #1: the protocol's control plane used to call `os`
-directly, so `require_local_store` refused every URI-schemed out_dir.
+directly, so lineage refused every URI-schemed out_dir.
 These tests re-run the crash/replay battery from
 test_lineage_streaming.py against a registered object-store-semantics
 implementation (`runfs.MockObjectRunFS`, scheme ``mock://``) and against
