@@ -36,8 +36,6 @@ between its sequence and the next for the serving view's recency order.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 from . import lineage, runfs
@@ -303,19 +301,6 @@ def apply_takedown(
     return summary
 
 
-def _committed_takedowns(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = f"{out_dir}/takedowns"
-    committed = lineage.committed_run_ids(spark, out_dir)
-    if committed is None or not lineage._exists(path):
-        return None
-    return (
-        spark.read.parquet(runfs.spark_path(path))
-        .join(committed, "run_id", "left_semi")
-        .select("url")
-        .dropDuplicates()
-    )
-
-
 def current_main_content(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """Serving view: per url, the extraction of its LATEST FETCH.
 
@@ -335,47 +320,37 @@ def current_main_content(spark: SparkSession, out_dir: str) -> DataFrame | None:
     Without a fetch_log (flat html runs, pre-log dirs) the view falls back
     to the run-recency proxy over main_content itself, which cannot see
     extraction-skipped re-fetches."""
-    mc = lineage.committed_main_content(spark, out_dir)
+    committed = lineage.committed_id_set(out_dir)
+    mc = lineage.committed_table(spark, out_dir, "main_content", committed)
     if mc is None:
         return None
-    gone = _committed_takedowns(spark, out_dir)
+    gone = lineage.committed_table(spark, out_dir, "takedowns", committed)
 
     def _served(df: DataFrame) -> DataFrame:
         if gone is None:
             return df
-        return df.join(F.broadcast(gone), "url", "left_anti")
-
-    fl_path = f"{out_dir}/fetch_log"
-    committed = lineage.committed_run_ids(spark, out_dir)
-    # lineage._exists, NOT os.path.exists: a crashed attempt can leave a
-    # fetch_log dir holding only _temporary leftovers, and reading that
-    # throws UNABLE_TO_INFER_SCHEMA on every serve until manual cleanup —
-    # the exact wedge the _exists helper filters (CLAUDE.md invariant);
-    # with no committed log data the run-recency fallback below serves
-    if lineage._exists(fl_path) and committed is not None:
-        # mergeSchema: a dir that has ever held BOTH stream logs (with
-        # warc_ts) and ice logs (without) must not let Spark pick one
-        # footer's schema at random — merged, ice rows read warc_ts NULL
-        # and the nulls-last event-time order below serves
-        # event-time-stamped fetches preferentially (deterministic and
-        # documented, vs the silent schema lottery)
-        fl = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(runfs.spark_path(fl_path))
-            .join(committed, "run_id", "left_semi")
+        return df.join(
+            F.broadcast(gone.select("url").dropDuplicates()), "url", "left_anti"
         )
+
+    # one schema for both log kinds: stream logs carry warc_ts, ice logs
+    # do not and read it as NULL — without the given schema, a dir holding
+    # both would let Spark pick one footer's schema at random
+    fl = lineage.committed_table(
+        spark, out_dir, "fetch_log", committed,
+        schema="url string, warc_ts timestamp, doc_id bigint, run_id string",
+    )
+    if fl is not None:
         # stream fetch logs carry event time: micro-batch run ids are NOT
         # monotonic across checkpoint incarnations (a replay-suffixed
         # batch-0 id sorts below an older incarnation's batch-5), so
-        # recency is the fetch's own warc_ts; run_id only breaks exact
-        # ties. Ice logs omit the column — their snapshot-sequenced ids
+        # recency is the fetch's own warc_ts, nulls last so event-time-
+        # stamped fetches serve preferentially; run_id breaks exact ties
+        # and orders ice logs (NULL warc_ts), whose snapshot-sequenced ids
         # ARE monotonic.
-        order = (
-            [F.col("warc_ts").desc_nulls_last(), F.col("run_id").desc()]
-            if "warc_ts" in fl.columns
-            else [F.col("run_id").desc()]
+        w = W.partitionBy("url").orderBy(
+            F.col("warc_ts").desc_nulls_last(), F.col("run_id").desc()
         )
-        w = W.partitionBy("url").orderBy(*order)
         latest = (
             fl.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)

@@ -223,11 +223,10 @@ def committed_id_set(out_dir: str) -> set[str]:
 
 
 def committed_run_ids(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The committed run_ids as a one-column ``run_id`` frame for
-    semi-joins, or None when nothing is committed. The frame is a
-    snapshot of :func:`committed_id_set` taken at call time, held in the
-    plan as a local relation: evaluating or joining it reads no file and
-    runs no scan job."""
+    """The committed run_ids as a one-column ``run_id`` frame, or None
+    when nothing is committed. The frame is a snapshot of
+    :func:`committed_id_set` taken at call time, held in the plan as a
+    local relation: evaluating it reads no file and runs no scan job."""
     ids = committed_id_set(out_dir)
     if not ids:
         return None
@@ -236,13 +235,55 @@ def committed_run_ids(spark: SparkSession, out_dir: str) -> DataFrame | None:
     )
 
 
+def committed_table(
+    spark: SparkSession,
+    out_dir: str,
+    table: str,
+    committed: set[str] | None = None,
+    schema: str | None = None,
+) -> DataFrame | None:
+    """Rows of ``<out_dir>/<table>`` written by COMMITTED runs, or None
+    when no committed run wrote the table — the one reader of run-protocol
+    tables. ``committed`` is the run-id set to trust (default:
+    :func:`committed_id_set`); pass it when the caller already read the
+    ledger, or to narrow the read (an index's active runs, a stream
+    batch's family).
+
+    The table is listed one level deep and exactly the ``run_id=<id>``
+    dirs whose id is trusted are read, with ``basePath`` at the table so
+    ``run_id`` (and nested partitions such as year/day) stay columns. A
+    crashed attempt's dir is never listed into the read, so its truncated
+    part files, ``_temporary`` leftovers or foreign schema cannot wedge
+    schema inference or the scan. ``schema`` (DDL) skips footer
+    inference."""
+    if committed is None:
+        committed = committed_id_set(out_dir)
+    if not committed:
+        return None
+    path = f"{out_dir}/{table}"
+    dirs = [
+        runfs.spark_path(f"{path}/{d}")
+        for d in runfs.fs_for(path).list_names(path)
+        if d.startswith("run_id=") and d.split("=", 1)[1] in committed
+    ]
+    if not dirs:
+        return None
+    reader = spark.read.option("basePath", runfs.spark_path(path))
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*dirs)
+
+
 def processed_doc_ids(
-    spark: SparkSession, out_dir: str, doc_id_type: str
+    spark: SparkSession,
+    out_dir: str,
+    doc_id_type: str,
+    committed: set[str] | None = None,
 ) -> DataFrame | None:
     """doc_ids of documents completed by COMMITTED runs only.
 
     A run's side outputs live under run_id=<id> directories; the tiny
-    ``runs`` marker row is appended last and is the commit point. A crash
+    ``runs`` marker is published last and is the commit point. A crash
     anywhere before it leaves orphan run_id directories that neither this
     resume check nor `committed_questions` will ever read, and a retried
     run with the same run_id overwrites them wholesale.
@@ -250,39 +291,16 @@ def processed_doc_ids(
     ``doc_id_type`` (a Spark SQL type name) is the caller's known doc_id
     type: the read takes its schema as given instead of inferring it from
     a footer, which would cost a Spark job per call."""
-    path = f"{out_dir}/processed_docs"
-    committed = committed_run_ids(spark, out_dir)
-    if committed is None or not _exists(path):
-        return None
-    return (
-        spark.read.schema(f"doc_id {doc_id_type}, run_id string")
-        .parquet(runfs.spark_path(path))
-        .join(committed, "run_id", "left_semi")
-        .select("doc_id")
-        .distinct()
+    done = committed_table(
+        spark, out_dir, "processed_docs", committed,
+        schema=f"doc_id {doc_id_type}, run_id string",
     )
+    return None if done is None else done.select("doc_id").distinct()
 
 
 def committed_questions(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """Reader view of the questions table restricted to committed runs."""
-    path = f"{out_dir}/questions"
-    committed = committed_run_ids(spark, out_dir)
-    if committed is None or not _exists(path):
-        return None
-    return spark.read.parquet(runfs.spark_path(path)).join(committed, "run_id", "left_semi")
-
-
-def committed_images(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """Reader view of the binary images table restricted to committed
-    runs — the images analogue of :func:`committed_questions`. A crashed
-    attempt's orphan ``images/run_id=`` dir (written, never committed,
-    retried under a fresh run_id) would double-count every one of its
-    images for any reader that globs the directory raw."""
-    path = f"{out_dir}/images"
-    committed = committed_run_ids(spark, out_dir)
-    if committed is None or not _exists(path):
-        return None
-    return spark.read.parquet(runfs.spark_path(path)).join(committed, "run_id", "left_semi")
+    return committed_table(spark, out_dir, "questions")
 
 
 def run_extraction(
@@ -310,7 +328,8 @@ def run_extraction(
     Calling again over the same pages with a NEW run_id is a no-op: every
     document already committed is anti-joined away and nothing is written."""
     require_supported_store(out_dir)
-    run_id = derive_replay_run_id(committed_id_set(out_dir), run_id)
+    committed = committed_id_set(out_dir)
+    run_id = derive_replay_run_id(committed, run_id)
     if cfg.dedup_pages:
         # the batch entry point must honor the flag exactly like
         # extract_pages does — a duplicated re-crawl page otherwise doubles
@@ -323,30 +342,28 @@ def run_extraction(
     valid, quarantined = split_quarantine(meta)
     pv = valid.filter((F.col("kind") == "PV") & (F.col("page_idx") >= 1))
 
-    done = processed_doc_ids(spark, out_dir, "string")
+    done = processed_doc_ids(spark, out_dir, "string", committed)
     if done is not None:
         # no broadcast hint: processed_docs grows without bound across runs;
         # AQE broadcasts while it is small, shuffles (skew-free key) after
         pv = pv.join(done, "doc_id", "left_anti")
 
     paged = instrumented_page_stage(pv, cfg).persist()
+    new_quarantine = None
     try:
         n_pages = paged.count()
         n_questions = 0
 
         new_quarantine = quarantined.select("url", "year", "day", "kind", "color")
-        committed = committed_run_ids(spark, out_dir)
-        if committed is not None and _exists(f"{out_dir}/quarantine"):
-            # dedup only against COMMITTED runs' quarantine rows: orphan
-            # run_id dirs from crashed runs must not suppress a re-write
-            # under the new run_id, or the orphan rows would stay invisible
-            # to every committed-gated reader forever
-            seen = (
-                spark.read.parquet(runfs.spark_path(f"{out_dir}/quarantine"))
-                .join(committed, "run_id", "left_semi")
-                .select("url")
+        # dedup only against COMMITTED runs' quarantine rows: orphan
+        # run_id dirs from crashed runs must not suppress a re-write under
+        # the new run_id, or the orphan rows would stay invisible to every
+        # committed-gated reader forever
+        seen = committed_table(spark, out_dir, "quarantine", committed)
+        if seen is not None:
+            new_quarantine = new_quarantine.join(
+                seen.select("url"), "url", "left_anti"
             )
-            new_quarantine = new_quarantine.join(seen, "url", "left_anti")
         # persist: the count below AND the conditional write would otherwise
         # each re-run the quarantine anti-join's scan over the input table
         new_quarantine = new_quarantine.persist()
@@ -454,10 +471,8 @@ def run_extraction(
         append_run_marker(spark, out_dir, run_id, n_pages, n_questions)
     finally:
         paged.unpersist()
-        try:
+        if new_quarantine is not None:
             new_quarantine.unpersist()
-        except NameError:
-            pass
     return {
         "run_id": run_id,
         "input_pages": n_pages,
@@ -473,20 +488,7 @@ def run_extraction(
 
 def committed_main_content(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """Reader view of the main_content table restricted to committed runs."""
-    path = f"{out_dir}/main_content"
-    committed = committed_run_ids(spark, out_dir)
-    if committed is None or not _exists(path):
-        return None
-    return spark.read.parquet(runfs.spark_path(path)).join(committed, "run_id", "left_semi")
-
-
-def committed_anchors(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """Reader view of the anchors table restricted to committed runs."""
-    path = f"{out_dir}/anchors"
-    committed = committed_run_ids(spark, out_dir)
-    if committed is None or not _exists(path):
-        return None
-    return spark.read.parquet(runfs.spark_path(path)).join(committed, "run_id", "left_semi")
+    return committed_table(spark, out_dir, "main_content")
 
 
 def run_html_extraction(
@@ -535,13 +537,16 @@ def run_html_extraction(
     always pass an uncommitted id, so the guard is an identity for them
     and their pre-written fetch_log dirs keep their names)."""
     require_supported_store(out_dir)
-    run_id = derive_replay_run_id(committed_id_set(out_dir), run_id)
+    committed = committed_id_set(out_dir)
+    run_id = derive_replay_run_id(committed, run_id)
     work = pages.select("doc_id", "url", "html")
-    done = processed_doc_ids(spark, out_dir, "bigint")
-    # definitely-missing detection: prior committed runs exist and the
-    # anchors table does not -> those docs will never appear in it
+    done = processed_doc_ids(spark, out_dir, "bigint", committed)
+    # definitely-missing detection: prior committed runs exist and no
+    # committed run wrote anchors -> those docs will never appear in it
     backfill_needed = bool(
-        with_anchors and done is not None and not _exists(f"{out_dir}/anchors")
+        with_anchors
+        and done is not None
+        and committed_table(spark, out_dir, "anchors", committed) is None
     )
     if done is not None:
         # unbounded across runs -> no broadcast hint; AQE handles small case

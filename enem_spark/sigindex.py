@@ -93,9 +93,7 @@ def committed_signatures(
         committed = lineage.committed_id_set(out_dir)
     runs = _committed_sig_runs(committed)
     _check_config(runs, perms, bands)
-    path = f"{out_dir}/{SIG_TABLE}"
-    fs = runfs.fs_for(out_dir)
-    if not runs or not fs.exists(path):
+    if not runs:
         return None
     # read EXACTLY the committed run dirs, never the whole table dir: a
     # crashed first attempt under a DIFFERENT (perms, bands) config leaves
@@ -103,14 +101,8 @@ def committed_signatures(
     # runs only), and a bare directory read would let schema inference
     # resolve that orphan's narrower/wider mh column set — an
     # AnalysisException on mh{perms-1}, or silently null-padded signatures
-    paths = [
-        runfs.spark_path(f"{path}/{d}")
-        for d in fs.list_names(path)
-        if d.startswith("run_id=") and d.split("=", 1)[1] in committed
-    ]
-    if not paths:
-        return None
-    return spark.read.parquet(*paths)
+    sigs = lineage.committed_table(spark, out_dir, SIG_TABLE, committed)
+    return None if sigs is None else sigs.drop("run_id")
 
 
 def update_signature_index(
@@ -138,7 +130,7 @@ def update_signature_index(
     runs = _committed_sig_runs(committed)
     _check_config(runs, perms, bands)
     if source is None:
-        main = lineage.committed_main_content(spark, out_dir)
+        main = lineage.committed_table(spark, out_dir, "main_content", committed)
         if main is None:
             return {"indexed": 0, "run_id": None, "up_to_date": True}
         source = main.select("doc_id", F.col("main_text").alias("text"))

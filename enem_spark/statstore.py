@@ -110,18 +110,9 @@ def _active_table(
     spark: SparkSession, out_dir: str, table: str, active_ids: list[str]
 ) -> DataFrame | None:
     """Rows of one stats side-output table restricted to the ACTIVE run
-    set. lineage._exists, not os.path.exists: a crashed attempt can leave
-    only _temporary under the table dir, and reading that wedges every
-    retry in UNABLE_TO_INFER_SCHEMA (the exact failure the runs protocol
-    exists to survive)."""
-    path = f"{out_dir}/{table}"
-    if not active_ids or not lineage._exists(path):
-        return None
-    return (
-        spark.read.parquet(runfs.spark_path(path))
-        .filter(F.col("run_id").isin(active_ids))
-        .drop("run_id")
-    )
+    set (exactly those run dirs are read)."""
+    rows = lineage.committed_table(spark, out_dir, table, set(active_ids))
+    return None if rows is None else rows.drop("run_id")
 
 
 def _delta_state(

@@ -78,8 +78,6 @@ def start_extraction_stream(
       * question output goes to a per-batch directory with mode=overwrite:
         foreachBatch is at-least-once, and a blind append would duplicate
         rows when a crashed batch replays."""
-    import os
-
     from .extract import build_answer_keys, with_url_metadata
 
     # per-incarnation token: batch ids restart at 0 under a fresh
@@ -377,8 +375,6 @@ def flush_staging(
     document regardless of the completeness horizon (the stream is finished,
     so nothing newer can arrive). Exactly-once still holds via the
     processed_docs anti-join."""
-    import os
-
     from .lineage import run_extraction
 
     staging = f"{out_dir}/staging"
@@ -412,7 +408,7 @@ def compact_staging(spark: SparkSession, out_dir: str) -> int:
     Deletes and listings run on the store's runfs control plane, so the
     decision logic (one Spark aggregate) and the cleanup are both
     storage-agnostic. Returns the number of directories dropped."""
-    from .lineage import committed_run_ids, processed_doc_ids, _exists
+    from .lineage import committed_id_set, committed_table, processed_doc_ids
 
     fs = runfs.fs_for(out_dir)
     staging = f"{out_dir}/staging"
@@ -428,20 +424,15 @@ def compact_staging(spark: SparkSession, out_dir: str) -> int:
         runfs.spark_path(staging)
     )  # batch_id from partition dirs
     live = with_url_metadata(staged.filter(F.col("lang") == "pt"))
-    committed = committed_run_ids(spark, out_dir)
-    if committed is not None and _exists(f"{out_dir}/quarantine"):
-        # committed-quarantined urls are dead regardless of kind: a PV url
-        # with a broken contract (bad color/year) never reaches
-        # processed_docs, so without this filter it would pin its staging
-        # dir forever
-        qurls = (
-            spark.read.parquet(runfs.spark_path(f"{out_dir}/quarantine"))
-            .join(committed, "run_id", "left_semi")
-            .select("url")
-        )
-        live = live.join(qurls, "url", "left_anti")
+    committed = committed_id_set(out_dir)
+    # committed-quarantined urls are dead regardless of kind: a PV url with
+    # a broken contract (bad color/year) never reaches processed_docs, so
+    # without this filter it would pin its staging dir forever
+    qurls = committed_table(spark, out_dir, "quarantine", committed)
+    if qurls is not None:
+        live = live.join(qurls.select("url"), "url", "left_anti")
     pv_live = live.filter(F.col("kind") == "PV")
-    done = processed_doc_ids(spark, out_dir, "string")
+    done = processed_doc_ids(spark, out_dir, "string", committed)
     if done is not None:
         pv_live = pv_live.join(done, "doc_id", "left_anti")
     unk_live = live.filter(F.col("kind").isNull())
@@ -507,8 +498,6 @@ def start_document_stream(
     incarnation = _uuid.uuid4().hex[:8]
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
         spark = batch_df.sparkSession
         # one scan for the whole batch: the kind split + two isEmpty
         # probes + two writes below are four actions over this frame,
@@ -786,12 +775,8 @@ def start_html_stream(
             family = set(ids)
             if summary["input_pages"] > 0:
                 family.add(run_id)
-            dirs = [
-                runfs.spark_path(d)
-                for i in sorted(family)
-                if lineage._exists(d := f"{out_dir}/main_content/run_id={i}")
-            ]
-            if dirs:
+            main = lineage.committed_table(spark, out_dir, "main_content", family)
+            if main is not None:
                 # how="inner": fold ONLY this batch's docs — a colliding
                 # dir can hold rows of a different batch composition, and
                 # those must neither fold nor borrow this batch's group
@@ -801,7 +786,7 @@ def start_html_stream(
                     spark,
                     stats_dir,
                     statstore.main_content_docs(
-                        spark.read.parquet(*dirs),
+                        main,
                         batch_df.select("doc_id", stats_group),
                         group_col=stats_group,
                         how="inner",

@@ -96,26 +96,6 @@ def _check_config(
         )
 
 
-def _committed_run_dirs(
-    out_dir: str,
-    table: str,
-    committed: set[str],
-) -> list[str]:
-    """Spark paths of ``table``'s run dirs restricted to COMMITTED run ids
-    — never a bare directory read: a crashed attempt under a different
-    config leaves an orphan dir whose schema inference could resolve
-    (the sigindex committed_signatures finding)."""
-    path = f"{out_dir}/{table}"
-    fs = runfs.fs_for(out_dir)
-    if not fs.exists(path):
-        return []
-    return [
-        runfs.spark_path(f"{path}/{d}")
-        for d in fs.list_names(path)
-        if d.startswith("run_id=") and d.split("=", 1)[1] in committed
-    ]
-
-
 def committed_centroids(
     spark: SparkSession,
     out_dir: str,
@@ -133,10 +113,8 @@ def committed_centroids(
     _check_config(runs, n_cells, dim)
     if not runs:
         return None
-    paths = _committed_run_dirs(out_dir, CENT_TABLE, committed)
-    if not paths:
-        return None
-    return spark.read.parquet(*paths)
+    rows = lineage.committed_table(spark, out_dir, CENT_TABLE, committed)
+    return None if rows is None else rows.drop("run_id")
 
 
 def committed_assignments(
@@ -154,10 +132,8 @@ def committed_assignments(
     _check_config(runs, n_cells, dim)
     if not runs:
         return None
-    paths = _committed_run_dirs(out_dir, ASSIGN_TABLE, committed)
-    if not paths:
-        return None
-    return spark.read.parquet(*paths)
+    rows = lineage.committed_table(spark, out_dir, ASSIGN_TABLE, committed)
+    return None if rows is None else rows.drop("run_id")
 
 
 def update_ivf_index(
@@ -283,10 +259,8 @@ def committed_srp_tags(
     _check_srp_config(runs, bits, tables, dim)
     if not runs:
         return None
-    paths = _committed_run_dirs(out_dir, SRP_TABLE, committed)
-    if not paths:
-        return None
-    return spark.read.parquet(*paths)
+    rows = lineage.committed_table(spark, out_dir, SRP_TABLE, committed)
+    return None if rows is None else rows.drop("run_id")
 
 
 def update_srp_index(

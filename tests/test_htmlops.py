@@ -558,13 +558,13 @@ def test_run_html_extraction_with_anchors(spark, pages, tmp_path):
     import os
     import shutil
 
-    from enem_spark.lineage import committed_anchors, run_html_extraction
+    from enem_spark.lineage import committed_table, run_html_extraction
 
     out = str(tmp_path / "html_out")
     even = pages.filter(F.col("doc_id") % 2 == 0)
     run_html_extraction(spark, even, out, run_id="r1", with_anchors=True)
     got = (
-        committed_anchors(spark, out)
+        committed_table(spark, out, "anchors")
         .select("doc_id", "pos", "href", "anchor_text")
         .toPandas()
         .sort_values(["doc_id", "pos"])
@@ -586,7 +586,7 @@ def test_run_html_extraction_with_anchors(spark, pages, tmp_path):
     assert s2["input_pages"] > 0
     assert not os.path.exists(f"{out}/anchors/run_id=r2")
     # committed anchors are exactly r1's
-    assert committed_anchors(spark, out).count() == len(exp)
+    assert committed_table(spark, out, "anchors").count() == len(exp)
 
 
 def test_anchor_profile_and_outlink_consistency(spark, pages):
@@ -630,9 +630,9 @@ def test_anchors_backfill_flag(spark, pages, tmp_path):
     s2 = run_html_extraction(spark, pages, out, run_id="r2", with_anchors=True)
     assert s2["anchors_backfill_needed"] is True
     # the anchors table holds ONLY r2's docs (the odd half)
-    from enem_spark.lineage import committed_anchors
+    from enem_spark.lineage import committed_table
 
-    got = committed_anchors(spark, out)
+    got = committed_table(spark, out, "anchors")
     assert got.select("doc_id").distinct().count() == s2["input_pages"]
 
 

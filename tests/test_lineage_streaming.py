@@ -256,6 +256,96 @@ def test_stale_dirs_from_crashed_attempt_not_committed(spark, pages_df, tmp_path
     assert committed_questions(spark, out).count() == n
 
 
+def _plant_crash_leftovers(spark, out: str) -> None:
+    """What a crashed attempt under the uncommitted id ``crashed`` can leave
+    behind: a processed_docs part file cut short mid-write, a garbage part
+    file deep in the questions partition tree, and a main_content file
+    whose doc_id has another type than the committed runs'."""
+    import glob
+
+    done = sorted(glob.glob(f"{out}/processed_docs/run_id=r1/part-*.parquet"))[0]
+    with open(done, "rb") as fh:
+        head = fh.read()
+    os.makedirs(f"{out}/processed_docs/run_id=crashed")
+    with open(f"{out}/processed_docs/run_id=crashed/part-00000-cut.parquet", "wb") as fh:
+        fh.write(head[: len(head) // 2])
+    os.makedirs(f"{out}/questions/run_id=crashed/year=2021/day=1")
+    with open(
+        f"{out}/questions/run_id=crashed/year=2021/day=1/part-00000-junk.parquet", "wb"
+    ) as fh:
+        fh.write(b"not a parquet file")
+    spark.createDataFrame(
+        [("not-a-bigint", "https://ex.org/crashed", "text")],
+        "doc_id string, url string, main_text string",
+    ).write.parquet(f"{out}/main_content/run_id=crashed")
+
+
+def _all_rows(df) -> list[str]:
+    return sorted(str(tuple(r)) for r in df.select(*sorted(df.columns)).collect())
+
+
+def _html_pages(spark, ids):
+    return spark.createDataFrame(
+        [
+            (
+                i,
+                f"https://ex.org/d/{i}",
+                (
+                    "<html><body><p>"
+                    + " ".join(f"palavra{(i * 7 + k) % 53}" for k in range(40))
+                    + f" documento {i}.</p></body></html>"
+                ).encode(),
+            )
+            for i in ids
+        ],
+        "doc_id bigint, url string, html binary",
+    )
+
+
+def test_crashed_attempt_leftovers_never_wedge_resume_or_readers(
+    spark, pages_df, tmp_path
+):
+    """Readers and resume read exactly the committed run dirs, so nothing
+    a crashed attempt left under an uncommitted run_id is listed, inferred
+    or scanned: the next run resumes with the same summary as over a clean
+    out_dir, and the committed readers return exactly r1's rows."""
+    from enem_spark.lineage import (
+        committed_main_content,
+        committed_questions,
+        run_html_extraction,
+    )
+
+    cfg = ExtractorConfig(output_type="json")
+    bigger = corpus.pages_dataframe(
+        spark,
+        corpus.CorpusConfig(seed=11, n_exams=6, pages_per_exam=6, questions_per_page=2),
+    )
+    summaries = {}
+    for kind in ("clean", "dirty"):
+        out = str(tmp_path / f"exam_{kind}")
+        run_extraction(spark, pages_df, cfg, out, run_id="r1")
+        if kind == "dirty":
+            want = _all_rows(spark.read.parquet(f"{out}/questions"))
+            _plant_crash_leftovers(spark, out)
+            assert _all_rows(committed_questions(spark, out)) == want
+        summaries[kind] = run_extraction(spark, bigger, cfg, out, run_id="r2")
+    assert summaries["dirty"] == summaries["clean"]
+    assert summaries["dirty"]["input_pages"] > 0
+
+    for kind in ("clean", "dirty"):
+        out = str(tmp_path / f"html_{kind}")
+        run_html_extraction(spark, _html_pages(spark, range(6)), out, run_id="r1")
+        if kind == "dirty":
+            want = _all_rows(spark.read.parquet(f"{out}/main_content"))
+            _plant_crash_leftovers(spark, out)
+            assert _all_rows(committed_main_content(spark, out)) == want
+        summaries[kind] = run_html_extraction(
+            spark, _html_pages(spark, range(10)), out, run_id="r2"
+        )
+    assert summaries["dirty"] == summaries["clean"]
+    assert summaries["dirty"]["input_pages"] == 4
+
+
 def test_quarantine_only_run_commits(spark, tmp_path):
     """A batch containing ONLY contract-violating pages must still commit,
     so its quarantine rows become reader-visible and dedup-able."""
@@ -932,9 +1022,9 @@ def test_images_side_output_under_run_protocol(spark, pages_df):
     s1 = run_extraction(spark, pages_df, cfg, out, run_id="i1")
     expected = materialize_images(pages_df).count()
     assert s1["images_written"] == expected > 0
-    from enem_spark.lineage import committed_images
+    from enem_spark.lineage import committed_table
 
-    imgs = committed_images(spark, out)
+    imgs = committed_table(spark, out, "images")
     assert imgs.count() == expected
     assert set(imgs.select("run_id").distinct().toPandas()["run_id"]) == {"i1"}
     # image_name follows the reference's output convention
@@ -945,13 +1035,13 @@ def test_images_side_output_under_run_protocol(spark, pages_df):
     s2 = run_extraction(spark, pages_df, cfg, out, run_id="i2")
     assert s2["images_written"] == 0 and s2["input_pages"] == 0
     assert not os.path.exists(f"{out}/images/run_id=i2")
-    assert committed_images(spark, out).count() == expected
+    assert committed_table(spark, out, "images").count() == expected
 
     # orphan dir from a crashed attempt: invisible to the committed reader
     spark.read.parquet(f"{out}/images/run_id=i1").withColumn(
         "image_index", F.col("image_index") + 1000
     ).write.mode("overwrite").parquet(f"{out}/images/run_id=crashed")
-    assert committed_images(spark, out).count() == expected
+    assert committed_table(spark, out, "images").count() == expected
     shutil.rmtree(out, ignore_errors=True)
 
 

@@ -161,6 +161,23 @@ def test_committed_reads_fetch_only_new_markers(spark, mockfs):
     assert committed_id_set(out) == {"r00"}
 
 
+def test_run_reads_the_ledger_once(spark, pages_df, mockfs):
+    """A run lists runs/ once and hands the committed id set to every
+    reader; readers list one table level, never every file under it."""
+    out = "mock://bucket/once"
+    cfg = ExtractorConfig(output_type="json")
+    run_extraction(spark, pages_df, cfg, out, run_id="r1")
+    start = len(mockfs.ops)
+    s2 = run_extraction(spark, pages_df, cfg, out, run_id="r2")
+    assert s2["input_pages"] == 0
+    listed = [path for op, path in mockfs.ops[start:] if op == "list_files"]
+    assert listed.count(f"{out}/runs") == 1
+    assert not [
+        p for p in listed
+        if p.startswith((f"{out}/questions", f"{out}/processed_docs"))
+    ]
+
+
 def test_unregistered_scheme_refused_loudly(pages_df, spark):
     """s3:// (or any unregistered scheme) still fails FAST — the old
     silent-degradation mode (os.path returning False on URIs, resume
