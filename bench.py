@@ -5,29 +5,35 @@ Default mode: runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
   {"metric": "...", "value": <docs_per_sec>, "unit": "docs/sec",
-   "queries": {...per-query sec...}, "sf": 0.1, ...}
+   "queries": {...per-query median sec...}, "sf": 0.1, ...}
 
 The primary value is extraction throughput in documents(pages)/sec over the
 Common-Crawl-style pages table synthesized from the documents table (the
 reference's anchor: ~5.8 exam-PDFs/sec ~= 87 pages/sec on one core,
 benchmarks.md:11).
 
-Scaling mode (BASELINE north_rule: >=0.8 efficiency from N to 4N executors):
+Every timed job is a ``JOBS`` row run by one harness (``run_job``): an
+untimed warm pass, then best-of-N timed passes whose counts must reconcile.
 
-  python bench.py --scaling        # spawns subprocess runs at local[8] and
-                                   # local[32] on the same input, writes BENCH.md
+  python bench.py --job html --mult 2   # one job, one JSON line
+  python bench.py --scaling html        # local[2] vs local[8] -> BENCH.md
 
-Subprocess isolation is required because one JVM cannot switch local[N].
+Scaling runs each side in a fresh subprocess: one JVM cannot switch local[N].
 """
 
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
+import statistics
 import subprocess
 import sys
+import tempfile
 import time
+from dataclasses import dataclass
+from typing import Callable
 
 
 def _sf_from_dir(sf_dir: str) -> float:
@@ -38,140 +44,45 @@ def _sf_from_dir(sf_dir: str) -> float:
 
 
 HEADLINE = [
-    "extract_questions",
-    "tpch_q1_like",
-    "route_case",
-    "lookup_join",
-    "running_window",
-    "ordered_concat",
-    "latest_snapshot",
-    "anti_join_missing",
-    "rollup_revenue",
-    "sessionize",
-    "sentence_stats",
-    "char_lm_score",
-    "char_entropy",
-    "doc_chunk",
-    "mixture_sample",
-    "dsir_weights",
-    "pack_sequences",
-    "bpe_merges",
-    "bpe_encode",
-    "bm25_search",
-    "nb_classifier",
-    "train_split",
-    "shuffle_export",
-    "props_extract",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "dedup_ngram_jaccard",
-    "dedup_clusters",
-    "simhash",
-    "simhash_near_dup",
-    "token_budget_select",
-    "compression_ratio",
-    "langid",
-    "script_detect",
-    "quality_score",
-    "token_count",
-    "gopher_filters",
-    "c4_filters",
-    "mojibake_repair",
-    "repetition_filters",
-    "fingerprint",
-    "stratified_sample",
-    "token_histogram",
-    "minhash_jaccard_estimate",
-    "dedup_minhash_estimate",
-    "incr_dedup_exact",
-    "incr_dedup_minhash",
-    "sig_probe_near_dup",
-    "bloom_dedup",
-    "url_canonicalize",
-    "source_percentiles",
-    "boilerplate_strip",
-    "pii_scrub",
-    "decontaminate",
-    "tfidf_top_terms",
-    "top_terms",
-    "corpus_curate",
-    "source_stats",
-    "ann_cosine_topk",
-    "ann_srp_bucket",
-    "ann_ivf_topk",
-    "ann_pq_topk",
-    "embedding_near_dup",
-    "kmeans_clusters",
-    "semdedup",
-    "media_featurize",
-    "media_resize",
-    "media_frame_sample",
-    "html_main_content",
-    "html_strip_tags",
-    "html_outlinks",
-    "html_title_meta",
-    "html_dedup_paragraphs",
-    "html_host_pagerank",
-    "html_host_components",
-    "html_curate",
-    "html_anchor_texts",
-    "html_anchor_profile",
-    "html_paragraph_langid",
-    "html_clean_corpus",
-    "extraction_eval",
-    "html_robots",
-    "robots_txt_allow",
-    "sitemap_discover",
-    "charset_decode",
-    "mime_sniff",
-    "jsonl_ingest",
-    "wet_export",
-    "wat_export",
-    "csv_ingest",
-    "iceberg_merge",
-    "iceberg_compact",
-    "iceberg_rollback",
-    "iceberg_row_delete",
-    "iceberg_delete_purge",
-    "iceberg_cluster",
-    "iceberg_wap",
-    "bucketed_join",
-    "ccnet_buckets",
-    "embedding_decontaminate",
-    "cap_per_host",
-    "fetch_politeness",
-    "recrawl_priority",
-    "asof_join",
-    "range_join",
-    "hll_distinct",
-    "quantile_sketch",
-    "incr_corpus_stats",
-    "cms_topk_terms",
+    "extract_questions", "tpch_q1_like", "route_case", "lookup_join",
+    "running_window", "ordered_concat", "latest_snapshot", "anti_join_missing",
+    "rollup_revenue", "sessionize", "sentence_stats", "char_lm_score",
+    "char_entropy", "doc_chunk", "mixture_sample", "dsir_weights",
+    "pack_sequences", "bpe_merges", "bpe_encode", "bm25_search",
+    "nb_classifier", "train_split", "shuffle_export", "props_extract",
+    "dedup_exact", "dedup_minhash_lsh", "dedup_ngram_jaccard",
+    "dedup_clusters", "simhash", "simhash_near_dup", "token_budget_select",
+    "compression_ratio", "langid", "script_detect", "quality_score",
+    "token_count", "gopher_filters", "c4_filters", "mojibake_repair",
+    "repetition_filters", "fingerprint", "stratified_sample",
+    "token_histogram", "minhash_jaccard_estimate", "dedup_minhash_estimate",
+    "incr_dedup_exact", "incr_dedup_minhash", "sig_probe_near_dup",
+    "bloom_dedup", "url_canonicalize", "source_percentiles",
+    "boilerplate_strip", "pii_scrub", "decontaminate", "tfidf_top_terms",
+    "top_terms", "corpus_curate", "source_stats", "ann_cosine_topk",
+    "ann_srp_bucket", "ann_ivf_topk", "ann_pq_topk", "embedding_near_dup",
+    "kmeans_clusters", "semdedup", "media_featurize", "media_resize",
+    "media_frame_sample", "html_main_content", "html_strip_tags",
+    "html_outlinks", "html_title_meta", "html_dedup_paragraphs",
+    "html_host_pagerank", "html_host_components", "html_curate",
+    "html_anchor_texts", "html_anchor_profile", "html_paragraph_langid",
+    "html_clean_corpus", "extraction_eval", "html_robots", "robots_txt_allow",
+    "sitemap_discover", "charset_decode", "mime_sniff", "jsonl_ingest",
+    "wet_export", "wat_export", "csv_ingest", "iceberg_merge",
+    "iceberg_compact", "iceberg_rollback", "iceberg_row_delete",
+    "iceberg_delete_purge", "iceberg_cluster", "iceberg_wap", "bucketed_join",
+    "ccnet_buckets", "embedding_decontaminate", "cap_per_host",
+    "fetch_politeness", "recrawl_priority", "asof_join", "range_join",
+    "hll_distinct", "quantile_sketch", "incr_corpus_stats", "cms_topk_terms",
     "incr_top_terms",
     # full queries() coverage — every driver entry gets a perf datapoint
-    "extract_question_spans",
-    "filter_normalize",
-    "segment_explode",
-    "numbering_gaps",
-    "unicode_normalize",
-    "url_filter",
-    "url_normalize",
-    "dup_span_stats",
-    "dedup_minhash_sig_store",
-    "dedup_clusters_store",
-    "embedding_near_dup_store",
-    "embedding_decontaminate_store",
-    "ann_ivf_store",
-    "ann_srp_store",
-    "ann_ivf_probe",
-    "dedup_spans_clean",
-    "warc_ingest",
-    "pdf_decode",
-    "pdf_images",
-    "iceberg_scan",
-    "iceberg_time_travel",
-    "iceberg_incremental",
-    "crawl_delta",
+    "extract_question_spans", "filter_normalize", "segment_explode",
+    "numbering_gaps", "unicode_normalize", "url_filter", "url_normalize",
+    "dup_span_stats", "dedup_minhash_sig_store", "dedup_clusters_store",
+    "embedding_near_dup_store", "embedding_decontaminate_store",
+    "ann_ivf_store", "ann_srp_store", "ann_ivf_probe", "dedup_spans_clean",
+    "warc_ingest", "pdf_decode", "pdf_images", "iceberg_scan",
+    "iceberg_time_travel", "iceberg_incremental", "crawl_delta",
 ]
 
 # Ladder queries whose FIRST invocation also commits table mutations
@@ -188,6 +99,16 @@ ICE_LADDER = [
     "iceberg_cluster",
     "iceberg_wap",
 ]
+
+# timed exposures per sweep query; `queries` reports their median and
+# `queries_spread` their [min, max]: one exposure on this shared VM cannot
+# tell a regression from a neighbor-load window
+SWEEP_REPEATS = 3
+
+# micro-batches per streaming catch-up: each batch pays fixed commit
+# actions (fetch_log + marker + the extraction job's launch), so the
+# scaling evidence wants batches large enough that extraction dominates
+STREAM_BATCHES = 4
 
 
 def _prepare_ice(spark, sf_dir: str, qmap) -> dict:
@@ -217,17 +138,39 @@ def _prepare_ice(spark, sf_dir: str, qmap) -> dict:
     return setup
 
 
-def _replicate_documents(documents, mult: int, keep_rep: bool = False):
+# --- staged inputs (memoized under the temp dir per (sf, mult)) -----------
+
+
+def _tmp_store(kind: str, sf_dir: str, mult: int) -> str:
+    suffix = f"x{mult}" if mult > 1 else ""
+    return os.path.join(
+        tempfile.gettempdir(), f"enem_{kind}_sf{_sf_from_dir(sf_dir)}{suffix}"
+    )
+
+
+def _staged(spark, kind, sf_dir, mult, build, n_files, partition_by=()):
+    """Write ``build()`` once per (kind, sf, mult) as ``n_files`` parquet
+    files under the temp dir (cached across bench runs), so every job is
+    timed over a STORED table (scan -> work), not inline synthesis.
+    Returns ``(path, row count)``."""
+    store = _tmp_store(kind, sf_dir, mult)
+    if not os.path.exists(os.path.join(store, "_SUCCESS")):
+        build().repartition(n_files).write.mode("overwrite").partitionBy(
+            *partition_by
+        ).parquet(store)
+    return store, spark.read.parquet(store).count()
+
+
+def _replicate_documents(spark, sf_dir: str, mult: int, keep_rep: bool = False):
     """Replicate the documents table ``mult``x with DISJOINT doc_id ranges
-    (doc_id + rep * n_docs). ONE implementation: the pages store, the html
-    store, the dedup store, and the iceberg delta selection must replicate
-    identically, or the delta bench would diff against a store built with
-    different ids. ``keep_rep`` keeps the replica index column so callers
-    that vary content per replica read it directly instead of re-deriving
-    it from the id layout (which would silently break if this scheme ever
-    changed)."""
+    (doc_id + rep * n_docs). ONE implementation: every store and the
+    iceberg delta selection must replicate identically, or the delta bench
+    would diff against a store built with different ids. ``keep_rep`` keeps
+    the replica index column for callers that vary content per replica,
+    so none re-derives it from the id layout."""
     from pyspark.sql import functions as F
 
+    documents = spark.read.parquet(f"{sf_dir}/documents.parquet")
     if mult <= 1:
         return documents.withColumn("rep", F.lit(0)) if keep_rep else documents
     n_docs = documents.count()
@@ -237,203 +180,169 @@ def _replicate_documents(documents, mult: int, keep_rep: bool = False):
     return out if keep_rep else out.drop("rep")
 
 
-def _pages_store(spark, sf_dir: str, mult: int = 1) -> tuple[str, int]:
-    """Materialize the CC-style pages table to parquet once per (sf, mult)
-    (cached across bench runs). Extraction is timed over this STORED table —
-    the honest scenario (scan -> extract), not re-synthesizing pages inline.
-
-    ``mult`` replicates the documents table with disjoint doc_id ranges —
-    used by the scaling run, where the input must be large enough to saturate
-    4N cores (5k near-empty pages measure scheduler overhead, not the job)."""
-    import tempfile
+def _vowel_permuted(spark, sf_dir: str, mult: int):
+    """The documents table replicated ``mult``x, each replica's text under
+    its own VOWEL PERMUTATION (deterministic, length-preserving). Plain
+    copies would make candidate pairs grow quadratically with ``mult``,
+    measuring the corpus's dup rate instead of the engine's scaling; here
+    within-replica near-dup structure is kept exactly while cross-replica
+    shingle overlap collapses, so total work scales linearly, like a real
+    larger crawl. 120 distinct permutations bound mult."""
+    import itertools
 
     from pyspark.sql import functions as F
 
+    perms = ["".join(p) for p in itertools.permutations("aeiou")]
+    if mult > len(perms):
+        raise ValueError("vowel-permuted replicas support mult <= 120")
+    docs = _replicate_documents(spark, sf_dir, mult, keep_rep=True)
+    expr = None
+    for k, perm in enumerate(perms[:mult]):
+        branch = F.translate(F.col("text"), "aeiou", perm)
+        cond = F.col("rep") == k
+        expr = F.when(cond, branch) if expr is None else expr.when(cond, branch)
+    return docs.withColumn("text", expr.otherwise(F.col("text"))).drop("rep")
+
+
+def _pages_store(spark, sf_dir: str, mult: int = 1) -> tuple[str, int]:
+    """The CC-style pages table over ``mult`` replicas: the scaling input
+    must saturate 4N cores (5k near-empty pages measure scheduler overhead,
+    not the job). Many small files: a single-file store of this few-MB
+    corpus would collapse the scan to ~1 task, while file-count ×
+    openCostInBytes packing gives core-proportional scan parallelism, as
+    real CC dumps (thousands of ~100 MB files) do. Partitioning by kind
+    lets the answer-key build prune to the tiny GB partition."""
+    from pyspark.sql import functions as F
+
+    from enem_spark.extract import url_kind
     from enem_spark.sources.documents_bridge import pages_from_documents
 
-    sf = _sf_from_dir(sf_dir)
-    suffix = f"x{mult}" if mult > 1 else ""
-    store = os.path.join(tempfile.gettempdir(), f"enem_pages_sf{sf}{suffix}")
-    marker = os.path.join(store, "_SUCCESS")
-    if not os.path.exists(marker):
-        documents = _replicate_documents(
-            spark.read.parquet(f"{sf_dir}/documents.parquet"), mult
-        )
-        # many small files: the synthetic corpus is only a few MB, so a
-        # single-file store would collapse the scan to ~1 task no matter how
-        # many cores run. File-count × openCostInBytes packing then gives
-        # core-proportional scan parallelism, the same way real CC dumps
-        # (thousands of ~100 MB files) do naturally. Partitioning by kind
-        # lets the answer-key build prune to the tiny GB partition instead
-        # of scanning every PV page for its 32 key rows.
-        n_files = max(32, mult * 8)
-        # mirror with_url_metadata's derivation EXACTLY (no otherwise): a
-        # url that is neither PV nor GB must stay null so it flows to
-        # quarantine — an otherwise("GB") would silently admit noise docs
-        # into the answer-key build for the stored-pages path
-        from enem_spark.extract import url_kind
-
-        pages = pages_from_documents(documents).withColumn(
-            "kind", url_kind(F.col("url"))
-        )
-        pages.repartition(n_files).write.mode("overwrite").partitionBy(
-            "kind"
-        ).parquet(store)
-    n_pages = spark.read.parquet(store).count()
-    return store, n_pages
+    # mirror with_url_metadata's derivation EXACTLY (no otherwise): a
+    # url that is neither PV nor GB must stay null so it flows to
+    # quarantine — an otherwise("GB") would silently admit noise docs
+    # into the answer-key build for the stored-pages path
+    return _staged(
+        spark, "pages", sf_dir, mult,
+        lambda: pages_from_documents(
+            _replicate_documents(spark, sf_dir, mult)
+        ).withColumn("kind", url_kind(F.col("url"))),
+        max(32, mult * 8), partition_by=("kind",),
+    )
 
 
 def _html_pages_store(spark, sf_dir: str, mult: int = 1) -> tuple[str, int]:
-    """Materialize the CC-style HTML pages table (htmlops.synth_html_pages)
-    to parquet once per (sf, mult) — same replication/store pattern as
-    _pages_store, so the DOM extraction is timed over a stored table
-    (scan -> extract), not inline synthesis."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
+    """The CC-style HTML pages table (htmlops.synth_html_pages), same
+    replication and file layout as _pages_store."""
     from enem_spark.htmlops import synth_html_pages
 
-    sf = _sf_from_dir(sf_dir)
-    suffix = f"x{mult}" if mult > 1 else ""
-    store = os.path.join(tempfile.gettempdir(), f"enem_html_pages_sf{sf}{suffix}")
-    marker = os.path.join(store, "_SUCCESS")
-    if not os.path.exists(marker):
-        documents = _replicate_documents(
-            spark.read.parquet(f"{sf_dir}/documents.parquet"), mult
-        )
-        n_files = max(32, mult * 8)
-        synth_html_pages(documents).repartition(n_files).write.mode(
-            "overwrite"
-        ).parquet(store)
-    n_rows = spark.read.parquet(store).count()
-    return store, n_rows
+    return _staged(
+        spark, "html_pages", sf_dir, mult,
+        lambda: synth_html_pages(_replicate_documents(spark, sf_dir, mult)),
+        max(32, mult * 8),
+    )
 
 
 def _dedup_docs_store(spark, sf_dir: str, mult: int = 1) -> tuple[str, int]:
-    """Materialize a replicated documents table for the dedup-scaling
-    evidence. Plain replication would make every document a near-dup of its
-    mult-1 copies — candidate pairs (and so the job itself) would grow
-    quadratically with ``mult``, measuring the corpus's dup rate instead of
-    the engine's scaling. Each replica therefore gets its own VOWEL
-    PERMUTATION applied to the text (deterministic, length-preserving):
-    within-replica similarity structure is preserved exactly (both sides of
-    a near-dup pair rotate identically), while cross-replica shingle overlap
-    collapses — total work scales linearly with ``mult``, like a real
-    larger crawl. 120 distinct permutations bound mult."""
-    import itertools
-    import tempfile
+    """The vowel-permuted replicated documents table the dedup job and the
+    signature-store A/B read."""
+    return _staged(
+        spark, "dedup_docs", sf_dir, mult,
+        lambda: _vowel_permuted(spark, sf_dir, mult), max(32, mult * 8),
+    )
 
+
+def _ice_store(spark, sf_dir: str, mult: int = 8) -> tuple[str, int]:
+    """Memoized icetable of the stored html pages (one create commit) —
+    the steady-state read side for the icetable scaling evidence."""
+    from enem_spark.sources.icetable import IceTable, Transform, current_version
+
+    tbl = _tmp_store("ice_store", sf_dir, mult)
+    store, n_rows = _html_pages_store(spark, sf_dir, mult)
+    if current_version(tbl) < 0:
+        pages = spark.read.parquet(store).select("url", "warc_ts", "html", "lang")
+        IceTable.create(
+            spark, tbl, pages,
+            partition_by=(Transform("b_url", "bucket", "url", 32),),
+            sequence=10,
+        )
+    return tbl, n_rows
+
+
+def _pdf_store(sf_dir: str, mult: int, images: bool = False) -> tuple[str, int]:
+    """Stage one synthesized 2-page PDF per (document x replica) under
+    the temp dir (written once; the _DONE marker carries the file count).
+    Replica text is prefixed so no two files are byte-identical.
+    ``images`` embeds six image XObjects per file (synth_doc_images: gray /
+    predictor-RGB / indexed / CMYK / SMask / CCITT-G4) into a separate
+    dir: the text-only store's bytes must stay stable for its own job."""
+    import duckdb
+
+    kind = "pdfimgstore" if images else "pdfstore"
+    base = os.path.join(
+        tempfile.gettempdir(), f"enem_{kind}_{_sf_from_dir(sf_dir)}x{mult}"
+    )
+    done = os.path.join(base, "_DONE")
+    if os.path.isfile(done):
+        with open(done) as f:
+            return base, int(f.read())
+    from enem_spark.pdfbin import doc_pdf_lines, synth_doc_images, synth_pdf
+
+    os.makedirs(base, exist_ok=True)
+    rows = duckdb.sql(
+        "SELECT doc_id, text FROM "
+        f"read_parquet('{sf_dir}/documents.parquet') ORDER BY doc_id"
+    ).fetchall()
+    n = 0
+    for rep in range(mult):
+        for doc_id, text in rows:
+            pdf = synth_pdf(
+                doc_pdf_lines(f"rep{rep} " + (text or "")),
+                synth_doc_images(int(doc_id) * mult + rep) if images else None,
+            )
+            name = os.path.join(base, f"doc_{rep}_{int(doc_id):07d}.pdf")
+            with open(name, "wb") as f:
+                f.write(pdf)
+            n += 1
+    with open(done, "w") as f:
+        f.write(str(n))
+    return base, n
+
+
+def _vec_store(spark, sf_dir: str, mult: int = 1) -> tuple[str, int]:
+    """Materialize a replicated embeddings table for the IVF-store A/B.
+    Each replica's vectors are ROTATED by its replica index (element
+    shift — norm-preserving, direction-changing, deterministic): plain
+    replication would put mult identical vectors in every cell and the
+    per-query top-k would rank mult-way cosine ties, measuring tie-break
+    sort cost instead of the assignment stage. Replica 0 keeps the
+    original ids/vectors, so the vec_id < n_cells centroid convention
+    and the default query ids survive replication."""
     from pyspark.sql import functions as F
 
-    sf = _sf_from_dir(sf_dir)
-    suffix = f"x{mult}" if mult > 1 else ""
-    store = os.path.join(tempfile.gettempdir(), f"enem_dedup_docs_sf{sf}{suffix}")
-    marker = os.path.join(store, "_SUCCESS")
-    if not os.path.exists(marker):
-        base = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        # keep_rep: read the replica index from the shared replication
-        # helper rather than re-deriving it from the id layout
-        docs = _replicate_documents(base, mult, keep_rep=True)
-        if mult > 1:
-            perms = [
-                "".join(p) for p in itertools.permutations("aeiou")
-            ][:mult]
-            if mult > len(perms):
-                raise ValueError("dedup store supports mult <= 120")
-            rep = F.col("rep")
-            rotated = F.col("text")
-            expr = None
-            for k, perm in enumerate(perms):
-                branch = F.translate(F.col("text"), "aeiou", perm)
-                expr = (
-                    F.when(rep == k, branch)
-                    if expr is None
-                    else expr.when(rep == k, branch)
-                )
-            docs = docs.withColumn("text", expr.otherwise(rotated))
-        docs = docs.drop("rep")
-        n_files = max(32, mult * 8)
-        docs.repartition(n_files).write.mode("overwrite").parquet(store)
-    n_docs = spark.read.parquet(store).count()
-    return store, n_docs
+    if mult > 64:
+        # rep % 64 would collide rotations: replica 64 duplicates replica
+        # 0's directions (including the default query vectors) and the
+        # A/B would silently measure mult-way cosine-tie sort cost again
+        raise ValueError("ivf vector store supports mult <= 64")
 
+    def build():
+        base = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
+            "vec_id", "embedding"
+        )
+        n = base.count()
+        out = None
+        for rep in range(mult):
+            vec = F.col("embedding")
+            if rep:
+                vec = F.concat(F.slice(vec, rep + 1, 64 - rep), F.slice(vec, 1, rep))
+            part = base.select(
+                (F.col("vec_id") + F.lit(rep * n)).alias("vec_id"),
+                vec.alias("embedding"),
+            )
+            out = part if out is None else out.unionByName(part)
+        return out
 
-def run_dedup_bench(sf_dir: str, cpus: str) -> dict:
-    """Shuffle-heavy dedup throughput: textops.minhash_estimate_pairs at the
-    ENGINE config (128 perms / 16 bands) over the stored replicated
-    documents table — signature aggregation over the shingle explode, band
-    self-join, signature-agreement estimate. This is the operator family
-    whose scaling a map-side bench cannot evidence (two wide exchanges:
-    the signature groupBy and the band-bucket join). Emits the same JSON
-    keys as the other --*-extract-only modes so run_scaling can drive it."""
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from enem_spark import textops
-    from enem_spark.session import get_spark
-
-    n_cores = int(cpus) if str(cpus).isdigit() else (os.cpu_count() or 8)
-    hw_probe = (
-        None
-        if os.environ.get("SPARK_GRAFT_SKIP_HW_PROBE")
-        else _mp_probe(min(n_cores, os.cpu_count() or 8))
-    )
-    spark = get_spark("enem_spark_dedup", cores=cpus)
-    mult = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "4"))
-    store, n_docs = _dedup_docs_store(spark, sf_dir, mult)
-    docs = spark.read.parquet(store)
-
-    def job() -> int:
-        # persist-with-owner: each timed run pays the full signature
-        # computation and releases its cache, so runs are independent and
-        # a 3-trial sweep doesn't accumulate orphaned blocks
-        holders: list = []
-        try:
-            return textops.minhash_estimate_pairs(
-                docs, threshold=0.5, persist_to=holders
-            ).count()
-        finally:
-            for h in holders:
-                # blocking: the next timed run must start with the previous
-                # run's cache blocks actually gone, not releasing async
-                h.unpersist(blocking=True)
-
-    job()  # warm every worker + codegen, untimed
-    runs = []
-    n_pairs = 0
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    for _ in range(n_runs):
-        t0 = time.perf_counter()
-        n_pairs = job()
-        runs.append(round(time.perf_counter() - t0, 3))
-    return {
-        "metric": "docs/sec minhash near-dup estimate (sign + band join + estimate)",
-        "value": round(n_docs / min(runs), 2),
-        "unit": "docs/sec",
-        "sf": _sf_from_dir(sf_dir),
-        "cpus": cpus,
-        "extract_runs_sec": runs,
-        "n_pages": n_docs,
-        "n_pairs": n_pairs,
-        "hw_probe_mops": hw_probe,
-    }
-
-
-BIG_TOP10 = [
-    # the 10 most expensive r4 queries that read only the documents /
-    # embeddings tables (so a replicated big dir drives them unmodified);
-    # sig_probe_near_dup stages its signature store against the big dir
-    # as setup, exactly as it would over a real big corpus
-    "dedup_clusters",
-    "html_curate",
-    "kmeans_clusters",
-    "bpe_merges",
-    "embedding_near_dup",
-    "html_host_components",
-    "semdedup",
-    "dedup_minhash_lsh",
-    "ann_pq_topk",
-    "sig_probe_near_dup",
-]
+    return _staged(spark, "ivfvec", sf_dir, mult, build, max(32, mult * 4))
 
 
 def _big_sf_dir(spark, sf_dir: str, mult: int) -> tuple[str, int, int]:
@@ -443,35 +352,15 @@ def _big_sf_dir(spark, sf_dir: str, mult: int) -> tuple[str, int, int]:
     embeddings replicated with per-replica deterministic perturbations
     (identical copies would make every ANN/near-dup query degenerate).
     Driver queries read it as a normal sf_dir."""
-    import itertools
-    import tempfile
-
     from pyspark.sql import functions as F
 
     sf = _sf_from_dir(sf_dir)
     base = os.path.join(tempfile.gettempdir(), f"enem_big_sf{sf}x{mult}")
     done = os.path.join(base, "_DONE")
     if not os.path.exists(done):
-        docs = _replicate_documents(
-            spark.read.parquet(f"{sf_dir}/documents.parquet"),
-            mult,
-            keep_rep=True,
-        )
-        perms = ["".join(p) for p in itertools.permutations("aeiou")][:mult]
-        expr = None
-        for k, perm in enumerate(perms):
-            branch = F.translate(F.col("text"), "aeiou", perm)
-            expr = (
-                F.when(F.col("rep") == k, branch)
-                if expr is None
-                else expr.when(F.col("rep") == k, branch)
-            )
-        docs = docs.withColumn("text", expr.otherwise(F.col("text"))).drop(
-            "rep"
-        )
-        docs.repartition(max(32, mult * 4)).write.mode("overwrite").parquet(
-            os.path.join(base, "documents.parquet")
-        )
+        _vowel_permuted(spark, sf_dir, mult).repartition(
+            max(32, mult * 4)
+        ).write.mode("overwrite").parquet(os.path.join(base, "documents.parquet"))
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         n_vec = emb.count()
         emb = (
@@ -509,22 +398,520 @@ def _big_sf_dir(spark, sf_dir: str, mult: int) -> tuple[str, int, int]:
         )
         with open(done, "w") as fh:
             fh.write("1")
-    import duckdb
+    n_docs = spark.read.parquet(f"{base}/documents.parquet").count()
+    return base, n_docs, spark.read.parquet(f"{base}/embeddings.parquet").count()
 
-    n_docs = duckdb.sql(
-        f"SELECT COUNT(*) FROM read_parquet('{base}/documents.parquet/*.parquet')"
-    ).fetchone()[0]
-    n_vecs = duckdb.sql(
-        f"SELECT COUNT(*) FROM read_parquet('{base}/embeddings.parquet/*.parquet')"
-    ).fetchone()[0]
-    return base, int(n_docs), int(n_vecs)
+
+# --- hardware probe ----------------------------------------------------
+
+
+def _mp_probe(procs: int, total: int = 12_000_000) -> float:
+    """Raw-hardware throughput (M hash-ops/s) of an embarrassingly parallel
+    pure-Python burn at `procs` processes — no Spark involved. Establishes
+    the host's own scaling ceiling so the Spark efficiency number can be
+    read against what the virtualized CPUs actually deliver."""
+    import multiprocessing as mp
+
+    with mp.Pool(procs) as p:
+        t0 = time.perf_counter()
+        p.map(_mp_burn, [total // procs] * procs)
+        return round(total / (time.perf_counter() - t0) / 1e6, 2)
+
+
+def _mp_burn(n: int) -> int:
+    import hashlib
+
+    acc = 0
+    for i in range(n):
+        acc += int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16)
+    return acc
+
+
+def _probe(cpus) -> float:
+    """`_mp_probe` at the session's width. The host is a shared VM whose
+    delivered CPU swings with neighbor load, so every timed phase is
+    bracketed by probes taken in its own window (VERDICT r3: a probe from
+    another window is unusable). ``cpus`` may be non-numeric ("*" =
+    local[*]); probe at the machine width then."""
+    width = os.cpu_count() or 8
+    n = int(cpus) if str(cpus).isdigit() else width
+    return _mp_probe(min(n, width))
+
+
+# --- the timed-job harness ---------------------------------------------
+
+
+def _time_job(job: Callable[[], int], runs: int, expected: int | None = None):
+    """One untimed warm pass (every core's Python worker, codegen, the
+    broadcast machinery — a per-executor constant, not steady-state
+    throughput; the reference's warm-up + avg-of-3, benchmarks.md:5), then
+    ``runs`` timed passes. Returns ``(count, walls)``. Refuses to return a
+    throughput basis unless every timed pass yields the warm pass's count
+    and, when ``expected`` is given, that count equals it: a short pass
+    would report a rate it did not deliver."""
+    count = job()
+    if expected is not None and count != expected:
+        raise RuntimeError(f"job produced {count} rows, expected {expected}")
+    walls = []
+    for _ in range(runs):
+        t0 = time.perf_counter()
+        n = job()
+        walls.append(round(time.perf_counter() - t0, 3))
+        if n != count:
+            raise RuntimeError(f"timed pass produced {n} rows, warm pass {count}")
+    return count, walls
+
+
+@dataclass(frozen=True)
+class Job:
+    """One timed job. ``setup(spark, sf_dir, mult)`` stages the input and
+    returns ``(n_docs, job, expected)``: ``job()`` does the work once and
+    returns its output count; ``n_docs`` is the throughput numerator
+    (None: the job's own count); ``expected`` is the count every pass must
+    reach (None: only pass-to-pass agreement is checked). ``mult`` is the
+    default replication. The remaining fields declare the job's BENCH.md
+    scaling section; ``note(summary)`` renders text after its table."""
+
+    setup: Callable
+    mult: int
+    metric: str
+    unit: str = "docs/sec"
+    heading: str = ""
+    column: str = ""
+    intro: str = ""
+    note: Callable[[dict], str] = lambda s: ""
+
+
+def _exam_setup(spark, sf_dir, mult):
+    from enem_spark.extract import ExtractorConfig, extract_questions
+
+    store, n_pages = _pages_store(spark, sf_dir, mult)
+    pages = spark.read.parquet(store)
+    cfg = ExtractorConfig(output_type="json")
+
+    def job():
+        # persist-with-owner: salted numbering feeds the post-stage frame
+        # to both sides of a join — without an owned persist the page
+        # stage would run twice
+        owned: list = []
+        try:
+            return extract_questions(pages, cfg, persist_to=owned).count()
+        finally:
+            for df in owned:
+                df.unpersist()
+
+    return n_pages, job, None
+
+
+def _html_setup(spark, sf_dir, mult):
+    from enem_spark.htmlops import extract_main_content
+
+    store, n_rows = _html_pages_store(spark, sf_dir, mult)
+    pages = spark.read.parquet(store)
+    return n_rows, lambda: extract_main_content(pages).count(), n_rows
+
+
+def _ice_setup(spark, sf_dir, mult):
+    # the icerun hot path without the commit writes: manifest-planned
+    # read -> latest-fetch-per-url window -> content address -> extraction
+    from pyspark.sql import functions as F
+
+    from enem_spark.icerun import _latest_per_url
+    from enem_spark.lineage import instrumented_html_stage
+    from enem_spark.sources.icetable import IceTable
+
+    tbl, n_rows = _ice_store(spark, sf_dir, mult)
+    t = IceTable(spark, tbl)
+
+    def job():
+        work = _latest_per_url(t.read().select("url", "warc_ts", "html")).select(
+            F.xxhash64("url", F.md5("html")).alias("doc_id"), "url", "html"
+        )
+        return instrumented_html_stage(work).count()
+
+    return n_rows, job, n_rows
+
+
+def _stream_setup(spark, sf_dir, mult):
+    # the html pages store driven through start_html_stream's exactly-once
+    # foreachBatch protocol: availableNow catch-up, each micro-batch paying
+    # extraction + the event-time fetch_log + the run-marker commit, url
+    # dedup state held inside the watermark
+    import shutil
+
+    from enem_spark.lineage import committed_main_content
+    from enem_spark.streaming import read_html_pages_stream, start_html_stream
+
+    store, n_rows = _html_pages_store(spark, sf_dir, mult)
+    # file-stream batches are FILE-granular, and the shared store's
+    # layout (mult*8 files) would put hundreds of tiny files in every
+    # batch at large mult — driver task scheduling is serial, so
+    # per-batch scheduler cost would grow with input size and
+    # masquerade as protocol cost (measured: S 15 -> 24 s from x96 to
+    # x400 on the shared layout). Stage a streaming-layout copy once:
+    # a fixed 32 files per intended batch, file size growing with mult
+    # the way a crawler's archive drops do.
+    stream_store = f"{store}_stream{STREAM_BATCHES}"
+    if not os.path.exists(os.path.join(stream_store, "_SUCCESS")):
+        spark.read.parquet(store).repartition(STREAM_BATCHES * 32).write.mode(
+            "overwrite"
+        ).parquet(stream_store)
+    n_files = len([f for f in os.listdir(stream_store) if f.endswith(".parquet")])
+    per_trigger = max(1, n_files // STREAM_BATCHES)
+
+    def job():
+        # a FRESH output + checkpoint per pass: the protocol's resume would
+        # otherwise anti-join the next pass to a no-op (that resume IS the
+        # correctness contract, certified in tests/test_lineage_streaming.py
+        # — here the steady-state ingest cost is what's measured)
+        out = tempfile.mkdtemp(prefix="enem_streambench_")
+        try:
+            stream = read_html_pages_stream(
+                spark, stream_store, max_files_per_trigger=per_trigger
+            )
+            start_html_stream(stream, out, f"{out}/_checkpoint").awaitTermination()
+            main = committed_main_content(spark, out)
+            return main.count() if main is not None else 0
+        finally:
+            shutil.rmtree(out, ignore_errors=True)
+
+    # every stored page has its own url, so each must commit exactly one
+    # main_content row
+    return n_rows, job, n_rows
+
+
+def _dedup_setup(spark, sf_dir, mult):
+    from enem_spark import textops
+
+    store, n_docs = _dedup_docs_store(spark, sf_dir, mult)
+    docs = spark.read.parquet(store)
+
+    def job():
+        # persist-with-owner: each timed run pays the full signature
+        # computation and releases its cache, so runs are independent and
+        # a 3-trial sweep doesn't accumulate orphaned blocks
+        holders: list = []
+        try:
+            return textops.minhash_estimate_pairs(
+                docs, threshold=0.5, persist_to=holders
+            ).count()
+        finally:
+            for h in holders:
+                # blocking: the next timed run must start with the previous
+                # run's cache blocks actually gone, not releasing async
+                h.unpersist(blocking=True)
+
+    return n_docs, job, None
+
+
+def _pdf_setup(spark, sf_dir, mult):
+    from enem_spark.sources.pdfsource import pdf_pages_frame
+
+    store, _ = _pdf_store(sf_dir, mult)
+    # pages/sec: the numerator is the decoded page count itself
+    return None, lambda: pdf_pages_frame(spark, store).count(), None
+
+
+def _pdfimg_setup(spark, sf_dir, mult):
+    from enem_spark.sources.pdfsource import pdf_images_frame, pdf_pages_frame
+
+    store, n_files = _pdf_store(sf_dir, mult, images=True)
+
+    def job():
+        # text + images in one pass — the reference's images mode does both
+        n_images = pdf_images_frame(spark, store).count()
+        pdf_pages_frame(spark, store).count()
+        return n_images
+
+    # docs/sec counts DOCUMENTS (files) for the per-core anchor comparison
+    return n_files, job, None
+
+
+def _stream_note(s: dict) -> str:
+    # two-point decomposition wall = C/p + S: C = parallel compute
+    # (core-sec), S = serial per-run cost (micro-batch planning + the
+    # per-batch commit actions) — the quantity batch size amortizes
+    lo, hi, n = s["low_cpus"], s["high_cpus"], s["n_pages"]
+    wall_lo, wall_hi = n / s["docs_per_sec_low"], n / s["docs_per_sec_high"]
+    c_core_s = (wall_lo - wall_hi) / (1 / lo - 1 / hi)
+    s_serial = max(wall_hi - c_core_s / hi, 0.0)
+    credible = [t for t in s.get("trials", []) if _credible(t)]
+    probe_note = "" if credible else (
+        "\nNOTE: no trial window had a credible hardware probe "
+        "(every ratio fell outside (0.6, 1.0] — a super-linear "
+        "hardware ratio means the LOW-side probe itself was "
+        "throttled), so the normalized figure divides by an "
+        "artifact ratio and UNDERSTATES the job; the raw row and "
+        "the decomposition are the meaningful numbers for this "
+        "window.\n"
+    )
+    return f"""
+Two-point decomposition of the picked trial (wall = C/p + S): parallel
+compute C = {c_core_s:.0f} core-s ({1000 * c_core_s / n:.2f} ms-core/page),
+serial per-run cost S = {s_serial:.1f} s. S has two parts, measured
+separately: (1) a fixed per-batch protocol cost — ~7 driver actions per
+batch (committed-runs read, resume anti-join, fetch_log + main_content +
+lineage + processed_docs writes, marker append) — isolated by the
+batch-amortization A/B below (frozen history; perfbench `html_stream`
+`batch_p50_s` is the live per-batch figure); (2) a component growing with
+batch size (S 14.7 -> 30.9 s from x400 to x800 at identical batch/file
+counts): the watermark-dedup state store's per-batch load/commit and the
+checkpoint I/O, which on this single-disk local harness do not
+parallelize with cores. The extraction C itself is the same
+shuffle-free mapInPandas as the batch DOM job (normalized 1.0 in its
+own section); on a real cluster the state store commits per shuffle
+partition across many executors' disks and batches run minutes long,
+so both serial parts amortize — the local[2->8] number above is a
+floor set by the harness's one disk, not by the plan.
+{probe_note}"""
+
+
+JOBS: dict[str, Job] = {
+    # exam: default x48 (~240k pages at sf0.1) so local[8] is compute-bound;
+    # its section is the top of BENCH.md (write_bench_md)
+    "exam": Job(
+        _exam_setup, 48,
+        "documents/sec extraction throughput (CC-style pages table)",
+    ),
+    "html": Job(
+        _html_setup, 8,
+        "documents/sec DOM main-content extraction (html pages table)",
+        heading="## HTML main-content scaling (DOM extraction job)",
+        column="DOM extraction docs/sec",
+        intro="Same two-parallelism evidence for the web path "
+        "(`extract_main_content`,\none mapInPandas crossing, no shuffle):",
+        note=lambda s: f"""
+Root cause of the earlier 0.80-at-mult-8 reading (r5 profiling): the job
+carries a ~0.27 s fixed per-job cost (job launch + Python/Arrow eval
+setup; measured directly — a TRIVIAL pass-through mapInPandas over the
+same scan costs ~0.16 s at 8 cores, and per-task Python overhead is
+~20 ms, which is also why splitting the scan into 64 fine tasks makes
+the job 2x SLOWER, not faster). At 40k toy docs that fixed cost is ~22%
+of the 8-core wall and caps raw N=2->8 efficiency near 0.84; it
+amortizes with input size — the table above (x{s['scale_mult']})
+is the evidence — and at deployment scale (tasks >> cores, minutes-long
+jobs) it vanishes entirely. The engine plan itself has no shuffle and
+no serial stage.
+""",
+    ),
+    "ice": Job(
+        _ice_setup, 16,
+        "docs/sec icetable-input extraction (read+window+extract)",
+        heading="## Icetable-input scaling (manifest-planned read -> extraction)",
+        column="icetable extraction docs/sec",
+        intro="""Two-parallelism evidence with the Iceberg-style table as the input
+(read through the manifest plan, latest-fetch-per-url window,
+content-address, DOM extraction):""",
+    ),
+    # stream: much larger default replication than the batch DOM row: each
+    # micro-batch pays ~3.7 s of fixed commit actions, so batches must be
+    # big enough that extraction dominates the timed wall
+    "stream": Job(
+        _stream_setup, 400,
+        "documents/sec exactly-once streaming DOM extraction (availableNow catch-up)",
+        heading="## Streaming-ingest scaling (exactly-once availableNow catch-up)",
+        column="streaming ingest docs/sec",
+        intro="""The same stored html pages table as the DOM-extraction row, driven
+through `start_html_stream`'s foreachBatch protocol — per micro-batch:
+main-content extraction, the event-time `(url, warc_ts, doc_id)`
+fetch_log, and the run-marker commit, with url-dedup state bounded by
+the watermark. Each timed run starts from a fresh checkpoint (the
+protocol's resume anti-joins a replay to a no-op, so a warm rerun would
+measure the resume, not the ingest):""",
+        note=_stream_note,
+    ),
+    # dedup: default x4 (20k docs): the 128-perm sign stage is ~40x the
+    # per-page UDF cost, so the exam job's x48 would take an hour per trial
+    # without adding signal
+    "dedup": Job(
+        _dedup_setup, 4,
+        "docs/sec minhash near-dup estimate (sign + band join + estimate)",
+        heading="## Dedup scaling (MinHash sign + banded-LSH estimate, engine config)",
+        column="dedup docs/sec",
+        intro="""The map-heavy extraction benches above cannot evidence the SHUFFLE-heavy
+operator family, so the same two-parallelism protocol runs
+`minhash_estimate_pairs` at the engine config (128 perms / 16 bands):
+shingle explode -> 128 min-aggregates (signature groupBy exchange) ->
+band-bucket self-join (second exchange) -> signature-agreement estimate.
+Replicas are vowel-permuted so candidate pairs (and total work) scale
+linearly with the corpus, not quadratically:""",
+    ),
+    "pdf": Job(
+        _pdf_setup, 4,
+        "pages/sec binary-PDF decode (stdlib parser, binaryFile -> mapInPandas)",
+        unit="pages/sec",
+        heading="## Binary-PDF decode scaling (stdlib parser job)",
+        column="PDF decode pages/sec",
+        intro="""Same two-parallelism evidence for the real-input path (`pdf_pages_frame`:
+binaryFile scan -> one mapInPandas decode/explode, no shuffle; input is
+the deterministic synthesized PDF store, one 2-page file per document):""",
+    ),
+    # pdfimg: x2 (10k docs, 60k images): the per-doc image pipeline is ~5x
+    # the text decode, so the text store's x4 would double trial wall time
+    # without adding signal
+    "pdfimg": Job(
+        _pdfimg_setup, 2,
+        "docs/sec images-mode decode (text + real image pipeline)",
+        heading="## Images-mode decode scaling (text + real image pipeline)",
+        column="images-mode docs/sec",
+        intro="""The reference's `process_questions_with_images=True` anchor is 0.59 s/PDF
+= ~1.7 docs/s/core (BASELINE.md). This job decodes BOTH the text spans and
+every embedded image (inflate -> predictor removal -> palette/CMYK->RGB ->
+PNG encode + md5; 6 images per 2-page document, all decoder branches incl.
+Group 4) over the image-bearing synthesized store:""",
+        note=lambda s: f"""
+~{round(s['docs_per_sec_high'] / s['high_cpus'], 1)} docs/s/core at \
+{s['high_cpus']} cores vs the reference's ~1.7.
+""",
+    ),
+}
+
+
+def run_job(
+    name: str, sf_dir: str, cpus, mult: int, runs: int = 3, probe: bool = True
+) -> dict:
+    """Time one ``JOBS`` row: probe, start the session, stage, warm pass,
+    best-of-``runs`` timed passes. Emits the keys run_scaling reads.
+    ``probe=False`` for scaling children: the parent already probed this
+    window, and a redundant 12M-md5 burn right before the timed runs both
+    wastes wall time and adds load adjacent to the measurement."""
+    from enem_spark.session import get_spark
+
+    row = JOBS[name]
+    hw_probe = _probe(cpus) if probe else None
+    spark = get_spark(f"enem_spark_{name}_bench", cores=cpus)
+    n_docs, job, expected = row.setup(spark, sf_dir, mult)
+    count, walls = _time_job(job, runs, expected)
+    n_docs = count if n_docs is None else n_docs
+    return {
+        "job": name,
+        "metric": row.metric,
+        # best-of-N: neighbor steal on this shared VM only ever SLOWS a
+        # run, so the fastest observation is the least-interfered estimate
+        "value": round(n_docs / min(walls), 2),
+        "unit": row.unit,
+        "sf": _sf_from_dir(sf_dir),
+        "cpus": cpus,
+        "scale_mult": mult,
+        "extract_runs_sec": walls,
+        "n_pages": n_docs,
+        "count": count,
+        "hw_probe_mops": hw_probe,
+    }
+
+
+# --- the default sweep and the large-input headline ----------------------
+
+
+def run_bench(sf_dir: str, cpus: str, mult: int = 8, runs: int = 3) -> dict:
+    import __spark_entry__ as entry_mod
+    from enem_spark.session import get_spark
+
+    # Contemporaneous raw-hardware throughput (no Spark), BEFORE the session
+    # starts so the probe sees idle cores; recording the probe next to the
+    # headline lets any cross-run comparison normalize docs/sec by hardware
+    # actually delivered rather than misreading neighbor steal as a code
+    # regression.
+    hw_probe = _probe(cpus)
+    spark = get_spark("enem_spark_bench", cores=cpus)
+    qmap = entry_mod.queries()
+
+    # --- extraction throughput (the BASELINE metric) ---
+    # default x8 replication: ~40k pages, enough to measure steady-state
+    # extraction rather than per-job scheduling overhead (sf0.1 alone is
+    # 5k pages ~= 5 MB — a fraction of a single real CC parquet file)
+    n_pages, job, _ = JOBS["exam"].setup(spark, sf_dir, mult)
+    n_questions, walls = _time_job(job, runs)
+    extract_sec = min(walls)
+    hw_probe_after_extract = _probe(cpus)
+
+    timings = {"extract_questions": round(extract_sec, 3)}
+    spread = {"extract_questions": [min(walls), max(walls)]}
+    # commit every iceberg ladder rung UNTIMED so the sweep below
+    # measures steady-state pinned reads, not staging + mutation
+    ice_setup = _prepare_ice(spark, sf_dir, qmap)
+    # same split for the bucketed-store pair: a fresh session's
+    # catalog is empty, so the first bucketed_join invocation used to
+    # pay the two bucketBy saveAsTable writes inside its timed cell
+    # (the r4 1.27x "regression" — VERDICT r4 "What's wrong" #1);
+    # stage untimed and report the one-time cost beside ice_setup
+    from enem_spark import bucketstore
+
+    t0 = time.perf_counter()
+    bucketstore.stage_bucketed_pair(spark, sf_dir)
+    ice_setup["stage_bucketed_pair"] = round(time.perf_counter() - t0, 3)
+    # same split for the committed sig/ivf index stores: on a cold
+    # /tmp their first query invocation would otherwise pay the
+    # two-run staging inside its timed cell (warm /tmp collapses the
+    # maintenance runs to anti-join no-ops, but cross-round numbers
+    # must not depend on /tmp warmth)
+    t0 = time.perf_counter()
+    entry_mod._sig_store_dir(spark, sf_dir)
+    ice_setup["stage_sig_store"] = round(time.perf_counter() - t0, 3)
+    t0 = time.perf_counter()
+    entry_mod._ivf_store_dir(spark, sf_dir)
+    ice_setup["stage_ivf_store"] = round(time.perf_counter() - t0, 3)
+    hw_probe_before_queries = _probe(cpus)
+    for name in HEADLINE[1:]:
+        ts = []
+        for _ in range(SWEEP_REPEATS):
+            t0 = time.perf_counter()
+            qmap[name](spark, sf_dir).count()
+            ts.append(round(time.perf_counter() - t0, 3))
+            # the dedup/ANN operators persist intermediates (shingles,
+            # signatures) that nothing else reuses; release them so 40+
+            # queries in one session don't accumulate orphaned cache blocks
+            spark.catalog.clearCache()
+        timings[name] = statistics.median(ts)
+        spread[name] = [min(ts), max(ts)]
+    hw_probe_after_queries = _probe(cpus)
+
+    return {
+        "metric": JOBS["exam"].metric,
+        "value": round(n_pages / extract_sec, 2),
+        "unit": "docs/sec",
+        "queries": timings,
+        "queries_spread": spread,
+        "sf": _sf_from_dir(sf_dir),
+        "cpus": cpus,
+        "extract_runs_sec": walls,
+        "extract_sec_mean": round(sum(walls) / len(walls), 3),
+        "n_pages": n_pages,
+        "n_questions": n_questions,
+        "total_query_sec": round(sum(timings.values()), 3),
+        "hw_probe_mops": hw_probe,
+        "hw_probes": {
+            "before": hw_probe,
+            "after_extract": hw_probe_after_extract,
+            "before_queries": hw_probe_before_queries,
+            "after_queries": hw_probe_after_queries,
+        },
+        "ice_setup_sec": ice_setup,
+    }
+
+
+BIG_TOP10 = [
+    # the 10 most expensive r4 queries that read only the documents /
+    # embeddings tables (so a replicated big dir drives them unmodified);
+    # sig_probe_near_dup stages its signature store against the big dir
+    # as setup, exactly as it would over a real big corpus
+    "dedup_clusters",
+    "html_curate",
+    "kmeans_clusters",
+    "bpe_merges",
+    "embedding_near_dup",
+    "html_host_components",
+    "semdedup",
+    "dedup_minhash_lsh",
+    "ann_pq_topk",
+    "sig_probe_near_dup",
+]
 
 
 def _ui_metrics(spark) -> dict:
     """Peak memory + spill totals from the Spark UI REST API (local-mode
     driver doubles as the executor). Tolerant: a disabled UI yields
     nulls, never a failed bench."""
-    import json as _json
     import urllib.request
 
     out = {"peak_jvm_heap_mb": None, "peak_execution_mb": None,
@@ -534,11 +921,11 @@ def _ui_metrics(spark) -> dict:
         ui = spark.sparkContext.uiWebUrl
         if not ui:
             return out
-        apps = _json.load(
+        apps = json.load(
             urllib.request.urlopen(f"{ui}/api/v1/applications", timeout=10)
         )
         app_id = apps[0]["id"]
-        execs = _json.load(
+        execs = json.load(
             urllib.request.urlopen(
                 f"{ui}/api/v1/applications/{app_id}/executors", timeout=10
             )
@@ -557,7 +944,7 @@ def _ui_metrics(spark) -> dict:
         out["peak_jvm_heap_mb"] = round(heap / 2**20, 1)
         out["peak_execution_mb"] = round(peak_exec / 2**20, 1)
         out["shuffle_write_mb"] = round(shuffle_w / 2**20, 1)
-        stages = _json.load(
+        stages = json.load(
             urllib.request.urlopen(
                 f"{ui}/api/v1/applications/{app_id}/stages?status=complete",
                 timeout=10,
@@ -582,13 +969,10 @@ def run_big_headline(sf_dir: str, cpus: str, mult: int = 10) -> dict:
     the toy-scale fixed-cost explanations amortize and whether memory/
     shuffle behavior stays healthy at 10x; sf0.1 stays the
     round-over-round anchor."""
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import __spark_entry__ as entry_mod
-    from enem_spark.extract import ExtractorConfig, extract_questions
     from enem_spark.session import get_spark
 
-    n_cores = int(cpus) if str(cpus).isdigit() else (os.cpu_count() or 8)
-    probe_before = _mp_probe(min(n_cores, os.cpu_count() or 8))
+    probe_before = _probe(cpus)
     # the session default disables the UI; this mode needs the REST API
     # for peak-memory/spill evidence
     spark = get_spark(
@@ -597,28 +981,12 @@ def run_big_headline(sf_dir: str, cpus: str, mult: int = 10) -> dict:
     qmap = entry_mod.queries()
 
     t0 = time.perf_counter()
-    store, n_pages = _pages_store(spark, sf_dir, 8 * mult)
+    n_pages, job, _ = JOBS["exam"].setup(spark, sf_dir, 8 * mult)
     big_dir, n_docs, n_vecs = _big_sf_dir(spark, sf_dir, mult)
     stage_sec = round(time.perf_counter() - t0, 3)
 
-    pages = spark.read.parquet(store)
-    cfg = ExtractorConfig(output_type="json")
-
-    def timed_extract():
-        owned: list = []
-        t1 = time.perf_counter()
-        n = extract_questions(pages, cfg, persist_to=owned).count()
-        dt = round(time.perf_counter() - t1, 3)
-        for df in owned:
-            df.unpersist()
-        return n, dt
-
-    timed_extract()  # warm, untimed
-    runs = []
-    for _ in range(2):
-        n_questions, dt = timed_extract()
-        runs.append(dt)
-    probe_mid = _mp_probe(min(n_cores, os.cpu_count() or 8))
+    n_questions, walls = _time_job(job, 2)
+    probe_mid = _probe(cpus)
 
     timings = {}
     for name in BIG_TOP10:
@@ -626,7 +994,7 @@ def run_big_headline(sf_dir: str, cpus: str, mult: int = 10) -> dict:
         qmap[name](spark, big_dir).count()
         timings[name] = round(time.perf_counter() - t1, 3)
         spark.catalog.clearCache()
-    probe_after = _mp_probe(min(n_cores, os.cpu_count() or 8))
+    probe_after = _probe(cpus)
     mem = _ui_metrics(spark)
     return {
         "sf_equivalent": round(_sf_from_dir(sf_dir) * mult, 3),
@@ -635,8 +1003,8 @@ def run_big_headline(sf_dir: str, cpus: str, mult: int = 10) -> dict:
         "n_docs": n_docs,
         "n_vecs": n_vecs,
         "stage_sec": stage_sec,
-        "extract_runs_sec": runs,
-        "docs_per_sec": round(n_pages / min(runs), 2),
+        "extract_runs_sec": walls,
+        "docs_per_sec": round(n_pages / min(walls), 2),
         "n_questions": n_questions,
         "queries": timings,
         "hw_probes": {
@@ -698,9 +1066,76 @@ def update_big_md(summary: dict, path: str = "BENCH.md") -> None:
         "simsearch.py), exactly like LSH band tuning.",
         "",
     ]
-    _upsert_section(
-        path, "## Large-input headline (sf-equivalent 1.0)", "\n".join(lines)
-    )
+    _upsert_section(path, "\n".join(lines))
+
+
+# --- fresh-vs-store A/Bs ------------------------------------------------
+
+
+def _checksum(df, *cols) -> tuple[int, int]:
+    """(row count, order-free content hash) of ``df`` over ``cols``."""
+    from pyspark.sql import functions as F
+
+    # decimal(38,0) sum: ANSI mode overflows a long sum of xxhash64s
+    row = df.agg(
+        F.count("*").alias("n"),
+        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("chk"),
+    ).first()
+    return (row["n"], int(row["chk"] or 0))
+
+
+def _ab_loop(legs: dict, trials: int, cpus) -> tuple[list, dict]:
+    """The fresh-vs-store A/B shape. ``legs`` maps a name to a
+    ``(fresh, store)`` pair of zero-arg callables that each run the job
+    and return its checksum. Every callable runs once untimed (codegen,
+    workers); then each trial times every callable between a hardware
+    probe before and after. A trial whose fresh and store checksums differ
+    raises at once: the A/B's premise is that both legs compute the same
+    answer, and a later matching trial must not mask it. Returns the trial
+    rows and the speedups of the most probe-stable trial."""
+    for pair in legs.values():
+        for fn in pair:
+            fn()
+    rows = []
+    for t in range(trials):
+        before = _probe(cpus)
+        row: dict = {"trial": t}
+        for name, pair in legs.items():
+            sums, walls = [], []
+            for fn in pair:
+                t0 = time.perf_counter()
+                sums.append(fn())
+                walls.append(time.perf_counter() - t0)
+            if sums[0] != sums[1]:
+                raise RuntimeError(
+                    f"A/B trial {t}: {name} fresh/store outputs diverged "
+                    f"{sums}; refusing to publish (stale temp store or "
+                    "kernel drift: purge the store dirs and re-run)"
+                )
+            row[f"{name}_fresh"], row[f"{name}_store"] = (round(w, 3) for w in walls)
+            row[f"{name}_speedup"] = round(walls[0] / walls[1], 3)
+        after = _probe(cpus)
+        row.update(
+            hw_probe_before=before,
+            hw_probe_after=after,
+            probe_drift=round(after / before, 3),
+        )
+        rows.append(row)
+    best = min(rows, key=lambda r: abs(1 - r["probe_drift"]))
+    return rows, {f"{name}_speedup": best[f"{name}_speedup"] for name in legs}
+
+
+def _ab_table(rows: list, legs: list[str]) -> str:
+    cols = [f"{n}_{k}" for n in legs for k in ("fresh", "store", "speedup")]
+    head = " | ".join(f"{n} {k}" for n in legs for k in ("fresh s", "store s", "speedup"))
+    return "\n".join([
+        f"| trial | {head} | probe drift |",
+        "|---" * (len(cols) + 2) + "|",
+        *(
+            "| " + " | ".join(str(r[c]) for c in ["trial", *cols, "probe_drift"]) + " |"
+            for r in rows
+        ),
+    ])
 
 
 def run_sig_store_ab(sf_dir: str, cpus: str, mult: int = 4, trials: int = 2) -> dict:
@@ -709,37 +1144,23 @@ def run_sig_store_ab(sf_dir: str, cpus: str, mult: int = 4, trials: int = 2) -> 
     r4-verdict ask): minhash_estimate_pairs and dedup_clusters, engine
     config, over the same replicated dedup store. The index build is
     UNTIMED setup (``sig_setup_sec`` — it is the amortized maintenance
-    step update_signature_index runs after each extraction); outputs are
-    checksum-compared so the A and B legs provably compute the same
-    answer; hardware probes bracket each trial."""
-    import tempfile
-
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    step update_signature_index runs after each extraction)."""
     from pyspark.sql import functions as F
 
     from enem_spark import sigindex, textops
     from enem_spark.session import get_spark
 
-    n_cores = int(cpus) if str(cpus).isdigit() else (os.cpu_count() or 8)
     spark = get_spark("enem_spark_sigab", cores=cpus)
     store, n_docs = _dedup_docs_store(spark, sf_dir, mult)
     docs = spark.read.parquet(store)
-    sf = _sf_from_dir(sf_dir)
     idx = os.path.join(
         tempfile.gettempdir(),
-        f"enem_sigidx_sf{sf}x{mult}_p{textops.MINHASH_PERMS}b{textops.LSH_BANDS}",
+        f"enem_sigidx_sf{_sf_from_dir(sf_dir)}x{mult}"
+        f"_p{textops.MINHASH_PERMS}b{textops.LSH_BANDS}",
     )
     t0 = time.perf_counter()
     setup = sigindex.update_signature_index(spark, idx, source=docs)
     sig_setup_sec = round(time.perf_counter() - t0, 3)
-
-    def _checksum(df, cols):
-        # decimal(38,0) sum: ANSI mode overflows a long sum of xxhash64s
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("chk"),
-        ).first()
-        return (row["n"], int(row["chk"] or 0))
 
     def est(sig_store):
         holders: list = []
@@ -748,7 +1169,7 @@ def run_sig_store_ab(sf_dir: str, cpus: str, mult: int = 4, trials: int = 2) -> 
                 docs, threshold=0.5, persist_to=holders, sig_store=sig_store
             )
             return _checksum(
-                out, ["doc_a", "doc_b", F.round("est_jaccard", 6).cast("string")]
+                out, "doc_a", "doc_b", F.round("est_jaccard", 6).cast("string")
             )
         finally:
             for h in holders:
@@ -757,45 +1178,16 @@ def run_sig_store_ab(sf_dir: str, cpus: str, mult: int = 4, trials: int = 2) -> 
     def clusters(sig_store):
         return _checksum(
             textops.dedup_clusters(docs, threshold=0.5, sig_store=sig_store),
-            ["doc_id", "cluster_id"],
+            "doc_id", "cluster_id",
         )
 
-    jobs = {
-        "est_fresh": lambda: est(None),
-        "est_store": lambda: est(idx),
-        "clusters_fresh": lambda: clusters(None),
-        "clusters_store": lambda: clusters(idx),
-    }
-    for j in jobs.values():
-        j()  # warm codegen/workers, untimed
-    rows = []
-    checks: dict = {}
-    for t in range(trials):
-        probe_before = _mp_probe(min(n_cores, os.cpu_count() or 8))
-        cell = {}
-        for name, j in jobs.items():
-            t1 = time.perf_counter()
-            checks[name] = j()
-            cell[name] = round(time.perf_counter() - t1, 3)
-        probe_after = _mp_probe(min(n_cores, os.cpu_count() or 8))
-        rows.append(
-            {
-                "trial": t,
-                **cell,
-                "est_speedup": round(cell["est_fresh"] / cell["est_store"], 3),
-                "clusters_speedup": round(
-                    cell["clusters_fresh"] / cell["clusters_store"], 3
-                ),
-                "hw_probe_before": probe_before,
-                "hw_probe_after": probe_after,
-                "probe_drift": round(probe_after / probe_before, 3),
-            }
-        )
-    outputs_identical = (
-        checks["est_fresh"] == checks["est_store"]
-        and checks["clusters_fresh"] == checks["clusters_store"]
+    rows, verdict = _ab_loop(
+        {
+            "est": (lambda: est(None), lambda: est(idx)),
+            "clusters": (lambda: clusters(None), lambda: clusters(idx)),
+        },
+        trials, cpus,
     )
-    best = min(rows, key=lambda r: abs(1 - r["probe_drift"]))
     return {
         "n_docs": n_docs,
         "mult": mult,
@@ -803,99 +1195,33 @@ def run_sig_store_ab(sf_dir: str, cpus: str, mult: int = 4, trials: int = 2) -> 
         "sig_setup_sec": sig_setup_sec,
         "index_up_to_date": setup["up_to_date"],
         "rows": rows,
-        "outputs_identical": outputs_identical,
-        "verdict": {
-            "est_speedup": best["est_speedup"],
-            "clusters_speedup": best["clusters_speedup"],
-        },
+        "outputs_identical": True,
+        "verdict": verdict,
     }
 
 
 def update_sig_ab_md(summary: dict, path: str = "BENCH.md") -> None:
-    lines = [
-        "## Signature-store A/B (LSH pair stage: re-sign vs committed index)",
-        "",
-        "`minhash_estimate_pairs` / `dedup_clusters` at the engine config",
-        f"(128 perms / 16 bands) over the replicated dedup store ({summary['n_docs']}",
-        f"docs, mult {summary['mult']}, local[{summary['cpus']}]): fresh per-query",
-        "signing vs `sig_store=` reading the committed `minhash_sigs` index",
-        f"(index build untimed: {summary['sig_setup_sec']} s one-off maintenance,",
-        "amortized across every LSH query and crawl increment). Outputs",
-        f"checksum-identical across legs: **{summary['outputs_identical']}**.",
-        "",
-        "| trial | est fresh s | est store s | est speedup | clusters fresh s | clusters store s | clusters speedup | probe drift |",
-        "|---|---|---|---|---|---|---|---|",
-    ]
-    for r in summary["rows"]:
-        lines.append(
-            f"| {r['trial']} | {r['est_fresh']} | {r['est_store']} | "
-            f"{r['est_speedup']} | {r['clusters_fresh']} | "
-            f"{r['clusters_store']} | {r['clusters_speedup']} | "
-            f"{r['probe_drift']} |"
-        )
     v = summary["verdict"]
-    lines += [
-        "",
-        f"Matched-probe verdict: estimate pairs {v['est_speedup']}x, clusters "
-        f"{v['clusters_speedup']}x faster reading the store. The store leg's",
-        "plan touches document text zero times (narrow signature rows only),",
-        "so the speedup grows with document size — at web-scale text the",
-        "fresh leg re-shingles the corpus per query while the store leg is",
-        "join-only, which is the whole point of maintaining the index.",
-        "",
-    ]
-    _upsert_section(path, "## Signature-store A/B (LSH pair stage: re-sign vs committed index)", "\n".join(lines))
+    _upsert_section(path, f"""\
+## Signature-store A/B (LSH pair stage: re-sign vs committed index)
 
+`minhash_estimate_pairs` / `dedup_clusters` at the engine config
+(128 perms / 16 bands) over the replicated dedup store ({summary['n_docs']}
+docs, mult {summary['mult']}, local[{summary['cpus']}]): fresh per-query
+signing vs `sig_store=` reading the committed `minhash_sigs` index
+(index build untimed: {summary['sig_setup_sec']} s one-off maintenance,
+amortized across every LSH query and crawl increment). Outputs
+checksum-identical across legs in every trial: **{summary['outputs_identical']}**.
 
-def _vec_store(spark, sf_dir: str, mult: int = 1) -> tuple[str, int]:
-    """Materialize a replicated embeddings table for the IVF-store A/B.
-    Each replica's vectors are ROTATED by its replica index (element
-    shift — norm-preserving, direction-changing, deterministic): plain
-    replication would put mult identical vectors in every cell and the
-    per-query top-k would rank mult-way cosine ties, measuring tie-break
-    sort cost instead of the assignment stage. Replica 0 keeps the
-    original ids/vectors, so the vec_id < n_cells centroid convention
-    and the default query ids survive replication."""
-    import tempfile
+{_ab_table(summary['rows'], ['est', 'clusters'])}
 
-    from pyspark.sql import functions as F
-
-    if mult > 64:
-        # rep % 64 would collide rotations: replica 64 duplicates replica
-        # 0's directions (including the default query vectors) and the
-        # A/B would silently measure mult-way cosine-tie sort cost again
-        raise ValueError("ivf vector store supports mult <= 64")
-    sf = _sf_from_dir(sf_dir)
-    suffix = f"x{mult}" if mult > 1 else ""
-    store = os.path.join(tempfile.gettempdir(), f"enem_ivfvec_sf{sf}{suffix}")
-    marker = os.path.join(store, "_SUCCESS")
-    if not os.path.exists(marker):
-        base = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-            "vec_id", "embedding"
-        )
-        n = base.count()
-        reps = []
-        for rep in range(mult):
-            sh = rep % 64
-            vec = F.col("embedding")
-            if sh:
-                vec = F.concat(
-                    F.slice(vec, sh + 1, 64 - sh), F.slice(vec, 1, sh)
-                )
-            reps.append(
-                base.select(
-                    (F.col("vec_id") + F.lit(rep * n)).alias("vec_id"),
-                    vec.alias("embedding"),
-                )
-            )
-        out = reps[0]
-        for r in reps[1:]:
-            out = out.unionByName(r)
-        out.repartition(max(32, mult * 4)).write.mode("overwrite").parquet(
-            store
-        )
-    n_vecs = spark.read.parquet(store).count()
-    return store, n_vecs
+Matched-probe verdict: estimate pairs {v['est_speedup']}x, clusters \
+{v['clusters_speedup']}x faster reading the store. The store leg's
+plan touches document text zero times (narrow signature rows only),
+so the speedup grows with document size — at web-scale text the
+fresh leg re-shingles the corpus per query while the store leg is
+join-only, which is the whole point of maintaining the index.
+""")
 
 
 def run_ivf_store_ab(sf_dir: str, cpus: str, mult: int = 8, trials: int = 2) -> dict:
@@ -905,73 +1231,49 @@ def run_ivf_store_ab(sf_dir: str, cpus: str, mult: int = 8, trials: int = 2) -> 
     ride through the per-vec_id rank window); the store leg replaces it
     with a narrow (vec_id, cell) join. The index build is UNTIMED setup
     (``ivf_setup_sec`` — the amortized maintenance step after each
-    embedding batch); outputs are checksum-compared so both legs provably
-    compute the same answer; hardware probes bracket each trial. n_cells
-    is raised to 64 (the parity 8 understates a deployment's cell count
-    — more cells = finer probes = heavier assignment)."""
-    import tempfile
-
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+    embedding batch). n_cells is raised to 64 (the parity 8 understates a
+    deployment's cell count — more cells = finer probes = heavier
+    assignment)."""
     from pyspark.sql import functions as F
 
     from enem_spark import simsearch, vecindex
     from enem_spark.session import get_spark
 
     n_cells = 64
-    n_cores = int(cpus) if str(cpus).isdigit() else (os.cpu_count() or 8)
+    # the srp tag family shares the index dir; ENGINE config (8 bits x 32
+    # tables = 256 projections/vector — the hashing load a deployment
+    # actually carries, where the parity 4x4 understates it)
+    srp_bits, srp_tables = simsearch.ENGINE_SRP_BITS, simsearch.ENGINE_SRP_TABLES
     spark = get_spark("enem_spark_ivfab", cores=cpus)
     store, n_vecs = _vec_store(spark, sf_dir, mult)
     emb = spark.read.parquet(store)
-    sf = _sf_from_dir(sf_dir)
     # both families' configs in the dir name: a config change must land in
     # a FRESH store dir (the one-index-one-config validation would
     # otherwise refuse the warm dir loudly)
     idx = os.path.join(
         tempfile.gettempdir(),
-        f"enem_ivfidx_ab_sf{sf}x{mult}_c{n_cells}"
-        f"s{simsearch.ENGINE_SRP_BITS}x{simsearch.ENGINE_SRP_TABLES}",
+        f"enem_ivfidx_ab_sf{_sf_from_dir(sf_dir)}x{mult}_c{n_cells}"
+        f"s{srp_bits}x{srp_tables}",
     )
     t0 = time.perf_counter()
     setup = vecindex.update_ivf_index(
         spark, idx, emb, n_cells=n_cells, dim=simsearch.SRP_DIM
     )
     ivf_setup_sec = round(time.perf_counter() - t0, 3)
-    # the srp tag family shares the index dir; ENGINE config (8 bits x 32
-    # tables = 256 projections/vector — the hashing load a deployment
-    # actually carries, where the parity 4x4 understates it)
-    srp_bits, srp_tables = (
-        simsearch.ENGINE_SRP_BITS,
-        simsearch.ENGINE_SRP_TABLES,
-    )
     t0 = time.perf_counter()
     vecindex.update_srp_index(
         spark, idx, emb,
         bits=srp_bits, tables=srp_tables, dim=simsearch.SRP_DIM,
     )
     srp_setup_sec = round(time.perf_counter() - t0, 3)
-
-    def _checksum(df):
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.sum(
-                F.xxhash64(
-                    "query_id",
-                    "neighbor_id",
-                    "rank",
-                    F.round("cosine", 6).cast("string"),
-                ).cast("decimal(38,0)")
-            ).alias("chk"),
-        ).first()
-        return (row["n"], int(row["chk"] or 0))
+    cols = ("query_id", "neighbor_id", "rank", F.round("cosine", 6).cast("string"))
 
     def topk(index_store):
         return _checksum(
             simsearch.ivf_topk(
-                emb,
-                n_cells=n_cells,
-                index_store=index_store,
-                dim=simsearch.SRP_DIM,
-            )
+                emb, n_cells=n_cells, index_store=index_store, dim=simsearch.SRP_DIM
+            ),
+            *cols,
         )
 
     def srp(index_store):
@@ -985,48 +1287,18 @@ def run_ivf_store_ab(sf_dir: str, cpus: str, mult: int = 8, trials: int = 2) -> 
                 persist_to=holders,
                 index_store=index_store,
             )
-            return _checksum(out)
+            return _checksum(out, *cols)
         finally:
             for h in holders:
                 h.unpersist(blocking=True)
 
-    jobs = {
-        "topk_fresh": lambda: topk(None),
-        "topk_store": lambda: topk(idx),
-        "srp_fresh": lambda: srp(None),
-        "srp_store": lambda: srp(idx),
-    }
-    for j in jobs.values():
-        j()  # warm codegen/workers, untimed
-    rows = []
-    checks: dict = {}
-    identical = True
-    for t in range(trials):
-        probe_before = _mp_probe(min(n_cores, os.cpu_count() or 8))
-        cell = {}
-        for name, j in jobs.items():
-            t1 = time.perf_counter()
-            checks[name] = j()
-            cell[name] = round(time.perf_counter() - t1, 3)
-        probe_after = _mp_probe(min(n_cores, os.cpu_count() or 8))
-        rows.append(
-            {
-                "trial": t,
-                **cell,
-                "speedup": round(cell["topk_fresh"] / cell["topk_store"], 3),
-                "srp_speedup": round(cell["srp_fresh"] / cell["srp_store"], 3),
-                "hw_probe_before": probe_before,
-                "hw_probe_after": probe_after,
-                "probe_drift": round(probe_after / probe_before, 3),
-            }
-        )
-        # identity verified PER TRIAL (a later-trial match must not mask
-        # an earlier divergence) and accumulated across trials
-        identical = identical and (
-            checks["topk_fresh"] == checks["topk_store"]
-            and checks["srp_fresh"] == checks["srp_store"]
-        )
-    best = min(rows, key=lambda r: abs(1 - r["probe_drift"]))
+    rows, verdict = _ab_loop(
+        {
+            "ivf": (lambda: topk(None), lambda: topk(idx)),
+            "srp": (lambda: srp(None), lambda: srp(idx)),
+        },
+        trials, cpus,
+    )
     return {
         "n_vecs": n_vecs,
         "mult": mult,
@@ -1037,710 +1309,132 @@ def run_ivf_store_ab(sf_dir: str, cpus: str, mult: int = 8, trials: int = 2) -> 
         "srp_setup_sec": srp_setup_sec,
         "index_up_to_date": setup["up_to_date"],
         "rows": rows,
-        "outputs_identical": identical,
-        "verdict": {
-            "topk_speedup": best["speedup"],
-            "srp_speedup": best["srp_speedup"],
-        },
+        "outputs_identical": True,
+        "verdict": verdict,
     }
 
 
 def update_ivf_ab_md(summary: dict, path: str = "BENCH.md") -> None:
-    if not summary["outputs_identical"]:
-        # the section's premise is 'both legs provably compute the same
-        # answer' — never commit a speedup verdict whose checksums diverge
-        # (stale /tmp store, kernel drift); purge the store dirs named in
-        # CLAUDE.md and re-run
-        raise ValueError(
-            "ivf-store A/B outputs diverged across legs; refusing to "
-            "write BENCH.md evidence"
-        )
     sb, st = summary["srp_config"]
-    lines = [
-        "## IVF-store A/B (ANN assignment stage: re-score vs committed index)",
-        "",
-        f"`ivf_topk` at {summary['n_cells']} cells and `srp_bucket_topk` at",
-        f"the engine SRP config ({sb} bits x {st} tables) over the",
-        f"rotated-replica vector store ({summary['n_vecs']} vectors, mult",
-        f"{summary['mult']}, local[{summary['cpus']}]): fresh per-search",
-        "corpus assignment/tagging vs `index_store=` reading the committed",
-        "`ivf_assign`/`srp_tags` tables (index builds untimed:",
-        f"{summary['ivf_setup_sec']} s ivf + {summary['srp_setup_sec']} s srp",
-        "one-off maintenance, amortized across every search and embedding",
-        "batch). Outputs checksum-identical across legs:",
-        f"**{summary['outputs_identical']}**.",
-        "",
-        "| trial | ivf fresh s | ivf store s | ivf speedup | srp fresh s | srp store s | srp speedup | probe drift |",
-        "|---|---|---|---|---|---|---|---|",
-    ]
-    for r in summary["rows"]:
-        lines.append(
-            f"| {r['trial']} | {r['topk_fresh']} | {r['topk_store']} | "
-            f"{r['speedup']} | {r['srp_fresh']} | {r['srp_store']} | "
-            f"{r['srp_speedup']} | {r['probe_drift']} |"
-        )
     v = summary["verdict"]
-    lines += [
-        "",
-        f"Matched-probe verdict: ivf {v['topk_speedup']}x, srp",
-        f"{v['srp_speedup']}x faster reading the store. The ivf fresh leg",
-        "shuffles corpus x n_cells WIDE rows (the 64-double vectors ride",
-        "through the per-vector rank window) and the srp fresh leg computes",
-        f"{sb * st} projection dots per vector; the store legs' inputs are",
-        "narrow (vec_id, cell)/(vec_id, table, bucket) rows, so the gap",
-        "grows with corpus size, cell count, and table count — at 10^9",
-        "vectors the assignment/tagging scan is the search's dominant cost",
-        "and the committed index removes it entirely. The srp store leg",
-        "additionally drops the projection expression from its PLAN at",
-        "full coverage (a narrow id-probe skips the empty on-the-fly",
-        "branch — simsearch._store_tags): before that skip the leg paid",
-        "the engine-config expression's multi-second codegen/compile floor",
-        "even with zero uncovered vectors, and the A/B measured ~1.0x.",
-        "",
+    _upsert_section(path, f"""\
+## IVF-store A/B (ANN assignment stage: re-score vs committed index)
+
+`ivf_topk` at {summary['n_cells']} cells and `srp_bucket_topk` at
+the engine SRP config ({sb} bits x {st} tables) over the
+rotated-replica vector store ({summary['n_vecs']} vectors, mult
+{summary['mult']}, local[{summary['cpus']}]): fresh per-search
+corpus assignment/tagging vs `index_store=` reading the committed
+`ivf_assign`/`srp_tags` tables (index builds untimed:
+{summary['ivf_setup_sec']} s ivf + {summary['srp_setup_sec']} s srp
+one-off maintenance, amortized across every search and embedding
+batch). Outputs checksum-identical across legs in every trial:
+**{summary['outputs_identical']}**.
+
+{_ab_table(summary['rows'], ['ivf', 'srp'])}
+
+Matched-probe verdict: ivf {v['ivf_speedup']}x, srp
+{v['srp_speedup']}x faster reading the store. The ivf fresh leg
+shuffles corpus x n_cells WIDE rows (the 64-double vectors ride
+through the per-vector rank window) and the srp fresh leg computes
+{sb * st} projection dots per vector; the store legs' inputs are
+narrow (vec_id, cell)/(vec_id, table, bucket) rows, so the gap
+grows with corpus size, cell count, and table count — at 10^9
+vectors the assignment/tagging scan is the search's dominant cost
+and the committed index removes it entirely. The srp store leg
+additionally drops the projection expression from its PLAN at
+full coverage (a narrow id-probe skips the empty on-the-fly
+branch — simsearch._store_tags): before that skip the leg paid
+the engine-config expression's multi-second codegen/compile floor
+even with zero uncovered vectors, and the A/B measured ~1.0x.
+""")
+
+
+# --- N/4N scaling ------------------------------------------------------
+
+
+def _one_config(sf_dir: str, cpus: int, mult: int, name: str) -> dict:
+    # two timed passes (scaling inputs are large) and no probe (the parent
+    # probes this window itself); settings ride on the child's argv
+    cmd = [
+        sys.executable, os.path.abspath(__file__), "--job", name,
+        "--mult", str(mult), "--runs", "2", "--no-probe",
     ]
-    _upsert_section(path, "## IVF-store A/B (ANN assignment stage: re-score vs committed index)", "\n".join(lines))
-
-
-def update_dedup_bench_md(summary: dict, path: str = "BENCH.md") -> None:
-    """Insert/replace the '## Dedup scaling' section in BENCH.md."""
-    lo, hi = summary["low_cpus"], summary["high_cpus"]
-    section = f"""## Dedup scaling (MinHash sign + banded-LSH estimate, engine config)
-
-The map-heavy extraction benches above cannot evidence the SHUFFLE-heavy
-operator family, so the same two-parallelism protocol runs
-`minhash_estimate_pairs` at the engine config (128 perms / 16 bands):
-shingle explode -> 128 min-aggregates (signature groupBy exchange) ->
-band-bucket self-join (second exchange) -> signature-agreement estimate.
-Replicas are vowel-permuted so candidate pairs (and total work) scale
-linearly with the corpus, not quadratically:
-
-| config | dedup docs/sec | raw-hardware M-ops/s |
-|---|---|---|
-| {lo} cores | {summary['docs_per_sec_low']} | {summary['hw_mhash_low']} |
-| {hi} cores | {summary['docs_per_sec_high']} | {summary['hw_mhash_high']} |
-
-scaling efficiency = **{summary['scaling_efficiency']}**, hardware ceiling
-that window = {summary['hw_scaling_efficiency']}, normalized =
-**{summary['normalized_efficiency']}** ({summary['n_pages']} documents,
-sf={summary['sf']} x{summary['scale_mult']}; trial picked by the same
-credible-probe rule as the exam job).
-"""
-    _upsert_section(path, "## Dedup scaling", section)
-
-
-def run_html_bench(sf_dir: str, cpus: str) -> dict:
-    """DOM main-content extraction throughput over the stored html pages
-    table — the html sibling of the --extract-only mode; emits the same
-    JSON keys so run_scaling can drive either job."""
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from enem_spark.htmlops import extract_main_content
-    from enem_spark.session import get_spark
-
-    n_cores = int(cpus) if str(cpus).isdigit() else (os.cpu_count() or 8)
-    # scaling children skip the burn: the parent already probed this
-    # window, and a redundant 12M-md5 burn right before the timed runs
-    # both wastes wall time and adds load adjacent to the measurement
-    hw_probe = (
-        None
-        if os.environ.get("SPARK_GRAFT_SKIP_HW_PROBE")
-        else _mp_probe(min(n_cores, os.cpu_count() or 8))
-    )
-    spark = get_spark("enem_spark_html_bench", cores=cpus)
-    mult = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "8"))
-    store, n_rows = _html_pages_store(spark, sf_dir, mult)
-    pages = spark.read.parquet(store)
-    extract_main_content(pages).count()  # warm every worker, untimed
-    runs = []
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    for _ in range(n_runs):
-        t0 = time.perf_counter()
-        extract_main_content(pages).count()
-        runs.append(round(time.perf_counter() - t0, 3))
-    best = min(runs)
-    return {
-        "metric": "documents/sec DOM main-content extraction (html pages table)",
-        "value": round(n_rows / best, 2),
-        "unit": "docs/sec",
-        "sf": _sf_from_dir(sf_dir),
-        "cpus": cpus,
-        "extract_runs_sec": runs,
-        "n_pages": n_rows,
-        "hw_probe_mops": hw_probe,
-    }
-
-
-def run_streaming_bench(sf_dir: str, cpus: str) -> dict:
-    """Streaming-ingest throughput: the SAME stored html pages table as
-    run_html_bench, but driven through `start_html_stream`'s exactly-once
-    foreachBatch protocol — availableNow catch-up in a few micro-batches,
-    each paying extraction + the event-time fetch_log + the run-marker
-    commit, with url dedup state held inside the watermark. Every timed
-    run uses a FRESH output + checkpoint: the protocol's resume would
-    otherwise anti-join the second run to a no-op (that resume IS the
-    correctness contract, certified in tests/test_lineage_streaming.py —
-    here the steady-state ingest cost is what's measured). Emits the same
-    JSON keys as run_html_bench so run_scaling can drive the N/4N
-    streaming evidence."""
-    import shutil
-    import tempfile
-
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from enem_spark.lineage import committed_main_content
-    from enem_spark.session import get_spark
-    from enem_spark.streaming import read_html_pages_stream, start_html_stream
-
-    n_cores = int(cpus) if str(cpus).isdigit() else (os.cpu_count() or 8)
-    hw_probe = (
-        None
-        if os.environ.get("SPARK_GRAFT_SKIP_HW_PROBE")
-        else _mp_probe(min(n_cores, os.cpu_count() or 8))
-    )
-    spark = get_spark("enem_spark_stream_bench", cores=cpus)
-    mult = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "8"))
-    store, n_rows = _html_pages_store(spark, sf_dir, mult)
-    # micro-batch count trades protocol coverage against serial fraction:
-    # each batch pays fixed commit actions (fetch_log + marker + the
-    # extraction job's launch), so the scaling evidence wants batches
-    # large enough that extraction dominates — 4 by default, overridable
-    # for the amortization A/B
-    target = max(1, int(os.environ.get("SPARK_GRAFT_STREAM_BATCHES", "4")))
-    # file-stream batches are FILE-granular, and the shared store's
-    # layout (mult*8 files) would put hundreds of tiny files in every
-    # batch at large mult — driver task scheduling is serial, so
-    # per-batch scheduler cost would grow with input size and
-    # masquerade as protocol cost (measured: S 15 -> 24 s from x96 to
-    # x400 on the shared layout). Stage a streaming-layout copy once:
-    # a fixed 32 files per intended batch, file size growing with mult
-    # the way a crawler's archive drops do.
-    sf = _sf_from_dir(sf_dir)
-    stream_store = os.path.join(
-        tempfile.gettempdir(),
-        f"enem_html_pages_sf{sf}x{mult}_stream{target}",
-    )
-    if not os.path.exists(os.path.join(stream_store, "_SUCCESS")):
-        spark.read.parquet(store).repartition(target * 32).write.mode(
-            "overwrite"
-        ).parquet(stream_store)
-    store = stream_store
-    n_files = len(
-        [f for f in os.listdir(store) if f.endswith(".parquet")]
-    )
-    per_trigger = max(1, n_files // target)
-    runs = []
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    base = tempfile.mkdtemp(prefix="enem_streambench_")
-    n_main = n_batches = 0
-    try:
-        # run 0 is the untimed warmup (worker spin-up, codegen, Arrow)
-        for i in range(n_runs + 1):
-            out = os.path.join(base, f"run{i}")
-            stream = read_html_pages_stream(
-                spark, store, max_files_per_trigger=per_trigger
-            )
-            t0 = time.perf_counter()
-            q = start_html_stream(stream, out, f"{out}/_checkpoint")
-            q.awaitTermination()
-            wall = round(time.perf_counter() - t0, 3)
-            # observed, not planned: batches that read input
-            n_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
-            main = committed_main_content(spark, out)
-            n_main = main.count() if main is not None else 0
-            if n_main != n_rows:
-                # every stored page has its own url, so each must commit
-                # exactly one main_content row; a short (or zero-commit)
-                # run would report a throughput it did not deliver
-                raise RuntimeError(
-                    f"streaming run committed {n_main} main_content rows, "
-                    f"expected {n_rows}"
-                )
-            if i > 0:
-                runs.append(wall)
-            shutil.rmtree(out, ignore_errors=True)
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-    best = min(runs)
-    return {
-        "metric": (
-            "documents/sec exactly-once streaming DOM extraction "
-            "(availableNow catch-up)"
-        ),
-        "value": round(n_rows / best, 2),
-        "unit": "docs/sec",
-        "sf": _sf_from_dir(sf_dir),
-        "cpus": cpus,
-        "extract_runs_sec": runs,
-        "n_pages": n_rows,
-        "n_main_rows": n_main,
-        "micro_batches": n_batches,
-        "hw_probe_mops": hw_probe,
-    }
-
-
-def _pdf_files_store(sf_dir: str, mult: int) -> tuple[str, int]:
-    """Stage one synthesized 2-page PDF per (document x replica) under
-    /tmp (written once; _DONE marker carries the file count). Replica
-    text is prefixed so no two files are byte-identical."""
-    import duckdb
-
-    base = f"/tmp/enem_pdfstore_{_sf_from_dir(sf_dir)}x{mult}"
-    done = os.path.join(base, "_DONE")
-    if os.path.isfile(done):
-        with open(done) as f:
-            return base, int(f.read())
-    from enem_spark.pdfbin import doc_pdf_lines, synth_pdf
-
-    os.makedirs(base, exist_ok=True)
-    rows = duckdb.sql(
-        "SELECT doc_id, text FROM "
-        f"read_parquet('{sf_dir}/documents.parquet') ORDER BY doc_id"
-    ).fetchall()
-    n = 0
-    for rep in range(mult):
-        for doc_id, text in rows:
-            pdf = synth_pdf(doc_pdf_lines(f"rep{rep} " + (text or "")))
-            name = os.path.join(base, f"doc_{rep}_{int(doc_id):07d}.pdf")
-            with open(name, "wb") as f:
-                f.write(pdf)
-            n += 1
-    with open(done, "w") as f:
-        f.write(str(n))
-    return base, n
-
-
-def _pdf_img_files_store(sf_dir: str, mult: int) -> tuple[str, int]:
-    """Stage one synthesized 2-page PDF per (document x replica) WITH six
-    embedded image XObjects each (synth_doc_images: gray / predictor-RGB /
-    indexed / CMYK / SMask / CCITT-G4) — the images-path analogue of
-    _pdf_files_store. Separate dir: the text-only store's bytes must stay
-    stable for its own bench."""
-    import duckdb
-
-    base = f"/tmp/enem_pdfimgstore_{_sf_from_dir(sf_dir)}x{mult}"
-    done = os.path.join(base, "_DONE")
-    if os.path.isfile(done):
-        with open(done) as f:
-            return base, int(f.read())
-    from enem_spark.pdfbin import doc_pdf_lines, synth_doc_images, synth_pdf
-
-    os.makedirs(base, exist_ok=True)
-    rows = duckdb.sql(
-        "SELECT doc_id, text FROM "
-        f"read_parquet('{sf_dir}/documents.parquet') ORDER BY doc_id"
-    ).fetchall()
-    n = 0
-    for rep in range(mult):
-        for doc_id, text in rows:
-            pdf = synth_pdf(
-                doc_pdf_lines(f"rep{rep} " + (text or "")),
-                synth_doc_images(int(doc_id) * mult + rep),
-            )
-            name = os.path.join(base, f"doc_{rep}_{int(doc_id):07d}.pdf")
-            with open(name, "wb") as f:
-                f.write(pdf)
-            n += 1
-    with open(done, "w") as f:
-        f.write(str(n))
-    return base, n
-
-
-def run_pdf_images_bench(sf_dir: str, cpus: str) -> dict:
-    """Images-path decode throughput (the reference's
-    `process_questions_with_images=True` mode, BASELINE.md anchor 1.7
-    docs/s/core): binaryFile scan over the image-bearing PDF store -> one
-    mapInPandas crossing running BOTH the text decode and the full image
-    pipeline (extract_images: inflate, unpredict, palette/CMYK->RGB, PNG
-    encode + hash) per document. Emits the same JSON keys as the other
-    *-extract-only children so run_scaling can drive it; n_pages counts
-    DOCUMENTS (files) for the per-core anchor comparison."""
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from enem_spark.session import get_spark
-    from enem_spark.sources.pdfsource import pdf_images_frame, pdf_pages_frame
-
-    n_cores = int(cpus) if str(cpus).isdigit() else (os.cpu_count() or 8)
-    hw_probe = (
-        None
-        if os.environ.get("SPARK_GRAFT_SKIP_HW_PROBE")
-        else _mp_probe(min(n_cores, os.cpu_count() or 8))
-    )
-    mult = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "4"))
-    store, n_files = _pdf_img_files_store(sf_dir, mult)
-    spark = get_spark("enem_spark_pdfimg_bench", cores=cpus)
-
-    def job() -> int:
-        # text + images in one pass — the reference's images mode does both
-        n_imgs = pdf_images_frame(spark, store).count()
-        pdf_pages_frame(spark, store).count()
-        return n_imgs
-
-    n_images = job()  # warm every worker, untimed
-    runs = []
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    for _ in range(n_runs):
-        t0 = time.perf_counter()
-        job()
-        runs.append(round(time.perf_counter() - t0, 3))
-    best = min(runs)
-    return {
-        "metric": "docs/sec images-mode decode (text + real image pipeline)",
-        "value": round(n_files / best, 2),
-        "unit": "docs/sec",
-        "sf": _sf_from_dir(sf_dir),
-        "cpus": cpus,
-        "extract_runs_sec": runs,
-        "n_pages": n_files,
-        "n_images": n_images,
-        "n_files": n_files,
-        "hw_probe_mops": hw_probe,
-    }
-
-
-def update_pdfimg_bench_md(summary: dict, path: str = "BENCH.md") -> None:
-    """Insert/replace the '## Images-mode decode scaling' section."""
-    lo, hi = summary["low_cpus"], summary["high_cpus"]
-    per_core = round(summary["docs_per_sec_high"] / hi, 1)
-    section = f"""## Images-mode decode scaling (text + real image pipeline)
-
-The reference's `process_questions_with_images=True` anchor is 0.59 s/PDF
-= ~1.7 docs/s/core (BASELINE.md). This job decodes BOTH the text spans and
-every embedded image (inflate -> predictor removal -> palette/CMYK->RGB ->
-PNG encode + md5; 6 images per 2-page document, all decoder branches incl. Group 4) over
-the image-bearing synthesized store:
-
-| config | images-mode docs/sec | raw-hardware M-ops/s |
-|---|---|---|
-| {lo} cores | {summary['docs_per_sec_low']} | {summary['hw_mhash_low']} |
-| {hi} cores | {summary['docs_per_sec_high']} | {summary['hw_mhash_high']} |
-
-scaling efficiency = **{summary['scaling_efficiency']}**, hardware ceiling
-that window = {summary['hw_scaling_efficiency']}, normalized =
-**{summary['normalized_efficiency']}** ({summary['n_pages']} documents from
-sf={summary['sf']} x{summary['scale_mult']}; ~{per_core} docs/s/core at
-{hi} cores vs the reference's ~1.7 — trial picked by the same
-credible-probe rule as the exam job).
-"""
-    _upsert_section(path, "## Images-mode decode scaling", section)
-
-
-def run_pdf_bench(sf_dir: str, cpus: str) -> dict:
-    """Binary-PDF decode throughput: binaryFile scan over the staged PDF
-    store -> one mapInPandas decode/explode (sources/pdfsource.py) -> page
-    count. Emits the same JSON keys as the other *-extract-only children
-    so run_scaling can drive it."""
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from enem_spark.session import get_spark
-    from enem_spark.sources.pdfsource import pdf_pages_frame
-
-    n_cores = int(cpus) if str(cpus).isdigit() else (os.cpu_count() or 8)
-    hw_probe = (
-        None
-        if os.environ.get("SPARK_GRAFT_SKIP_HW_PROBE")
-        else _mp_probe(min(n_cores, os.cpu_count() or 8))
-    )
-    mult = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "4"))
-    store, n_files = _pdf_files_store(sf_dir, mult)
-    spark = get_spark("enem_spark_pdf_bench", cores=cpus)
-    pages = pdf_pages_frame(spark, store)
-    n_pages = pages.count()  # warm every worker, untimed
-    runs = []
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    for _ in range(n_runs):
-        t0 = time.perf_counter()
-        pdf_pages_frame(spark, store).count()
-        runs.append(round(time.perf_counter() - t0, 3))
-    best = min(runs)
-    return {
-        "metric": "pages/sec binary-PDF decode (stdlib parser, binaryFile -> mapInPandas)",
-        "value": round(n_pages / best, 2),
-        "unit": "pages/sec",
-        "sf": _sf_from_dir(sf_dir),
-        "cpus": cpus,
-        "extract_runs_sec": runs,
-        "n_pages": n_pages,
-        "n_files": n_files,
-        "hw_probe_mops": hw_probe,
-    }
-
-
-def update_pdf_bench_md(summary: dict, path: str = "BENCH.md") -> None:
-    """Insert/replace the '## Binary-PDF decode scaling' section."""
-    lo, hi = summary["low_cpus"], summary["high_cpus"]
-    section = f"""## Binary-PDF decode scaling (stdlib parser job)
-
-Same two-parallelism evidence for the real-input path (`pdf_pages_frame`:
-binaryFile scan -> one mapInPandas decode/explode, no shuffle; input is
-the deterministic synthesized PDF store, one 2-page file per document):
-
-| config | PDF decode pages/sec | raw-hardware M-ops/s |
-|---|---|---|
-| {lo} cores | {summary['docs_per_sec_low']} | {summary['hw_mhash_low']} |
-| {hi} cores | {summary['docs_per_sec_high']} | {summary['hw_mhash_high']} |
-
-scaling efficiency = **{summary['scaling_efficiency']}**, hardware ceiling
-that window = {summary['hw_scaling_efficiency']}, normalized =
-**{summary['normalized_efficiency']}** ({summary['n_pages']} pages from
-sf={summary['sf']} x{summary['scale_mult']} PDFs; trial picked by the
-same credible-probe rule as the exam job).
-"""
-    _upsert_section(path, "## Binary-PDF decode scaling", section)
-
-
-def run_bench(sf_dir: str, cpus: str, extract_only: bool = False) -> dict:
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    import __spark_entry__ as entry_mod
-    from enem_spark.extract import ExtractorConfig, extract_questions
-    from enem_spark.session import get_spark
-
-    # Contemporaneous raw-hardware throughput (no Spark), BEFORE the session
-    # starts so the probe sees idle cores. The host is a shared VM whose
-    # delivered CPU swings with neighbor load (observed 1.4-1.9 M-ops/s at
-    # 2 procs across sessions); recording the probe next to the headline lets
-    # any cross-run comparison normalize docs/sec by hardware actually
-    # delivered rather than misreading neighbor steal as a code regression.
-    # cpus may be non-numeric ("*" = local[*]); probe at the machine width then
-    n_cores = int(cpus) if str(cpus).isdigit() else (os.cpu_count() or 8)
-    # scaling children skip the burn: the parent already probed this
-    # window, and a redundant 12M-md5 burn right before the timed runs
-    # both wastes wall time and adds load adjacent to the measurement
-    skip_probe = bool(os.environ.get("SPARK_GRAFT_SKIP_HW_PROBE"))
-
-    def probe():
-        # probe ADJACENCY (VERDICT r3): the host's delivered CPU swings
-        # with neighbor load, so a probe taken in a different load window
-        # than the trials it normalizes is unusable — take one immediately
-        # before AND after each timed phase and publish all of them
-        return None if skip_probe else _mp_probe(min(n_cores, os.cpu_count() or 8))
-
-    hw_probe = probe()
-
-    spark = get_spark("enem_spark_bench", cores=cpus)
-    qmap = entry_mod.queries()
-
-    # --- extraction throughput (the BASELINE metric) ---
-    # default x8 replication: ~40k pages, enough to measure steady-state
-    # extraction rather than per-job scheduling overhead (sf0.1 alone is
-    # 5k pages ~= 5 MB — a fraction of a single real CC parquet file)
-    mult = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "8"))
-    store, n_pages = _pages_store(spark, sf_dir, mult)
-    pages = spark.read.parquet(store)
-    cfg = ExtractorConfig(output_type="json")
-    # warm EVERY core's Python worker + the broadcast machinery with one full
-    # untimed pass (a limit() warmup only touches one partition, leaving the
-    # other workers to fork+import pandas inside the first timed run). Worker
-    # spawn is a per-executor constant, not steady-state throughput — mirrors
-    # the reference's avg-of-3 methodology, benchmarks.md:5.
-    def timed_extract() -> tuple[int, float]:
-        # persist-with-owner: salted numbering feeds the post-stage frame
-        # to both sides of a join — without an owned persist the page
-        # stage would run twice
-        owned: list = []
-        t0 = time.perf_counter()
-        n = extract_questions(pages, cfg, persist_to=owned).count()
-        dt = round(time.perf_counter() - t0, 3)
-        for df in owned:
-            df.unpersist()
-        return n, dt
-
-    timed_extract()
-    runs = []
-    n_questions = 0
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    for _ in range(n_runs):
-        n_questions, dt = timed_extract()
-        runs.append(dt)
-    # best-of-N for the headline (same rationale as the scaling mode):
-    # neighbor steal on this shared VM only ever SLOWS a run, so the
-    # fastest observation is the least-interfered steady-state estimate;
-    # the mean and the raw runs stay in the JSON for transparency
-    extract_sec = min(runs)
-    docs_per_sec = n_pages / extract_sec
-    hw_probe_after_extract = probe()
-
-    timings: dict[str, float] = {"extract_questions": round(extract_sec, 3)}
-    ice_setup: dict[str, float] = {}
-    hw_probe_before_queries = hw_probe_after_queries = None
-    if not extract_only:
-        # commit every iceberg ladder rung UNTIMED so the sweep below
-        # measures steady-state pinned reads, not staging + mutation
-        ice_setup = _prepare_ice(spark, sf_dir, qmap)
-        # same split for the bucketed-store pair: a fresh session's
-        # catalog is empty, so the first bucketed_join invocation used to
-        # pay the two bucketBy saveAsTable writes inside its timed cell
-        # (the r4 1.27x "regression" — VERDICT r4 "What's wrong" #1);
-        # stage untimed and report the one-time cost beside ice_setup
-        from enem_spark import bucketstore
-
-        t0 = time.perf_counter()
-        bucketstore.stage_bucketed_pair(spark, sf_dir)
-        ice_setup["stage_bucketed_pair"] = round(time.perf_counter() - t0, 3)
-        # same split for the committed sig/ivf index stores: on a cold
-        # /tmp their first query invocation would otherwise pay the
-        # two-run staging inside its timed cell (warm /tmp collapses the
-        # maintenance runs to anti-join no-ops, but cross-round numbers
-        # must not depend on /tmp warmth)
-        t0 = time.perf_counter()
-        entry_mod._sig_store_dir(spark, sf_dir)
-        ice_setup["stage_sig_store"] = round(time.perf_counter() - t0, 3)
-        t0 = time.perf_counter()
-        entry_mod._ivf_store_dir(spark, sf_dir)
-        ice_setup["stage_ivf_store"] = round(time.perf_counter() - t0, 3)
-        hw_probe_before_queries = probe()
-        for name in HEADLINE[1:]:
-            t0 = time.perf_counter()
-            qmap[name](spark, sf_dir).count()
-            timings[name] = round(time.perf_counter() - t0, 3)
-            # the dedup/ANN operators persist intermediates (shingles,
-            # signatures) that nothing else reuses; release them so 40+
-            # queries in one session don't accumulate orphaned cache blocks
-            spark.catalog.clearCache()
-        hw_probe_after_queries = probe()
-
-    return {
-        "metric": "documents/sec extraction throughput (CC-style pages table)",
-        "value": round(docs_per_sec, 2),
-        "unit": "docs/sec",
-        "queries": timings,
-        "sf": _sf_from_dir(sf_dir),
-        "cpus": cpus,
-        "extract_runs_sec": runs,
-        "extract_sec_mean": round(sum(runs) / len(runs), 3),
-        "n_pages": n_pages,
-        "n_questions": n_questions,
-        "total_query_sec": round(sum(timings.values()), 3),
-        "hw_probe_mops": hw_probe,
-        "hw_probes": {
-            "before": hw_probe,
-            "after_extract": hw_probe_after_extract,
-            "before_queries": hw_probe_before_queries,
-            "after_queries": hw_probe_after_queries,
-        },
-        "ice_setup_sec": ice_setup,
-    }
-
-
-def _mp_probe(procs: int, total: int = 12_000_000) -> float:
-    """Raw-hardware throughput (M hash-ops/s) of an embarrassingly parallel
-    pure-Python burn at `procs` processes — no Spark involved. Establishes
-    the host's own scaling ceiling so the Spark efficiency number can be
-    read against what the virtualized CPUs actually deliver."""
-    import multiprocessing as mp
-    import time
-
-    with mp.Pool(procs) as p:
-        t0 = time.perf_counter()
-        p.map(_mp_burn, [total // procs] * procs)
-        return round(total / (time.perf_counter() - t0) / 1e6, 2)
-
-
-def _mp_burn(n: int) -> int:
-    import hashlib
-
-    acc = 0
-    for i in range(n):
-        acc += int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16)
-    return acc
-
-
-def _one_config(
-    sf_dir: str,
-    cpus: int,
-    mult: int,
-    flag: str = "--extract-only",
-) -> dict:
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SF_DIR=sf_dir,
-        SPARK_GRAFT_CPUS=str(cpus),
-        SPARK_GRAFT_SCALE_MULT=str(mult),
-        SPARK_GRAFT_BENCH_RUNS="2",  # longer runs need fewer repetitions
-        SPARK_GRAFT_SKIP_HW_PROBE="1",  # parent probes this window itself
-    )
-    out = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), flag],
-        env=env,
-        capture_output=True,
-        text=True,
-        timeout=3600,
-    )
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir, SPARK_GRAFT_CPUS=str(cpus))
+    out = subprocess.run(cmd, env=env, capture_output=True, text=True, timeout=3600)
     lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
     if out.returncode != 0 or not lines:
         # surface the child's actual failure — an IndexError here would
         # bury the real traceback after up to an hour of earlier trials
         raise RuntimeError(
-            f"bench child (cpus={cpus}, {flag}) exited rc={out.returncode} "
+            f"bench child (cpus={cpus}, --job {name}) exited rc={out.returncode} "
             f"with no result line; stderr tail:\n"
             + "\n".join(out.stderr.splitlines()[-15:])
         )
     return json.loads(lines[-1])
 
 
+def _credible(trial: dict) -> bool:
+    # hw scaling in (0.6, 1.0]: below that the window was badly stolen;
+    # above 1.0 the LOW-side probe itself was throttled (a super-linear
+    # hardware ratio is an artifact, and job ratios from the same window
+    # inherit it)
+    return 0.6 < trial["hw_scaling_efficiency"] <= 1.0
+
+
 def run_scaling(
     sf_dir: str,
+    name: str = "exam",
     low: int = 2,
     high: int = 8,
     mult: int = 48,
     trials: int = 3,
-    flag: str = "--extract-only",
 ) -> dict:
-    """Same extraction job at two parallelism levels on the same input —
-    the sandbox evidence for the two-cluster-size scaling criterion. The
-    input is the replicated pages store (``mult``), sized so the high-
-    parallelism config is compute-bound rather than overhead-bound.
+    """One ``JOBS`` row at two parallelism levels on the same input — the
+    sandbox evidence for the two-cluster-size scaling criterion. The
+    input is replicated ``mult``x, sized so the high-parallelism config
+    is compute-bound rather than overhead-bound.
 
     The host is a shared virtualized box whose deliverable CPU fluctuates
     (neighbor steal), so each trial also measures a no-Spark multiprocessing
     burn over the same core range — the hardware ceiling for THAT window.
-    The reported trial is the one with the least interference (highest
-    hardware ceiling); every trial is listed."""
+    Every trial is listed; the reported one follows the credible-probe
+    rule below."""
     trial_rows = []
     for t in range(trials):
         hw_low = _mp_probe(low)
-        r_low = _one_config(sf_dir, low, mult, flag)
+        r_low = _one_config(sf_dir, low, mult, name)
         hw_high = _mp_probe(high)
-        r_high = _one_config(sf_dir, high, mult, flag)
-        # best-of-3 run per config (min wall time): neighbor-steal spikes
-        # only ever slow a run down, so the fastest observation is the
-        # least-interfered estimate of steady-state throughput
-        v_low = round(r_low["n_pages"] / min(r_low["extract_runs_sec"]), 2)
-        v_high = round(r_high["n_pages"] / min(r_high["extract_runs_sec"]), 2)
-        eff = (v_high / v_low) / (high / low)
-        hw_eff = (hw_high / hw_low) / (high / low)
+        r_high = _one_config(sf_dir, high, mult, name)
+        v_low, v_high = r_low["value"], r_high["value"]
         trial_rows.append(
             {
                 "trial": t,
                 "docs_per_sec_low": v_low,
                 "docs_per_sec_high": v_high,
-                "scaling_efficiency": round(eff, 3),
+                "scaling_efficiency": round((v_high / v_low) / (high / low), 3),
                 "hw_mhash_low": hw_low,
                 "hw_mhash_high": hw_high,
-                "hw_scaling_efficiency": round(hw_eff, 3),
+                "hw_scaling_efficiency": round((hw_high / hw_low) / (high / low), 3),
                 "n_pages": r_low["n_pages"],
                 "sf": r_low["sf"],
             }
         )
     # Report the best job efficiency among trials whose hardware probe was
-    # CREDIBLE: hw scaling in (0.6, 1.0]. Below that the window was badly
-    # stolen; above 1.0 the LOW-side probe itself was throttled (a
-    # super-linear hardware ratio is an artifact, and job ratios from the
-    # same window inherit it). Max-job-eff over all trials would cherry-pick
-    # exactly those artifact windows. All trials are listed alongside.
-    credible = [
-        r for r in trial_rows if 0.6 < r["hw_scaling_efficiency"] <= 1.0
-    ]
-    pool = credible or trial_rows
+    # CREDIBLE. Max-job-eff over all trials would cherry-pick exactly the
+    # artifact windows. All trials are listed alongside.
+    pool = [r for r in trial_rows if _credible(r)] or trial_rows
     best = max(pool, key=lambda r: r["scaling_efficiency"])
-    summary = {
+    return {
+        "job": name,
         "low_cpus": low,
         "high_cpus": high,
-        "docs_per_sec_low": best["docs_per_sec_low"],
-        "docs_per_sec_high": best["docs_per_sec_high"],
-        "scaling_efficiency": best["scaling_efficiency"],
-        "hw_mhash_low": best["hw_mhash_low"],
-        "hw_mhash_high": best["hw_mhash_high"],
-        "hw_scaling_efficiency": best["hw_scaling_efficiency"],
+        **{k: best[k] for k in (
+            "docs_per_sec_low", "docs_per_sec_high", "scaling_efficiency",
+            "hw_mhash_low", "hw_mhash_high", "hw_scaling_efficiency",
+        )},
         "normalized_efficiency": round(
-            min(
-                best["scaling_efficiency"] / best["hw_scaling_efficiency"], 1.0
-            ),
+            min(best["scaling_efficiency"] / best["hw_scaling_efficiency"], 1.0),
             3,
         ),
         "trials": trial_rows,
@@ -1748,15 +1442,15 @@ def run_scaling(
         "scale_mult": mult,
         "n_pages": best["n_pages"],
     }
-    return summary
 
 
 # canonical BENCH.md section order: every upsert replaces its own heading
 # in place and inserts before the first LATER section present, so
-# alternating --*-scaling reruns never churn the document order, and
+# alternating --scaling reruns never churn the document order, and
 # write_bench_md preserves everything from the first known section on.
-# "Numbering shuffle A/B" and "Per-query regression A/B" are frozen history
-# (their modes are retired); they stay listed so they keep their place.
+# "Numbering shuffle A/B", "Streaming batch-amortization A/B" and
+# "Per-query regression A/B" are frozen history (their modes are retired);
+# they stay listed so they keep their place.
 _BENCH_SECTIONS = [
     "## Numbering shuffle A/B",
     "## Skew evidence",
@@ -1776,9 +1470,12 @@ _BENCH_SECTIONS = [
 ]
 
 
-def _upsert_section(path: str, heading: str, section: str) -> None:
-    """Replace the ``heading`` section of BENCH.md (to the next '## ') or
-    insert it at its canonical position; every other section is untouched."""
+def _upsert_section(path: str, section: str) -> None:
+    """Replace the section of BENCH.md whose canonical heading starts
+    ``section``'s first line (to the next '## '), or insert it at its
+    canonical position; every other section is untouched."""
+    first = section.split("\n", 1)[0]
+    heading = next(h for h in _BENCH_SECTIONS if first.startswith(h))
     old = open(path).read() if os.path.exists(path) else ""
     start = old.find(heading)
     if start != -1:
@@ -1844,7 +1541,7 @@ Reference single-core anchor: ~5.8 exam-PDFs/s (~87 pages/s),
 reference benchmarks.md:11.
 
 Why this evidences multi-executor scaling: the plan contains no driver-side
-loops or collects — every stage is a scan, ArrowEvalPython map, hash
+loops or collects — every stage is a scan, MapInPandas, hash
 exchange, window, or broadcast join, all of which partition identically on a
 real cluster; the only cross-task coordination is the doc_id window shuffle
 (salted variant available for pathological documents, `salt_chunk_size`) and
@@ -1864,202 +1561,33 @@ one broadcast (~180 rows/exam key table).
         f.write(md)
 
 
-def update_html_bench_md(summary: dict, path: str = "BENCH.md") -> None:
-    """Insert/replace the '## HTML main-content scaling' section in BENCH.md
-    (leaving every other section untouched)."""
-    lo, hi = summary["low_cpus"], summary["high_cpus"]
-    section = f"""## HTML main-content scaling (DOM extraction job)
+def render_scaling(name: str, summary: dict, path: str = "BENCH.md") -> None:
+    """Upsert ``run_scaling``'s summary for job ``name`` into BENCH.md:
+    the exam job owns the top of the file, every other job its declared
+    section."""
+    if name == "exam":
+        write_bench_md(summary, path)
+        return
+    row, s = JOBS[name], summary
+    lo, hi = s["low_cpus"], s["high_cpus"]
+    _upsert_section(path, f"""{row.heading}
 
-Same two-parallelism evidence for the web path (`extract_main_content`,
-one mapInPandas crossing, no shuffle):
+{row.intro}
 
-| config | DOM extraction docs/sec | raw-hardware M-ops/s |
+| config | {row.column} | raw-hardware M-ops/s |
 |---|---|---|
-| {lo} cores | {summary['docs_per_sec_low']} | {summary['hw_mhash_low']} |
-| {hi} cores | {summary['docs_per_sec_high']} | {summary['hw_mhash_high']} |
+| {lo} cores | {s['docs_per_sec_low']} | {s['hw_mhash_low']} |
+| {hi} cores | {s['docs_per_sec_high']} | {s['hw_mhash_high']} |
 
-scaling efficiency = **{summary['scaling_efficiency']}**, hardware ceiling
-that window = {summary['hw_scaling_efficiency']}, normalized =
-**{summary['normalized_efficiency']}** ({summary['n_pages']} stored html
-pages, sf={summary['sf']} x{summary['scale_mult']}; trial picked by the
-same credible-probe rule as the exam job).
-
-Root cause of the earlier 0.80-at-mult-8 reading (r5 profiling): the job
-carries a ~0.27 s fixed per-job cost (job launch + Python/Arrow eval
-setup; measured directly — a TRIVIAL pass-through mapInPandas over the
-same scan costs ~0.16 s at 8 cores, and per-task Python overhead is
-~20 ms, which is also why splitting the scan into 64 fine tasks makes
-the job 2x SLOWER, not faster). At 40k toy docs that fixed cost is ~22%
-of the 8-core wall and caps raw N=2->8 efficiency near 0.84; it
-amortizes with input size — the table above (x{summary['scale_mult']})
-is the evidence — and at deployment scale (tasks >> cores, minutes-long
-jobs) it vanishes entirely. The engine plan itself has no shuffle and
-no serial stage.
-"""
-    _upsert_section(path, "## HTML main-content scaling", section)
+scaling efficiency = **{s['scaling_efficiency']}**, hardware ceiling
+that window = {s['hw_scaling_efficiency']}, normalized =
+**{s['normalized_efficiency']}** ({s['n_pages']} {row.unit.split('/')[0]},
+sf={s['sf']} x{s['scale_mult']}; trial picked by the same
+credible-probe rule as the exam job).
+{row.note(s)}""")
 
 
-def run_streaming_batch_ab(sf_dir: str, cpus: str, mult: int = 96) -> dict:
-    """Direct evidence that the streaming serial cost is PER-BATCH-FIXED
-    protocol machinery, not extraction: the same input ingested as 1, 4,
-    and 8 micro-batches at the same parallelism. Extraction work (C) is
-    identical across cells, so the wall difference between k and 1
-    batches is (k-1) x S_batch — the per-batch commit actions + state
-    checkpoint. Reported S_batch is the slope of the least-squares fit of
-    wall on batch count (two-point slope when only two cells)."""
-    results = {}
-    for batches in (1, 4, 8):
-        env = dict(
-            os.environ,
-            SPARK_GRAFT_SF_DIR=sf_dir,
-            SPARK_GRAFT_CPUS=str(cpus),
-            SPARK_GRAFT_SCALE_MULT=str(mult),
-            SPARK_GRAFT_STREAM_BATCHES=str(batches),
-            SPARK_GRAFT_BENCH_RUNS="2",
-            SPARK_GRAFT_SKIP_HW_PROBE="1",
-        )
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__),
-             "--streaming-extract-only"],
-            env=env, capture_output=True, text=True, timeout=3600,
-        )
-        lines = [l for l in out.stdout.splitlines() if l.startswith("{")]
-        if out.returncode != 0 or not lines:
-            raise RuntimeError(
-                f"streaming A/B child (batches={batches}) rc="
-                f"{out.returncode}; stderr tail:\n"
-                + "\n".join(out.stderr.splitlines()[-15:])
-            )
-        results[batches] = json.loads(lines[-1])
-    cells = {
-        k: {
-            "micro_batches": r["micro_batches"],
-            "best_wall_sec": min(r["extract_runs_sec"]),
-            "docs_per_sec": r["value"],
-        }
-        for k, r in results.items()
-    }
-    xs = [c["micro_batches"] for c in cells.values()]
-    ys = [c["best_wall_sec"] for c in cells.values()]
-    n = len(xs)
-    mx, my = sum(xs) / n, sum(ys) / n
-    denom = sum((x - mx) ** 2 for x in xs)
-    s_batch = (
-        sum((x - mx) * (y - my) for x, y in zip(xs, ys)) / denom
-        if denom
-        else 0.0
-    )
-    return {
-        "cpus": cpus,
-        "scale_mult": mult,
-        "n_pages": results[1]["n_pages"],
-        "cells": cells,
-        "s_batch_sec": round(s_batch, 2),
-    }
-
-
-def update_streaming_ab_md(summary: dict, path: str = "BENCH.md") -> None:
-    """Append the batch-amortization A/B to the streaming section's data:
-    a sub-table under '## Streaming-ingest scaling' is fragile to upsert,
-    so this is its own section directly after it."""
-    rows = "\n".join(
-        f"| {c['micro_batches']} | {c['best_wall_sec']} | {c['docs_per_sec']} |"
-        for c in summary["cells"].values()
-    )
-    section = f"""## Streaming batch-amortization A/B (same input, 1/4/8 micro-batches)
-
-Same {summary['n_pages']} pages at {summary['cpus']} cores — extraction
-work identical in every cell, only the micro-batch count changes, so the
-wall-vs-batches slope isolates the per-batch protocol cost:
-
-| micro-batches | best wall (s) | docs/sec |
-|---|---|---|
-{rows}
-
-S_batch = **{summary['s_batch_sec']} s per micro-batch** (fit slope):
-the exactly-once commit actions (fetch_log + main_content + lineage +
-processed_docs writes, committed-runs read, marker append) plus the
-per-batch state-checkpoint floor. This is the batch-COUNT-proportional
-part of the serial cost — the scaling section's part (1); its
-batch-SIZE-dependent part (2) is held equal across these cells because
-the input is fixed, which is exactly what makes the slope isolate the
-protocol actions. A deployment trigger sized for minutes-long batches
-amortizes part (1) directly (fewer, bigger batches per unit of data),
-and a multi-executor state store spreads part (2), so the ingest
-converges to the batch DOM job it wraps.
-"""
-    _upsert_section(path, "## Streaming batch-amortization A/B", section)
-
-
-def update_streaming_bench_md(summary: dict, path: str = "BENCH.md") -> None:
-    """Insert/replace the '## Streaming-ingest scaling' section in BENCH.md
-    (leaving every other section untouched)."""
-    lo, hi = summary["low_cpus"], summary["high_cpus"]
-    # two-point decomposition wall = C/p + S: C = parallel compute
-    # (core-sec), S = serial per-run cost (micro-batch planning + the
-    # per-batch commit actions) — the quantity batch size amortizes
-    n = summary["n_pages"]
-    wall_lo, wall_hi = n / summary["docs_per_sec_low"], n / summary[
-        "docs_per_sec_high"
-    ]
-    c_core_s = (wall_lo - wall_hi) / (1 / lo - 1 / hi)
-    s_serial = max(wall_hi - c_core_s / hi, 0.0)
-    credible = [
-        t
-        for t in summary.get("trials", [])
-        if 0.6 < t["hw_scaling_efficiency"] <= 1.0
-    ]
-    probe_note = (
-        ""
-        if credible
-        else (
-            "\nNOTE: no trial window had a credible hardware probe "
-            "(every ratio fell outside (0.6, 1.0] — a super-linear "
-            "hardware ratio means the LOW-side probe itself was "
-            "throttled), so the normalized figure divides by an "
-            "artifact ratio and UNDERSTATES the job; the raw row and "
-            "the decomposition are the meaningful numbers for this "
-            "window.\n"
-        )
-    )
-    section = f"""## Streaming-ingest scaling (exactly-once availableNow catch-up)
-
-The same stored html pages table as the DOM-extraction row, driven
-through `start_html_stream`'s foreachBatch protocol — per micro-batch:
-main-content extraction, the event-time `(url, warc_ts, doc_id)`
-fetch_log, and the run-marker commit, with url-dedup state bounded by
-the watermark. Each timed run starts from a fresh checkpoint (the
-protocol's resume anti-joins a replay to a no-op, so a warm rerun would
-measure the resume, not the ingest):
-
-| config | streaming ingest docs/sec | raw-hardware M-ops/s |
-|---|---|---|
-| {lo} cores | {summary['docs_per_sec_low']} | {summary['hw_mhash_low']} |
-| {hi} cores | {summary['docs_per_sec_high']} | {summary['hw_mhash_high']} |
-
-scaling efficiency = **{summary['scaling_efficiency']}**, hardware ceiling
-that window = {summary['hw_scaling_efficiency']}, normalized =
-**{summary['normalized_efficiency']}** ({summary['n_pages']} stored html
-pages, sf={summary['sf']} x{summary['scale_mult']}; trial picked by the
-same credible-probe rule as the exam job). Two-point decomposition of the
-picked trial (wall = C/p + S): parallel compute C = {c_core_s:.0f} core-s
-({1000 * c_core_s / n:.2f} ms-core/page), serial per-run cost S =
-{s_serial:.1f} s. S has two parts, measured separately: (1) a fixed
-per-batch protocol cost — ~7 driver actions per batch (committed-runs
-read, resume anti-join, fetch_log + main_content + lineage +
-processed_docs writes, marker append) — isolated by the
-batch-amortization A/B below; (2) a component growing with batch size
-(S 14.7 -> 30.9 s from x400 to x800 at identical batch/file counts):
-the watermark-dedup state store's per-batch load/commit and the
-checkpoint I/O, which on this single-disk local harness do not
-parallelize with cores. The extraction C itself is the same
-shuffle-free mapInPandas as the batch DOM job (normalized 1.0 in its
-own section); on a real cluster the state store commits per shuffle
-partition across many executors' disks and batches run minutes long,
-so both serial parts amortize — the local[2->8] number above is a
-floor set by the harness's one disk, not by the plan.
-{probe_note}"""
-    _upsert_section(path, "## Streaming-ingest scaling", section)
+# --- evidence modes perfbench does not cover ------------------------------
 
 
 def run_skew(cpus: str = "8") -> dict:
@@ -2068,7 +1596,6 @@ def run_skew(cpus: str = "8") -> dict:
     giant doc sorts inside ONE task) against the two-level salted running sum
     (`salt_chunk_size`), which spreads the doc across chunk tasks. Equality
     of outputs is asserted; wall times are reported."""
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from enem_spark import corpus
     from enem_spark.extract import ExtractorConfig, extract_pages
     from enem_spark.session import get_spark
@@ -2108,157 +1635,6 @@ def run_skew(cpus: str = "8") -> dict:
     return out
 
 
-def run_lineage_demo(sf_dir: str, cpus: str) -> dict:
-    """Observability showcase: one lineage-instrumented extraction run over
-    the stored pages table, then the per-partition metrics distribution an
-    operator would alert on (straggler partitions, parse-failure hotspots)."""
-    import shutil
-    import tempfile
-
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from pyspark.sql import functions as F
-
-    from enem_spark.extract import ExtractorConfig
-    from enem_spark.lineage import run_extraction
-    from enem_spark.session import get_spark
-
-    spark = get_spark("enem_spark_lineage", cores=cpus)
-    store, n_pages = _pages_store(spark, sf_dir, 8)
-    out = tempfile.mkdtemp(prefix="enem_lineage_")
-    try:
-        t0 = time.perf_counter()
-        summary = run_extraction(
-            spark, spark.read.parquet(store), ExtractorConfig(), out, "bench"
-        )
-        wall = time.perf_counter() - t0
-        lin = spark.read.parquet(f"{out}/lineage")
-        stats = lin.agg(
-            F.count("*").alias("partitions"),
-            F.sum("input_pages").alias("pages"),
-            F.sum("q_candidates").alias("q_candidates"),
-            F.sum("parse_failures").alias("parse_failures"),
-            F.round(F.min("wall_ms"), 1).alias("min_part_ms"),
-            F.round(F.expr("percentile(wall_ms, 0.5)"), 1).alias("p50_part_ms"),
-            F.round(F.max("wall_ms"), 1).alias("max_part_ms"),
-        ).first()
-        return {
-            "mode": "lineage_demo",
-            "run": summary,
-            "wall_sec": round(wall, 2),
-            "partitions": stats["partitions"],
-            "pages": stats["pages"],
-            "q_candidates": stats["q_candidates"],
-            "parse_failures": stats["parse_failures"],
-            "partition_wall_ms": {
-                "min": stats["min_part_ms"],
-                "p50": stats["p50_part_ms"],
-                "max": stats["max_part_ms"],
-            },
-            "straggler_ratio": round(
-                stats["max_part_ms"] / max(stats["p50_part_ms"], 0.001), 2
-            ),
-        }
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
-def _ice_store(spark, sf_dir: str, mult: int = 8) -> tuple[str, int]:
-    """Memoized icetable of the stored html pages (one create commit) —
-    the steady-state read side for the icetable scaling evidence."""
-    import tempfile
-
-    from enem_spark.sources.icetable import IceTable, Transform, current_version
-
-    sf = _sf_from_dir(sf_dir)
-    suffix = f"x{mult}" if mult > 1 else ""
-    tbl = os.path.join(tempfile.gettempdir(), f"enem_ice_store_sf{sf}{suffix}")
-    store, n_rows = _html_pages_store(spark, sf_dir, mult)
-    if current_version(tbl) < 0:
-        pages = spark.read.parquet(store).select("url", "warc_ts", "html", "lang")
-        IceTable.create(
-            spark, tbl, pages,
-            partition_by=(Transform("b_url", "bucket", "url", 32),),
-            sequence=10,
-        )
-    return tbl, n_rows
-
-
-def run_ice_extract_bench(sf_dir: str, cpus: str) -> dict:
-    """Steady-state extraction throughput with the icetable as input:
-    manifest-planned read -> latest-fetch-per-url window -> content
-    address -> DOM extraction (the icerun hot path without the commit
-    writes, mirroring the other --*-extract-only modes). Emits the same
-    JSON keys so run_scaling can drive it."""
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-    from pyspark.sql import functions as F
-
-    from enem_spark.icerun import _latest_per_url
-    from enem_spark.lineage import instrumented_html_stage
-    from enem_spark.session import get_spark
-    from enem_spark.sources.icetable import IceTable
-
-    n_cores = int(cpus) if str(cpus).isdigit() else (os.cpu_count() or 8)
-    # scaling children skip the burn: the parent already probed this
-    # window, and a redundant 12M-md5 burn right before the timed runs
-    # both wastes wall time and adds load adjacent to the measurement
-    hw_probe = (
-        None
-        if os.environ.get("SPARK_GRAFT_SKIP_HW_PROBE")
-        else _mp_probe(min(n_cores, os.cpu_count() or 8))
-    )
-    spark = get_spark("enem_spark_ice_extract", cores=cpus)
-    mult = int(os.environ.get("SPARK_GRAFT_SCALE_MULT", "8"))
-    tbl, n_rows = _ice_store(spark, sf_dir, mult)
-    t = IceTable(spark, tbl)
-
-    def job():
-        work = _latest_per_url(t.read().select("url", "warc_ts", "html")).select(
-            F.xxhash64("url", F.md5("html")).alias("doc_id"), "url", "html"
-        )
-        return instrumented_html_stage(work).count()
-
-    job()  # warm every worker, untimed
-    runs = []
-    n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    for _ in range(n_runs):
-        t0 = time.perf_counter()
-        job()
-        runs.append(round(time.perf_counter() - t0, 3))
-    return {
-        "metric": "docs/sec icetable-input extraction (read+window+extract)",
-        "value": round(n_rows / min(runs), 2),
-        "unit": "docs/sec",
-        "sf": _sf_from_dir(sf_dir),
-        "cpus": cpus,
-        "extract_runs_sec": runs,
-        "n_pages": n_rows,
-        "hw_probe_mops": hw_probe,
-    }
-
-
-def update_ice_bench_md(summary: dict, path: str = "BENCH.md") -> None:
-    """Insert/replace the '## Icetable-input scaling' section in BENCH.md."""
-    lo, hi = summary["low_cpus"], summary["high_cpus"]
-    section = f"""## Icetable-input scaling (manifest-planned read -> extraction)
-
-Two-parallelism evidence with the Iceberg-style table as the input
-(read through the manifest plan, latest-fetch-per-url window,
-content-address, DOM extraction):
-
-| config | icetable extraction docs/sec | raw-hardware M-ops/s |
-|---|---|---|
-| {lo} cores | {summary['docs_per_sec_low']} | {summary['hw_mhash_low']} |
-| {hi} cores | {summary['docs_per_sec_high']} | {summary['hw_mhash_high']} |
-
-scaling efficiency = **{summary['scaling_efficiency']}**, hardware ceiling
-that window = {summary['hw_scaling_efficiency']}, normalized =
-**{summary['normalized_efficiency']}** ({summary['n_pages']} pages,
-sf={summary['sf']} x{summary['scale_mult']}; trial picked by the same
-credible-probe rule as the exam job).
-"""
-    _upsert_section(path, "## Icetable-input scaling", section)
-
-
 def run_zorder_bench(sf_dir: str, cpus: str, n_files: int = 32) -> dict:
     """Z-order data-skipping evidence: a fresh unpartitioned icetable of
     the first-crawl pages written as ``n_files`` hash-spread files (each
@@ -2269,10 +1645,9 @@ def run_zorder_bench(sf_dir: str, cpus: str, n_files: int = 32) -> dict:
     MEASURED (manifest-level plan, zero data IO per probe); row
     preservation through the rewrite is asserted. Self-contained temp
     table; deleted afterwards."""
+    import datetime as _dt
     import shutil
-    import tempfile
 
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from enem_spark.session import get_spark
     from enem_spark.sources import icetable as it
 
@@ -2288,8 +1663,6 @@ def run_zorder_bench(sf_dir: str, cpus: str, n_files: int = 32) -> dict:
         n_rows = t.read().count()
         mid = old_pdf["url"].iloc[len(old_pdf) // 2]
         ts_lo = old_pdf["warc_ts"].min().to_pydatetime()
-        import datetime as _dt
-
         probes = {
             "url_point": [("url", "=", mid)],
             "time_slice_2d": [
@@ -2334,7 +1707,19 @@ def run_zorder_bench(sf_dir: str, cpus: str, n_files: int = 32) -> dict:
         shutil.rmtree(base, ignore_errors=True)
 
 
-def run_iceberg_bench(sf_dir: str, cpus: str, mult: int = 8) -> dict:
+def _action_floor(spark, base: str) -> float:
+    # this host's per-Spark-action latency floor (shared VM): a 1-row
+    # write, timed. Every run wall carries several such actions of pure
+    # scheduling cost — constant per run, irrelevant at scale, dominant at
+    # toy input sizes — recorded so cross-run readers can normalize
+    t0 = time.perf_counter()
+    spark.createDataFrame(
+        [("probe", 0, 0)], "a string, b long, c long"
+    ).write.mode("overwrite").parquet(os.path.join(base, "probe"))
+    return round(time.perf_counter() - t0, 3)
+
+
+def run_iceberg_bench(sf_dir: str, cpus: str, mult: int = 8, runs: int = 3) -> dict:
     """Iceberg-path evidence: full extraction run over a fresh icetable of
     the stored html pages, then a ~2% delta append extracted incrementally.
     The ratio of the two walls (and of files/bytes scanned) is the
@@ -2342,35 +1727,22 @@ def run_iceberg_bench(sf_dir: str, cpus: str, mult: int = 8) -> dict:
     the table and run dirs are built fresh in temp dirs each invocation so
     repeated benches never accumulate snapshots."""
     import shutil
-    import tempfile
 
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from pyspark.sql import functions as F
 
+    from enem_spark.htmlops import synth_html_pages
     from enem_spark.icerun import run_html_extraction_ice
     from enem_spark.session import get_spark
     from enem_spark.sources.icetable import IceTable, Transform
 
-    n_cores = int(cpus) if str(cpus).isdigit() else (os.cpu_count() or 8)
-    # scaling children skip the burn: the parent already probed this
-    # window, and a redundant 12M-md5 burn right before the timed runs
-    # both wastes wall time and adds load adjacent to the measurement
-    hw_probe = (
-        None
-        if os.environ.get("SPARK_GRAFT_SKIP_HW_PROBE")
-        else _mp_probe(min(n_cores, os.cpu_count() or 8))
-    )
+    hw_probe = _probe(cpus)
     spark = get_spark("enem_spark_ice_bench", cores=cpus)
     store, n_rows = _html_pages_store(spark, sf_dir, mult)
     pages = spark.read.parquet(store).select("url", "warc_ts", "html", "lang")
     base = tempfile.mkdtemp(prefix="enem_ice_bench_")
 
     # ~2% re-crawl: doc_id%53==0 pages re-synthesized with changed text
-    from enem_spark.htmlops import synth_html_pages
-
-    docs = _replicate_documents(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), mult
-    )
+    docs = _replicate_documents(spark, sf_dir, mult)
     delta_docs = docs.filter(F.col("doc_id") % 53 == 0).withColumn(
         "text", F.concat(F.col("text"), F.lit(" conteudo atualizado"))
     )
@@ -2379,14 +1751,13 @@ def run_iceberg_bench(sf_dir: str, cpus: str, mult: int = 8) -> dict:
         (F.col("warc_ts") + F.expr("INTERVAL 30 DAYS")).alias("warc_ts"),
         "html", "lang",
     )
-    n_trials = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     walls = {"full": [], "incr": [], "rescan": []}
     try:
         # trial k replays the whole crawl story into fresh dirs (committed
         # state changes run semantics, so phases can't be re-timed in
         # place); best-of-N because the shared VM's delivered CPU swings
         # 5-10x between minutes — same discipline as run_bench
-        for k in range(n_trials):
+        for k in range(runs):
             tbl = os.path.join(base, f"pages{k}")
             out = os.path.join(base, f"out{k}")
             t = IceTable.create(
@@ -2412,15 +1783,6 @@ def run_iceberg_bench(sf_dir: str, cpus: str, mult: int = 8) -> dict:
             rescan = run_html_extraction_ice(spark, tbl, out, full=True)
             walls["rescan"].append(round(time.perf_counter() - t2, 3))
 
-        # this host's per-Spark-action latency floor (shared VM): a 1-row
-        # write, timed. Every run wall carries ~4-6 such actions of pure
-        # scheduling cost — constant per run, irrelevant at scale,
-        # dominant at this toy input size.
-        t3 = time.perf_counter()
-        spark.createDataFrame([("probe", 0, 0)],
-                              "a string, b long, c long").write.mode(
-            "overwrite").parquet(os.path.join(base, "probe"))
-        action_floor = time.perf_counter() - t3
         full_wall = min(walls["full"])
         incr_wall = min(walls["incr"])
         rescan_wall = min(walls["rescan"])
@@ -2431,12 +1793,13 @@ def run_iceberg_bench(sf_dir: str, cpus: str, mult: int = 8) -> dict:
             "unit": "docs/sec",
             "sf": _sf_from_dir(sf_dir),
             "cpus": cpus,
+            "scale_mult": mult,
             "n_pages": n_rows,
-            "full_wall_sec": round(full_wall, 3),
-            "incr_wall_sec": round(incr_wall, 3),
-            "rescan_wall_sec": round(rescan_wall, 3),
+            "full_wall_sec": full_wall,
+            "incr_wall_sec": incr_wall,
+            "rescan_wall_sec": rescan_wall,
             "trial_walls": walls,
-            "action_floor_sec": round(action_floor, 3),
+            "action_floor_sec": _action_floor(spark, base),
             "incr_pages": incr["input_pages"],
             "full_scan": full["scan"],
             "incr_scan": incr["scan"],
@@ -2452,7 +1815,7 @@ def run_iceberg_bench(sf_dir: str, cpus: str, mult: int = 8) -> dict:
         shutil.rmtree(base, ignore_errors=True)
 
 
-def run_stats_bench(sf_dir: str, cpus: str, mult: int = 8) -> dict:
+def run_stats_bench(sf_dir: str, cpus: str, mult: int = 8, runs: int = 3) -> dict:
     """Incremental-stats evidence (statstore.py): one-shot fold of the
     whole corpus into a fresh store, then a ~2% batch of new content
     versions folded incrementally (cursor anti-join + delta sketches +
@@ -2465,24 +1828,17 @@ def run_stats_bench(sf_dir: str, cpus: str, mult: int = 8) -> dict:
     temp stores per trial (committed state changes fold semantics, so
     phases can't be re-timed in place)."""
     import shutil
-    import tempfile
 
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from pyspark.sql import functions as F
 
     from enem_spark import statstore
     from enem_spark.session import get_spark
 
-    n_cores = int(cpus) if str(cpus).isdigit() else (os.cpu_count() or 8)
-    hw_probe = (
-        None
-        if os.environ.get("SPARK_GRAFT_SKIP_HW_PROBE")
-        else _mp_probe(min(n_cores, os.cpu_count() or 8))
-    )
+    hw_probe = _probe(cpus)
     spark = get_spark("enem_spark_stats_bench", cores=cpus)
-    docs = _replicate_documents(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"), mult
-    ).select("doc_id", "source", "text", "n_chars")
+    docs = _replicate_documents(spark, sf_dir, mult).select(
+        "doc_id", "source", "text", "n_chars"
+    )
     n_docs = docs.count()
     # ~2% new content versions: fresh doc_ids ((mult+1)* so the offset
     # clears the replicated id range at ANY --mult, including 0/1),
@@ -2496,10 +1852,9 @@ def run_stats_bench(sf_dir: str, cpus: str, mult: int = 8) -> dict:
     both = docs.unionByName(delta)
     n_delta = delta.count()
     base = tempfile.mkdtemp(prefix="enem_stats_bench_")
-    n_trials = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
     walls: dict = {"full": [], "incr": [], "recompute": []}
     try:
-        for k in range(n_trials):
+        for k in range(runs):
             store = os.path.join(base, f"store{k}")
             t0 = time.perf_counter()
             statstore.update_corpus_stats(spark, store, docs)
@@ -2527,14 +1882,6 @@ def run_stats_bench(sf_dir: str, cpus: str, mult: int = 8) -> dict:
             walls["recompute"].append(round(time.perf_counter() - t2, 3))
             for df in owned:
                 df.unpersist()
-        # this host's per-Spark-action latency floor (shared VM): a 1-row
-        # write, timed — the constant that dominates the incr wall at toy
-        # sizes, recorded so cross-run readers can normalize
-        t3 = time.perf_counter()
-        spark.createDataFrame(
-            [("probe", 0, 0)], "a string, b long, c long"
-        ).write.mode("overwrite").parquet(os.path.join(base, "probe"))
-        action_floor = time.perf_counter() - t3
         full_wall = min(walls["full"])
         incr_wall = min(walls["incr"])
         rec_wall = min(walls["recompute"])
@@ -2545,6 +1892,7 @@ def run_stats_bench(sf_dir: str, cpus: str, mult: int = 8) -> dict:
             "unit": "docs/sec",
             "sf": _sf_from_dir(sf_dir),
             "cpus": cpus,
+            "scale_mult": mult,
             "n_docs": n_docs,
             "n_delta": n_delta,
             "delta_fraction": round(n_delta / n_docs, 4),
@@ -2553,217 +1901,95 @@ def run_stats_bench(sf_dir: str, cpus: str, mult: int = 8) -> dict:
             "recompute_wall_sec": rec_wall,
             "trial_walls": walls,
             "wall_ratio_incr_vs_recompute": round(incr_wall / rec_wall, 4),
-            "action_floor_sec": round(action_floor, 3),
+            "action_floor_sec": _action_floor(spark, base),
             "hw_probe_mops": hw_probe,
         }
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--scaling", action="store_true")
-    ap.add_argument("--skew", action="store_true")
-    ap.add_argument("--lineage", action="store_true")
-    ap.add_argument("--extract-only", action="store_true")
-    ap.add_argument("--html-scaling", action="store_true")
-    ap.add_argument("--html-extract-only", action="store_true")
-    ap.add_argument("--streaming-scaling", action="store_true")
-    ap.add_argument("--streaming-batch-ab", action="store_true",
-                    help="same input at 1/4/8 micro-batches: isolates the "
-                         "per-batch protocol cost S_batch -> BENCH.md")
-    ap.add_argument("--streaming-extract-only", action="store_true")
-    ap.add_argument("--pdf-scaling", action="store_true")
-    ap.add_argument("--pdf-extract-only", action="store_true")
-    ap.add_argument("--pdf-images-scaling", action="store_true")
-    ap.add_argument("--pdfimg-extract-only", action="store_true")
-    ap.add_argument("--iceberg", action="store_true")
-    ap.add_argument("--zorder-skip", action="store_true",
-                    help="z-order data-skipping evidence: files-kept "
-                         "ratios before/after cluster_files")
-    ap.add_argument("--ice-extract-only", action="store_true")
-    ap.add_argument("--ice-scaling", action="store_true")
-    ap.add_argument("--dedup-scaling", action="store_true")
-    ap.add_argument("--stats-incremental", action="store_true")
-    ap.add_argument("--dedup-extract-only", action="store_true")
-    ap.add_argument("--ivf-store-ab", action="store_true",
-                    help="ANN assignment A/B: fresh re-score vs committed ivf index")
-    ap.add_argument("--sig-store-ab", action="store_true",
-                    help="LSH re-sign vs committed signature index A/B -> BENCH.md")
-    ap.add_argument("--big-headline", action="store_true",
-                    help="sf-equivalent-1.0 extraction + top-10 queries -> BENCH.md")
+def main(argv: list[str] | None = None) -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    mode = ap.add_mutually_exclusive_group()
+    mode.add_argument("--job", choices=JOBS,
+                      help="time one job: warm pass, best of --runs passes")
+    mode.add_argument("--scaling", nargs="?", const="exam", choices=JOBS,
+                      help="one job at --low and --high cores -> BENCH.md "
+                           "(default job: exam)")
+    mode.add_argument("--skew", action="store_true",
+                      help="salted-vs-plain numbering window evidence")
+    mode.add_argument("--iceberg", action="store_true",
+                      help="icetable full vs incremental vs forced-rescan runs")
+    mode.add_argument("--zorder-skip", action="store_true",
+                      help="z-order data-skipping evidence: files-kept "
+                           "ratios before/after cluster_files")
+    mode.add_argument("--stats-incremental", action="store_true",
+                      help="statstore O(delta) refresh vs full recompute")
+    mode.add_argument("--sig-store-ab", action="store_true",
+                      help="LSH re-sign vs committed signature index A/B -> BENCH.md")
+    mode.add_argument("--ivf-store-ab", action="store_true",
+                      help="ANN re-score vs committed ivf/srp index A/B -> BENCH.md")
+    mode.add_argument("--big-headline", action="store_true",
+                      help="sf-equivalent-1.0 extraction + top-10 queries -> BENCH.md")
     # N=2 / 4N=8 is the measurement-valid range on this host: CLAUDE.md's
     # scaling discipline — above ~8-16 busy cores the hypervisor throttle
     # (not the job) caps efficiency near 0.5, so an 8->32 default would
     # overwrite BENCH.md with self-contradictory evidence
     ap.add_argument("--low", type=int, default=2)
     ap.add_argument("--high", type=int, default=8)
-    # None = per-mode default (exam 48 / html 8 / ice 16 / dedup 4); an
-    # explicit value is honored by EVERY mode (no sentinel-on-the-default)
+    # None = the mode's default (a JOBS row's own, else the run_* default);
+    # an explicit value reaches every mode that stages replicated input
     ap.add_argument("--mult", type=int, default=None)
-    ap.add_argument("--trials", type=int, default=None)
-    args = ap.parse_args()
+    ap.add_argument("--trials", type=int, default=None,
+                    help="scaling trials (default 3) or A/B trials (default 2)")
+    ap.add_argument("--runs", type=int, default=3,
+                    help="timed passes for --job, the sweep's extraction, "
+                         "--iceberg and --stats-incremental")
+    ap.add_argument("--no-probe", action="store_true",
+                    help="skip --job's hardware probe (scaling children)")
+    args = ap.parse_args(argv)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    if args.scaling:
-        summary = run_scaling(
-            sf_dir, args.low, args.high,
-            args.mult if args.mult is not None else 48, args.trials if args.trials is not None else 3,
-        )
-        write_bench_md(summary)
-        print(json.dumps(summary))
-        return
-    if args.html_scaling:
-        summary = run_scaling(
-            sf_dir,
-            args.low,
-            args.high,
-            args.mult if args.mult is not None else 8,
-            args.trials if args.trials is not None else 3,
-            flag="--html-extract-only",
-        )
-        update_html_bench_md(summary)
-        print(json.dumps(summary))
-        return
-    if args.iceberg:
-        print(json.dumps(run_iceberg_bench(sf_dir, cpus, mult=8)))
-        return
-    if args.zorder_skip:
-        print(json.dumps(run_zorder_bench(sf_dir, cpus)))
-        return
-    if args.stats_incremental:
-        print(json.dumps(run_stats_bench(
-            sf_dir, cpus, mult=args.mult if args.mult is not None else 8
-        )))
-        return
-    if args.ice_extract_only:
-        print(json.dumps(run_ice_extract_bench(sf_dir, cpus)))
-        return
-    if args.ice_scaling:
-        summary = run_scaling(
-            sf_dir, args.low, args.high,
-            args.mult if args.mult is not None else 16, args.trials if args.trials is not None else 3,
-            flag="--ice-extract-only",
-        )
-        update_ice_bench_md(summary)
-        print(json.dumps(summary))
-        return
-    if args.dedup_scaling:
-        summary = run_scaling(
-            sf_dir, args.low, args.high,
-            # dedup default x4 (20k docs): the 128-perm sign stage is ~40x
-            # the per-page UDF cost, so the exam job's x48 would take an
-            # hour per trial without adding signal
-            args.mult if args.mult is not None else 4,
-            args.trials if args.trials is not None else 3,
-            flag="--dedup-extract-only",
-        )
-        update_dedup_bench_md(summary)
-        print(json.dumps(summary))
-        return
-    if args.dedup_extract_only:
-        print(json.dumps(run_dedup_bench(sf_dir, cpus)))
-        return
-    if args.pdf_scaling:
-        summary = run_scaling(
-            sf_dir,
-            args.low,
-            args.high,
-            args.mult if args.mult is not None else 4,
-            args.trials if args.trials is not None else 3,
-            flag="--pdf-extract-only",
-        )
-        update_pdf_bench_md(summary)
-        print(json.dumps(summary))
-        return
-    if args.pdf_extract_only:
-        print(json.dumps(run_pdf_bench(sf_dir, cpus)))
-        return
-    if args.pdf_images_scaling:
-        summary = run_scaling(
-            sf_dir,
-            args.low,
-            args.high,
-            # x2 (10k docs, 50k images): the per-doc image pipeline is
-            # ~5x the text decode, so the text store's x4 would double
-            # trial wall time without adding signal
-            args.mult if args.mult is not None else 2,
-            args.trials if args.trials is not None else 3,
-            flag="--pdfimg-extract-only",
-        )
-        update_pdfimg_bench_md(summary)
-        print(json.dumps(summary))
-        return
-    if args.pdfimg_extract_only:
-        print(json.dumps(run_pdf_images_bench(sf_dir, cpus)))
-        return
-    if args.html_extract_only:
-        print(json.dumps(run_html_bench(sf_dir, cpus)))
-        return
-    if args.streaming_scaling:
-        summary = run_scaling(
-            sf_dir,
-            args.low,
-            args.high,
-            # much larger default replication than the batch DOM row: each
-            # micro-batch pays ~3.7 s of fixed commit actions (see the
-            # BENCH.md decomposition), so batches must be big enough that
-            # extraction dominates the timed wall — the deployment regime
-            args.mult if args.mult is not None else 400,
-            args.trials if args.trials is not None else 3,
-            flag="--streaming-extract-only",
-        )
-        # print BEFORE the md upsert: a formatting error must not discard
-        # a multi-trial run's numbers
-        print(json.dumps(summary), flush=True)
-        update_streaming_bench_md(summary)
-        return
-    if args.streaming_batch_ab:
-        summary = run_streaming_batch_ab(
-            sf_dir, cpus,
-            mult=args.mult if args.mult is not None else 96,
-        )
-        print(json.dumps(summary), flush=True)
-        update_streaming_ab_md(summary)
-        return
-    if args.streaming_extract_only:
-        print(json.dumps(run_streaming_bench(sf_dir, cpus)))
-        return
-    if args.skew:
-        print(json.dumps(run_skew(cpus)))
-        return
-    if args.big_headline:
-        summary = run_big_headline(
-            sf_dir, cpus,
-            mult=args.mult if args.mult is not None else 10,
-        )
-        update_big_md(summary)
-        print(json.dumps(summary))
-        return
-    if args.ivf_store_ab:
-        summary = run_ivf_store_ab(
-            sf_dir, cpus,
-            mult=args.mult if args.mult is not None else 8,
-            trials=args.trials if args.trials is not None else 2,
-        )
-        update_ivf_ab_md(summary)
-        print(json.dumps(summary))
-        return
-    if args.sig_store_ab:
-        summary = run_sig_store_ab(
-            sf_dir, cpus,
-            mult=args.mult if args.mult is not None else 4,
-            trials=args.trials if args.trials is not None else 2,
-        )
-        update_sig_ab_md(summary)
-        print(json.dumps(summary))
-        return
-    if args.lineage:
-        print(json.dumps(run_lineage_demo(sf_dir, cpus)))
-        return
-    print(json.dumps(run_bench(sf_dir, cpus, extract_only=args.extract_only)))
+    def mult(default: int) -> int:
+        return default if args.mult is None else args.mult
+
+    def trials(default: int) -> int:
+        return default if args.trials is None else args.trials
+
+    publish = None
+    if args.job:
+        out = run_job(args.job, sf_dir, cpus, mult(JOBS[args.job].mult),
+                      args.runs, probe=not args.no_probe)
+    elif args.scaling:
+        out = run_scaling(sf_dir, args.scaling, args.low, args.high,
+                          mult(JOBS[args.scaling].mult), trials(3))
+        publish = functools.partial(render_scaling, args.scaling)
+    elif args.skew:
+        out = run_skew(cpus)
+    elif args.iceberg:
+        out = run_iceberg_bench(sf_dir, cpus, mult(8), args.runs)
+    elif args.zorder_skip:
+        out = run_zorder_bench(sf_dir, cpus)
+    elif args.stats_incremental:
+        out = run_stats_bench(sf_dir, cpus, mult(8), args.runs)
+    elif args.sig_store_ab:
+        out = run_sig_store_ab(sf_dir, cpus, mult(4), trials(2))
+        publish = update_sig_ab_md
+    elif args.ivf_store_ab:
+        out = run_ivf_store_ab(sf_dir, cpus, mult(8), trials(2))
+        publish = update_ivf_ab_md
+    elif args.big_headline:
+        out = run_big_headline(sf_dir, cpus, mult(10))
+        publish = update_big_md
+    else:
+        out = run_bench(sf_dir, cpus, mult(8), args.runs)
+    # print BEFORE the md upsert: a formatting error must not discard a
+    # multi-trial run's numbers
+    print(json.dumps(out), flush=True)
+    if publish:
+        publish(out)
 
 
 if __name__ == "__main__":
