@@ -18,7 +18,7 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from enem_spark import simsearch, textops
+from enem_spark import simsearch, staging_path, textops
 from enem_spark.extract import ExtractorConfig, extract_questions
 from enem_spark.sources.documents_bridge import pages_from_documents
 
@@ -560,17 +560,12 @@ def _sig_store_dir(spark, sf_dir):
     itself exercises the anti-join resume path. The probe query below then
     hash-matching the plain incremental SQL twin certifies the store's
     write -> commit-gate -> read round trip, icetable-staging style."""
-    import hashlib
     import os
 
     from enem_spark import sigindex
 
     sf_dir = os.path.normpath(sf_dir)
-    tag = (
-        f"{os.path.basename(sf_dir)}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    )
-    out = f"/tmp/enem_sigidx_{tag}"
+    out = staging_path("sigidx", sf_dir)
     if out in _SIG_STAGED:
         return out
     docs = _t(spark, sf_dir, "documents")
@@ -926,7 +921,6 @@ def _ivf_store_dir(spark, sf_dir):
     (run 2 assigns against STORED centroids). The probe query below then
     hash-matching the fresh-assignment SQL twin certifies the store's
     write -> commit-gate -> read round trip, sig-store style."""
-    import hashlib
     import os
 
     from enem_spark import vecindex
@@ -935,13 +929,10 @@ def _ivf_store_dir(spark, sf_dir):
     c, d = simsearch.IVF_CELLS, simsearch.SRP_DIM
     # both families' configs in the dir name: a constant change must land
     # in a FRESH store dir, or the one-index-one-config validation would
-    # refuse every warm-/tmp parity/bench run until a hand-delete
-    tag = (
-        f"{os.path.basename(sf_dir)}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-        f"_c{c}s{simsearch.SRP_BITS}x{simsearch.SRP_TABLES}d{d}"
+    # refuse every warm-staging parity/bench run until a hand-delete
+    out = staging_path(
+        "ivfidx", sf_dir, f"_c{c}s{simsearch.SRP_BITS}x{simsearch.SRP_TABLES}d{d}"
     )
-    out = f"/tmp/enem_ivfidx_{tag}"
     if out in _IVF_STAGED:
         return out
     emb = _t(spark, sf_dir, "embeddings")
@@ -2138,18 +2129,14 @@ def q_incr_corpus_stats(spark, sf_dir):
     full recompute — a hash match PROVES incremental == full. Replays are
     no-ops (doc_id cursor anti-join), so re-running the driver is a pinned
     read."""
-    import hashlib
     import os
-    import tempfile
 
     from enem_spark import statstore
 
     docs = _t(spark, sf_dir, "documents")
     # basename+path-md5 store key (same idiom as the icetable driver
     # stores): distinct corpora must never share a doc_id cursor
-    sfn = os.path.normpath(sf_dir)
-    tag = f"{os.path.basename(sfn)}_{hashlib.md5(sfn.encode()).hexdigest()[:8]}"
-    out = os.path.join(tempfile.gettempdir(), f"enem_stats_{tag}")
+    out = staging_path("stats", os.path.normpath(sf_dir))
     # parity config (engine default is HLL_P=12; the twin recomputes every
     # register, so keep it at 2^6)
     pp = textops.PARITY_HLL_P
@@ -2203,16 +2190,12 @@ def q_incr_top_terms(spark, sf_dir):
     the twin is the SAME one-shot SQL as cms_topk_terms — a hash match
     PROVES incremental == one-shot. Replays are no-ops (term cursor), so
     re-running the driver is a pinned read."""
-    import hashlib
     import os
-    import tempfile
 
     from enem_spark import statstore
 
     docs = _t(spark, sf_dir, "documents")
-    sfn = os.path.normpath(sf_dir)
-    tag = f"{os.path.basename(sfn)}_{hashlib.md5(sfn.encode()).hexdigest()[:8]}"
-    out = os.path.join(tempfile.gettempdir(), f"enem_terms_{tag}")
+    out = staging_path("terms", os.path.normpath(sf_dir))
     kw = dict(
         depth=textops.PARITY_CMS_DEPTH,
         width=textops.PARITY_CMS_WIDTH,

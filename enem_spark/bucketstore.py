@@ -32,12 +32,11 @@ merge (e.g. 100 TB / 65536 buckets ≈ 1.5 GB per bucket file, compacted).
 
 from __future__ import annotations
 
-import hashlib
 import os
 import re
 from typing import Sequence
 
-from . import textops
+from . import staging_path, textops
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -113,11 +112,12 @@ def stage_bucketed_pair(spark: SparkSession, sf_dir: str) -> dict[str, str]:
     sf_dir = os.path.normpath(sf_dir)
     if sf_dir in _STAGED:
         return _STAGED[sf_dir]
+    base = staging_path("bucket", sf_dir)
+    # catalog table names take no '.' or '-'
     tag = (
-        f"{os.path.basename(sf_dir)}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    ).replace(".", "_").replace("-", "_")
-    base = os.path.join("/tmp", f"enem_bucket_{tag}")
+        os.path.basename(base).removeprefix("enem_bucket_")
+        .replace(".", "_").replace("-", "_")
+    )
     names = {"docs": f"bkt_docs_{tag}", "scores": f"bkt_scores_{tag}"}
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     need_write = not all(

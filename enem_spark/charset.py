@@ -56,7 +56,7 @@ import re
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from . import htmlops
+from . import htmlops, staging_path
 
 PRESCAN = 1024  # bytes inspected for a <meta charset> declaration
 
@@ -466,11 +466,7 @@ def stage_charset_tables(sf_dir: str) -> dict[str, str]:
     sf_dir = os.path.normpath(sf_dir)
     if sf_dir in _STAGED:
         return _STAGED[sf_dir]
-    tag = (
-        f"{os.path.basename(sf_dir)}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    )
-    base = os.path.join("/tmp", f"enem_charset_{tag}")
+    base = staging_path("charset", sf_dir)
     os.makedirs(base, exist_ok=True)
     paths = {
         "charset_stats": os.path.join(base, "charset_stats.parquet"),

@@ -26,7 +26,7 @@ import os
 
 import pandas as pd
 
-from . import oracle
+from . import oracle, staging_path
 from .extract import ExtractorConfig, _process_one_page, answer_key_rows
 from .sources.documents_bridge import (
     EXAM_PAGES,
@@ -180,16 +180,7 @@ def stage_expected_tables(sf_dir: str) -> dict[str, str]:
     sf_dir = os.path.normpath(sf_dir)
     if sf_dir in _STAGED:
         return _STAGED[sf_dir]
-    import hashlib
-
-    # key the staging dir on the FULL path: two corpora sharing a basename
-    # (e.g. .../a/sf0.01 and .../b/sf0.01) must not overwrite each other's
-    # staged oracle mid-process
-    tag = (
-        f"{os.path.basename(sf_dir)}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    )
-    base = os.path.join("/tmp", f"enem_expected_{tag}")
+    base = staging_path("expected", sf_dir)
     paths = {
         "extract_questions": os.path.join(base, "questions.parquet"),
         "extract_question_spans": os.path.join(base, "question_spans.parquet"),
@@ -207,8 +198,8 @@ def stage_expected_tables(sf_dir: str) -> dict[str, str]:
     }
     for name, frame in frames.items():
         # write-then-rename: a concurrent reader (driver harness + pytest
-        # sharing /tmp) must never see a half-written parquet; the staged
-        # bytes are deterministic, so racing writers converge and
+        # sharing one staging dir) must never see a half-written parquet;
+        # the staged bytes are deterministic, so racing writers converge and
         # os.replace's last-wins is safe
         tmp = f"{paths[name]}.tmp.{os.getpid()}"
         frame.to_parquet(tmp, index=False)

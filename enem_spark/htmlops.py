@@ -51,6 +51,8 @@ import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
+from . import staging_path
+
 # Densitometric operating point (Boilerpipe NumWordsRules uses 10 words /
 # 0.33 link density; 8 keeps the shortest synthetic paragraph clear of the
 # boundary while still dropping every chrome block).
@@ -1575,16 +1577,11 @@ def stage_html_tables(sf_dir: str) -> dict[str, str]:
     the expected OUTPUT of the non-SQL-expressible DOM path (same pattern as
     expected.stage_expected_tables). Pure Python — callable from
     oracle_sql(), which has no SparkSession."""
-    import hashlib
 
     sf_dir = os.path.normpath(sf_dir)
     if sf_dir in _STAGED:
         return _STAGED[sf_dir]
-    tag = (
-        f"{os.path.basename(sf_dir)}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    )
-    base = os.path.join("/tmp", f"enem_html_{tag}")
+    base = staging_path("html", sf_dir)
     os.makedirs(base, exist_ok=True)
     paths = {
         "html_pages": os.path.join(base, "html_pages.parquet"),

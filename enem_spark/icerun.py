@@ -38,7 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from . import lineage, runfs
+from . import lineage
 from .sources.icetable import IceTable
 
 _RUN_PREFIX = "ice"
@@ -125,15 +125,9 @@ def _latest_per_url(pages: DataFrame) -> DataFrame:
 def _mark_noop_run(spark: SparkSession, out_dir: str, run_id: str) -> None:
     """Commit a marker-only run: advances the sequence watermark when a
     snapshot added files but no new content units (pure duplicate append).
-    This run writes no side outputs itself, but a CRASHED prior attempt
-    under the same run_id may have left stale table dirs — committing the
-    marker would make those orphan rows committed-visible (the CLAUDE.md
-    stale-dir invariant), so clear them first, exactly like
-    lineage.run_extraction does for tables an attempt did not write."""
-    lineage.clear_stale_run_dirs(
-        out_dir, run_id, ("main_content", "anchors", "processed_docs", "lineage")
-    )
-    lineage.append_run_marker(spark, out_dir, run_id)
+    Every html table is mapped to None, so a CRASHED prior attempt's dirs
+    under the same run_id are cleared rather than committed-visible."""
+    lineage.commit_run(spark, out_dir, run_id, dict.fromkeys(lineage.HTML_TABLES))
 
 
 def run_html_extraction_ice(
@@ -224,8 +218,8 @@ def run_html_extraction_ice(
         # commit marker (same overwrite-dir + committed-gate protocol as
         # every side output), so a crash here leaves an invisible orphan
         # that the deterministic run_id retry overwrites.
-        work.select("url", "doc_id").write.mode("overwrite").parquet(
-            runfs.spark_path(f"{out_dir}/fetch_log/run_id={run_id}")
+        lineage.write_run_table(
+            out_dir, "fetch_log", run_id, work.select("url", "doc_id")
         )
         extract_in = work
         if mime_filter:
@@ -292,11 +286,9 @@ def apply_takedown(
         summary["table_delete"] = table.delete_rows(keys, sequence=sequence)
     run_id = f"{_TAKEDOWN_PREFIX}{sequence:012d}"
     if run_id not in lineage.committed_id_set(out_dir):
-        keys.select("url").dropDuplicates().write.mode("overwrite").parquet(
-            runfs.spark_path(f"{out_dir}/takedowns/run_id={run_id}")
+        lineage.commit_run(
+            spark, out_dir, run_id, {"takedowns": keys.select("url").dropDuplicates()}
         )
-        # COMMIT POINT for the serving-side log
-        lineage.append_run_marker(spark, out_dir, run_id)
     summary["run_id"] = run_id
     return summary
 

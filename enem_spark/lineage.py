@@ -20,18 +20,28 @@ just loops `extract_pdf`); this module adds both, Spark-first:
     raises IOError) are appended to a ``quarantine`` table instead.
 
 Run directory layout (parquet everywhere; Iceberg DDL would be identical —
-the sandbox has no Iceberg catalog, so plain parquet paths stand in):
+the sandbox has no Iceberg catalog, so plain parquet paths stand in). Every
+table but ``runs`` holds one ``run_id=<id>`` dir per run:
 
-    out_dir/questions/       partitioned by (year, day)
+    out_dir/questions/       exam runs; partitioned by (year, day)
+    out_dir/images/          exam runs with process_images
+    out_dir/quarantine/      exam runs
+    out_dir/main_content/    html runs
+    out_dir/anchors/         html runs with with_anchors
+    out_dir/fetch_log/       html stream and icetable runs
     out_dir/lineage/
     out_dir/processed_docs/
-    out_dir/quarantine/
     out_dir/runs/            one marker object per committed run, put by the
                              driver through runfs (no Spark job)
+
+Every run commits through :func:`commit_run` (write each table's dir, clear
+the dirs this attempt left empty, put the marker last), and every store
+that numbers its runs names them through a :class:`RunFamily`.
 """
 
 from __future__ import annotations
 
+import re
 import uuid
 
 import pyarrow as pa
@@ -68,20 +78,6 @@ def partition_lineage(paged: DataFrame) -> DataFrame:
         F.sum(failures.cast("long")).alias("parse_failures"),
         F.round(F.sum("wall_ms"), 3).alias("wall_ms"),
     )
-
-
-def require_supported_store(out_dir: str) -> None:
-    """Capability check: raises iff no runfs control-plane implementation
-    exists for the store's scheme (plain POSIX paths and file:// are
-    built in; object-store schemes must be registered — see
-    enem_spark/runfs.py for the six-primitive port contract). Until
-    round 5 this was a blanket POSIX-only refusal:
-    the protocol's control plane called `os` directly, so on s3:// every
-    probe silently returned False and exactly-once degraded to
-    re-extracting everything with no resume. The control plane now runs
-    through `runfs.fs_for(out_dir)` everywhere, so the only thing left
-    to check is that such an implementation exists."""
-    runfs.require_supported_store(out_dir)
 
 
 def _data_files(fs, path: str) -> list[str]:
@@ -129,11 +125,10 @@ def derive_replay_run_id(committed_ids, base_id: str) -> str:
 
 def clear_stale_run_dirs(out_dir: str, run_id: str, tables) -> None:
     """Delete ``<table>/run_id=<id>`` dirs a crashed prior attempt of the
-    SAME id may have written but this attempt did not — the other half of
-    the commit protocol beside :func:`append_run_marker`, single-sourced
-    for the same reason (a per-site hand copy that misses a table makes a
-    crashed attempt's orphan rows committed-visible). Call immediately
-    BEFORE the marker append with the tables this attempt did NOT write."""
+    SAME id may have written but this attempt did not. Called only by
+    :func:`commit_run`, just before the marker, with the tables it maps to
+    None (a table missed here makes a crashed attempt's orphan rows
+    committed-visible)."""
     fs = runfs.fs_for(out_dir)
     for table in tables:
         fs.delete_prefix(f"{out_dir}/{table}/run_id={run_id}")
@@ -186,6 +181,126 @@ def append_run_marker(
         f"{out_dir}/runs/part-{uuid.uuid4().hex}.parquet",
         buf.getvalue().to_pybytes(),
     )
+
+
+# run tables whose run dirs are partitioned further (the rest are flat)
+_PARTITION_BY = {"questions": ("year", "day")}
+
+
+def write_run_table(out_dir: str, table: str, run_id: str, frame: DataFrame) -> None:
+    """Overwrite ``<table>/run_id=<id>`` with ``frame``: the one Spark
+    write of the run protocol (overwrite makes a crashed attempt's retry
+    under the same id idempotent)."""
+    writer = frame.write.mode("overwrite")
+    if table in _PARTITION_BY:
+        writer = writer.partitionBy(*_PARTITION_BY[table])
+    writer.parquet(runfs.spark_path(f"{out_dir}/{table}/run_id={run_id}"))
+
+
+def commit_run(
+    spark: SparkSession,
+    out_dir: str,
+    run_id: str,
+    tables: dict,
+    input_pages: int = 0,
+    questions_written: int = 0,
+) -> None:
+    """Commit one run: the whole write side of the exactly-once protocol.
+
+    ``tables`` maps each table the run owns to the frame this attempt
+    writes there, or to None when it writes nothing there. Frames are
+    written in the map's order (:func:`write_run_table`); the None tables'
+    dirs under this id are deleted, since a crashed prior attempt of the
+    SAME id may have written them and the marker would make those rows
+    committed-visible (:func:`clear_stale_run_dirs`); the ``runs`` marker
+    goes last (:func:`append_run_marker`). Tables absent from the map are
+    left alone — e.g. a fetch_log the caller wrote before delegating."""
+    for table, frame in tables.items():
+        if frame is not None:
+            write_run_table(out_dir, table, run_id, frame)
+    clear_stale_run_dirs(
+        out_dir, run_id, [t for t, frame in tables.items() if frame is None]
+    )
+    append_run_marker(spark, out_dir, run_id, input_pages, questions_written)
+
+
+class RunFamily:
+    """One run-id namespace of the shared ``runs`` ledger: ids are
+    ``template`` filled with the store's config integers, then
+    ``_{n:06d}`` and a trailing ``c`` on a compaction run (whose state
+    includes every run numbered below it). A family's parse ignores every
+    other family's ids, so several stores can share one out_dir.
+
+    The config is part of every id because mixing configs in one store
+    would silently corrupt it (bucket widths, band boundaries and cell ids
+    all shift meaning): ``runs`` checks it on every entry point. ``store``
+    names the store in that error and ``redo`` says how to start over."""
+
+    def __init__(self, template: str, store: str, redo: str):
+        self.template = template
+        self.store = store
+        self.redo = redo
+        # {6,}: :06d pads, never truncates — a {6} anchor would hide run
+        # 1,000,000 from the parse and re-derive (and overwrite) its id
+        self._re = re.compile(
+            "^" + r"(\d+)".join(map(re.escape, template.split("{}")))
+            + r"_(\d{6,})(c?)$"
+        )
+
+    def run_id(self, *config_and_n: int, compaction: bool = False) -> str:
+        *config, n = config_and_n
+        return f"{self.template.format(*config)}_{n:06d}" + (
+            "c" if compaction else ""
+        )
+
+    def parse(self, run_id: str) -> tuple[tuple[int, ...], int, bool] | None:
+        """(config, n, is_compaction) of one of this family's ids, else None."""
+        m = self._re.match(run_id)
+        if m is None:
+            return None
+        *config, n, comp = m.groups()
+        return tuple(map(int, config)), int(n), comp == "c"
+
+    def runs(self, committed, config: tuple | None = None) -> list:
+        """(config, n, is_compaction) of every id in ``committed`` that
+        belongs to this family. Raises unless each run carries ``config``;
+        with no config given (a cursor reader has none to request) the
+        runs must all carry one and the same config."""
+        runs = [r for r in map(self.parse, committed) if r is not None]
+        kind = self.store.split()[-1]
+        if config is None:
+            configs = {c for c, _, _ in runs}
+            if len(configs) > 1:
+                raise ValueError(
+                    f"{self.store} holds mixed configs {sorted(configs)} — "
+                    f"the one-{kind}-one-config invariant is violated; its "
+                    f"cursor cannot be trusted (use a fresh out_dir to {self.redo})"
+                )
+            return runs
+        bad = sorted({c for c, _, _ in runs if c != tuple(config)})
+        if bad:
+            raise ValueError(
+                f"{self.store} holds config(s) {bad}, requested {tuple(config)}"
+                f" — one {kind}, one config; use a fresh out_dir to {self.redo}"
+            )
+        return runs
+
+    @staticmethod
+    def next_n(runs) -> int:
+        return max((n for _, n, _ in runs), default=0) + 1
+
+    def active_ids(self, runs) -> list[str]:
+        """The ids readers trust: every run numbered at or after the latest
+        compaction. The compacted state INCLUDES every earlier run, so a
+        pre-compaction dir a crashed cleanup left behind must contribute
+        nothing — filtering here, not the delete, is the double-count
+        guard."""
+        ncomp = max((n for _, n, c in runs if c), default=0)
+        return [
+            self.run_id(*config, n, compaction=c)
+            for config, n, c in runs
+            if n >= ncomp
+        ]
 
 
 # runs/ path -> {marker file (relative) -> the run_ids it holds}
@@ -303,6 +418,9 @@ def committed_questions(spark: SparkSession, out_dir: str) -> DataFrame | None:
     return committed_table(spark, out_dir, "questions")
 
 
+EXAM_TABLES = ("questions", "lineage", "processed_docs", "images", "quarantine")
+
+
 def run_extraction(
     spark: SparkSession,
     pages: DataFrame,
@@ -327,7 +445,7 @@ def run_extraction(
 
     Calling again over the same pages with a NEW run_id is a no-op: every
     document already committed is anti-joined away and nothing is written."""
-    require_supported_store(out_dir)
+    runfs.require_supported_store(out_dir)
     committed = committed_id_set(out_dir)
     run_id = derive_replay_run_id(committed, run_id)
     if cfg.dedup_pages:
@@ -349,10 +467,10 @@ def run_extraction(
         pv = pv.join(done, "doc_id", "left_anti")
 
     paged = instrumented_page_stage(pv, cfg).persist()
-    new_quarantine = None
+    new_quarantine = questions = imgs = None
     try:
         n_pages = paged.count()
-        n_questions = 0
+        n_questions = n_images = 0
 
         new_quarantine = quarantined.select("url", "year", "day", "kind", "color")
         # dedup only against COMMITTED runs' quarantine rows: orphan
@@ -380,6 +498,11 @@ def run_extraction(
                 "images_written": 0,
             }
 
+        # a table this attempt writes nothing to stays None, so commit_run
+        # clears a crashed prior attempt's dir there (the state of the
+        # world can differ on retry, e.g. its docs were committed by
+        # another run meanwhile)
+        tables = dict.fromkeys(EXAM_TABLES)
         if n_pages:
             # cache=False: `paged` is already persisted above, so the salted
             # path's offsets join reads the cache without pinning a second
@@ -406,73 +529,34 @@ def run_extraction(
             # DONE, not failed: skip the questions write but still record
             # processed_docs + the runs marker.
             n_questions = questions.count()
-            if n_questions:
-                questions.write.mode("overwrite").partitionBy(
-                    "year", "day"
-                ).parquet(
-                    runfs.spark_path(f"{out_dir}/questions/run_id={run_id}")
-                )
-            questions.unpersist()
-
-            partition_lineage(paged).write.mode("overwrite").parquet(
-                runfs.spark_path(f"{out_dir}/lineage/run_id={run_id}")
+            tables.update(
+                questions=questions if n_questions else None,
+                lineage=partition_lineage(paged),
+                processed_docs=paged.select("doc_id").distinct(),
             )
+            if cfg.process_images:
+                # images mode (reference :269-334): restricted to this
+                # run's documents so a resumed run never rewrites committed
+                # images (the reference writes one PNG file per (page,
+                # index) unconditionally — re-running would silently
+                # overwrite). pv is already metadata-derived,
+                # quarantine-split and resume-anti-joined, so committed
+                # docs' pages never reach the image UDF.
+                from .extract import materialize_images
 
-            paged.select("doc_id").distinct().write.mode("overwrite").parquet(
-                runfs.spark_path(f"{out_dir}/processed_docs/run_id={run_id}")
-            )
-
-        n_images = 0
-        if n_pages and cfg.process_images:
-            # images mode (reference :269-334): the binary images table is
-            # a side output under the SAME run protocol; restricted to this
-            # run's documents so a resumed run never rewrites committed
-            # images (the reference writes one PNG file per (page, index)
-            # unconditionally — re-running would silently overwrite)
-            from .extract import materialize_images
-
-            # pv is already metadata-derived, quarantine-split, and
-            # resume-anti-joined — no second full-input metadata pass,
-            # and committed docs' pages never reach the image UDF
-            imgs = materialize_images(pages, pv=pv).persist()
-            n_images = imgs.count()
-            if n_images:
-                imgs.write.mode("overwrite").parquet(
-                    runfs.spark_path(f"{out_dir}/images/run_id={run_id}")
-                )
-            imgs.unpersist()
-
+                imgs = materialize_images(pages, pv=pv).persist()
+                n_images = imgs.count()
+                if n_images:
+                    tables["images"] = imgs
         if n_quarantined:
-            new_quarantine.write.mode("overwrite").parquet(
-                runfs.spark_path(f"{out_dir}/quarantine/run_id={run_id}")
-            )
-
-        # Clear stale run_id dirs this ATTEMPT did not write: a crashed
-        # prior attempt of the same run_id may have written them, and the
-        # state of the world can differ on retry (e.g. its docs were
-        # committed by another run meanwhile, so this attempt writes
-        # nothing). Committing below without clearing would make the stale
-        # rows visible as this run's output — the overwrite used to do this
-        # implicitly, but an empty write writes no files.
-        written = {
-            "questions": n_pages > 0 and n_questions > 0,
-            "lineage": n_pages > 0,
-            "processed_docs": n_pages > 0,
-            "quarantine": n_quarantined > 0,
-            "images": n_pages > 0 and cfg.process_images and n_images > 0,
-        }
-        clear_stale_run_dirs(
-            out_dir, run_id, [t for t, wrote in written.items() if not wrote]
-        )
-
-        # COMMIT POINT — everything above is invisible to resume/readers
-        # until this tiny marker put lands. Quarantine-only runs commit too:
-        # their rows must become visible to readers and to the dedup above.
-        append_run_marker(spark, out_dir, run_id, n_pages, n_questions)
+            # quarantine-only runs commit too: their rows must become
+            # visible to readers and to the dedup above
+            tables["quarantine"] = new_quarantine
+        commit_run(spark, out_dir, run_id, tables, n_pages, n_questions)
     finally:
-        paged.unpersist()
-        if new_quarantine is not None:
-            new_quarantine.unpersist()
+        for df in (paged, new_quarantine, questions, imgs):
+            if df is not None:
+                df.unpersist()
     return {
         "run_id": run_id,
         "input_pages": n_pages,
@@ -491,6 +575,9 @@ def committed_main_content(spark: SparkSession, out_dir: str) -> DataFrame | Non
     return committed_table(spark, out_dir, "main_content")
 
 
+HTML_TABLES = ("main_content", "anchors", "lineage", "processed_docs")
+
+
 def run_html_extraction(
     spark: SparkSession,
     pages: DataFrame,
@@ -501,10 +588,8 @@ def run_html_extraction(
 ) -> dict:
     """One checkpoint-resumable DOM-extraction run over a CC pages table
     (doc_id, url, html binary, ...) — the north rule's web-page pipeline
-    under the SAME exactly-once protocol as run_extraction: side outputs to
-    ``<table>/run_id=<id>`` overwrite dirs, stale dirs cleared for tables
-    this attempt did not write, and the tiny ``runs`` marker appended LAST
-    as the commit point. The unit of work is the document (one page row),
+    under the SAME exactly-once protocol as run_extraction (one
+    :func:`commit_run`). The unit of work is the document (one page row),
     so resume anti-joins committed doc_ids and a rerun is a no-op.
 
     Tables: main_content/ lineage/ processed_docs/ runs (+ anchors/ when
@@ -536,7 +621,7 @@ def run_html_extraction(
     run's outputs (callers that pre-derive — the html stream, icerun —
     always pass an uncommitted id, so the guard is an identity for them
     and their pre-written fetch_log dirs keep their names)."""
-    require_supported_store(out_dir)
+    runfs.require_supported_store(out_dir)
     committed = committed_id_set(out_dir)
     run_id = derive_replay_run_id(committed, run_id)
     work = pages.select("doc_id", "url", "html")
@@ -555,60 +640,38 @@ def run_html_extraction(
     extracted = instrumented_html_stage(work, with_anchors=with_anchors).persist()
     try:
         n_pages = extracted.count()
-        if fetch_log is not None:
-            fetch_log.select("url", "warc_ts", "doc_id").write.mode(
-                "overwrite"
-            ).parquet(
-                runfs.spark_path(f"{out_dir}/fetch_log/run_id={run_id}")
-            )
-        if n_pages == 0:
-            if fetch_log is None:
-                # nothing to do — write nothing (an empty overwrite of a
-                # reused run_id dir must not erase a previous attempt's
-                # output)
-                return {
-                    "run_id": run_id,
-                    "input_pages": 0,
-                    "main_rows": 0,
-                    "anchors_backfill_needed": backfill_needed,
-                }
-            # marker-only commit: the fetch_log above must become visible
-            # (the revert/re-arrival case extracts nothing but still moves
-            # the url's latest-fetch pointer). Committing makes THIS
-            # run_id's dirs visible, so clear stale orphans a crashed
-            # prior attempt of an abandoned incarnation may have left for
-            # tables this attempt did not write.
-            clear_stale_run_dirs(
-                out_dir, run_id,
-                ("main_content", "anchors", "lineage", "processed_docs"),
-            )
-            append_run_marker(spark, out_dir, run_id)
+        if n_pages == 0 and fetch_log is None:
+            # nothing to do — write nothing (an empty overwrite of a reused
+            # run_id dir must not erase a previous attempt's output)
             return {
                 "run_id": run_id,
                 "input_pages": 0,
                 "main_rows": 0,
                 "anchors_backfill_needed": backfill_needed,
             }
-
-        body = extracted.drop("part_id", "wall_ms", "anchors")
-        body.write.mode("overwrite").parquet(
-            runfs.spark_path(f"{out_dir}/main_content/run_id={run_id}")
-        )
-        if with_anchors:
-            (
-                extracted.select(
-                    "doc_id", "url", F.explode_outer("anchors").alias("a")
+        # fetch_log is left out of the map when the param is None: icerun
+        # writes fetch_log/run_id=<id> ITSELF before delegating here, and
+        # clearing it would destroy that same attempt's log. With no pages
+        # this is a marker-only commit that makes the fetch_log visible (the
+        # revert/re-arrival case extracts nothing but still moves the url's
+        # latest-fetch pointer), and every html table is cleared of a
+        # crashed prior attempt's orphans; with pages, only anchors can be
+        # stale (a prior attempt may have run with with_anchors=True).
+        tables = {}
+        if fetch_log is not None:
+            tables["fetch_log"] = fetch_log.select("url", "warc_ts", "doc_id")
+        tables.update(dict.fromkeys(HTML_TABLES))
+        if n_pages:
+            tables["main_content"] = extracted.drop("part_id", "wall_ms", "anchors")
+            if with_anchors:
+                tables["anchors"] = (
+                    extracted.select(
+                        "doc_id", "url", F.explode_outer("anchors").alias("a")
+                    )
+                    .filter(F.col("a").isNotNull())
+                    .select("doc_id", "url", "a.pos", "a.href", "a.anchor_text")
                 )
-                .filter(F.col("a").isNotNull())
-                .select("doc_id", "url", "a.pos", "a.href", "a.anchor_text")
-                .write.mode("overwrite")
-                .parquet(
-                    runfs.spark_path(f"{out_dir}/anchors/run_id={run_id}")
-                )
-            )
-        (
-            extracted.groupBy("part_id")
-            .agg(
+            tables["lineage"] = extracted.groupBy("part_id").agg(
                 F.count("*").alias("input_pages"),
                 F.sum((F.col("main_chars") > 0).cast("long")).alias(
                     "nonempty_main"
@@ -619,29 +682,8 @@ def run_html_extraction(
                 ),
                 F.round(F.sum("wall_ms"), 3).alias("wall_ms"),
             )
-            .write.mode("overwrite")
-            .parquet(runfs.spark_path(f"{out_dir}/lineage/run_id={run_id}"))
-        )
-        extracted.select("doc_id").distinct().write.mode("overwrite").parquet(
-            runfs.spark_path(f"{out_dir}/processed_docs/run_id={run_id}")
-        )
-
-        # n_pages > 0 here, so this attempt wrote every unconditional table
-        # wholesale (overwrite dirs — no stale rows can survive). The ONE
-        # conditional table this function owns is anchors: a crashed prior
-        # attempt of this run_id may have written it while THIS attempt
-        # runs with with_anchors=False; committing without clearing would
-        # make those stale rows visible (the CLAUDE.md stale-dir
-        # invariant). fetch_log is deliberately NOT cleared when the param
-        # is None — icerun writes fetch_log/run_id=<id> ITSELF before
-        # delegating here, and clearing it would destroy that same
-        # attempt's log (its callers never flip the flag between attempts
-        # of one run id).
-        if not with_anchors:
-            clear_stale_run_dirs(out_dir, run_id, ("anchors",))
-
-        # COMMIT POINT
-        append_run_marker(spark, out_dir, run_id, n_pages, n_pages)
+            tables["processed_docs"] = extracted.select("doc_id").distinct()
+        commit_run(spark, out_dir, run_id, tables, n_pages, n_pages)
     finally:
         extracted.unpersist()
     return {

@@ -21,6 +21,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from . import staging_path
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -416,15 +418,11 @@ def stage_media_expected(sf_dir: str) -> str:
         return _MEDIA_EXPECTED[sf_dir]
     import duckdb
 
-    tag = (
-        f"{os.path.basename(sf_dir)}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    )
-    path = os.path.join("/tmp", f"enem_media_{tag}.parquet")
+    path = staging_path("media", sf_dir, ".parquet")
     if os.path.exists(path):
         # disk cache (same contract as the charset/pack stagers): the file
         # persists across processes and is invalidated BY HAND after a
-        # kernel change (CLAUDE.md: delete /tmp/enem_media_*). Without
+        # kernel change (CLAUDE.md: delete $TMPDIR/enem_media_*). Without
         # this check every bench/parity PROCESS re-ran the single-threaded
         # synth+decode staging — ~43 s at sf0.1 since the jpeg third
         # became a real progressive encode (round-5 regression finding).

@@ -28,12 +28,12 @@ trivially SELECTs — both engines' hashes pin tokenizer AND kernel.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from . import staging_path
 from .textops import _tokens
 
 PACK_CAPACITY = 128
@@ -122,11 +122,9 @@ def stage_pack_expected(
     key = (sf_dir, capacity, n_shards)
     if key in _STAGED:
         return _STAGED[key]
-    tag = (
-        f"{os.path.basename(sf_dir)}_{capacity}x{n_shards}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
+    path = staging_path(
+        "pack_expected", sf_dir, f"_{capacity}x{n_shards}.parquet"
     )
-    path = os.path.join("/tmp", f"enem_pack_expected_{tag}.parquet")
     counts = duckdb.sql(
         rf"""
         SELECT doc_id,

@@ -40,6 +40,7 @@ import math
 import re
 import zlib
 
+from . import staging_path
 from .layout import IMG_MARKER  # layout.py is pure stdlib — one sentinel
 
 WS = b"\x00\t\n\x0c\r "
@@ -1246,7 +1247,6 @@ def stage_pdf_expected(sf_dir: str) -> str:
     """Expected (doc_id, page_idx, page_text, n_spans) parquet for the
     `pdf_decode` driver twin — built from the SOURCE lines before any PDF
     byte exists (memoized per sf_dir)."""
-    import hashlib
     import os
 
     import pandas as pd
@@ -1256,11 +1256,7 @@ def stage_pdf_expected(sf_dir: str) -> str:
         return _PDF_EXPECTED[sf_dir]
     import duckdb
 
-    tag = (
-        f"{os.path.basename(sf_dir)}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    )
-    path = os.path.join("/tmp", f"enem_pdfexp_{tag}.parquet")
+    path = staging_path("pdfexp", sf_dir, ".parquet")
     rows = duckdb.sql(
         "SELECT doc_id, text FROM "
         f"read_parquet('{sf_dir}/documents.parquet') "
@@ -1681,7 +1677,6 @@ _PDFIMG_EXPECTED: dict[str, str] = {}
 def stage_pdfimg_expected(sf_dir: str) -> str:
     """Expected pdf_images parquet for the driver twin (memoized per
     sf_dir) — built purely from the image SPECS, no PDF bytes."""
-    import hashlib
     import os
 
     import pandas as pd
@@ -1691,11 +1686,7 @@ def stage_pdfimg_expected(sf_dir: str) -> str:
         return _PDFIMG_EXPECTED[sf_dir]
     import duckdb
 
-    tag = (
-        f"{os.path.basename(sf_dir)}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    )
-    path = os.path.join("/tmp", f"enem_pdfimg_{tag}.parquet")
+    path = staging_path("pdfimg", sf_dir, ".parquet")
     rows = duckdb.sql(
         "SELECT doc_id FROM "
         f"read_parquet('{sf_dir}/documents.parquet') "

@@ -3,17 +3,11 @@
 `textops.incremental_minhash_dedup` promises that "at scale the existing
 band table is a materialized store ... the whole pass touches the existing
 corpus's raw text zero times". This module is that store: a `minhash_sigs`
-side table living under an extraction ``out_dir`` and governed by the SAME
-run protocol as every other lineage table (CLAUDE.md exactly-once
-invariant) —
-
-  * each index-maintenance run writes its signature rows to
-    ``minhash_sigs/run_id=<id>`` with overwrite, then appends the tiny
-    ``runs`` marker LAST (the commit point);
-  * readers (`committed_signatures`, `probe_near_dups`) trust only
-    committed runs, so a crashed attempt's directory is invisible;
-  * a retry derives the same next run id from COMMITTED ids only and
-    overwrites the orphan.
+side table living under an extraction ``out_dir``. Each index-maintenance
+run commits its signature rows through `lineage.commit_run`, so readers
+(`committed_signatures`, `probe_near_dups`) see only committed runs and a
+retry re-derives the same next run id from COMMITTED ids and overwrites
+the orphan.
 
 Steady state at 10^12 docs: each crawl snapshot's extraction run commits
 its main content, `update_signature_index` signs ONLY the docs not yet in
@@ -23,10 +17,10 @@ mutation), and `probe_near_dups` LSH-joins a new increment against the
 stored band table. The existing corpus's text is re-read zero times, and
 the probe's candidate join is new×existing only — never existing×existing.
 
-The (perms, bands) config is part of every sig run id
-(``sig{P}x{B}_{n:06d}``): mixing configs in one index would silently
-corrupt probes (band boundaries shift), so every entry point validates the
-requested config against all committed sig runs and raises on mismatch.
+Run ids are ``sig{P}x{B}_{n:06d}`` (`SIGS`, a `lineage.RunFamily`): the
+(perms, bands) config is in every id and every entry point refuses a
+mismatch, because mixing configs would silently corrupt probes (band
+boundaries shift).
 
 Storage: one row per doc with the full md5-hex signature columns
 (mh0..mh{P-1}); md5 is kept whole because the DuckDB parity twins must be
@@ -38,43 +32,18 @@ choices under this exact protocol.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from . import lineage, runfs, textops
+from . import lineage, textops
 
 SIG_TABLE = "minhash_sigs"
-_RUN_RE = re.compile(r"^sig(\d+)x(\d+)_(\d{6,})$")  # {6,}: :06d PADS, never
-# truncates — run 1,000,000 formats as 7 digits, and a {6} anchor would hide
-# it from the committed list, re-deriving (and overwriting) the same run_id
+SIGS = lineage.RunFamily(
+    "sig{}x{}", "signature index", "re-sign under a new config"
+)
 
 
 def sig_run_id(perms: int, bands: int, n: int) -> str:
-    return f"sig{perms}x{bands}_{n:06d}"
-
-
-def _committed_sig_runs(committed: set[str]) -> list[tuple[int, int, int]]:
-    """(perms, bands, n) per COMMITTED sig run, parsed from the run ids of
-    a lineage.committed_id_set snapshot."""
-    out = []
-    for run_id in committed:
-        m = _RUN_RE.match(run_id)
-        if m:
-            out.append((int(m.group(1)), int(m.group(2)), int(m.group(3))))
-    return out
-
-
-def _check_config(
-    runs: list[tuple[int, int, int]], perms: int, bands: int
-) -> None:
-    bad = sorted({(p, b) for p, b, _ in runs if (p, b) != (perms, bands)})
-    if bad:
-        raise ValueError(
-            f"signature index holds config(s) {bad}, requested "
-            f"({perms}, {bands}) — one index, one config; use a fresh "
-            "out_dir to re-sign under a new config"
-        )
+    return SIGS.run_id(perms, bands, n)
 
 
 def committed_signatures(
@@ -91,13 +60,11 @@ def committed_signatures(
     three."""
     if committed is None:
         committed = lineage.committed_id_set(out_dir)
-    runs = _committed_sig_runs(committed)
-    _check_config(runs, perms, bands)
-    if not runs:
+    if not SIGS.runs(committed, (perms, bands)):
         return None
     # read EXACTLY the committed run dirs, never the whole table dir: a
     # crashed first attempt under a DIFFERENT (perms, bands) config leaves
-    # an orphan run dir _check_config cannot see (it validates committed
+    # an orphan run dir the config check cannot see (it validates committed
     # runs only), and a bare directory read would let schema inference
     # resolve that orphan's narrower/wider mh column set — an
     # AnalysisException on mh{perms-1}, or silently null-padded signatures
@@ -127,8 +94,7 @@ def update_signature_index(
     there is no watermark to advance here because the anti-join IS the
     resume cursor."""
     committed = lineage.committed_id_set(out_dir)
-    runs = _committed_sig_runs(committed)
-    _check_config(runs, perms, bands)
+    runs = SIGS.runs(committed, (perms, bands))
     if source is None:
         main = lineage.committed_table(spark, out_dir, "main_content", committed)
         if main is None:
@@ -139,17 +105,13 @@ def update_signature_index(
     if existing is not None:
         # unbounded across runs -> no broadcast hint; AQE handles small case
         docs = docs.join(existing.select("doc_id"), "doc_id", "left_anti")
-    run_id = sig_run_id(perms, bands, max((n for _, _, n in runs), default=0) + 1)
+    run_id = sig_run_id(perms, bands, SIGS.next_n(runs))
     sigs = textops.minhash_signatures(docs, None, perms).persist()
     try:
         n = sigs.count()
         if n == 0:
             return {"indexed": 0, "run_id": run_id, "up_to_date": True}
-        sigs.write.mode("overwrite").parquet(
-            runfs.spark_path(f"{out_dir}/{SIG_TABLE}/run_id={run_id}")
-        )
-        # COMMIT POINT
-        lineage.append_run_marker(spark, out_dir, run_id, n)
+        lineage.commit_run(spark, out_dir, run_id, {SIG_TABLE: sigs}, n)
     finally:
         sigs.unpersist()
     return {"indexed": n, "run_id": run_id, "up_to_date": False}

@@ -45,7 +45,7 @@ from .jsonl import doc_url  # one url scheme across container formats (re-export
 # for tests; the staging helper itself lives in jsonl.stage_line_shards)
 
 # bump when encode_row/BAD_ROWS/record shape change: the staging tag
-# hashes this, so stale /tmp staging cannot silently certify an old encoder
+# hashes this, so stale staging cannot silently certify an old encoder
 _STAGING_VERSION = 1
 
 CORRUPT_COL = "_corrupt"

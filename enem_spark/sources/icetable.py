@@ -75,7 +75,7 @@ from typing import Any, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from .. import runfs
+from .. import runfs, staging_path
 
 FORMAT_VERSION = 1
 _PART_DIR = "__part"  # synthetic partition dir level (see module docstring)
@@ -2423,11 +2423,7 @@ def stage_ice_merge_base(sf_dir: str) -> dict[str, Any]:
     sf_dir = os.path.normpath(sf_dir)
     if sf_dir in _ICE_MERGE_STAGED:
         return _ICE_MERGE_STAGED[sf_dir]
-    tag = (
-        f"{os.path.basename(sf_dir)}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    )
-    base = os.path.join("/tmp", f"enem_ice_{tag}")
+    base = staging_path("ice", sf_dir)
     table_path = os.path.join(base, "pages_merge")
     old_pdf, _ = crawl_frames(sf_dir)
     fix_pdf = merge_frame(sf_dir)
@@ -2493,11 +2489,7 @@ def stage_ice_rowdel(sf_dir: str) -> dict[str, Any]:
     sf_dir = os.path.normpath(sf_dir)
     if sf_dir in _ICE_ROWDEL_STAGED:
         return _ICE_ROWDEL_STAGED[sf_dir]
-    tag = (
-        f"{os.path.basename(sf_dir)}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    )
-    base = os.path.join("/tmp", f"enem_ice_{tag}")
+    base = staging_path("ice", sf_dir)
     table_path = os.path.join(base, "pages_rowdel")
     old_pdf, _ = crawl_frames(sf_dir)
     if current_version(table_path) < 0:
@@ -2539,11 +2531,7 @@ def stage_ice_wap(sf_dir: str) -> dict[str, Any]:
     if sf_dir in _ICE_WAP_STAGED:
         return _ICE_WAP_STAGED[sf_dir]
     shared = stage_ice_pages(sf_dir)
-    tag = (
-        f"{os.path.basename(sf_dir)}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    )
-    base = os.path.join("/tmp", f"enem_ice_{tag}")
+    base = staging_path("ice", sf_dir)
     table_path = os.path.join(base, "pages_wap")
     if current_version(table_path) < 0:
         os.makedirs(base, exist_ok=True)
@@ -2579,11 +2567,7 @@ def stage_ice_pages(sf_dir: str) -> dict[str, Any]:
     sf_dir = os.path.normpath(sf_dir)
     if sf_dir in _ICE_STAGED:
         return _ICE_STAGED[sf_dir]
-    tag = (
-        f"{os.path.basename(sf_dir)}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    )
-    base = os.path.join("/tmp", f"enem_ice_{tag}")
+    base = staging_path("ice", sf_dir)
     table_path = os.path.join(base, "pages")
     old_pdf, new_pdf = crawl_frames(sf_dir)
     delta_pdf = delta_frame(sf_dir)

@@ -34,12 +34,13 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
+from .. import staging_path
 from .documents_bridge import EPOCH_S  # one epoch: jsonl fetch_ts must sit
 # on the same timeline as the bridge's warc_ts (cross-source joins and
 # decontamination windows key on it) — a re-declared literal could drift
 
 # bump when encode_line/BAD_LINES/record shape change: the staging tag
-# hashes this, so stale /tmp staging cannot silently certify an old encoder
+# hashes this, so stale staging cannot silently certify an old encoder
 _STAGING_VERSION = 2
 
 CORRUPT_COL = "_corrupt"
@@ -96,10 +97,10 @@ def stage_line_shards(
 
     Pure Python (duckdb read, no SparkSession — callable from
     oracle_sql()). The shard count SHAPES the staged layout, so the memo
-    key, /tmp dir, and done-marker all include it; the dir tag
+    key, staging dir, and done-marker all include it; the dir tag
     fingerprints the INPUT (size + mtime of documents.parquet) and the
     encoder ``version`` — a regenerated corpus or a changed encoder can
-    never silently certify against stale /tmp staging."""
+    never silently certify against stale staging."""
     import duckdb
 
     sf_dir = os.path.normpath(sf_dir)
@@ -114,8 +115,7 @@ def stage_line_shards(
     key = f"{sf_dir}|{n_files}|{fp}"
     if key in memo:
         return memo[key]
-    tag = f"{os.path.basename(sf_dir)}_{fp}_{n_files}"
-    base = os.path.join("/tmp", f"enem_{prefix}_{tag}")
+    base = staging_path(prefix, sf_dir, f"_{fp}_{n_files}")
     os.makedirs(base, exist_ok=True)
     shard_dir = os.path.join(base, prefix)
     os.makedirs(shard_dir, exist_ok=True)

@@ -37,6 +37,8 @@ from datetime import datetime, timezone
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from .. import staging_path
+
 WARC_MAGIC = b"WARC/1.0"
 EPOCH_S = 1704067200  # 2024-01-01T00:00:00Z — same epoch as documents_bridge
 
@@ -584,11 +586,7 @@ def stage_warc_files(
     key = f"{sf_dir}|{n_files}|{gzip_members}"
     if key in _STAGED:
         return _STAGED[key]
-    tag = (
-        f"{os.path.basename(sf_dir)}_"
-        f"{hashlib.md5(key.encode()).hexdigest()[:8]}"
-    )
-    base = os.path.join("/tmp", f"enem_warc_{tag}")
+    base = staging_path("warc", sf_dir, f"_{n_files}x{int(gzip_members)}")
     os.makedirs(base, exist_ok=True)
     warc_dir = os.path.join(base, "warc")
     os.makedirs(warc_dir, exist_ok=True)
@@ -652,11 +650,7 @@ def stage_wet_expected(sf_dir: str, n_shards: int = 8) -> str:
     key = f"{sf_dir}|{n_shards}"
     if key in _WET_STAGED:
         return _WET_STAGED[key]
-    tag = (
-        f"{os.path.basename(sf_dir)}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    )
-    base = os.path.join("/tmp", f"enem_warc_{tag}")
+    base = staging_path("warc", sf_dir)
     os.makedirs(base, exist_ok=True)
     expected_path = os.path.join(base, f"wet_expected_{n_shards}.parquet")
     if not os.path.exists(expected_path):
@@ -836,11 +830,7 @@ def stage_wat_expected(sf_dir: str, n_shards: int = 8) -> str:
     key = f"{sf_dir}|{n_shards}"
     if key in _WAT_STAGED:
         return _WAT_STAGED[key]
-    tag = (
-        f"{os.path.basename(sf_dir)}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    )
-    base = os.path.join("/tmp", f"enem_warc_{tag}")
+    base = staging_path("warc", sf_dir)
     os.makedirs(base, exist_ok=True)
     expected_path = os.path.join(base, f"wat_expected_{n_shards}.parquet")
     if not os.path.exists(expected_path):

@@ -19,14 +19,11 @@ store equals the full recompute bit-for-bit (gated in
 tests/test_statstore.py and by the incr_corpus_stats driver twin, whose
 DuckDB oracle IS the full recompute).
 
-The store lives under an extraction ``out_dir`` and is governed by the SAME
-run protocol as every other lineage table (CLAUDE.md exactly-once
-invariant): each maintenance run writes ``corpus_stats/run_id=<id>`` and
-``stats_docs/run_id=<id>`` (the doc_id cursor for the delta anti-join) with
-overwrite, then appends the tiny ``runs`` marker LAST (the commit point);
-readers trust only committed runs; a retry re-derives the same next run id
-from committed ids only and overwrites the orphan. The (hll_p, sub_bits)
-config is encoded in every stats run id (``stats{P}q{S}_{n:06d}``) and
+The store lives under an extraction ``out_dir``: each maintenance run
+commits ``corpus_stats/run_id=<id>`` and ``stats_docs/run_id=<id>`` (the
+doc_id cursor for the delta anti-join) through `lineage.commit_run`, and
+readers trust only committed runs. Run ids are ``stats{P}q{S}_{n:06d}``
+(`STATS`, a `lineage.RunFamily`), so the (hll_p, sub_bits) config is
 validated on every entry point — one store, one config (mixing bucket
 widths would silently corrupt every merge). Defaults are the ENGINE
 config (HLL_P=12, ~1.6% vocab error); the driver query passes
@@ -41,69 +38,20 @@ Unified state schema: (grp, sketch, slot, val) —
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import lineage, runfs, textops
 
 STATS_TABLE = "corpus_stats"
 DOCS_TABLE = "stats_docs"
-# trailing 'c' marks a COMPACTION run: its state/cursor INCLUDE every run
-# numbered below it, and readers trust only runs at-or-after the latest
-# compaction number — that reader rule (not the cleanup delete) is what
-# makes compaction crash-safe. {6,}: :06d pads, never truncates (same
-# guard as sigindex._RUN_RE).
-_RUN_RE = re.compile(r"^stats(\d+)q(\d+)_(\d{6,})(c?)$")
+# a compaction run ('c' suffix) folds every run numbered below it; readers
+# trust only RunFamily.active_ids — that reader rule (not the cleanup
+# delete) is what makes compaction crash-safe
+STATS = lineage.RunFamily("stats{}q{}", "stats store", "re-profile")
 
 
 def stats_run_id(p: int, sub_bits: int, n: int, compaction: bool = False) -> str:
-    return f"stats{p}q{sub_bits}_{n:06d}" + ("c" if compaction else "")
-
-
-def _committed_stats_runs(
-    committed: set[str],
-) -> list[tuple[int, int, int, bool]]:
-    """(hll_p, sub_bits, n, is_compaction) per COMMITTED stats run, parsed
-    from the run ids of a lineage.committed_id_set snapshot."""
-    out = []
-    for run_id in committed:
-        m = _RUN_RE.match(run_id)
-        if m:
-            out.append(
-                (
-                    int(m.group(1)),
-                    int(m.group(2)),
-                    int(m.group(3)),
-                    m.group(4) == "c",
-                )
-            )
-    return out
-
-
-def _check_config(
-    runs: list[tuple[int, int, int, bool]], p: int, sub_bits: int
-) -> None:
-    bad = sorted({(a, b) for a, b, _, _ in runs if (a, b) != (p, sub_bits)})
-    if bad:
-        raise ValueError(
-            f"stats store holds config(s) {bad}, requested ({p}, {sub_bits})"
-            " — one store, one config; use a fresh out_dir to re-profile"
-        )
-
-
-def _active_run_ids(runs: list[tuple[int, int, int, bool]]) -> list[str]:
-    """Run ids the readers trust: everything numbered at-or-after the
-    latest compaction run. The compacted run's state INCLUDES every
-    earlier run, so a pre-compaction dir that a crashed cleanup left
-    behind must contribute NOTHING — filtering here (not the delete) is
-    the double-count guard."""
-    ncomp = max((n for _, _, n, c in runs if c), default=0)
-    return [
-        stats_run_id(p, s, n, compaction=c)
-        for p, s, n, c in runs
-        if n >= ncomp
-    ]
+    return STATS.run_id(p, sub_bits, n, compaction=compaction)
 
 
 def _active_table(
@@ -170,11 +118,8 @@ def committed_stats(
     no committed stats run exists."""
     if committed is None:
         committed = lineage.committed_id_set(out_dir)
-    runs = _committed_stats_runs(committed)
-    _check_config(runs, p, sub_bits)
-    state = _active_table(
-        spark, out_dir, STATS_TABLE, _active_run_ids(runs)
-    )
+    runs = STATS.runs(committed, (p, sub_bits))
+    state = _active_table(spark, out_dir, STATS_TABLE, STATS.active_ids(runs))
     if state is None:
         return None
     agg = state.groupBy("grp", "sketch", "slot").agg(
@@ -190,20 +135,35 @@ def committed_stats(
     )
 
 
-def _sweep_below(
-    out_dir: str, tables: tuple, run_re: re.Pattern, n_group: int, n_new: int
+def _commit_compaction(
+    spark: SparkSession,
+    out_dir: str,
+    family: lineage.RunFamily,
+    run_id: str,
+    tables: dict,
+    n_active: int,
 ) -> None:
-    """Delete every run dir in the STORE numbered below a compaction
-    (markers or not — this is where crash-orphaned garbage goes away).
-    Shared by both namespaces' compactions; runs on the store's runfs
-    control plane (delimiter list + prefix delete) so URI-schemed stores
-    sweep correctly."""
+    """Commit a compaction run, then delete every run dir of its tables
+    numbered below it (markers or not — this is where crash-orphaned
+    garbage goes away; the sweep runs on the store's runfs control plane,
+    so URI-schemed stores sweep correctly). Every table must map to a
+    frame: a None means committed runs whose dirs are gone (store
+    half-copied or hand-pruned), and committing it would clear the table
+    and hide every older run behind the compaction."""
+    missing = sorted(t for t, frame in tables.items() if frame is None)
+    if missing:
+        raise ValueError(
+            f"{family.store} under {out_dir} has committed runs but no "
+            f"readable {missing} run dirs — refusing to compact over it"
+        )
+    lineage.commit_run(spark, out_dir, run_id, tables, n_active)
+    n_new = family.parse(run_id)[1]
     fs = runfs.fs_for(out_dir)
     for table in tables:
         base = f"{out_dir}/{table}"
         for d in fs.list_names(base):
-            m = run_re.match(d.removeprefix("run_id="))
-            if m and int(m.group(n_group)) < n_new:
+            run = family.parse(d.removeprefix("run_id="))
+            if run is not None and run[1] < n_new:
                 fs.delete_prefix(f"{base}/{d}")
 
 
@@ -222,61 +182,39 @@ def update_corpus_stats(
     (lineage invariant: an empty overwrite of a reused run_id dir must not
     erase a previous attempt's output)."""
     committed = lineage.committed_id_set(out_dir)
-    runs = _committed_stats_runs(committed)
-    _check_config(runs, p, sub_bits)
+    runs = STATS.runs(committed, (p, sub_bits))
     docs = source.select("doc_id", group_col, "text", "n_chars")
-    seen = _active_table(spark, out_dir, DOCS_TABLE, _active_run_ids(runs))
+    seen = _active_table(spark, out_dir, DOCS_TABLE, STATS.active_ids(runs))
     if seen is not None:
         # unbounded across runs -> no broadcast hint; AQE handles it
         docs = docs.join(seen.select("doc_id"), "doc_id", "left_anti")
-    run_id = stats_run_id(
-        p, sub_bits, max((n for _, _, n, _ in runs), default=0) + 1
-    )
+    run_id = stats_run_id(p, sub_bits, STATS.next_n(runs))
     docs = docs.persist()
     try:
         n = docs.count()
         if n == 0:
             return {"folded": 0, "run_id": run_id, "up_to_date": True}
-        _delta_state(docs, group_col, p, sub_bits).write.mode(
-            "overwrite"
-        ).parquet(runfs.spark_path(f"{out_dir}/{STATS_TABLE}/run_id={run_id}"))
-        docs.select("doc_id").write.mode("overwrite").parquet(
-            runfs.spark_path(f"{out_dir}/{DOCS_TABLE}/run_id={run_id}")
+        lineage.commit_run(
+            spark, out_dir, run_id,
+            {
+                STATS_TABLE: _delta_state(docs, group_col, p, sub_bits),
+                DOCS_TABLE: docs.select("doc_id"),
+            },
+            n,
         )
-        # COMMIT POINT
-        lineage.append_run_marker(spark, out_dir, run_id, n)
     finally:
         docs.unpersist()
     return {"folded": n, "run_id": run_id, "up_to_date": False}
-
-
-def _require_single_config(configs: set, what: str) -> None:
-    """Cursor-side mirror of the update entry points' config validation.
-    A cursor function has no requested config to compare against, so the
-    equivalent check is UNIQUENESS: every committed run must carry one and
-    the same config. A store whose one-config invariant was ever violated
-    (only possible by forging run ids around the entry points) would
-    otherwise hand callers a cursor that silently drops unfolded docs
-    from their delta (advice finding, round 4 — ice_maintenance's
-    pre-drop path trusts these cursors)."""
-    if len(configs) > 1:
-        raise ValueError(
-            f"{what} store holds mixed configs {sorted(configs)} — the "
-            "one-store-one-config invariant is violated; its cursor "
-            "cannot be trusted (re-profile into a fresh out_dir)"
-        )
 
 
 def folded_doc_ids(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """(doc_id) cursor of everything the stats store has folded — the
     cheap completeness probe: comparing its count with the corpus the
     store is supposed to profile detects a backfill gap (runs committed
-    before profiling was turned on). Refuses a mixed-config store
-    (:func:`_require_single_config`)."""
-    committed = lineage.committed_id_set(out_dir)
-    runs = _committed_stats_runs(committed)
-    _require_single_config({(p, s) for p, s, _, _ in runs}, "stats")
-    return _active_table(spark, out_dir, DOCS_TABLE, _active_run_ids(runs))
+    before profiling was turned on). Refuses a mixed-config store: its
+    cursor could silently drop unfolded docs from a caller's delta."""
+    runs = STATS.runs(lineage.committed_id_set(out_dir))
+    return _active_table(spark, out_dir, DOCS_TABLE, STATS.active_ids(runs))
 
 
 def compact_stats(
@@ -303,24 +241,19 @@ def compact_stats(
     anything to merge — right for an end-of-stream-job compaction of many
     micro-batch runs, too eager for a nightly tick over a huge table)."""
     committed = lineage.committed_id_set(out_dir)
-    runs = _committed_stats_runs(committed)
-    _check_config(runs, p, sub_bits)
-    active = _active_run_ids(runs)
+    runs = STATS.runs(committed, (p, sub_bits))
+    active = STATS.active_ids(runs)
     if len(active) < max(min_runs, 2):
         return {"compacted_runs": 0, "run_id": None}
-    n_new = max(n for _, _, n, _ in runs) + 1
-    run_id = stats_run_id(p, sub_bits, n_new, compaction=True)
-    state = committed_stats(spark, out_dir, p, sub_bits, committed)
-    cursor = _active_table(spark, out_dir, DOCS_TABLE, active)
-    state.write.mode("overwrite").parquet(
-        runfs.spark_path(f"{out_dir}/{STATS_TABLE}/run_id={run_id}")
+    run_id = stats_run_id(p, sub_bits, STATS.next_n(runs), compaction=True)
+    _commit_compaction(
+        spark, out_dir, STATS, run_id,
+        {
+            STATS_TABLE: committed_stats(spark, out_dir, p, sub_bits, committed),
+            DOCS_TABLE: _active_table(spark, out_dir, DOCS_TABLE, active),
+        },
+        len(active),
     )
-    cursor.write.mode("overwrite").parquet(
-        runfs.spark_path(f"{out_dir}/{DOCS_TABLE}/run_id={run_id}")
-    )
-    # COMMIT POINT
-    lineage.append_run_marker(spark, out_dir, run_id, len(active))
-    _sweep_below(out_dir, (STATS_TABLE, DOCS_TABLE), _RUN_RE, 3, n_new)
     return {"compacted_runs": len(active), "run_id": run_id}
 
 
@@ -424,54 +357,13 @@ def _report_from_state(
 TERMS_TABLE = "term_cms"
 CANDS_TABLE = "term_cands"
 TERM_DOCS_TABLE = "term_docs"
-# trailing 'c' = compaction run, same reader rule as the stats store
-_TERM_RUN_RE = re.compile(r"^terms(\d+)x(\d+)m(\d+)_(\d{6,})(c?)$")
+TERMS = lineage.RunFamily("terms{}x{}m{}", "term store", "re-profile")
 
 
 def term_run_id(
     depth: int, width: int, sample_mod: int, n: int, compaction: bool = False
 ) -> str:
-    return f"terms{depth}x{width}m{sample_mod}_{n:06d}" + (
-        "c" if compaction else ""
-    )
-
-
-def _committed_term_runs(
-    committed: set[str],
-) -> list[tuple[int, int, int, int, bool]]:
-    out = []
-    for run_id in committed:
-        m = _TERM_RUN_RE.match(run_id)
-        if m:
-            out.append(
-                tuple(int(g) for g in m.groups()[:4]) + (m.group(5) == "c",)
-            )
-    return out
-
-
-def _active_term_ids(runs: list[tuple[int, int, int, int, bool]]) -> list[str]:
-    """Same reader rule as _active_run_ids, for the terms namespace."""
-    ncomp = max((n for _, _, _, n, c in runs if c), default=0)
-    return [
-        term_run_id(d, w, m, n, compaction=c)
-        for d, w, m, n, c in runs
-        if n >= ncomp
-    ]
-
-
-def _check_term_config(
-    runs: list[tuple[int, int, int, int, bool]],
-    depth: int,
-    width: int,
-    sample_mod: int,
-) -> None:
-    bad = sorted({r[:3] for r in runs if r[:3] != (depth, width, sample_mod)})
-    if bad:
-        raise ValueError(
-            f"term store holds config(s) {bad}, requested"
-            f" ({depth}, {width}, {sample_mod})"
-            " — one store, one config; use a fresh out_dir to re-profile"
-        )
+    return TERMS.run_id(depth, width, sample_mod, n, compaction=compaction)
 
 
 def _term_tokens(docs: DataFrame, group_col: str) -> DataFrame:
@@ -487,13 +379,9 @@ def folded_term_doc_ids(spark: SparkSession, out_dir: str) -> DataFrame | None:
     twin of :func:`folded_doc_ids` (own cursor table and run namespace;
     the stores share only the runs marker table). Lets callers pre-filter
     a corpus frame to the unfolded delta before materializing text.
-    Refuses a mixed-config store (:func:`_require_single_config`)."""
-    committed = lineage.committed_id_set(out_dir)
-    runs = _committed_term_runs(committed)
-    _require_single_config({r[:3] for r in runs}, "term")
-    return _active_table(
-        spark, out_dir, TERM_DOCS_TABLE, _active_term_ids(runs)
-    )
+    Refuses a mixed-config store, like :func:`folded_doc_ids`."""
+    runs = TERMS.runs(lineage.committed_id_set(out_dir))
+    return _active_table(spark, out_dir, TERM_DOCS_TABLE, TERMS.active_ids(runs))
 
 
 def update_term_sketch(
@@ -511,37 +399,29 @@ def update_term_sketch(
     per run: <= depth*width register rows per group + the delta's sampled
     vocabulary — never the token stream."""
     committed = lineage.committed_id_set(out_dir)
-    runs = _committed_term_runs(committed)
-    _check_term_config(runs, depth, width, sample_mod)
+    runs = TERMS.runs(committed, (depth, width, sample_mod))
     docs = source.select("doc_id", group_col, "text")
-    seen = _active_table(
-        spark, out_dir, TERM_DOCS_TABLE, _active_term_ids(runs)
-    )
+    seen = _active_table(spark, out_dir, TERM_DOCS_TABLE, TERMS.active_ids(runs))
     if seen is not None:
         # unbounded across runs -> no broadcast hint; AQE handles it
         docs = docs.join(seen.select("doc_id"), "doc_id", "left_anti")
-    run_id = term_run_id(
-        depth, width, sample_mod, max((r[3] for r in runs), default=0) + 1
-    )
+    run_id = term_run_id(depth, width, sample_mod, TERMS.next_n(runs))
     docs = docs.persist()
     try:
         n = docs.count()
         if n == 0:
             return {"folded": 0, "run_id": run_id, "up_to_date": True}
         toks = _term_tokens(docs, group_col)
-        textops.cms_sketch(toks, ["grp"], "v", depth, width).write.mode(
-            "overwrite"
-        ).parquet(runfs.spark_path(f"{out_dir}/{TERMS_TABLE}/run_id={run_id}"))
-        toks.filter(
-            textops._cms_doc_sampled(F.col("doc_id"), sample_mod)
-        ).select("grp", "v").distinct().write.mode("overwrite").parquet(
-            runfs.spark_path(f"{out_dir}/{CANDS_TABLE}/run_id={run_id}")
+        sampled = toks.filter(textops._cms_doc_sampled(F.col("doc_id"), sample_mod))
+        lineage.commit_run(
+            spark, out_dir, run_id,
+            {
+                TERMS_TABLE: textops.cms_sketch(toks, ["grp"], "v", depth, width),
+                CANDS_TABLE: sampled.select("grp", "v").distinct(),
+                TERM_DOCS_TABLE: docs.select("doc_id"),
+            },
+            n,
         )
-        docs.select("doc_id").write.mode("overwrite").parquet(
-            runfs.spark_path(f"{out_dir}/{TERM_DOCS_TABLE}/run_id={run_id}")
-        )
-        # COMMIT POINT
-        lineage.append_run_marker(spark, out_dir, run_id, n)
     finally:
         docs.unpersist()
     return {"folded": n, "run_id": run_id, "up_to_date": False}
@@ -562,11 +442,10 @@ def top_term_report(
     the one-shot cms_topk (shared functions, so the two paths cannot
     drift). Never re-reads committed text."""
     committed = lineage.committed_id_set(out_dir)
-    runs = _committed_term_runs(committed)
-    _check_term_config(runs, depth, width, sample_mod)
+    runs = TERMS.runs(committed, (depth, width, sample_mod))
     if not runs:
         raise ValueError(f"no committed term run under {out_dir}")
-    active = _active_term_ids(runs)
+    active = TERMS.active_ids(runs)
     sketch = _merged_term_sketch(spark, out_dir, active)
     cands = _active_table(spark, out_dir, CANDS_TABLE, active)
     est = textops.cms_estimate(sketch, cands, ["grp"], "v", depth, width)
@@ -601,37 +480,21 @@ def compact_terms(
     double count. Same ``min_runs`` amortization: the rewrite is
     O(cursor + sampled vocabulary), so fire it once enough runs accrue."""
     committed = lineage.committed_id_set(out_dir)
-    runs = _committed_term_runs(committed)
-    _check_term_config(runs, depth, width, sample_mod)
-    active = _active_term_ids(runs)
+    runs = TERMS.runs(committed, (depth, width, sample_mod))
+    active = TERMS.active_ids(runs)
     if len(active) < max(min_runs, 2):
         return {"compacted_runs": 0, "run_id": None}
-    n_new = max(n for _, _, _, n, _ in runs) + 1
-    run_id = term_run_id(depth, width, sample_mod, n_new, compaction=True)
-    (
-        _merged_term_sketch(spark, out_dir, active)
-        .write.mode("overwrite")
-        .parquet(runfs.spark_path(f"{out_dir}/{TERMS_TABLE}/run_id={run_id}"))
+    run_id = term_run_id(
+        depth, width, sample_mod, TERMS.next_n(runs), compaction=True
     )
-    (
-        _active_table(spark, out_dir, CANDS_TABLE, active)
-        .distinct()
-        .write.mode("overwrite")
-        .parquet(runfs.spark_path(f"{out_dir}/{CANDS_TABLE}/run_id={run_id}"))
-    )
-    (
-        _active_table(spark, out_dir, TERM_DOCS_TABLE, active)
-        .write.mode("overwrite")
-        .parquet(runfs.spark_path(f"{out_dir}/{TERM_DOCS_TABLE}/run_id={run_id}"))
-    )
-    # COMMIT POINT
-    lineage.append_run_marker(spark, out_dir, run_id, len(active))
-    _sweep_below(
-        out_dir,
-        (TERMS_TABLE, CANDS_TABLE, TERM_DOCS_TABLE),
-        _TERM_RUN_RE,
-        4,
-        n_new,
+    _commit_compaction(
+        spark, out_dir, TERMS, run_id,
+        {
+            TERMS_TABLE: _merged_term_sketch(spark, out_dir, active),
+            CANDS_TABLE: _active_table(spark, out_dir, CANDS_TABLE, active).distinct(),
+            TERM_DOCS_TABLE: _active_table(spark, out_dir, TERM_DOCS_TABLE, active),
+        },
+        len(active),
     )
     return {"compacted_runs": len(active), "run_id": run_id}
 

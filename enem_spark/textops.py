@@ -31,6 +31,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+from . import staging_path
+
 # word shingles of this size feed minhash + fingerprint
 SHINGLE_N = 3
 # Engine-scale LSH defaults: 128 permutations in 16 bands of 8 rows — the
@@ -2381,7 +2383,6 @@ def stage_compression_expected(sf_dir: str) -> str:
     parquet for ``sf_dir``: the same pure kernel run without Spark. The
     RATIO is left to the SQL twin (round(z/greatest(n,1), 6)) so both
     engines round from identical integer inputs."""
-    import hashlib
     import os
 
     import pandas as pd
@@ -2389,11 +2390,7 @@ def stage_compression_expected(sf_dir: str) -> str:
     sf_dir = os.path.normpath(sf_dir)
     if sf_dir in _COMP_STAGED:
         return _COMP_STAGED[sf_dir]
-    tag = (
-        f"{os.path.basename(sf_dir)}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    )
-    path = f"/tmp/enem_comp_{tag}.parquet"
+    path = staging_path("comp", sf_dir, ".parquet")
     docs = pd.read_parquet(
         os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
     )
@@ -2646,7 +2643,6 @@ def stage_mojibake_expected(sf_dir: str) -> str:
     plant_mojibake(documents) at ``sf_dir`` — same constants, same kernel,
     no Spark. md5 is left to the SQL twin so both engines hash the staged
     repaired text themselves."""
-    import hashlib
     import os
 
     import pandas as pd
@@ -2654,11 +2650,7 @@ def stage_mojibake_expected(sf_dir: str) -> str:
     sf_dir = os.path.normpath(sf_dir)
     if sf_dir in _MOJI_STAGED:
         return _MOJI_STAGED[sf_dir]
-    tag = (
-        f"{os.path.basename(sf_dir)}_"
-        f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
-    )
-    path = f"/tmp/enem_moji_{tag}.parquet"
+    path = staging_path("moji", sf_dir, ".parquet")
     once = mojibake_plant_py(MOJIBAKE_MARK)
     twice = mojibake_plant_py(once)
     docs = pd.read_parquet(

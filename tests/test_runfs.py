@@ -16,14 +16,15 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from enem_spark import corpus, runfs
+from enem_spark import corpus, lineage, runfs
 from enem_spark.extract import ExtractorConfig, extract_questions
 from enem_spark.lineage import (
     append_run_marker,
+    commit_run,
     committed_id_set,
     committed_questions,
     committed_run_ids,
-    require_supported_store,
+    committed_table,
     run_extraction,
 )
 
@@ -185,9 +186,40 @@ def test_unregistered_scheme_refused_loudly(pages_df, spark):
     cfg = ExtractorConfig(output_type="json")
     with pytest.raises(ValueError, match="s3"):
         run_extraction(spark, pages_df, cfg, "s3://bucket/out", "r1")
-    require_supported_store("/plain/posix/path")  # no raise
-    require_supported_store("relative/path")
-    require_supported_store("file:///tmp/x")  # file:// now supported
+    runfs.require_supported_store("/plain/posix/path")  # no raise
+    runfs.require_supported_store("relative/path")
+    runfs.require_supported_store("file:///tmp/x")  # file:// now supported
+
+
+def test_commit_run_writes_clears_then_commits_last(spark, mockfs, monkeypatch):
+    """commit_run over a crashed attempt's leftovers: ``run_id=r1`` dirs
+    in tables a, b and c; the retry writes a, maps b to None and leaves c
+    out. b's orphan is deleted, c is untouched, a reads back exactly the
+    new rows, and the marker put comes after every write and delete."""
+    out = "mock://bucket/run"
+    for t in ("a", "b", "c"):
+        mockfs.write_bytes(f"{out}/{t}/run_id=r1/part-0.parquet", b"orphan")
+    real_write = lineage.write_run_table
+
+    def logged_write(out_dir, table, run_id, frame):
+        mockfs.ops.append(("spark_write", f"{out_dir}/{table}/run_id={run_id}"))
+        real_write(out_dir, table, run_id, frame)
+
+    monkeypatch.setattr(lineage, "write_run_table", logged_write)
+    df = spark.createDataFrame([(1, "x"), (2, "y")], "k long, v string")
+    mockfs.ops.clear()
+    commit_run(spark, out, "r1", {"a": df, "b": None})
+    ops = list(mockfs.ops)
+
+    assert ops[0] == ("spark_write", f"{out}/a/run_id=r1")
+    assert ("delete_prefix", f"{out}/b/run_id=r1") in ops
+    assert ops[-1][0] == "put" and ops[-1][1].startswith(f"{out}/runs/")
+    assert [op for op, _ in ops].count("put") == 1
+    assert not mockfs.exists(f"{out}/b/run_id=r1")
+    assert mockfs.read_bytes(f"{out}/c/run_id=r1/part-0.parquet") == b"orphan"
+    rows = committed_table(spark, out, "a").select("k", "v").collect()
+    assert sorted(map(tuple, rows)) == [(1, "x"), (2, "y")]
+    assert committed_id_set(out) == {"r1"}
 
 
 # ---------------------------------------------------------------------------

@@ -530,6 +530,27 @@ def test_streaming_fold_ignores_foreign_rows_in_colliding_run_dir(
     assert n_folded == 1 and n_folded != pages.count()
 
 
+def test_compaction_refuses_store_with_missing_run_dirs(spark, tmp_path):
+    """A hand-pruned cursor table must stop a compaction before its
+    commit: committing with no cursor frame would clear the cursor and
+    hide every older run behind the compaction."""
+    import shutil
+
+    from enem_spark import lineage
+
+    docs = _docs(spark)
+    out = str(tmp_path / "s")
+    for m in (0, 1):
+        statstore.update_corpus_stats(
+            spark, out, docs.filter(F.col("doc_id") % 2 <= m), **KW
+        )
+    before = lineage.committed_id_set(out)
+    shutil.rmtree(f"{out}/{statstore.DOCS_TABLE}")
+    with pytest.raises(ValueError, match="refusing to compact"):
+        statstore.compact_stats(spark, out, **KW)
+    assert lineage.committed_id_set(out) == before
+
+
 def test_term_compaction_preserves_report_and_prunes_dirs(spark, tmp_path):
     """compact_terms: top_term_report is identical before/after, the three
     term tables are pruned to the single compaction run, and the cursor
