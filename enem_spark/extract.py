@@ -73,9 +73,10 @@ class ExtractorConfig:
     keep_unparsed: bool = False  # keep F6-dropped candidates (debug/lineage)
     # newest-wins per-url dedup BEFORE extraction. A re-crawled page row
     # would double-count q_count and shift every later question's number in
-    # its document. Off by default: the streaming path already dedups with
-    # dropDuplicatesWithinWatermark, and the extra url shuffle is not free —
-    # enable for batch runs over raw re-crawled corpora.
+    # its document. Off by default: the streaming path already dedups in
+    # streaming.read_pages_stream (url dedup within the warc_ts watermark),
+    # and the extra url shuffle is not free — enable for batch runs over raw
+    # re-crawled corpora.
     dedup_pages: bool = False
 
     def __post_init__(self):
@@ -552,15 +553,9 @@ def extract_pages(
 def extract_questions(
     pages: DataFrame,
     cfg: ExtractorConfig,
-    keys: DataFrame | None = None,
     persist_to: list | None = None,
 ) -> DataFrame:
-    """pages -> questions table (SURVEY.md §1.4 / FIXTURES.md §3).
-
-    ``keys`` overrides the answer-key build side — used by streaming, where
-    the key table must come from ALL answer-key pages seen so far, not just
-    the current micro-batch (a GB page arriving in a different batch than
-    its PV pages would otherwise silently turn into MISSING_ANSWER)."""
+    """pages -> questions table (SURVEY.md §1.4 / FIXTURES.md §3)."""
     if cfg.dedup_pages:
         # dedup ONCE, up front, so the answer-key build sees the same
         # newest-wins view as the page stage — keys built from the raw
@@ -571,8 +566,7 @@ def extract_questions(
     counted = extract_pages(
         pages, cfg, persist_to=persist_to, pre_deduped=cfg.dedup_pages
     )
-    if keys is None:
-        keys = build_answer_keys(with_url_metadata(pages))
+    keys = build_answer_keys(with_url_metadata(pages))
     return questions_from_counted(counted, keys, cfg)
 
 

@@ -302,6 +302,26 @@ class RunFamily:
             if n >= ncomp
         ]
 
+    def read(
+        self,
+        spark: SparkSession,
+        out_dir: str,
+        table: str,
+        config: tuple | None = None,
+        committed: set[str] | None = None,
+    ) -> DataFrame | None:
+        """Rows of one of this family's tables over its active runs (exactly
+        those run dirs are read), ``run_id`` dropped; None when the family
+        has no committed run. ``config`` is checked as in :meth:`runs`;
+        pass ``committed`` when the caller already read the ledger."""
+        if committed is None:
+            committed = committed_id_set(out_dir)
+        runs = self.runs(committed, config)
+        if not runs:
+            return None
+        rows = committed_table(spark, out_dir, table, set(self.active_ids(runs)))
+        return None if rows is None else rows.drop("run_id")
+
 
 # runs/ path -> {marker file (relative) -> the run_ids it holds}
 _MARKER_IDS: dict[str, dict[str, tuple[str, ...]]] = {}

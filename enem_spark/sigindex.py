@@ -58,18 +58,13 @@ def committed_signatures(
     Pass ``committed`` (the lineage.committed_id_set snapshot) when the
     caller already read it — one ledger listing per maintenance step, not
     three."""
-    if committed is None:
-        committed = lineage.committed_id_set(out_dir)
-    if not SIGS.runs(committed, (perms, bands)):
-        return None
     # read EXACTLY the committed run dirs, never the whole table dir: a
     # crashed first attempt under a DIFFERENT (perms, bands) config leaves
     # an orphan run dir the config check cannot see (it validates committed
     # runs only), and a bare directory read would let schema inference
     # resolve that orphan's narrower/wider mh column set — an
     # AnalysisException on mh{perms-1}, or silently null-padded signatures
-    sigs = lineage.committed_table(spark, out_dir, SIG_TABLE, committed)
-    return None if sigs is None else sigs.drop("run_id")
+    return SIGS.read(spark, out_dir, SIG_TABLE, (perms, bands), committed)
 
 
 def update_signature_index(

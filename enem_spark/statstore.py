@@ -54,15 +54,6 @@ def stats_run_id(p: int, sub_bits: int, n: int, compaction: bool = False) -> str
     return STATS.run_id(p, sub_bits, n, compaction=compaction)
 
 
-def _active_table(
-    spark: SparkSession, out_dir: str, table: str, active_ids: list[str]
-) -> DataFrame | None:
-    """Rows of one stats side-output table restricted to the ACTIVE run
-    set (exactly those run dirs are read)."""
-    rows = lineage.committed_table(spark, out_dir, table, set(active_ids))
-    return None if rows is None else rows.drop("run_id")
-
-
 def _delta_state(
     docs: DataFrame, group_col: str, p: int, sub_bits: int
 ) -> DataFrame:
@@ -116,10 +107,7 @@ def committed_stats(
     """MERGED state over all committed runs: one row per (grp, sketch,
     slot) — max for hll registers, sum for histograms/counters. None when
     no committed stats run exists."""
-    if committed is None:
-        committed = lineage.committed_id_set(out_dir)
-    runs = STATS.runs(committed, (p, sub_bits))
-    state = _active_table(spark, out_dir, STATS_TABLE, STATS.active_ids(runs))
+    state = STATS.read(spark, out_dir, STATS_TABLE, (p, sub_bits), committed)
     if state is None:
         return None
     agg = state.groupBy("grp", "sketch", "slot").agg(
@@ -184,7 +172,7 @@ def update_corpus_stats(
     committed = lineage.committed_id_set(out_dir)
     runs = STATS.runs(committed, (p, sub_bits))
     docs = source.select("doc_id", group_col, "text", "n_chars")
-    seen = _active_table(spark, out_dir, DOCS_TABLE, STATS.active_ids(runs))
+    seen = STATS.read(spark, out_dir, DOCS_TABLE, (p, sub_bits), committed)
     if seen is not None:
         # unbounded across runs -> no broadcast hint; AQE handles it
         docs = docs.join(seen.select("doc_id"), "doc_id", "left_anti")
@@ -213,8 +201,7 @@ def folded_doc_ids(spark: SparkSession, out_dir: str) -> DataFrame | None:
     store is supposed to profile detects a backfill gap (runs committed
     before profiling was turned on). Refuses a mixed-config store: its
     cursor could silently drop unfolded docs from a caller's delta."""
-    runs = STATS.runs(lineage.committed_id_set(out_dir))
-    return _active_table(spark, out_dir, DOCS_TABLE, STATS.active_ids(runs))
+    return STATS.read(spark, out_dir, DOCS_TABLE)
 
 
 def compact_stats(
@@ -250,7 +237,9 @@ def compact_stats(
         spark, out_dir, STATS, run_id,
         {
             STATS_TABLE: committed_stats(spark, out_dir, p, sub_bits, committed),
-            DOCS_TABLE: _active_table(spark, out_dir, DOCS_TABLE, active),
+            DOCS_TABLE: STATS.read(
+                spark, out_dir, DOCS_TABLE, (p, sub_bits), committed
+            ),
         },
         len(active),
     )
@@ -380,8 +369,7 @@ def folded_term_doc_ids(spark: SparkSession, out_dir: str) -> DataFrame | None:
     the stores share only the runs marker table). Lets callers pre-filter
     a corpus frame to the unfolded delta before materializing text.
     Refuses a mixed-config store, like :func:`folded_doc_ids`."""
-    runs = TERMS.runs(lineage.committed_id_set(out_dir))
-    return _active_table(spark, out_dir, TERM_DOCS_TABLE, TERMS.active_ids(runs))
+    return TERMS.read(spark, out_dir, TERM_DOCS_TABLE)
 
 
 def update_term_sketch(
@@ -399,13 +387,14 @@ def update_term_sketch(
     per run: <= depth*width register rows per group + the delta's sampled
     vocabulary — never the token stream."""
     committed = lineage.committed_id_set(out_dir)
-    runs = TERMS.runs(committed, (depth, width, sample_mod))
+    config = (depth, width, sample_mod)
+    runs = TERMS.runs(committed, config)
     docs = source.select("doc_id", group_col, "text")
-    seen = _active_table(spark, out_dir, TERM_DOCS_TABLE, TERMS.active_ids(runs))
+    seen = TERMS.read(spark, out_dir, TERM_DOCS_TABLE, config, committed)
     if seen is not None:
         # unbounded across runs -> no broadcast hint; AQE handles it
         docs = docs.join(seen.select("doc_id"), "doc_id", "left_anti")
-    run_id = term_run_id(depth, width, sample_mod, TERMS.next_n(runs))
+    run_id = term_run_id(*config, TERMS.next_n(runs))
     docs = docs.persist()
     try:
         n = docs.count()
@@ -445,21 +434,21 @@ def top_term_report(
     runs = TERMS.runs(committed, (depth, width, sample_mod))
     if not runs:
         raise ValueError(f"no committed term run under {out_dir}")
-    active = TERMS.active_ids(runs)
-    sketch = _merged_term_sketch(spark, out_dir, active)
-    cands = _active_table(spark, out_dir, CANDS_TABLE, active)
+    config = (depth, width, sample_mod)
+    sketch = _merged_term_sketch(spark, out_dir, config, committed)
+    cands = TERMS.read(spark, out_dir, CANDS_TABLE, config, committed)
     est = textops.cms_estimate(sketch, cands, ["grp"], "v", depth, width)
     return textops._cms_rank_topk(est, k, group_col)
 
 
 def _merged_term_sketch(
-    spark: SparkSession, out_dir: str, active: list[str]
+    spark: SparkSession, out_dir: str, config: tuple, committed: set[str]
 ) -> DataFrame:
     """Cell-wise SUM merge of the active CMS register runs — ONE
     implementation shared by the report and the compaction, so compacted
     state can never diverge from what the report computes."""
     return (
-        _active_table(spark, out_dir, TERMS_TABLE, active)
+        TERMS.read(spark, out_dir, TERMS_TABLE, config, committed)
         .groupBy("grp", "row", "col")
         .agg(F.sum("cnt").alias("cnt"))
     )
@@ -480,19 +469,22 @@ def compact_terms(
     double count. Same ``min_runs`` amortization: the rewrite is
     O(cursor + sampled vocabulary), so fire it once enough runs accrue."""
     committed = lineage.committed_id_set(out_dir)
-    runs = TERMS.runs(committed, (depth, width, sample_mod))
+    config = (depth, width, sample_mod)
+    runs = TERMS.runs(committed, config)
     active = TERMS.active_ids(runs)
     if len(active) < max(min_runs, 2):
         return {"compacted_runs": 0, "run_id": None}
-    run_id = term_run_id(
-        depth, width, sample_mod, TERMS.next_n(runs), compaction=True
-    )
+    run_id = term_run_id(*config, TERMS.next_n(runs), compaction=True)
     _commit_compaction(
         spark, out_dir, TERMS, run_id,
         {
-            TERMS_TABLE: _merged_term_sketch(spark, out_dir, active),
-            CANDS_TABLE: _active_table(spark, out_dir, CANDS_TABLE, active).distinct(),
-            TERM_DOCS_TABLE: _active_table(spark, out_dir, TERM_DOCS_TABLE, active),
+            TERMS_TABLE: _merged_term_sketch(spark, out_dir, config, committed),
+            CANDS_TABLE: TERMS.read(
+                spark, out_dir, CANDS_TABLE, config, committed
+            ).distinct(),
+            TERM_DOCS_TABLE: TERMS.read(
+                spark, out_dir, TERM_DOCS_TABLE, config, committed
+            ),
         },
         len(active),
     )

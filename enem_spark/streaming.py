@@ -5,30 +5,27 @@ enem_pdf_extractor.py:933); a web-scale engine additionally needs to ingest
 pages as they are crawled. Spark-first design:
 
     readStream (file source over the pages layout, schema = input_hint)
-     -> withWatermark("warc_ts", ...)
-     -> dropDuplicatesWithinWatermark(["url"])     # crawler re-fetch dedup
-     -> foreachBatch: the SAME batch pipeline (extract_questions) + sink
+     -> _deduped: url dedup within a warc_ts watermark  # crawler re-fetch
+     -> foreachBatch: stage, release settled documents, lineage.run_extraction
 
 ``foreachBatch`` is the right primitive here because the extraction plan
 contains a window + applyInPandas + broadcast join — far beyond what a
 continuous streaming plan supports — and it gives exactly-once appends per
 micro-batch via the checkpoint dir. Within each micro-batch the work is the
-proven batch plan, so streaming adds no second implementation of the
-semantics.
+proven batch plan under the run protocol, so streaming adds no second
+implementation of the semantics.
 
 The unit of correctness is the document (X3 numbering runs across a
-document's pages), which leaves two ingestion modes:
-
-  * `start_extraction_stream` — whole-document delivery: each micro-batch
-    carries complete documents (the writer side emits one file per doc).
-  * `start_document_stream` — page-at-a-time delivery: pages accumulate in
-    a staging table; a document is released for extraction once its newest
-    page is older than the event-time completeness horizon (all pages of a
-    doc are assumed to arrive within `completeness_delay` of each other —
-    the same contract a watermark gives a windowed aggregate). Released
-    documents run through `lineage.run_extraction`, whose processed_docs
-    anti-join makes the release exactly-once even though a document's pages
-    appear in the staging table across many batches.
+document's pages), so `start_document_stream` is the one ingestion mode:
+pages accumulate in a staging table; a document is released for
+extraction once its newest page is older than the event-time completeness
+horizon (all pages of a doc are assumed to arrive within
+`completeness_delay` of each other — the same contract a watermark gives a
+windowed aggregate). Released documents run through
+`lineage.run_extraction`, whose processed_docs anti-join makes the release
+exactly-once even though a document's pages appear in the staging table
+across many batches. Whole-document delivery (the writer emits one file
+per document) is the case where every document settles in its own batch.
 """
 
 from __future__ import annotations
@@ -36,8 +33,47 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from . import runfs
-from .extract import ExtractorConfig, extract_questions
+from .extract import ExtractorConfig
 from .sources.documents_bridge import PAGES_SCHEMA
+
+
+def _deduped(stream: DataFrame, watermark: str) -> DataFrame:
+    """Crawl-dedup on url: `dropDuplicatesWithinWatermark` keeps state
+    only inside the event-time horizon — bounded state at 10^12-document
+    scale, unlike a global dropDuplicates."""
+    return stream.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
+        ["url"]
+    )
+
+
+def _file_stream(
+    spark: SparkSession,
+    schema,
+    input_dir: str,
+    max_files_per_trigger: int | None,
+    watermark: str,
+) -> DataFrame:
+    """Parquet file-source stream of ``schema`` rows, url-deduped."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return _deduped(reader.parquet(input_dir), watermark)
+
+
+def _start(
+    stream: DataFrame, process_batch, checkpoint_dir: str, available_now: bool
+):
+    """Start ``process_batch`` as the stream's foreachBatch sink; returns
+    the StreamingQuery. foreachBatch is at-least-once: each caller makes
+    its batch idempotent under replay."""
+    writer = (
+        stream.writeStream.foreachBatch(process_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("update")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def read_pages_stream(
@@ -46,96 +82,10 @@ def read_pages_stream(
     max_files_per_trigger: int | None = None,
     watermark: str = "1 hour",
 ) -> DataFrame:
-    """File-source stream of pages rows with crawl-dedup on url.
-
-    `dropDuplicatesWithinWatermark` keeps state only inside the watermark
-    horizon — bounded state at 10^12-document scale, unlike a global
-    dropDuplicates."""
-    reader = spark.readStream.schema(PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    return stream.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
-        ["url"]
+    """File-source stream of pages rows with crawl-dedup on url."""
+    return _file_stream(
+        spark, PAGES_SCHEMA, input_dir, max_files_per_trigger, watermark
     )
-
-
-def start_extraction_stream(
-    pages_stream: DataFrame,
-    cfg: ExtractorConfig,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-):
-    """Run the batch extraction plan per micro-batch (whole-document
-    delivery). Returns the StreamingQuery.
-
-    Two replay/ordering hazards are handled explicitly:
-      * answer keys come from a persistent GB store accumulated across
-        batches (per-batch overwrite directories, so replays are
-        idempotent), not from the current batch alone — a GB page arriving
-        in an earlier batch than its PV pages must still resolve answers;
-      * question output goes to a per-batch directory with mode=overwrite:
-        foreachBatch is at-least-once, and a blind append would duplicate
-        rows when a crashed batch replays."""
-    from .extract import build_answer_keys, with_url_metadata
-
-    # per-incarnation token: batch ids restart at 0 under a fresh
-    # checkpoint, and a raw batch_id dir key would let incarnation 2's
-    # batch 0 overwrite incarnation 1's staged batch 0 (different data,
-    # silent loss). Same-incarnation replays reuse the token from this
-    # closure, keeping the crash-retry overwrite idempotent.
-    import uuid as _uuid
-
-    incarnation = _uuid.uuid4().hex[:8]
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        spark = batch_df.sparkSession
-        from .extract import url_kind
-        from .lineage import _exists
-
-        gb_batch = batch_df.filter(url_kind(F.col("url")).eqNullSafe("GB"))
-        if not gb_batch.isEmpty():
-            gb_batch.write.mode("overwrite").parquet(
-                runfs.spark_path(
-                    f"{out_dir}/gb_store/batch_id={incarnation}-{batch_id}"
-                )
-            )
-        keys = None
-        if _exists(f"{out_dir}/gb_store"):
-            gb_all = spark.read.parquet(
-                runfs.spark_path(f"{out_dir}/gb_store")
-            ).drop("batch_id")
-            keys = build_answer_keys(with_url_metadata(gb_all))
-        persisted: list = []
-        try:
-            (
-                extract_questions(batch_df, cfg, keys=keys, persist_to=persisted)
-                .write.mode("overwrite")
-                .partitionBy("year", "day")
-                .parquet(
-                    runfs.spark_path(
-                        f"{out_dir}/questions/batch_id={incarnation}-{batch_id}"
-                    )
-                )
-            )
-        finally:
-            # the salted-numbering cache is per-batch scratch: release it
-            # eagerly or a long stream pins one MEMORY_AND_DISK copy per
-            # micro-batch until the ContextCleaner gets around to it
-            for df in persisted:
-                df.unpersist()
-
-    writer = (
-        pages_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stateful_user_totals(events_stream: DataFrame):
@@ -308,33 +258,22 @@ def windowed_page_counts(
     )
 
 
-def _has_batches(path: str) -> bool:
-    """True iff the dir holds at least one batch_id= partition WITH real
-    data files (a staging dir whose batches were all compacted away, or
-    one holding only a crashed attempt's _temporary leftovers, must not
-    be passed to the parquet reader — either wedges it in
-    UNABLE_TO_INFER_SCHEMA; lineage._exists is the repo-wide convention
-    for exactly this)."""
-    from .lineage import _exists
-
-    fs = runfs.fs_for(path)
-    return (
-        fs.exists(path)
-        and any(d.startswith("batch_id=") for d in fs.list_names(path))
-        and _exists(path)
-    )
-
-
 def _read_staged(
     spark: SparkSession, staging: str, gb_store: str
 ) -> DataFrame | None:
     """Union of the PV staging table and the GB dimension store, batch_id
     dropped. Loaded per-root (Spark refuses multi-root partition
-    discovery) — None when neither holds a batch."""
+    discovery) — None when neither holds a batch. A root is read only when
+    `lineage._exists` finds committed data files under it: a staging dir
+    whose batches were all compacted away, or one holding only a crashed
+    attempt's _temporary leftovers, would wedge the parquet reader in
+    UNABLE_TO_INFER_SCHEMA."""
+    from .lineage import _exists
+
     frames = [
         spark.read.parquet(runfs.spark_path(p)).drop("batch_id")
         for p in (staging, gb_store)
-        if _has_batches(p)
+        if _exists(p)
     ]
     if not frames:
         return None
@@ -486,13 +425,13 @@ def start_document_stream(
 
     staging = f"{out_dir}/staging"
     gb_store = f"{out_dir}/gb_store"
-    # per-incarnation token (see start_extraction_stream): batch ids
-    # restart at 0 under a fresh checkpoint, so raw batch_id staging dirs
-    # would let a new incarnation's batch 0 overwrite an old incarnation's
-    # still-unsettled staged pages and its answer-key store — silent,
-    # unrecoverable loss. Same-incarnation crash replays reuse the token
-    # (idempotent overwrite); old incarnations' dirs stay readable (the
-    # readers glob every batch dir and drop the key).
+    # per-incarnation token: batch ids restart at 0 under a fresh
+    # checkpoint, so raw batch_id staging dirs would let a new
+    # incarnation's batch 0 overwrite an old incarnation's still-unsettled
+    # staged pages and its answer-key store — silent, unrecoverable loss.
+    # Same-incarnation crash replays reuse the token (idempotent
+    # overwrite); old incarnations' dirs stay readable (the readers glob
+    # every batch dir and drop the key).
     import uuid as _uuid
 
     incarnation = _uuid.uuid4().hex[:8]
@@ -622,14 +561,7 @@ def start_document_stream(
         if compact:
             compact_staging(spark, out_dir)
 
-    writer = (
-        pages_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(pages_stream, process_batch, checkpoint_dir, available_now)
 
 
 # ---------------------------------------------------------------------------
@@ -644,18 +576,11 @@ def read_html_pages_stream(
     watermark: str = "1 hour",
 ) -> DataFrame:
     """File-source stream of CC-style html pages (htmlops.PAGES_SCHEMA)
-    with crawl-dedup on url — same bounded-state pattern as
-    read_pages_stream: `dropDuplicatesWithinWatermark` holds url state only
-    inside the event-time horizon, so a 10^12-document tail never grows
-    unbounded dedup state."""
+    with the same bounded-state crawl-dedup on url as read_pages_stream."""
     from .htmlops import PAGES_SCHEMA as HTML_PAGES_SCHEMA
 
-    reader = spark.readStream.schema(HTML_PAGES_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(input_dir)
-    return stream.withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(
-        ["url"]
+    return _file_stream(
+        spark, HTML_PAGES_SCHEMA, input_dir, max_files_per_trigger, watermark
     )
 
 
@@ -683,9 +608,9 @@ def read_warc_pages_stream(
         "doc_id",
         F.xxhash64("url", F.md5("html")),
     )
-    return pages.select(
-        "doc_id", "url", "warc_ts", "html", "lang"
-    ).withWatermark("warc_ts", watermark).dropDuplicatesWithinWatermark(["url"])
+    return _deduped(
+        pages.select("doc_id", "url", "warc_ts", "html", "lang"), watermark
+    )
 
 
 def start_html_stream(
@@ -797,14 +722,7 @@ def start_html_stream(
                     spark, stats_dir, min_runs=STATS_COMPACT_MIN_RUNS
                 )
 
-    writer = (
-        pages_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(pages_stream, process_batch, checkpoint_dir, available_now)
 
 
 def start_ice_ingest_stream(
@@ -885,14 +803,7 @@ def start_ice_ingest_stream(
                 return
             raise
 
-    writer = (
-        pages_stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(pages_stream, process_batch, checkpoint_dir, available_now)
 
 
 def stream_interval_join(

@@ -70,12 +70,7 @@ def committed_centroids(
     committed ivf run exists. Written once by the creation run (n=1);
     doubles round-trip parquet exactly, so scores against stored
     centroids are bit-identical to scores against fresh ones."""
-    if committed is None:
-        committed = lineage.committed_id_set(out_dir)
-    if not IVFS.runs(committed, (n_cells, dim)):
-        return None
-    rows = lineage.committed_table(spark, out_dir, CENT_TABLE, committed)
-    return None if rows is None else rows.drop("run_id")
+    return IVFS.read(spark, out_dir, CENT_TABLE, (n_cells, dim), committed)
 
 
 def committed_assignments(
@@ -87,12 +82,7 @@ def committed_assignments(
 ) -> DataFrame | None:
     """Reader view of the assignment store restricted to committed runs:
     (vec_id, cell), or None when no committed ivf run exists."""
-    if committed is None:
-        committed = lineage.committed_id_set(out_dir)
-    if not IVFS.runs(committed, (n_cells, dim)):
-        return None
-    rows = lineage.committed_table(spark, out_dir, ASSIGN_TABLE, committed)
-    return None if rows is None else rows.drop("run_id")
+    return IVFS.read(spark, out_dir, ASSIGN_TABLE, (n_cells, dim), committed)
 
 
 def update_ivf_index(
@@ -176,12 +166,7 @@ def committed_srp_tags(
     (vec_id, table, bucket) — ``tables`` rows per vector, each bucket a
     ``bits``-char sign string — or None when no committed srp run
     exists."""
-    if committed is None:
-        committed = lineage.committed_id_set(out_dir)
-    if not SRPS.runs(committed, (bits, tables, dim)):
-        return None
-    rows = lineage.committed_table(spark, out_dir, SRP_TABLE, committed)
-    return None if rows is None else rows.drop("run_id")
+    return SRPS.read(spark, out_dir, SRP_TABLE, (bits, tables, dim), committed)
 
 
 def update_srp_index(

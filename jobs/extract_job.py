@@ -379,14 +379,15 @@ def main() -> None:
     if args.streaming:
         from enem_spark.streaming import (
             flush_staging,
+            read_pages_stream,
             start_document_stream,
         )
 
-        stream = spark.readStream.schema(
-            spark.read.parquet(args.input).schema
-        ).parquet(args.input)
+        # read_pages_stream drops a url re-delivered within the watermark:
+        # a re-crawled page would otherwise count its questions twice and
+        # shift every later question number in its document
         q = start_document_stream(
-            stream,
+            read_pages_stream(spark, args.input),
             cfg,
             args.output,
             f"{args.output}/_checkpoint",

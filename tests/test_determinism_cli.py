@@ -77,6 +77,45 @@ def test_extract_job_cli_batch(tmp_path, spark):
     assert s2["input_pages"] == 0  # document-granular resume across processes
 
 
+def test_extract_job_cli_streaming_drops_redelivered_pages(tmp_path, spark):
+    """--streaming reads through the url-deduping pages reader: a file
+    that re-delivers pages must not fan their questions out or shift the
+    numbering of later questions in the document."""
+    from enem_spark.extract import ExtractorConfig, extract_questions
+    from enem_spark.lineage import committed_questions
+
+    src = str(tmp_path / "pages")
+    pages = corpus.pages_dataframe(
+        spark, corpus.CorpusConfig(seed=17, n_exams=2, pages_per_exam=4)
+    )
+    pages.write.parquet(src)
+    pages.limit(3).write.mode("append").parquet(src)
+    out = str(tmp_path / "out")
+    p = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(REPO, "jobs", "extract_job.py"),
+            "--input", src, "--output", out,
+            "--streaming", "--cores", "2",
+        ],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=REPO,
+    )
+    assert p.returncode == 0, p.stderr[-2000:]
+
+    def keys(df):
+        return sorted(
+            (r["url"], r["seq"], r["question_text"])
+            for r in df.select("url", "seq", "question_text").collect()
+        )
+
+    want = keys(extract_questions(pages, ExtractorConfig()))
+    assert want
+    assert keys(committed_questions(spark, out)) == want
+
+
 def test_spark_submit_py_files(tmp_path, spark):
     """The north-rule deployment shape, for real: zip the package, copy the
     job script AWAY from the repo, and run it via `spark-submit --py-files

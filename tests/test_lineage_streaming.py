@@ -917,9 +917,15 @@ def test_windowed_counts_with_late_data(spark, pages_df, tmp_path):
 
 
 def test_streaming_matches_batch(spark, pages_df, tmp_path):
-    """availableNow file stream through foreachBatch == batch pipeline output,
-    including dedup of a re-crawled (duplicate-url) page."""
-    from enem_spark.streaming import read_pages_stream, start_extraction_stream
+    """availableNow file stream through the document stream == batch
+    pipeline output, including dedup of a re-crawled (duplicate-url)
+    page by the reader."""
+    from enem_spark.lineage import committed_questions
+    from enem_spark.streaming import (
+        flush_staging,
+        read_pages_stream,
+        start_document_stream,
+    )
 
     src = str(tmp_path / "src")
     out = str(tmp_path / "out")
@@ -934,10 +940,11 @@ def test_streaming_matches_batch(spark, pages_df, tmp_path):
     pages_df.limit(3).write.mode("append").parquet(src)
 
     stream = read_pages_stream(spark, src, watermark="10 seconds")
-    q = start_extraction_stream(stream, cfg, out, ckpt, available_now=True)
+    q = start_document_stream(stream, cfg, out, ckpt, completeness_delay_s=0)
     q.awaitTermination(300)
+    flush_staging(spark, cfg, out)
 
-    got = spark.read.parquet(f"{out}/questions")
+    got = committed_questions(spark, out)
     assert _question_keys(got) == _question_keys(extract_questions(pages_df, cfg))
 
 
