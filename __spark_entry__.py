@@ -18,7 +18,7 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from enem_spark import simsearch, staging_path, textops
+from enem_spark import simsearch, stage, staging_path, textops
 from enem_spark.extract import ExtractorConfig, extract_questions
 from enem_spark.sources.documents_bridge import pages_from_documents
 
@@ -550,32 +550,25 @@ def q_incr_dedup_minhash(spark, sf_dir):
     )
 
 
-_SIG_STAGED: set[str] = set()
-
-
 def _sig_store_dir(spark, sf_dir):
-    """Stage (memoized per process; idempotent on disk across processes) a
-    committed PARITY-config signature index over the documents table, built
-    in TWO maintenance runs — evens first, then everyone — so the staging
-    itself exercises the anti-join resume path. The probe query below then
-    hash-matching the plain incremental SQL twin certifies the store's
-    write -> commit-gate -> read round trip, icetable-staging style."""
-    import os
-
+    """Stage (memoized per process) a committed PARITY-config signature
+    index over the documents table, built in TWO maintenance runs — evens
+    first, then everyone — so the staging itself exercises the anti-join
+    resume path. The probe query below then hash-matching the plain
+    incremental SQL twin certifies the store's write -> commit-gate ->
+    read round trip, icetable-staging style."""
     from enem_spark import sigindex
 
-    sf_dir = os.path.normpath(sf_dir)
-    out = staging_path("sigidx", sf_dir)
-    if out in _SIG_STAGED:
-        return out
-    docs = _t(spark, sf_dir, "documents")
-    p, b = textops.PARITY_PERMS, textops.PARITY_BANDS
-    sigindex.update_signature_index(
-        spark, out, source=docs.filter(F.col("doc_id") % 2 == 0), perms=p, bands=b
-    )
-    sigindex.update_signature_index(spark, out, source=docs, perms=p, bands=b)
-    _SIG_STAGED.add(out)
-    return out
+    def build(tmp):
+        docs = _t(spark, sf_dir, "documents")
+        p, b = textops.PARITY_PERMS, textops.PARITY_BANDS
+        sigindex.update_signature_index(
+            spark, tmp, source=docs.filter(F.col("doc_id") % 2 == 0),
+            perms=p, bands=b,
+        )
+        sigindex.update_signature_index(spark, tmp, source=docs, perms=p, bands=b)
+
+    return stage("sigidx", sf_dir, build)
 
 
 def q_sig_probe_near_dup(spark, sf_dir):
@@ -910,54 +903,42 @@ def q_ann_ivf_topk(spark, sf_dir):
     return simsearch.ivf_topk(_t(spark, sf_dir, "embeddings"))
 
 
-_IVF_STAGED: set[str] = set()
-
-
 def _ivf_store_dir(spark, sf_dir):
-    """Stage (memoized per process; idempotent on disk across processes) a
-    committed IVF index over the embeddings table, built in TWO
-    maintenance runs — the centroid ids + evens first, then everyone —
-    so the staging itself exercises the pinned-centroid resume path
-    (run 2 assigns against STORED centroids). The probe query below then
-    hash-matching the fresh-assignment SQL twin certifies the store's
-    write -> commit-gate -> read round trip, sig-store style."""
-    import os
-
+    """Stage (memoized per process) a committed IVF index over the
+    embeddings table, built in TWO maintenance runs — the centroid ids +
+    evens first, then everyone — so the staging itself exercises the
+    pinned-centroid resume path (run 2 assigns against STORED centroids).
+    The probe query below then hash-matching the fresh-assignment SQL twin
+    certifies the store's write -> commit-gate -> read round trip,
+    sig-store style."""
     from enem_spark import vecindex
 
-    sf_dir = os.path.normpath(sf_dir)
     c, d = simsearch.IVF_CELLS, simsearch.SRP_DIM
-    # both families' configs in the dir name: a constant change must land
-    # in a FRESH store dir, or the one-index-one-config validation would
-    # refuse every warm-staging parity/bench run until a hand-delete
-    out = staging_path(
-        "ivfidx", sf_dir, f"_c{c}s{simsearch.SRP_BITS}x{simsearch.SRP_TABLES}d{d}"
-    )
-    if out in _IVF_STAGED:
-        return out
-    emb = _t(spark, sf_dir, "embeddings")
-    # first run must carry vec_id < n_cells: the creation run derives and
-    # pins the centroids from its own source (validated convention)
-    vecindex.update_ivf_index(
-        spark,
-        out,
-        emb.filter((F.col("vec_id") < c) | (F.col("vec_id") % 2 == 0)),
-        n_cells=c,
-        dim=d,
-    )
-    vecindex.update_ivf_index(spark, out, emb, n_cells=c, dim=d)
-    # the srp tag family shares the dir (and its runs table) — two-run
-    # staging exercises its anti-join resume the same way
-    vecindex.update_srp_index(
-        spark, out, emb.filter(F.col("vec_id") % 2 == 0),
-        bits=simsearch.SRP_BITS, tables=simsearch.SRP_TABLES, dim=d,
-    )
-    vecindex.update_srp_index(
-        spark, out, emb,
-        bits=simsearch.SRP_BITS, tables=simsearch.SRP_TABLES, dim=d,
-    )
-    _IVF_STAGED.add(out)
-    return out
+
+    def build(tmp):
+        emb = _t(spark, sf_dir, "embeddings")
+        # first run must carry vec_id < n_cells: the creation run derives
+        # and pins the centroids from its own source (validated convention)
+        vecindex.update_ivf_index(
+            spark,
+            tmp,
+            emb.filter((F.col("vec_id") < c) | (F.col("vec_id") % 2 == 0)),
+            n_cells=c,
+            dim=d,
+        )
+        vecindex.update_ivf_index(spark, tmp, emb, n_cells=c, dim=d)
+        # the srp tag family shares the dir (and its runs table) — two-run
+        # staging exercises its anti-join resume the same way
+        vecindex.update_srp_index(
+            spark, tmp, emb.filter(F.col("vec_id") % 2 == 0),
+            bits=simsearch.SRP_BITS, tables=simsearch.SRP_TABLES, dim=d,
+        )
+        vecindex.update_srp_index(
+            spark, tmp, emb,
+            bits=simsearch.SRP_BITS, tables=simsearch.SRP_TABLES, dim=d,
+        )
+
+    return stage("ivfidx", sf_dir, build)
 
 
 def q_ann_ivf_store(spark, sf_dir):
@@ -2129,14 +2110,12 @@ def q_incr_corpus_stats(spark, sf_dir):
     full recompute — a hash match PROVES incremental == full. Replays are
     no-ops (doc_id cursor anti-join), so re-running the driver is a pinned
     read."""
-    import os
-
     from enem_spark import statstore
 
     docs = _t(spark, sf_dir, "documents")
-    # basename+path-md5 store key (same idiom as the icetable driver
-    # stores): distinct corpora must never share a doc_id cursor
-    out = staging_path("stats", os.path.normpath(sf_dir))
+    # staging_path keys the store by corpus: distinct corpora must never
+    # share a doc_id cursor
+    out = staging_path("stats", sf_dir)
     # parity config (engine default is HLL_P=12; the twin recomputes every
     # register, so keep it at 2^6)
     pp = textops.PARITY_HLL_P
@@ -2190,12 +2169,10 @@ def q_incr_top_terms(spark, sf_dir):
     the twin is the SAME one-shot SQL as cms_topk_terms — a hash match
     PROVES incremental == one-shot. Replays are no-ops (term cursor), so
     re-running the driver is a pinned read."""
-    import os
-
     from enem_spark import statstore
 
     docs = _t(spark, sf_dir, "documents")
-    out = staging_path("terms", os.path.normpath(sf_dir))
+    out = staging_path("terms", sf_dir)
     kw = dict(
         depth=textops.PARITY_CMS_DEPTH,
         width=textops.PARITY_CMS_WIDTH,

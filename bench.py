@@ -35,6 +35,8 @@ import time
 from dataclasses import dataclass
 from typing import Callable
 
+from enem_spark import stage, staging_path
+
 
 def _sf_from_dir(sf_dir: str) -> float:
     import re
@@ -121,15 +123,15 @@ def _prepare_ice(spark, sf_dir: str, qmap) -> dict:
     from enem_spark.sources import icetable
 
     setup = {}
-    for stage in (
+    for stager in (
         "stage_ice_pages",
         "stage_ice_merge_base",
         "stage_ice_rowdel",
         "stage_ice_wap",
     ):
         t0 = time.perf_counter()
-        getattr(icetable, stage)(sf_dir)
-        setup[stage] = round(time.perf_counter() - t0, 3)
+        getattr(icetable, stager)(sf_dir)
+        setup[stager] = round(time.perf_counter() - t0, 3)
     for name in ICE_LADDER:
         t0 = time.perf_counter()
         qmap[name](spark, sf_dir).count()
@@ -138,26 +140,19 @@ def _prepare_ice(spark, sf_dir: str, qmap) -> dict:
     return setup
 
 
-# --- staged inputs (memoized under the temp dir per (sf, mult)) -----------
-
-
-def _tmp_store(kind: str, sf_dir: str, mult: int) -> str:
-    suffix = f"x{mult}" if mult > 1 else ""
-    return os.path.join(
-        tempfile.gettempdir(), f"enem_{kind}_sf{_sf_from_dir(sf_dir)}{suffix}"
-    )
+# --- staged inputs (enem_spark.stage: built once per corpus, mult and source)
 
 
 def _staged(spark, kind, sf_dir, mult, build, n_files, partition_by=()):
-    """Write ``build()`` once per (kind, sf, mult) as ``n_files`` parquet
-    files under the temp dir (cached across bench runs), so every job is
-    timed over a STORED table (scan -> work), not inline synthesis.
+    """Write ``build()`` once per (kind, corpus, mult) as ``n_files``
+    parquet files under the temp dir (cached across bench runs), so every
+    job is timed over a STORED table (scan -> work), not inline synthesis.
     Returns ``(path, row count)``."""
-    store = _tmp_store(kind, sf_dir, mult)
-    if not os.path.exists(os.path.join(store, "_SUCCESS")):
-        build().repartition(n_files).write.mode("overwrite").partitionBy(
-            *partition_by
-        ).parquet(store)
+
+    def write(tmp):
+        build().repartition(n_files).write.partitionBy(*partition_by).parquet(tmp)
+
+    store = stage(kind, sf_dir, write, f"x{mult}")
     return store, spark.read.parquet(store).count()
 
 
@@ -254,58 +249,52 @@ def _dedup_docs_store(spark, sf_dir: str, mult: int = 1) -> tuple[str, int]:
 def _ice_store(spark, sf_dir: str, mult: int = 8) -> tuple[str, int]:
     """Memoized icetable of the stored html pages (one create commit) —
     the steady-state read side for the icetable scaling evidence."""
-    from enem_spark.sources.icetable import IceTable, Transform, current_version
+    from enem_spark.sources.icetable import IceTable, Transform
 
-    tbl = _tmp_store("ice_store", sf_dir, mult)
     store, n_rows = _html_pages_store(spark, sf_dir, mult)
-    if current_version(tbl) < 0:
+
+    def build(tmp):
         pages = spark.read.parquet(store).select("url", "warc_ts", "html", "lang")
         IceTable.create(
-            spark, tbl, pages,
+            spark, tmp, pages,
             partition_by=(Transform("b_url", "bucket", "url", 32),),
             sequence=10,
         )
-    return tbl, n_rows
+
+    return stage("ice_store", sf_dir, build, f"x{mult}"), n_rows
 
 
 def _pdf_store(sf_dir: str, mult: int, images: bool = False) -> tuple[str, int]:
     """Stage one synthesized 2-page PDF per (document x replica) under
-    the temp dir (written once; the _DONE marker carries the file count).
-    Replica text is prefixed so no two files are byte-identical.
-    ``images`` embeds six image XObjects per file (synth_doc_images: gray /
-    predictor-RGB / indexed / CMYK / SMask / CCITT-G4) into a separate
-    dir: the text-only store's bytes must stay stable for its own job."""
-    import duckdb
+    the temp dir (written once). Replica text is prefixed so no two files
+    are byte-identical. ``images`` embeds six image XObjects per file
+    (synth_doc_images: gray / predictor-RGB / indexed / CMYK / SMask /
+    CCITT-G4) into a separate dir: the text-only store's bytes must stay
+    stable for its own job. Returns ``(dir, file count)``."""
+
+    def build(tmp):
+        import duckdb
+
+        from enem_spark.pdfbin import doc_pdf_lines, synth_doc_images, synth_pdf
+
+        os.makedirs(tmp)
+        rows = duckdb.sql(
+            "SELECT doc_id, text FROM "
+            f"read_parquet('{sf_dir}/documents.parquet') ORDER BY doc_id"
+        ).fetchall()
+        for rep in range(mult):
+            for doc_id, text in rows:
+                pdf = synth_pdf(
+                    doc_pdf_lines(f"rep{rep} " + (text or "")),
+                    synth_doc_images(int(doc_id) * mult + rep) if images else None,
+                )
+                name = os.path.join(tmp, f"doc_{rep}_{int(doc_id):07d}.pdf")
+                with open(name, "wb") as f:
+                    f.write(pdf)
 
     kind = "pdfimgstore" if images else "pdfstore"
-    base = os.path.join(
-        tempfile.gettempdir(), f"enem_{kind}_{_sf_from_dir(sf_dir)}x{mult}"
-    )
-    done = os.path.join(base, "_DONE")
-    if os.path.isfile(done):
-        with open(done) as f:
-            return base, int(f.read())
-    from enem_spark.pdfbin import doc_pdf_lines, synth_doc_images, synth_pdf
-
-    os.makedirs(base, exist_ok=True)
-    rows = duckdb.sql(
-        "SELECT doc_id, text FROM "
-        f"read_parquet('{sf_dir}/documents.parquet') ORDER BY doc_id"
-    ).fetchall()
-    n = 0
-    for rep in range(mult):
-        for doc_id, text in rows:
-            pdf = synth_pdf(
-                doc_pdf_lines(f"rep{rep} " + (text or "")),
-                synth_doc_images(int(doc_id) * mult + rep) if images else None,
-            )
-            name = os.path.join(base, f"doc_{rep}_{int(doc_id):07d}.pdf")
-            with open(name, "wb") as f:
-                f.write(pdf)
-            n += 1
-    with open(done, "w") as f:
-        f.write(str(n))
-    return base, n
+    base = stage(kind, sf_dir, build, f"x{mult}")
+    return base, len(os.listdir(base))
 
 
 def _vec_store(spark, sf_dir: str, mult: int = 1) -> tuple[str, int]:
@@ -346,7 +335,7 @@ def _vec_store(spark, sf_dir: str, mult: int = 1) -> tuple[str, int]:
 
 
 def _big_sf_dir(spark, sf_dir: str, mult: int) -> tuple[str, int, int]:
-    """Stage an sf-equivalent-(sf*mult) table dir under /tmp: documents
+    """Stage an sf-equivalent-(sf*mult) table dir under the temp dir: documents
     replicated with per-replica vowel permutations (the dedup-store rule —
     plain copies would make pair counts quadratic in ``mult``) and
     embeddings replicated with per-replica deterministic perturbations
@@ -354,13 +343,10 @@ def _big_sf_dir(spark, sf_dir: str, mult: int) -> tuple[str, int, int]:
     Driver queries read it as a normal sf_dir."""
     from pyspark.sql import functions as F
 
-    sf = _sf_from_dir(sf_dir)
-    base = os.path.join(tempfile.gettempdir(), f"enem_big_sf{sf}x{mult}")
-    done = os.path.join(base, "_DONE")
-    if not os.path.exists(done):
+    def build(tmp):
         _vowel_permuted(spark, sf_dir, mult).repartition(
             max(32, mult * 4)
-        ).write.mode("overwrite").parquet(os.path.join(base, "documents.parquet"))
+        ).write.parquet(os.path.join(tmp, "documents.parquet"))
         emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         n_vec = emb.count()
         emb = (
@@ -393,11 +379,11 @@ def _big_sf_dir(spark, sf_dir: str, mult: int) -> tuple[str, int, int]:
             )
             .drop("rep")
         )
-        emb.repartition(max(16, mult * 2)).write.mode("overwrite").parquet(
-            os.path.join(base, "embeddings.parquet")
+        emb.repartition(max(16, mult * 2)).write.parquet(
+            os.path.join(tmp, "embeddings.parquet")
         )
-        with open(done, "w") as fh:
-            fh.write("1")
+
+    base = stage("big", sf_dir, build, f"x{mult}")
     n_docs = spark.read.parquet(f"{base}/documents.parquet").count()
     return base, n_docs, spark.read.parquet(f"{base}/embeddings.parquet").count()
 
@@ -551,11 +537,10 @@ def _stream_setup(spark, sf_dir, mult):
     # x400 on the shared layout). Stage a streaming-layout copy once:
     # a fixed 32 files per intended batch, file size growing with mult
     # the way a crawler's archive drops do.
-    stream_store = f"{store}_stream{STREAM_BATCHES}"
-    if not os.path.exists(os.path.join(stream_store, "_SUCCESS")):
-        spark.read.parquet(store).repartition(STREAM_BATCHES * 32).write.mode(
-            "overwrite"
-        ).parquet(stream_store)
+    stream_store, _ = _staged(
+        spark, f"html_pages_stream{STREAM_BATCHES}", sf_dir, mult,
+        lambda: spark.read.parquet(store), STREAM_BATCHES * 32,
+    )
     n_files = len([f for f in os.listdir(stream_store) if f.endswith(".parquet")])
     per_trigger = max(1, n_files // STREAM_BATCHES)
 
@@ -1153,11 +1138,7 @@ def run_sig_store_ab(sf_dir: str, cpus: str, mult: int = 4, trials: int = 2) -> 
     spark = get_spark("enem_spark_sigab", cores=cpus)
     store, n_docs = _dedup_docs_store(spark, sf_dir, mult)
     docs = spark.read.parquet(store)
-    idx = os.path.join(
-        tempfile.gettempdir(),
-        f"enem_sigidx_sf{_sf_from_dir(sf_dir)}x{mult}"
-        f"_p{textops.MINHASH_PERMS}b{textops.LSH_BANDS}",
-    )
+    idx = staging_path("sigidx_ab", sf_dir, f"x{mult}", code=run_sig_store_ab)
     t0 = time.perf_counter()
     setup = sigindex.update_signature_index(spark, idx, source=docs)
     sig_setup_sec = round(time.perf_counter() - t0, 3)
@@ -1247,14 +1228,10 @@ def run_ivf_store_ab(sf_dir: str, cpus: str, mult: int = 8, trials: int = 2) -> 
     spark = get_spark("enem_spark_ivfab", cores=cpus)
     store, n_vecs = _vec_store(spark, sf_dir, mult)
     emb = spark.read.parquet(store)
-    # both families' configs in the dir name: a config change must land in
-    # a FRESH store dir (the one-index-one-config validation would
-    # otherwise refuse the warm dir loudly)
-    idx = os.path.join(
-        tempfile.gettempdir(),
-        f"enem_ivfidx_ab_sf{_sf_from_dir(sf_dir)}x{mult}_c{n_cells}"
-        f"s{srp_bits}x{srp_tables}",
-    )
+    # the source fingerprint in the path covers both families' configs: a
+    # config change lands in a FRESH store dir (the one-index-one-config
+    # validation would otherwise refuse the warm dir loudly)
+    idx = staging_path("ivfidx_ab", sf_dir, f"x{mult}", code=run_ivf_store_ab)
     t0 = time.perf_counter()
     setup = vecindex.update_ivf_index(
         spark, idx, emb, n_cells=n_cells, dim=simsearch.SRP_DIM

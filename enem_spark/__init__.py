@@ -24,19 +24,113 @@ only where string state machines genuinely need Python.
 
 import hashlib
 import os
+import shutil
 import tempfile
+import uuid
+from typing import Any, Callable
 
 __version__ = "0.1.0"
 
+_PACKAGE = os.path.dirname(os.path.abspath(__file__))
+_PACKAGE_FILES: list[str] = []
+_FILE_MD5: dict[str, str] = {}
+_MEMO: dict[str, Any] = {}
 
-def staging_path(kind: str, sf_dir: str, extra: str = "") -> str:
+
+def _file_md5(path: str) -> str:
+    if path not in _FILE_MD5:
+        with open(path, "rb") as f:
+            _FILE_MD5[path] = hashlib.md5(f.read()).hexdigest()
+    return _FILE_MD5[path]
+
+
+def _source_fingerprint(code: Callable | None = None) -> str:
+    """md5 over the bytes of every ``enem_spark`` source file plus the
+    file that defines ``code`` (a build outside the package, such as one
+    of bench.py's stores). Each file is read once per process."""
+    if not _PACKAGE_FILES:
+        _PACKAGE_FILES.extend(
+            os.path.join(d, n)
+            for d, _, names in os.walk(_PACKAGE)
+            for n in names
+            if n.endswith(".py")
+        )
+    files = set(_PACKAGE_FILES)
+    if code is not None:
+        files.add(os.path.abspath(code.__code__.co_filename))
+    return hashlib.md5(
+        "".join(sorted(_file_md5(f) for f in files)).encode()
+    ).hexdigest()
+
+
+def _corpus_fingerprint(sf_dir: str) -> str:
+    """(name, size, mtime) of every entry directly under ``sf_dir``."""
+    try:
+        entries = sorted(
+            (e.name, st.st_size, st.st_mtime_ns)
+            for e in os.scandir(sf_dir)
+            for st in (e.stat(),)
+        )
+    except FileNotFoundError:
+        entries = []
+    return repr(entries)
+
+
+def staging_path(
+    kind: str, sf_dir: str, extra: str = "", code: Callable | None = None
+) -> str:
     """Where a stager keeps what it derives from the corpus at ``sf_dir``:
-    ``$TMPDIR/enem_<kind>_<basename>_<md5[:8] of the path><extra>``. The
-    path hash keeps two corpora that share a basename (``.../a/sf0.01``,
-    ``.../b/sf0.01``) apart; ``extra`` carries any other input the staged
-    files depend on (a shard count, an input fingerprint, a config)."""
+    ``$TMPDIR/enem_<kind>_<basename>_<path tag>_<fingerprint><extra>``.
+    The path tag keeps two corpora that share a basename apart; the
+    fingerprint covers the corpus files (:func:`_corpus_fingerprint`) and
+    the code that derives from them (:func:`_source_fingerprint`), so a
+    rewritten corpus or a changed kernel lands in a fresh path and nothing
+    staged is ever deleted by hand. ``extra`` carries any other input the
+    staged files depend on (a shard count, a file suffix)."""
+    sf_dir = os.path.normpath(sf_dir)
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    fp = hashlib.md5(
+        (_corpus_fingerprint(sf_dir) + _source_fingerprint(code)).encode()
+    ).hexdigest()[:8]
     return os.path.join(
         tempfile.gettempdir(),
-        f"enem_{kind}_{os.path.basename(sf_dir)}_{tag}{extra}",
+        f"enem_{kind}_{os.path.basename(sf_dir)}_{tag}_{fp}{extra}",
     )
+
+
+def stage(
+    kind: str,
+    sf_dir: str,
+    build: Callable[[str], Any],
+    extra: str = "",
+    layout: Callable[[str], Any] | None = None,
+) -> Any:
+    """Build once what a stager derives from ``sf_dir`` and return
+    ``layout(path)`` (default: the path), memoized per process by path.
+
+    ``build(tmp)`` writes the staged file or directory at ``tmp``, a
+    private sibling of ``path = staging_path(kind, sf_dir, extra, build)``;
+    the result is published by renaming ``tmp`` into place, so a reader
+    never sees a half-written store and a killed build leaves nothing at
+    ``path``. When another process publishes first, this one's copy is
+    discarded (staged bytes are deterministic)."""
+    path = staging_path(kind, sf_dir, extra, build)
+    if not os.path.exists(path):
+        tmp = f"{path}.tmp-{uuid.uuid4().hex[:12]}"
+        try:
+            build(tmp)
+            # neither call replaces a published path: rename refuses a
+            # non-empty dir, link refuses any existing file
+            try:
+                (os.rename if os.path.isdir(tmp) else os.link)(tmp, path)
+            except OSError:
+                if not os.path.exists(path):
+                    raise
+        finally:
+            if os.path.isdir(tmp):
+                shutil.rmtree(tmp, ignore_errors=True)
+            elif os.path.exists(tmp):
+                os.remove(tmp)
+    if path not in _MEMO:
+        _MEMO[path] = path if layout is None else layout(path)
+    return _MEMO[path]

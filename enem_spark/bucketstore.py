@@ -98,20 +98,17 @@ def colocated_join(
 
 N_BUCKETS = 8  # parity-sized; deploy sizing discussed in the module doc
 
-_STAGED: dict[str, dict[str, str]] = {}
-
 
 def stage_bucketed_pair(spark: SparkSession, sf_dir: str) -> dict[str, str]:
-    """Stage (memoized per process) the bucketed docs/scores pair for
-    ``sf_dir``: ``docs`` = (doc_id, source, text_len), ``scores`` =
-    (doc_id, score) with a deterministic integer score both engines can
-    compute (Knuth multiplicative hash mod 1000). Both bucketed by doc_id
-    into N_BUCKETS — the layout the co-located join relies on."""
+    """Stage the bucketed docs/scores pair for ``sf_dir``: ``docs`` =
+    (doc_id, source, text_len), ``scores`` = (doc_id, score) with a
+    deterministic integer score both engines can compute (an md5-prefix
+    hash of doc_id mod 1000). Both bucketed by doc_id into N_BUCKETS — the
+    layout the co-located join relies on."""
     from pyspark.sql import functions as F
 
-    sf_dir = os.path.normpath(sf_dir)
-    if sf_dir in _STAGED:
-        return _STAGED[sf_dir]
+    # written in place, not through ``stage``: the catalog table records
+    # the absolute data path, so the store cannot be renamed into place
     base = staging_path("bucket", sf_dir)
     # catalog table names take no '.' or '-'
     tag = (
@@ -155,5 +152,4 @@ def stage_bucketed_pair(spark: SparkSession, sf_dir: str) -> dict[str, str]:
             "doc_id",
             N_BUCKETS,
         )
-    _STAGED[sf_dir] = names
     return names

@@ -56,7 +56,7 @@ import re
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from . import htmlops, staging_path
+from . import htmlops, stage
 
 PRESCAN = 1024  # bytes inspected for a <meta charset> declaration
 
@@ -456,66 +456,39 @@ END"""
 # DuckDB staging (materialized expected decode stats)
 # ---------------------------------------------------------------------------
 
-_STAGED: dict[str, dict[str, str]] = {}
-
-
 def stage_charset_tables(sf_dir: str) -> dict[str, str]:
     """Stage (memoized per process) the expected decode-stats table for
     ``sf_dir``: the same pure functions (encoded_page_for -> decoded_frame)
     run without Spark. Pure Python — callable from oracle_sql()."""
-    sf_dir = os.path.normpath(sf_dir)
-    if sf_dir in _STAGED:
-        return _STAGED[sf_dir]
-    base = staging_path("charset", sf_dir)
-    os.makedirs(base, exist_ok=True)
-    paths = {
-        "charset_stats": os.path.join(base, "charset_stats.parquet"),
-        "mime_payloads": os.path.join(base, "mime_payloads.parquet"),
-    }
-    # skip-if-complete + tmp-file atomic rename (the sibling stagers'
-    # protocol): a fresh process must not redundantly rewrite — and never
-    # rewrite IN PLACE under a concurrent reader (torn parquet)
-    if all(os.path.exists(p) for p in paths.values()):
-        _STAGED[sf_dir] = paths
-        return paths
-    docs = pd.read_parquet(
-        os.path.join(sf_dir, "documents.parquet"),
-        columns=["doc_id", "text", "source", "lang"],
-    )
-    payloads = [
-        encoded_page_for(d, t, s, g)
-        for d, t, s, g in zip(
-            docs["doc_id"], docs["text"], docs["source"], docs["lang"]
+
+    def build(tmp: str) -> None:
+        docs = pd.read_parquet(
+            os.path.join(sf_dir, "documents.parquet"),
+            columns=["doc_id", "text", "source", "lang"],
         )
-    ]
-    urls = [
-        htmlops.page_url(d, s) for d, s in zip(docs["doc_id"], docs["source"])
-    ]
-
-    def _atomic_parquet(frame: pd.DataFrame, path: str) -> None:
-        tmp = f"{path}.tmp.{os.getpid()}"
-        frame.to_parquet(tmp, index=False)
-        os.replace(tmp, path)
-
-    _atomic_parquet(
-        decoded_frame(docs["doc_id"], urls, payloads), paths["charset_stats"]
-    )
-    # mime INPUT twin: same bytes the Spark synth stage emits (byte-identity
-    # tested) — the DuckDB mime oracle COMPUTES the classification over it
-    _atomic_parquet(
+        rows = list(zip(docs["doc_id"], docs["text"], docs["source"], docs["lang"]))
+        urls = [
+            htmlops.page_url(d, s) for d, s in zip(docs["doc_id"], docs["source"])
+        ]
+        os.makedirs(tmp)
+        decoded_frame(
+            docs["doc_id"], urls, [encoded_page_for(*r) for r in rows]
+        ).to_parquet(os.path.join(tmp, "charset_stats.parquet"), index=False)
+        # mime INPUT twin: same bytes the Spark synth stage emits
+        # (byte-identity tested) — the DuckDB mime oracle COMPUTES the
+        # classification over it
         pd.DataFrame(
             {
                 "doc_id": docs["doc_id"].astype("int64"),
                 "url": urls,
-                "html": [
-                    payload_for(d, t, s, g)
-                    for d, t, s, g in zip(
-                        docs["doc_id"], docs["text"], docs["source"], docs["lang"]
-                    )
-                ],
+                "html": [payload_for(*r) for r in rows],
             }
-        ),
-        paths["mime_payloads"],
+        ).to_parquet(os.path.join(tmp, "mime_payloads.parquet"), index=False)
+
+    return stage(
+        "charset", sf_dir, build,
+        layout=lambda base: {
+            name: os.path.join(base, f"{name}.parquet")
+            for name in ("charset_stats", "mime_payloads")
+        },
     )
-    _STAGED[sf_dir] = paths
-    return paths

@@ -26,7 +26,7 @@ import os
 
 import pandas as pd
 
-from . import oracle, staging_path
+from . import oracle, stage
 from .extract import ExtractorConfig, _process_one_page, answer_key_rows
 from .sources.documents_bridge import (
     EXAM_PAGES,
@@ -168,7 +168,10 @@ def _spans_frame(rows: list[dict]) -> pd.DataFrame:
     return pd.DataFrame(out, columns=["url", "spans_json"])
 
 
-_STAGED: dict[str, dict[str, str]] = {}
+_TABLE_FILES = {
+    "extract_questions": "questions.parquet",
+    "extract_question_spans": "question_spans.parquet",
+}
 
 
 def stage_expected_tables(sf_dir: str) -> dict[str, str]:
@@ -177,32 +180,24 @@ def stage_expected_tables(sf_dir: str) -> dict[str, str]:
     callable from oracle_sql(), which has no SparkSession. One extraction
     pass: the keep_unparsed=True row set is a superset of the questions
     table (filter parse_ok) AND the spans input."""
-    sf_dir = os.path.normpath(sf_dir)
-    if sf_dir in _STAGED:
-        return _STAGED[sf_dir]
-    base = staging_path("expected", sf_dir)
-    paths = {
-        "extract_questions": os.path.join(base, "questions.parquet"),
-        "extract_question_spans": os.path.join(base, "question_spans.parquet"),
-    }
-    os.makedirs(base, exist_ok=True)
-    documents = pd.read_parquet(
-        os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
+
+    def build(tmp: str) -> None:
+        documents = pd.read_parquet(
+            os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
+        )
+        all_rows = expected_question_rows(documents, keep_unparsed=True)
+        os.makedirs(tmp)
+        _questions_frame([r for r in all_rows if r["parse_ok"]]).to_parquet(
+            os.path.join(tmp, _TABLE_FILES["extract_questions"]), index=False
+        )
+        _spans_frame(all_rows).to_parquet(
+            os.path.join(tmp, _TABLE_FILES["extract_question_spans"]),
+            index=False,
+        )
+
+    return stage(
+        "expected", sf_dir, build,
+        layout=lambda base: {
+            name: os.path.join(base, f) for name, f in _TABLE_FILES.items()
+        },
     )
-    all_rows = expected_question_rows(documents, keep_unparsed=True)
-    frames = {
-        "extract_questions": _questions_frame(
-            [r for r in all_rows if r["parse_ok"]]
-        ),
-        "extract_question_spans": _spans_frame(all_rows),
-    }
-    for name, frame in frames.items():
-        # write-then-rename: a concurrent reader (driver harness + pytest
-        # sharing one staging dir) must never see a half-written parquet;
-        # the staged bytes are deterministic, so racing writers converge and
-        # os.replace's last-wins is safe
-        tmp = f"{paths[name]}.tmp.{os.getpid()}"
-        frame.to_parquet(tmp, index=False)
-        os.replace(tmp, paths[name])
-    _STAGED[sf_dir] = paths
-    return paths

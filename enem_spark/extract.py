@@ -339,7 +339,6 @@ def resolve_salt_chunk(
 def with_page_numbering(
     pages: DataFrame,
     salt_chunk_size: int = 0,
-    cache: bool = True,
     persist_to: list | None = None,
 ) -> DataFrame:
     """page_first_question = 1 + questions on earlier pages of the document.
@@ -367,7 +366,7 @@ def with_page_numbering(
         )
     chunk = F.floor(F.col("page_idx") / salt_chunk_size).alias("chunk_id")
     pages = pages.withColumn("chunk_id", chunk)
-    if cache and persist_to is not None:
+    if persist_to is not None:
         # persist ONLY with an owner (the caller appends here and
         # unpersists after consuming): an unowned persist pins a
         # MEMORY_AND_DISK copy of the post-UDF frame per call until the
@@ -375,7 +374,7 @@ def with_page_numbering(
         # streams accumulate them. An unowned salted call instead
         # recomputes the upstream subtree for the offsets join (bounded,
         # 2x) — production paths all own: extract_pages threads
-        # persist_to, lineage pre-persists and passes cache=False.
+        # persist_to, lineage pre-persists and passes none.
         from pyspark import StorageLevel
 
         pages = pages.persist(StorageLevel.MEMORY_AND_DISK)

@@ -51,7 +51,7 @@ import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
-from . import staging_path
+from . import stage
 
 # Densitometric operating point (Boilerpipe NumWordsRules uses 10 words /
 # 0.33 link density; 8 keeps the shortest synthetic paragraph clear of the
@@ -1564,7 +1564,7 @@ def html_title_meta(pages: DataFrame) -> DataFrame:
 # DuckDB staging (materialized input + materialized main-content expected)
 # ---------------------------------------------------------------------------
 
-_STAGED: dict[str, dict[str, str]] = {}
+_HTML_TABLES = ("html_pages", "html_main", "html_anchors", "robots_pages")
 
 
 def stage_html_tables(sf_dir: str) -> dict[str, str]:
@@ -1578,58 +1578,44 @@ def stage_html_tables(sf_dir: str) -> dict[str, str]:
     expected.stage_expected_tables). Pure Python — callable from
     oracle_sql(), which has no SparkSession."""
 
-    sf_dir = os.path.normpath(sf_dir)
-    if sf_dir in _STAGED:
-        return _STAGED[sf_dir]
-    base = staging_path("html", sf_dir)
-    os.makedirs(base, exist_ok=True)
-    paths = {
-        "html_pages": os.path.join(base, "html_pages.parquet"),
-        "html_main": os.path.join(base, "html_main.parquet"),
-        "html_anchors": os.path.join(base, "html_anchors.parquet"),
-        "robots_pages": os.path.join(base, "robots_pages.parquet"),
-    }
-    docs = pd.read_parquet(
-        os.path.join(sf_dir, "documents.parquet"),
-        columns=["doc_id", "text", "source", "lang"],
-    )
-    htmls = [
-        html_for(d, t, s, g)
-        for d, t, s, g in zip(docs["doc_id"], docs["text"], docs["source"], docs["lang"])
-    ]
-    urls = [page_url(d, s) for d, s in zip(docs["doc_id"], docs["source"])]
-    pd.DataFrame(
-        {
-            "doc_id": docs["doc_id"].astype("int64"),
-            "url": urls,
-            "html": htmls,  # VARCHAR on purpose: the twin regexes run on it
-            "lang": docs["lang"],
+    def build(tmp: str) -> None:
+        docs = pd.read_parquet(
+            os.path.join(sf_dir, "documents.parquet"),
+            columns=["doc_id", "text", "source", "lang"],
+        )
+        rows = list(zip(docs["doc_id"], docs["text"], docs["source"], docs["lang"]))
+        htmls = [html_for(d, t, s, g) for d, t, s, g in rows]
+        urls = [page_url(d, s) for d, s in zip(docs["doc_id"], docs["source"])]
+        ids = docs["doc_id"].astype("int64")
+        os.makedirs(tmp)
+        frames = {
+            # VARCHAR html on purpose: the twin regexes run on it
+            "html_pages": pd.DataFrame(
+                {"doc_id": ids, "url": urls, "html": htmls, "lang": docs["lang"]}
+            ),
+            "html_main": main_frame(
+                docs["doc_id"], urls, [extract_main_py(h) for h in htmls]
+            ),
+            "html_anchors": anchor_frame(docs["doc_id"], htmls),
+            # robots INPUT twin (VARCHAR html: the robots DuckDB oracle
+            # COMPUTES the directive extraction with SQL regexes over it)
+            "robots_pages": pd.DataFrame(
+                {
+                    "doc_id": ids,
+                    "url": urls,
+                    "html": [robots_html_for(d, t, s, g) for d, t, s, g in rows],
+                }
+            ),
         }
-    ).to_parquet(paths["html_pages"], index=False)
+        for name, frame in frames.items():
+            frame.to_parquet(os.path.join(tmp, f"{name}.parquet"), index=False)
 
-    main_frame(
-        docs["doc_id"], urls, [extract_main_py(h) for h in htmls]
-    ).to_parquet(paths["html_main"], index=False)
-
-    anchor_frame(docs["doc_id"], htmls).to_parquet(
-        paths["html_anchors"], index=False
+    return stage(
+        "html", sf_dir, build,
+        layout=lambda base: {
+            name: os.path.join(base, f"{name}.parquet") for name in _HTML_TABLES
+        },
     )
-    # robots INPUT twin (VARCHAR html: the robots DuckDB oracle COMPUTES
-    # the directive extraction with SQL regexes over it)
-    pd.DataFrame(
-        {
-            "doc_id": docs["doc_id"].astype("int64"),
-            "url": urls,
-            "html": [
-                robots_html_for(d, t, s, g)
-                for d, t, s, g in zip(
-                    docs["doc_id"], docs["text"], docs["source"], docs["lang"]
-                )
-            ],
-        }
-    ).to_parquet(paths["robots_pages"], index=False)
-    _STAGED[sf_dir] = paths
-    return paths
 
 
 # --- robots.txt FILE parsing + allow/deny decisions --------------------------

@@ -524,14 +524,14 @@ def run_extraction(
         # another run meanwhile)
         tables = dict.fromkeys(EXAM_TABLES)
         if n_pages:
-            # cache=False: `paged` is already persisted above, so the salted
-            # path's offsets join reads the cache without pinning a second
-            # copy per run (foreachBatch calls this every micro-batch)
+            # no persist_to: `paged` is already persisted above, so the
+            # salted path's offsets join reads the cache without pinning a
+            # second copy per run (foreachBatch calls this every micro-batch)
             # AUTO salt resolves against the PERSISTED page frame (cache
             # read, no UDF re-execution)
             chunk = resolve_salt_chunk(paged, cfg.salt_chunk_size)
             counted = with_page_numbering(
-                paged.filter(F.col("q_count") > 0), chunk, cache=False
+                paged.filter(F.col("q_count") > 0), chunk
             )
             # keys from ALL pages (no lang filter), matching
             # extract_questions: an answer-key page is mostly digit/letter

@@ -21,7 +21,7 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from . import staging_path
+from . import stage
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -404,56 +404,41 @@ def synth_media_frame(
     )
 
 
-_MEDIA_EXPECTED: dict[str, str] = {}
-
-
 def stage_media_expected(sf_dir: str) -> str:
     """Expected media_featurize parquet (memoized per sf_dir): the same
     synth + sniff composition run pure-Python over the documents table —
     matching hashes certify the Arrow plumbing end to end."""
-    import os
 
-    sf_dir = os.path.normpath(sf_dir)
-    if sf_dir in _MEDIA_EXPECTED:
-        return _MEDIA_EXPECTED[sf_dir]
-    import duckdb
+    def build(tmp: str) -> None:
+        import duckdb
 
-    path = staging_path("media", sf_dir, ".parquet")
-    if os.path.exists(path):
-        # disk cache (same contract as the charset/pack stagers): the file
-        # persists across processes and is invalidated BY HAND after a
-        # kernel change (CLAUDE.md: delete $TMPDIR/enem_media_*). Without
-        # this check every bench/parity PROCESS re-ran the single-threaded
-        # synth+decode staging — ~43 s at sf0.1 since the jpeg third
-        # became a real progressive encode (round-5 regression finding).
-        _MEDIA_EXPECTED[sf_dir] = path
-        return path
-    rows = duckdb.sql(
-        "SELECT doc_id, text FROM "
-        f"read_parquet('{sf_dir}/documents.parquet') ORDER BY doc_id"
-    ).fetchall()
-    recs = []
-    for doc_id, text in rows:
-        payload = synth_media_payload(int(doc_id), text)
-        s = sniff_media(payload)
-        # the SAME shared feature function the Spark UDF runs — pixel-real
-        # for the PNG third of the corpus, digest fake for the rest
-        feats = media_feature_vector(payload, deterministic_fake=True)
-        rz = resize_image(payload, RESIZE_PARITY_W, RESIZE_PARITY_H)
-        recs.append(
-            {
-                "media_id": int(doc_id),
-                "media_type": "image",
-                "n_bytes": len(payload),
-                "content_md5": hashlib.md5(payload).hexdigest(),
-                **s,
-                "px_mean": feats[0],
-                "px_std": feats[1],
-                "px_entropy": feats[4],
-                "resized_md5": hashlib.md5(rz).hexdigest() if rz else None,
-                "n_resized_bytes": len(rz) if rz else 0,
-            }
-        )
-    pd.DataFrame(recs).to_parquet(path, index=False)
-    _MEDIA_EXPECTED[sf_dir] = path
-    return path
+        rows = duckdb.sql(
+            "SELECT doc_id, text FROM "
+            f"read_parquet('{sf_dir}/documents.parquet') ORDER BY doc_id"
+        ).fetchall()
+        recs = []
+        for doc_id, text in rows:
+            payload = synth_media_payload(int(doc_id), text)
+            s = sniff_media(payload)
+            # the SAME shared feature function the Spark UDF runs —
+            # pixel-real for the PNG third of the corpus, digest fake for
+            # the rest
+            feats = media_feature_vector(payload, deterministic_fake=True)
+            rz = resize_image(payload, RESIZE_PARITY_W, RESIZE_PARITY_H)
+            recs.append(
+                {
+                    "media_id": int(doc_id),
+                    "media_type": "image",
+                    "n_bytes": len(payload),
+                    "content_md5": hashlib.md5(payload).hexdigest(),
+                    **s,
+                    "px_mean": feats[0],
+                    "px_std": feats[1],
+                    "px_entropy": feats[4],
+                    "resized_md5": hashlib.md5(rz).hexdigest() if rz else None,
+                    "n_resized_bytes": len(rz) if rz else 0,
+                }
+            )
+        pd.DataFrame(recs).to_parquet(tmp, index=False)
+
+    return stage("media", sf_dir, build, ".parquet")

@@ -33,7 +33,7 @@ import os
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from . import staging_path
+from . import stage
 from .textops import _tokens
 
 PACK_CAPACITY = 128
@@ -104,9 +104,6 @@ def pack_sequences(
     return counted.groupBy("shard").applyInPandas(_pack, _PACK_SCHEMA)
 
 
-_STAGED: dict[tuple[str, int, int], str] = {}
-
-
 def stage_pack_expected(
     sf_dir: str,
     capacity: int = PACK_CAPACITY,
@@ -116,41 +113,38 @@ def stage_pack_expected(
     twin tokenizer (identical to the token_count oracle, already
     hash-proven against Spark's split), then the SAME pack_bins kernel per
     shard. Memoized per (sf_dir, capacity, n_shards)."""
-    import duckdb
 
-    sf_dir = os.path.normpath(sf_dir)
-    key = (sf_dir, capacity, n_shards)
-    if key in _STAGED:
-        return _STAGED[key]
-    path = staging_path(
-        "pack_expected", sf_dir, f"_{capacity}x{n_shards}.parquet"
-    )
-    counts = duckdb.sql(
-        rf"""
-        SELECT doc_id,
-               -- pmod, not DuckDB's sign-preserving %: a content-addressed
-               -- doc_id (xxhash64, negative ~half the time) must land in
-               -- the same shard the engine's F.pmod puts it in
-               ((doc_id % {n_shards}) + {n_shards}) % {n_shards} AS shard,
-               len(regexp_split_to_array(trim(coalesce(text, '')), '\s+'))
-                 AS n_tokens
-        FROM read_parquet('{os.path.join(sf_dir, "documents.parquet")}')
-        ORDER BY shard, doc_id
-        """
-    ).df()
-    frames = [pd.DataFrame(columns=_PACK_COLS)]  # 0-row base: an empty
-    # documents table stages an empty parquet instead of crashing
-    # pd.concat([]) where the Spark side succeeds
-    for shard, grp in counts.groupby("shard"):
-        rows = pack_bins(list(zip(grp["doc_id"], grp["n_tokens"])), capacity)
-        frames.append(
-            pd.DataFrame(
-                [(d, int(shard), b, off, n) for d, b, off, n in rows],
-                columns=_PACK_COLS,
+    def build(tmp: str) -> None:
+        import duckdb
+
+        counts = duckdb.sql(
+            rf"""
+            SELECT doc_id,
+                   -- pmod, not DuckDB's sign-preserving %: a content-addressed
+                   -- doc_id (xxhash64, negative ~half the time) must land in
+                   -- the same shard the engine's F.pmod puts it in
+                   ((doc_id % {n_shards}) + {n_shards}) % {n_shards} AS shard,
+                   len(regexp_split_to_array(trim(coalesce(text, '')), '\s+'))
+                     AS n_tokens
+            FROM read_parquet('{os.path.join(sf_dir, "documents.parquet")}')
+            ORDER BY shard, doc_id
+            """
+        ).df()
+        frames = [pd.DataFrame(columns=_PACK_COLS)]  # 0-row base: an empty
+        # documents table stages an empty parquet instead of crashing
+        # pd.concat([]) where the Spark side succeeds
+        for shard, grp in counts.groupby("shard"):
+            rows = pack_bins(list(zip(grp["doc_id"], grp["n_tokens"])), capacity)
+            frames.append(
+                pd.DataFrame(
+                    [(d, int(shard), b, off, n) for d, b, off, n in rows],
+                    columns=_PACK_COLS,
+                )
             )
+        pd.concat(frames, ignore_index=True).astype("int64").to_parquet(
+            tmp, index=False
         )
-    pd.concat(frames, ignore_index=True).astype("int64").to_parquet(
-        path, index=False
+
+    return stage(
+        "pack_expected", sf_dir, build, f"_{capacity}x{n_shards}.parquet"
     )
-    _STAGED[key] = path
-    return path

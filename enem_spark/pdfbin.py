@@ -40,7 +40,7 @@ import math
 import re
 import zlib
 
-from . import staging_path
+from . import stage
 from .layout import IMG_MARKER  # layout.py is pure stdlib — one sentinel
 
 WS = b"\x00\t\n\x0c\r "
@@ -1239,7 +1239,6 @@ def synth_pdf(
     return bytes(out)
 
 
-_PDF_EXPECTED: dict[str, str] = {}
 PDF_DECODE_DOCS = 32
 
 
@@ -1247,35 +1246,30 @@ def stage_pdf_expected(sf_dir: str) -> str:
     """Expected (doc_id, page_idx, page_text, n_spans) parquet for the
     `pdf_decode` driver twin — built from the SOURCE lines before any PDF
     byte exists (memoized per sf_dir)."""
-    import os
 
-    import pandas as pd
+    def build(tmp: str) -> None:
+        import duckdb
+        import pandas as pd
 
-    sf_dir = os.path.normpath(sf_dir)
-    if sf_dir in _PDF_EXPECTED:
-        return _PDF_EXPECTED[sf_dir]
-    import duckdb
+        rows = duckdb.sql(
+            "SELECT doc_id, text FROM "
+            f"read_parquet('{sf_dir}/documents.parquet') "
+            f"ORDER BY doc_id LIMIT {PDF_DECODE_DOCS}"
+        ).fetchall()
+        recs = []
+        for doc_id, text in rows:
+            for page_idx, lines in enumerate(doc_pdf_lines(text)):
+                recs.append(
+                    {
+                        "doc_id": int(doc_id),
+                        "page_idx": page_idx,
+                        "page_text": "\n".join(lines),
+                        "n_spans": len(lines),
+                    }
+                )
+        pd.DataFrame(recs).to_parquet(tmp, index=False)
 
-    path = staging_path("pdfexp", sf_dir, ".parquet")
-    rows = duckdb.sql(
-        "SELECT doc_id, text FROM "
-        f"read_parquet('{sf_dir}/documents.parquet') "
-        f"ORDER BY doc_id LIMIT {PDF_DECODE_DOCS}"
-    ).fetchall()
-    recs = []
-    for doc_id, text in rows:
-        for page_idx, lines in enumerate(doc_pdf_lines(text)):
-            recs.append(
-                {
-                    "doc_id": int(doc_id),
-                    "page_idx": page_idx,
-                    "page_text": "\n".join(lines),
-                    "n_spans": len(lines),
-                }
-            )
-    pd.DataFrame(recs).to_parquet(path, index=False)
-    _PDF_EXPECTED[sf_dir] = path
-    return path
+    return stage("pdfexp", sf_dir, build, ".parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -1671,30 +1665,22 @@ def expected_image_rows(doc_id: int) -> list[dict]:
     return rows
 
 
-_PDFIMG_EXPECTED: dict[str, str] = {}
-
-
 def stage_pdfimg_expected(sf_dir: str) -> str:
     """Expected pdf_images parquet for the driver twin (memoized per
     sf_dir) — built purely from the image SPECS, no PDF bytes."""
-    import os
 
-    import pandas as pd
+    def build(tmp: str) -> None:
+        import duckdb
+        import pandas as pd
 
-    sf_dir = os.path.normpath(sf_dir)
-    if sf_dir in _PDFIMG_EXPECTED:
-        return _PDFIMG_EXPECTED[sf_dir]
-    import duckdb
+        rows = duckdb.sql(
+            "SELECT doc_id FROM "
+            f"read_parquet('{sf_dir}/documents.parquet') "
+            f"ORDER BY doc_id LIMIT {PDF_IMAGE_DOCS}"
+        ).fetchall()
+        recs = []
+        for (doc_id,) in rows:
+            recs.extend(expected_image_rows(int(doc_id)))
+        pd.DataFrame(recs).to_parquet(tmp, index=False)
 
-    path = staging_path("pdfimg", sf_dir, ".parquet")
-    rows = duckdb.sql(
-        "SELECT doc_id FROM "
-        f"read_parquet('{sf_dir}/documents.parquet') "
-        f"ORDER BY doc_id LIMIT {PDF_IMAGE_DOCS}"
-    ).fetchall()
-    recs = []
-    for (doc_id,) in rows:
-        recs.extend(expected_image_rows(int(doc_id)))
-    pd.DataFrame(recs).to_parquet(path, index=False)
-    _PDFIMG_EXPECTED[sf_dir] = path
-    return path
+    return stage("pdfimg", sf_dir, build, ".parquet")

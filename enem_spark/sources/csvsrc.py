@@ -44,10 +44,6 @@ from pyspark.sql import DataFrame, SparkSession, types as T
 from .jsonl import doc_url  # one url scheme across container formats (re-exported
 # for tests; the staging helper itself lives in jsonl.stage_line_shards)
 
-# bump when encode_row/BAD_ROWS/record shape change: the staging tag
-# hashes this, so stale staging cannot silently certify an old encoder
-_STAGING_VERSION = 1
-
 CORRUPT_COL = "_corrupt"
 
 CSV_SCHEMA = T.StructType(
@@ -96,9 +92,6 @@ BAD_ROWS = [
 ]
 
 
-_STAGED: dict[str, dict[str, str]] = {}
-
-
 def stage_csv_files(sf_dir: str, n_files: int = 8) -> dict[str, str]:
     """CSV instance of the shared `jsonl.stage_line_shards` protocol
     (round-robin shards, one malformed row per shard, expected parquet
@@ -106,10 +99,7 @@ def stage_csv_files(sf_dir: str, n_files: int = 8) -> dict[str, str]:
     {"csv_dir": ..., "expected": ..., "n_bad": ...}."""
     from .jsonl import stage_line_shards
 
-    out = stage_line_shards(
-        sf_dir, n_files, "csv", _STAGING_VERSION, "csv",
-        encode_row, BAD_ROWS, _STAGED,
-    )
+    out = stage_line_shards(sf_dir, n_files, "csv", "csv", encode_row, BAD_ROWS)
     return {"csv_dir": out["dir"], **{k: v for k, v in out.items() if k != "dir"}}
 
 

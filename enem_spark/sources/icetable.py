@@ -75,7 +75,7 @@ from typing import Any, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from .. import runfs, staging_path
+from .. import runfs, stage
 
 FORMAT_VERSION = 1
 _PART_DIR = "__part"  # synthetic partition dir level (see module docstring)
@@ -853,17 +853,6 @@ class IceTable:
                 # the table schema until publish folds it in)
                 schema = T.StructType.fromJson(r["schema"])
         return self._read_entries(kept, dels, filters, schema=schema)
-
-    def read_planned(
-        self, files: list[str], filters: Sequence[tuple] | None = None
-    ) -> DataFrame:
-        """Rows of an already-planned file list (from plan_files /
-        plan_incremental). Lets a caller that needs BOTH the scan report
-        and the rows plan once instead of walking the snapshot manifests
-        twice — at many-snapshot steady state the duplicated metadata walk
-        doubles planning latency for nothing."""
-        assert self.spark is not None, "read_planned() needs a SparkSession"
-        return self._read_files(files, filters)
 
     def _read_entries(
         self,
@@ -2408,7 +2397,23 @@ def merge_frame(sf_dir: str):
     return pd.DataFrame(rows, columns=cols)
 
 
-_ICE_MERGE_STAGED: dict[str, dict[str, Any]] = {}
+def _html_twin(pdf):
+    """An ice pages frame as its expected twin: ``html`` replaced by its
+    md5 and byte length."""
+    return pdf.drop(columns=["html"]).assign(
+        html_md5=[hashlib.md5(h).hexdigest() for h in pdf["html"]],
+        html_len=[len(h) for h in pdf["html"]],
+    )
+
+
+def _create_first_crawl(path: str, old_pdf) -> IceTable:
+    return create_pandas(
+        path,
+        old_pdf,
+        PAGES_ICE_SCHEMA,
+        partition_by=ICE_TRANSFORMS,
+        sequence=SEQ_OLD,
+    )
 
 
 def stage_ice_merge_base(sf_dir: str) -> dict[str, Any]:
@@ -2420,38 +2425,28 @@ def stage_ice_merge_base(sf_dir: str) -> dict[str, Any]:
     row).  The Spark-side ``IceTable.merge`` itself runs in the driver
     query; a hash match against the twin therefore certifies the whole
     plan-prune-rewrite-commit-read round trip of the merge."""
-    sf_dir = os.path.normpath(sf_dir)
-    if sf_dir in _ICE_MERGE_STAGED:
-        return _ICE_MERGE_STAGED[sf_dir]
-    base = staging_path("ice", sf_dir)
-    table_path = os.path.join(base, "pages_merge")
-    old_pdf, _ = crawl_frames(sf_dir)
-    fix_pdf = merge_frame(sf_dir)
-    if current_version(table_path) < 0:
-        os.makedirs(base, exist_ok=True)
-        create_pandas(
-            table_path,
-            old_pdf,
-            PAGES_ICE_SCHEMA,
-            partition_by=ICE_TRANSFORMS,
-            sequence=SEQ_OLD,
-        )
-    expected_path = os.path.join(base, "expected_merged.parquet")
-    if not os.path.exists(expected_path):
+
+    def build(tmp: str) -> None:
         import pandas as pd
 
-        fixed_urls = set(fix_pdf["url"])
+        old_pdf, _ = crawl_frames(sf_dir)
+        fix_pdf = merge_frame(sf_dir)
+        _create_first_crawl(os.path.join(tmp, "pages_merge"), old_pdf)
         merged = pd.concat(
-            [old_pdf[~old_pdf["url"].isin(fixed_urls)], fix_pdf],
+            [old_pdf[~old_pdf["url"].isin(set(fix_pdf["url"]))], fix_pdf],
             ignore_index=True,
         )
-        merged.drop(columns=["html"]).assign(
-            html_md5=[hashlib.md5(h).hexdigest() for h in merged["html"]],
-            html_len=[len(h) for h in merged["html"]],
-        ).to_parquet(expected_path, index=False)
-    out = {"table": table_path, "expected_merged": expected_path}
-    _ICE_MERGE_STAGED[sf_dir] = out
-    return out
+        _html_twin(merged).to_parquet(
+            os.path.join(tmp, "expected_merged.parquet"), index=False
+        )
+
+    return stage(
+        "ice_merge", sf_dir, build,
+        layout=lambda base: {
+            "table": os.path.join(base, "pages_merge"),
+            "expected_merged": os.path.join(base, "expected_merged.parquet"),
+        },
+    )
 
 
 def takedown_frame(sf_dir: str):
@@ -2473,9 +2468,6 @@ def takedown_frame(sf_dir: str):
     return pd.DataFrame({"url": urls})
 
 
-_ICE_ROWDEL_STAGED: dict[str, dict[str, Any]] = {}
-
-
 def stage_ice_rowdel(sf_dir: str) -> dict[str, Any]:
     """Stage (memoized per process) the ROW-DELETE story's base table —
     the first crawl alone under its own path (`pages_rowdel`, separate
@@ -2486,35 +2478,22 @@ def stage_ice_rowdel(sf_dir: str) -> dict[str, Any]:
     a hash match against the twin therefore certifies the whole
     MOR-commit -> sequence-scoped anti-join -> read round trip (and, for
     the purge, the touched-file rewrite)."""
-    sf_dir = os.path.normpath(sf_dir)
-    if sf_dir in _ICE_ROWDEL_STAGED:
-        return _ICE_ROWDEL_STAGED[sf_dir]
-    base = staging_path("ice", sf_dir)
-    table_path = os.path.join(base, "pages_rowdel")
-    old_pdf, _ = crawl_frames(sf_dir)
-    if current_version(table_path) < 0:
-        os.makedirs(base, exist_ok=True)
-        create_pandas(
-            table_path,
-            old_pdf,
-            PAGES_ICE_SCHEMA,
-            partition_by=ICE_TRANSFORMS,
-            sequence=SEQ_OLD,
-        )
-    expected_path = os.path.join(base, "expected_rowdel.parquet")
-    if not os.path.exists(expected_path):
+
+    def build(tmp: str) -> None:
+        old_pdf, _ = crawl_frames(sf_dir)
+        _create_first_crawl(os.path.join(tmp, "pages_rowdel"), old_pdf)
         gone = set(takedown_frame(sf_dir)["url"])
-        kept = old_pdf[~old_pdf["url"].isin(gone)]
-        kept.drop(columns=["html"]).assign(
-            html_md5=[hashlib.md5(h).hexdigest() for h in kept["html"]],
-            html_len=[len(h) for h in kept["html"]],
-        ).to_parquet(expected_path, index=False)
-    out = {"table": table_path, "expected_rowdel": expected_path}
-    _ICE_ROWDEL_STAGED[sf_dir] = out
-    return out
+        _html_twin(old_pdf[~old_pdf["url"].isin(gone)]).to_parquet(
+            os.path.join(tmp, "expected_rowdel.parquet"), index=False
+        )
 
-
-_ICE_WAP_STAGED: dict[str, dict[str, Any]] = {}
+    return stage(
+        "ice_rowdel", sf_dir, build,
+        layout=lambda base: {
+            "table": os.path.join(base, "pages_rowdel"),
+            "expected_rowdel": os.path.join(base, "expected_rowdel.parquet"),
+        },
+    )
 
 
 def stage_ice_wap(sf_dir: str) -> dict[str, Any]:
@@ -2527,32 +2506,19 @@ def stage_ice_wap(sf_dir: str) -> dict[str, Any]:
     driver query; the hash match certifies that the published main state
     equals exactly base+delta — nothing lost in staging, nothing visible
     early."""
-    sf_dir = os.path.normpath(sf_dir)
-    if sf_dir in _ICE_WAP_STAGED:
-        return _ICE_WAP_STAGED[sf_dir]
-    shared = stage_ice_pages(sf_dir)
-    base = staging_path("ice", sf_dir)
-    table_path = os.path.join(base, "pages_wap")
-    if current_version(table_path) < 0:
-        os.makedirs(base, exist_ok=True)
-        old_pdf, _ = crawl_frames(sf_dir)
-        create_pandas(
-            table_path,
-            old_pdf,
-            PAGES_ICE_SCHEMA,
-            partition_by=ICE_TRANSFORMS,
-            sequence=SEQ_OLD,
-        )
-    out = {
-        "table": table_path,
-        "expected_old": shared["expected_old"],
-        "expected_delta": shared["expected_delta"],
-    }
-    _ICE_WAP_STAGED[sf_dir] = out
-    return out
 
+    def build(tmp: str) -> None:
+        _create_first_crawl(os.path.join(tmp, "pages_wap"), crawl_frames(sf_dir)[0])
 
-_ICE_STAGED: dict[str, dict[str, Any]] = {}
+    def layout(base: str) -> dict[str, Any]:
+        shared = stage_ice_pages(sf_dir)
+        return {
+            "table": os.path.join(base, "pages_wap"),
+            "expected_old": shared["expected_old"],
+            "expected_delta": shared["expected_delta"],
+        }
+
+    return stage("ice_wap", sf_dir, build, layout=layout)
 
 
 def stage_ice_pages(sf_dir: str) -> dict[str, Any]:
@@ -2564,48 +2530,26 @@ def stage_ice_pages(sf_dir: str) -> dict[str, Any]:
     The expected tables are the SOURCE frames pre-write, so a driver hash
     match certifies the whole write -> manifest -> prune -> read round trip
     of the table format, exactly like the WARC twin certifies its encoder."""
-    sf_dir = os.path.normpath(sf_dir)
-    if sf_dir in _ICE_STAGED:
-        return _ICE_STAGED[sf_dir]
-    base = staging_path("ice", sf_dir)
-    table_path = os.path.join(base, "pages")
-    old_pdf, new_pdf = crawl_frames(sf_dir)
-    delta_pdf = delta_frame(sf_dir)
-    if current_version(table_path) < 0:
-        os.makedirs(base, exist_ok=True)
-        table = create_pandas(
-            table_path,
-            old_pdf,
-            PAGES_ICE_SCHEMA,
-            partition_by=ICE_TRANSFORMS,
-            sequence=SEQ_OLD,
-        )
+    names = ("expected_old", "expected_new", "expected_delta")
+
+    def build(tmp: str) -> None:
+        old_pdf, new_pdf = crawl_frames(sf_dir)
+        delta_pdf = delta_frame(sf_dir)
+        table = _create_first_crawl(os.path.join(tmp, "pages"), old_pdf)
         commit_pandas(table, new_pdf, PAGES_ICE_SCHEMA, "overwrite", SEQ_NEW)
         commit_pandas(table, delta_pdf, PAGES_ICE_SCHEMA, "append", SEQ_DELTA)
-    else:
-        table = IceTable(None, table_path)
-        if max(s["sequence"] for s in table.snapshots()) < SEQ_DELTA:
-            # upgrade a table staged before the delta snapshot existed
-            commit_pandas(table, delta_pdf, PAGES_ICE_SCHEMA, "append", SEQ_DELTA)
-    expected = {}
-    for name, pdf in (
-        ("expected_old", old_pdf),
-        ("expected_new", new_pdf),
-        ("expected_delta", delta_pdf),
-    ):
-        path = os.path.join(base, f"{name}.parquet")
-        if not os.path.exists(path):
-            pdf.drop(columns=["html"]).assign(
-                html_md5=[hashlib.md5(h).hexdigest() for h in pdf["html"]],
-                html_len=[len(h) for h in pdf["html"]],
-            ).to_parquet(path, index=False)
-        expected[name] = path
-    out = {
-        "table": table_path,
-        "snap_old": 1,
-        "snap_new": 2,
-        "snap_delta": 3,
-        **expected,
-    }
-    _ICE_STAGED[sf_dir] = out
-    return out
+        for name, pdf in zip(names, (old_pdf, new_pdf, delta_pdf)):
+            _html_twin(pdf).to_parquet(
+                os.path.join(tmp, f"{name}.parquet"), index=False
+            )
+
+    return stage(
+        "ice", sf_dir, build,
+        layout=lambda base: {
+            "table": os.path.join(base, "pages"),
+            "snap_old": 1,
+            "snap_new": 2,
+            "snap_delta": 3,
+            **{n: os.path.join(base, f"{n}.parquet") for n in names},
+        },
+    )

@@ -28,20 +28,15 @@ the raw scan.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
-from .. import staging_path
+from .. import stage
 from .documents_bridge import EPOCH_S  # one epoch: jsonl fetch_ts must sit
 # on the same timeline as the bridge's warc_ts (cross-source joins and
 # decontamination windows key on it) — a re-declared literal could drift
-
-# bump when encode_line/BAD_LINES/record shape change: the staging tag
-# hashes this, so stale staging cannot silently certify an old encoder
-_STAGING_VERSION = 2
 
 CORRUPT_COL = "_corrupt"
 
@@ -80,11 +75,9 @@ def stage_line_shards(
     sf_dir: str,
     n_files: int,
     prefix: str,
-    version: int,
     ext: str,
     encode_fn,
     bad_lines: list[str],
-    memo: dict,
 ) -> dict[str, str]:
     """Shared line-shard staging protocol for the text container sources
     (JSONL + CSV): render ``sf_dir``'s documents table through
@@ -96,36 +89,12 @@ def stage_line_shards(
     displaced nothing. Returns {"dir": ..., "expected": ..., "n_bad": ...}.
 
     Pure Python (duckdb read, no SparkSession — callable from
-    oracle_sql()). The shard count SHAPES the staged layout, so the memo
-    key, staging dir, and done-marker all include it; the dir tag
-    fingerprints the INPUT (size + mtime of documents.parquet) and the
-    encoder ``version`` — a regenerated corpus or a changed encoder can
-    never silently certify against stale staging."""
-    import duckdb
+    oracle_sql()). The shard count SHAPES the staged layout, so it is
+    part of the staging path."""
 
-    sf_dir = os.path.normpath(sf_dir)
-    # the input fingerprint is part of the MEMO key too, not just the dir
-    # tag: an in-process corpus rebuild (bench store delete + regenerate)
-    # would otherwise hit the memo and certify against stale staging —
-    # the stat is a few microseconds per call
-    st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    fp = hashlib.md5(
-        f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}|v{version}".encode()
-    ).hexdigest()[:8]
-    key = f"{sf_dir}|{n_files}|{fp}"
-    if key in memo:
-        return memo[key]
-    base = staging_path(prefix, sf_dir, f"_{fp}_{n_files}")
-    os.makedirs(base, exist_ok=True)
-    shard_dir = os.path.join(base, prefix)
-    os.makedirs(shard_dir, exist_ok=True)
-    expected_path = os.path.join(base, f"{prefix}_expected.parquet")
+    def build(tmp: str) -> None:
+        import duckdb
 
-    done_marker = os.path.join(base, ".staged")
-    if not os.path.exists(done_marker):
-        # the corpus read + encode live INSIDE the guard: they are the
-        # whole staging cost, and an already-staged process must not pay
-        # them just to throw the result away
         rows = duckdb.sql(
             "SELECT doc_id, text, lang, source FROM "
             f"read_parquet('{sf_dir}/documents.parquet') ORDER BY doc_id"
@@ -142,6 +111,8 @@ def stage_line_shards(
             }
             shards[int(doc_id) % n_files].append(encode_fn(rec))
             expected.append(rec)
+        shard_dir = os.path.join(tmp, prefix)
+        os.makedirs(shard_dir)
         for i, lines in enumerate(shards):
             bad = bad_lines[i % len(bad_lines)]
             body = lines[:1] + [bad] + lines[1:] if lines else [bad]
@@ -158,22 +129,25 @@ def stage_line_shards(
                 f.write("\n".join(body) + "\n")
         duckdb.register("expected_df", _to_df(expected))
         duckdb.sql(
-            f"COPY (SELECT * FROM expected_df ORDER BY url) TO '{expected_path}'"
-            " (FORMAT PARQUET)"
+            "COPY (SELECT * FROM expected_df ORDER BY url) TO "
+            f"'{os.path.join(tmp, prefix + '_expected.parquet')}' (FORMAT PARQUET)"
         )
-        with open(done_marker, "w") as f:
-            f.write("ok")
-    out = {"dir": shard_dir, "expected": expected_path, "n_bad": str(n_files)}
-    memo[key] = out
-    return out
+
+    return stage(
+        prefix, sf_dir, build, f"_{n_files}",
+        layout=lambda base: {
+            "dir": os.path.join(base, prefix),
+            "expected": os.path.join(base, f"{prefix}_expected.parquet"),
+            "n_bad": str(n_files),
+        },
+    )
 
 
 def stage_jsonl_files(sf_dir: str, n_files: int = 8) -> dict[str, str]:
     """JSONL instance of `stage_line_shards`; returns
     {"jsonl_dir": ..., "expected": ..., "n_bad": ...}."""
     out = stage_line_shards(
-        sf_dir, n_files, "jsonl", _STAGING_VERSION, "jsonl",
-        encode_line, BAD_LINES, _STAGED,
+        sf_dir, n_files, "jsonl", "jsonl", encode_line, BAD_LINES
     )
     return {"jsonl_dir": out["dir"], **{k: v for k, v in out.items() if k != "dir"}}
 
@@ -184,9 +158,6 @@ def _to_df(expected: list[dict]):
     return pd.DataFrame(
         expected, columns=["url", "fetch_ts", "text", "lang", "source"]
     )
-
-
-_STAGED: dict[str, dict[str, str]] = {}
 
 
 def read_jsonl(spark: SparkSession, path: str) -> DataFrame:

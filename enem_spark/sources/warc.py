@@ -37,7 +37,7 @@ from datetime import datetime, timezone
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from .. import staging_path
+from .. import stage
 
 WARC_MAGIC = b"WARC/1.0"
 EPOCH_S = 1704067200  # 2024-01-01T00:00:00Z — same epoch as documents_bridge
@@ -558,8 +558,6 @@ def wet_texts(records: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Deterministic staging for fixtures + the driver's materialized oracle.
 
-_STAGED: dict[str, dict[str, str]] = {}
-
 
 def stage_warc_files(
     sf_dir: str, n_files: int = 8, gzip_members: bool = True
@@ -579,60 +577,51 @@ def stage_warc_files(
 
     from ..htmlops import html_for, page_url
 
-    sf_dir = os.path.normpath(sf_dir)
-    # memo AND on-disk layout keyed by the FULL parameterization (the
-    # _WET_STAGED discipline): keyed on sf_dir alone, a second call with
-    # different n_files/gzip_members silently got the first call's store
-    key = f"{sf_dir}|{n_files}|{gzip_members}"
-    if key in _STAGED:
-        return _STAGED[key]
-    base = staging_path("warc", sf_dir, f"_{n_files}x{int(gzip_members)}")
-    os.makedirs(base, exist_ok=True)
-    warc_dir = os.path.join(base, "warc")
-    os.makedirs(warc_dir, exist_ok=True)
-    expected_path = os.path.join(base, "warc_expected.parquet")
+    def build(tmp: str) -> None:
+        rows = duckdb.sql(
+            "SELECT doc_id, text, lang, source FROM "
+            f"read_parquet('{sf_dir}/documents.parquet') ORDER BY doc_id"
+        ).fetchall()
 
-    rows = duckdb.sql(
-        "SELECT doc_id, text, lang, source FROM "
-        f"read_parquet('{sf_dir}/documents.parquet') ORDER BY doc_id"
-    ).fetchall()
+        per_file: list[list[bytes]] = [[] for _ in range(n_files)]
+        expected = []
+        for doc_id, text, lang, source in rows:
+            doc_id = int(doc_id)
+            url = page_url(doc_id, source)
+            date = iso_date(EPOCH_S + doc_id)
+            payload = html_for(doc_id, text, source, lang).encode("utf-8")
+            per_file[doc_id % n_files].append(encode_record(url, date, payload))
+            expected.append(
+                {
+                    "url": url,
+                    "warc_date": date,
+                    "html_md5": hashlib.md5(payload).hexdigest(),
+                    "html_len": len(payload),
+                    "http_status": 200,
+                }
+            )
 
-    per_file: list[list[bytes]] = [[] for _ in range(n_files)]
-    expected = []
-    for doc_id, text, lang, source in rows:
-        doc_id = int(doc_id)
-        url = page_url(doc_id, source)
-        date = iso_date(EPOCH_S + doc_id)
-        payload = html_for(doc_id, text, source, lang).encode("utf-8")
-        per_file[doc_id % n_files].append(encode_record(url, date, payload))
-        expected.append(
-            {
-                "url": url,
-                "warc_date": date,
-                "html_md5": hashlib.md5(payload).hexdigest(),
-                "html_len": len(payload),
-                "http_status": 200,
-            }
-        )
+        ext = ".warc.gz" if gzip_members else ".warc"
+        os.makedirs(os.path.join(tmp, "warc"))
+        for i, recs in enumerate(per_file):
+            fname = f"crawl-{i:05d}{ext}"
+            blob = encode_warc_file(
+                [encode_warcinfo(fname)] + recs, gzip_members=gzip_members
+            )
+            with open(os.path.join(tmp, "warc", fname), "wb") as fh:
+                fh.write(blob)
 
-    ext = ".warc.gz" if gzip_members else ".warc"
-    for i, recs in enumerate(per_file):
-        fname = f"crawl-{i:05d}{ext}"
-        blob = encode_warc_file(
-            [encode_warcinfo(fname)] + recs, gzip_members=gzip_members
-        )
-        with open(os.path.join(warc_dir, fname), "wb") as fh:
-            fh.write(blob)
+        pd.DataFrame(expected).astype(
+            {"html_len": "int64", "http_status": "int32"}
+        ).to_parquet(os.path.join(tmp, "warc_expected.parquet"), index=False)
 
-    pd.DataFrame(expected).astype(
-        {"html_len": "int64", "http_status": "int32"}
-    ).to_parquet(expected_path, index=False)
-
-    _STAGED[key] = {"warc_dir": warc_dir, "expected": expected_path}
-    return _STAGED[key]
-
-
-_WET_STAGED: dict[str, str] = {}
+    return stage(
+        "warc", sf_dir, build, f"_{n_files}x{int(gzip_members)}",
+        layout=lambda base: {
+            "warc_dir": os.path.join(base, "warc"),
+            "expected": os.path.join(base, "warc_expected.parquet"),
+        },
+    )
 
 
 def stage_wet_expected(sf_dir: str, n_shards: int = 8) -> str:
@@ -646,14 +635,7 @@ def stage_wet_expected(sf_dir: str, n_shards: int = 8) -> str:
 
     from ..htmlops import page_url
 
-    sf_dir = os.path.normpath(sf_dir)
-    key = f"{sf_dir}|{n_shards}"
-    if key in _WET_STAGED:
-        return _WET_STAGED[key]
-    base = staging_path("warc", sf_dir)
-    os.makedirs(base, exist_ok=True)
-    expected_path = os.path.join(base, f"wet_expected_{n_shards}.parquet")
-    if not os.path.exists(expected_path):
+    def build(tmp: str) -> None:
         rows = duckdb.sql(
             "SELECT doc_id, text, source FROM "
             f"read_parquet('{sf_dir}/documents.parquet') ORDER BY doc_id"
@@ -694,9 +676,9 @@ def stage_wet_expected(sf_dir: str, n_shards: int = 8) -> str:
             )
         pd.DataFrame(expected).astype(
             {"shard_id": "int32", "n_records": "int64", "wet_len": "int64"}
-        ).to_parquet(expected_path, index=False)
-    _WET_STAGED[key] = expected_path
-    return expected_path
+        ).to_parquet(tmp, index=False)
+
+    return stage("wet", sf_dir, build, f"_{n_shards}.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -812,9 +794,6 @@ def wat_shards(
     return tagged.groupBy("shard_id").applyInPandas(build, WAT_SCHEMA)
 
 
-_WAT_STAGED: dict[str, str] = {}
-
-
 def stage_wat_expected(sf_dir: str, n_shards: int = 8) -> str:
     """Pure-Python twin of the wat_export driver query: rebuild every
     shard's bytes sequentially with the SAME shared functions
@@ -826,14 +805,7 @@ def stage_wat_expected(sf_dir: str, n_shards: int = 8) -> str:
 
     from ..htmlops import html_for, page_url
 
-    sf_dir = os.path.normpath(sf_dir)
-    key = f"{sf_dir}|{n_shards}"
-    if key in _WAT_STAGED:
-        return _WAT_STAGED[key]
-    base = staging_path("warc", sf_dir)
-    os.makedirs(base, exist_ok=True)
-    expected_path = os.path.join(base, f"wat_expected_{n_shards}.parquet")
-    if not os.path.exists(expected_path):
+    def build(tmp: str) -> None:
         rows = duckdb.sql(
             "SELECT doc_id, text, source, lang FROM "
             f"read_parquet('{sf_dir}/documents.parquet') ORDER BY doc_id"
@@ -879,6 +851,6 @@ def stage_wat_expected(sf_dir: str, n_shards: int = 8) -> str:
                 "n_links": "int64",
                 "wat_len": "int64",
             }
-        ).to_parquet(expected_path, index=False)
-    _WAT_STAGED[key] = expected_path
-    return expected_path
+        ).to_parquet(tmp, index=False)
+
+    return stage("wat", sf_dir, build, f"_{n_shards}.parquet")

@@ -31,7 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from . import staging_path
+from . import stage
 
 # word shingles of this size feed minhash + fingerprint
 SHINGLE_N = 3
@@ -2375,9 +2375,6 @@ def compression_ratio(documents: DataFrame) -> DataFrame:
     )
 
 
-_COMP_STAGED: dict[str, str] = {}
-
-
 def stage_compression_expected(sf_dir: str) -> str:
     """Stage (memoized per process) the expected (doc_id, n_bytes, z_bytes)
     parquet for ``sf_dir``: the same pure kernel run without Spark. The
@@ -2387,26 +2384,23 @@ def stage_compression_expected(sf_dir: str) -> str:
 
     import pandas as pd
 
-    sf_dir = os.path.normpath(sf_dir)
-    if sf_dir in _COMP_STAGED:
-        return _COMP_STAGED[sf_dir]
-    path = staging_path("comp", sf_dir, ".parquet")
-    docs = pd.read_parquet(
-        os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
-    )
-    pd.DataFrame(
-        {
-            "doc_id": docs["doc_id"].astype("int64"),
-            "n_bytes": pd.array(
-                [len(t.encode("utf-8")) for t in docs["text"]], dtype="int32"
-            ),
-            "z_bytes": pd.array(
-                [compression_len_py(t) for t in docs["text"]], dtype="int32"
-            ),
-        }
-    ).to_parquet(path, index=False)
-    _COMP_STAGED[sf_dir] = path
-    return path
+    def build(tmp: str) -> None:
+        docs = pd.read_parquet(
+            os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
+        )
+        pd.DataFrame(
+            {
+                "doc_id": docs["doc_id"].astype("int64"),
+                "n_bytes": pd.array(
+                    [len(t.encode("utf-8")) for t in docs["text"]], dtype="int32"
+                ),
+                "z_bytes": pd.array(
+                    [compression_len_py(t) for t in docs["text"]], dtype="int32"
+                ),
+            }
+        ).to_parquet(tmp, index=False)
+
+    return stage("comp", sf_dir, build, ".parquet")
 
 
 def normalize_text_py(s: str) -> str:
@@ -2635,9 +2629,6 @@ def plant_mojibake(documents: DataFrame) -> DataFrame:
     )
 
 
-_MOJI_STAGED: dict[str, str] = {}
-
-
 def stage_mojibake_expected(sf_dir: str) -> str:
     """Stage (memoized per process) the expected mojibake_repair output for
     plant_mojibake(documents) at ``sf_dir`` — same constants, same kernel,
@@ -2647,29 +2638,26 @@ def stage_mojibake_expected(sf_dir: str) -> str:
 
     import pandas as pd
 
-    sf_dir = os.path.normpath(sf_dir)
-    if sf_dir in _MOJI_STAGED:
-        return _MOJI_STAGED[sf_dir]
-    path = staging_path("moji", sf_dir, ".parquet")
-    once = mojibake_plant_py(MOJIBAKE_MARK)
-    twice = mojibake_plant_py(once)
-    docs = pd.read_parquet(
-        os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
-    )
-    planted = [
-        (twice + " " + t) if i % 9 == 0 else (once + " " + t) if i % 3 == 0 else t
-        for i, t in zip(docs["doc_id"], docs["text"])
-    ]
-    repaired = [mojibake_repair_py(t) for t in planted]
-    pd.DataFrame(
-        {
-            "doc_id": docs["doc_id"].astype("int64"),
-            "planted": planted,
-            "repaired": repaired,
-        }
-    ).to_parquet(path, index=False)
-    _MOJI_STAGED[sf_dir] = path
-    return path
+    def build(tmp: str) -> None:
+        once = mojibake_plant_py(MOJIBAKE_MARK)
+        twice = mojibake_plant_py(once)
+        docs = pd.read_parquet(
+            os.path.join(sf_dir, "documents.parquet"), columns=["doc_id", "text"]
+        )
+        planted = [
+            (twice + " " + t) if i % 9 == 0 else (once + " " + t) if i % 3 == 0 else t
+            for i, t in zip(docs["doc_id"], docs["text"])
+        ]
+        repaired = [mojibake_repair_py(t) for t in planted]
+        pd.DataFrame(
+            {
+                "doc_id": docs["doc_id"].astype("int64"),
+                "planted": planted,
+                "repaired": repaired,
+            }
+        ).to_parquet(tmp, index=False)
+
+    return stage("moji", sf_dir, build, ".parquet")
 
 
 # --- Bloom-filter dedup probe (sparse bit-position form) --------------------

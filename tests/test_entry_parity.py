@@ -4,6 +4,8 @@ names + order-insensitive values) at sf0.01."""
 
 from __future__ import annotations
 
+import os
+import tempfile
 from decimal import Decimal
 
 import duckdb
@@ -81,8 +83,8 @@ def _release_cache(spark):
 
 
 _RESULTS: dict[str, dict] = {}
-TIMINGS_PATH = "/tmp/enem_parity_timings.json"
-RESULTS_PATH = "/tmp/enem_parity_results.json"
+TIMINGS_PATH = os.path.join(tempfile.gettempdir(), "enem_parity_timings.json")
+RESULTS_PATH = os.path.join(tempfile.gettempdir(), "enem_parity_results.json")
 
 
 @pytest.fixture(scope="module", autouse=True)
