@@ -24,12 +24,54 @@ only where string state machines genuinely need Python.
 
 import hashlib
 import os
+import re
 import shutil
 import tempfile
 import uuid
+import zipimport
 from typing import Any, Callable
 
 __version__ = "0.1.0"
+
+
+def _install_stat_checked_zip_invalidation() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read its archive only when
+    the archive's (inode, size, mtime) changed since this importer last
+    read it.
+
+    pyspark's worker calls ``importlib.invalidate_caches()`` before every
+    task (``worker_util.setup_spark_files``), and Python 3.11's
+    zipimporter re-reads its archive's whole directory there, eagerly and
+    in pure Python. The workers import pyspark from ``pyspark.zip``
+    (1,328 entries) through one zipimporter per imported package dir, so
+    every task re-read it up to 16 times, 0.15-0.26 s of CPU before its
+    first row. Every Python crossing of the engine unpickles a function
+    from this package, so each worker installs this on its first task;
+    an importer's first invalidation after that still reads, to record
+    the stat. A rewritten archive is still re-read; where invalidation is
+    already lazy (3.12+) the check costs one stat. Installing twice is a
+    no-op."""
+    original = zipimport.zipimporter.invalidate_caches
+    if getattr(original, "_stat_checked", False):
+        return
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            key = None
+        # stat before reading: an archive rewritten during the read
+        # shows a new key next time and is read again
+        if key is None or key != getattr(self, "_read_stat", None):
+            original(self)
+        self._read_stat = key
+
+    invalidate_caches._stat_checked = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+_install_stat_checked_zip_invalidation()
 
 _PACKAGE = os.path.dirname(os.path.abspath(__file__))
 _PACKAGE_FILES: list[str] = []
@@ -98,6 +140,38 @@ def staging_path(
     )
 
 
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _remove_dead_tmps(path: str) -> None:
+    """Delete the ``<path>.tmp-<pid>-<hex>`` siblings of ``path`` whose
+    builder process is gone. A live pid's tmp is left alone: it is a build
+    in flight (or a reused pid, which at worst keeps garbage around)."""
+    head, base = os.path.split(path)
+    pattern = re.compile(re.escape(base) + r"\.tmp-(\d+)-[0-9a-f]+")
+    with os.scandir(head) as entries:
+        dead = [
+            e.path
+            for e in entries
+            if (m := pattern.fullmatch(e.name)) and not _pid_alive(int(m[1]))
+        ]
+    for tmp in dead:
+        if os.path.isdir(tmp):
+            shutil.rmtree(tmp, ignore_errors=True)
+        else:
+            try:
+                os.remove(tmp)
+            except FileNotFoundError:
+                pass
+
+
 def stage(
     kind: str,
     sf_dir: str,
@@ -109,14 +183,19 @@ def stage(
     ``layout(path)`` (default: the path), memoized per process by path.
 
     ``build(tmp)`` writes the staged file or directory at ``tmp``, a
-    private sibling of ``path = staging_path(kind, sf_dir, extra, build)``;
-    the result is published by renaming ``tmp`` into place, so a reader
-    never sees a half-written store and a killed build leaves nothing at
-    ``path``. When another process publishes first, this one's copy is
-    discarded (staged bytes are deterministic)."""
+    private sibling ``<path>.tmp-<pid>-<hex>`` of ``path =
+    staging_path(kind, sf_dir, extra, build)``; the result is published
+    by renaming ``tmp`` into place, so a reader never sees a half-written
+    store and a killed build leaves nothing at ``path``. The first entry
+    for a path in a process removes the tmp siblings that a killed build
+    left behind (:func:`_remove_dead_tmps`). When another process
+    publishes first, this one's copy is discarded (staged bytes are
+    deterministic)."""
     path = staging_path(kind, sf_dir, extra, build)
+    if path not in _MEMO:
+        _remove_dead_tmps(path)
     if not os.path.exists(path):
-        tmp = f"{path}.tmp-{uuid.uuid4().hex[:12]}"
+        tmp = f"{path}.tmp-{os.getpid()}-{uuid.uuid4().hex[:12]}"
         try:
             build(tmp)
             # neither call replaces a published path: rename refuses a

@@ -37,7 +37,6 @@ from __future__ import annotations
 
 import csv
 import io
-import os
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 

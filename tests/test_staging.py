@@ -175,3 +175,31 @@ def test_losing_a_publish_race_keeps_the_winner(tmp_path, staging_dir, as_dir):
     with open(os.path.join(path, "part") if as_dir else path) as f:
         assert f.read() == "winner"
     assert os.listdir(staging_dir) == [os.path.basename(path)]
+
+
+def test_dead_builders_tmp_is_removed_and_a_live_ones_stays(tmp_path, staging_dir):
+    from enem_spark import stage
+
+    sf = _corpus(tmp_path / "sf_sweep", [1])
+
+    def build(tmp):
+        pd.DataFrame({"x": [1]}).to_parquet(tmp)
+
+    path = staging_path("sweep", sf, ".parquet", build)
+    exited = subprocess.run(
+        [sys.executable, "-c", "import os; print(os.getpid())"],
+        capture_output=True, text=True, check=True,
+    )
+    dead = int(exited.stdout)
+    os.makedirs(f"{path}.tmp-{dead}-0123456789ab")  # a killed dir build
+    open(f"{path}.tmp-{dead}-ba9876543210", "w").close()  # a killed file build
+    live = f"{path}.tmp-{os.getpid()}-0123456789ab"
+    os.makedirs(live)
+    other = f"{staging_path('other', sf)}.tmp-{dead}-0123456789ab"
+    os.makedirs(other)
+
+    assert stage("sweep", sf, build, ".parquet") == path
+
+    assert sorted(os.listdir(staging_dir)) == sorted(
+        os.path.basename(p) for p in (path, live, other)
+    )
