@@ -634,9 +634,9 @@ def _stream_note(s: dict) -> str:
 Two-point decomposition of the picked trial (wall = C/p + S): parallel
 compute C = {c_core_s:.0f} core-s ({1000 * c_core_s / n:.2f} ms-core/page),
 serial per-run cost S = {s_serial:.1f} s. S has two parts, measured
-separately: (1) a fixed per-batch protocol cost — ~7 driver actions per
-batch (committed-runs read, resume anti-join, fetch_log + main_content +
-lineage + processed_docs writes, marker append) — isolated by the
+separately: (1) a fixed per-batch protocol cost — the driver actions of
+each batch (committed-runs read, resume anti-join, lineage collect,
+fetch_log + main_content writes, lineage and marker puts) — isolated by the
 batch-amortization A/B below (frozen history; perfbench `html_stream`
 `batch_p50_s` is the live per-batch figure); (2) a component growing with
 batch size (S 14.7 -> 30.9 s from x400 to x800 at identical batch/file

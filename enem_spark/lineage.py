@@ -7,13 +7,17 @@ just loops `extract_pdf`); this module adds both, Spark-first:
 
   * **lineage**: the page stage (``extract.instrumented_page_stage``, one
     Arrow-batched ``mapInPandas``) stamps each row with its task partition
-    id and amortized batch wall time; a per-partition aggregate is appended
-    to a ``lineage`` parquet table next to the outputs (run_id, part_id, input_pages,
-    marker_pages, q_candidates, parse_failures, wall_ms).
+    id and amortized batch wall time; a per-partition aggregate (run_id,
+    part_id, input_pages, marker_pages, q_candidates, parse_failures,
+    wall_ms) is collected on the driver in place of the run's row count and
+    put as one parquet object under ``lineage`` next to the outputs. Its
+    rows scale with partitions, not documents.
   * **checkpoint-resume**: the unit of work is the *document* (page numbering
     is a running sum across a document's pages — resuming mid-document would
-    corrupt X3), so each run appends its completed ``doc_id``s to a
-    ``processed_docs`` table and the next run left-anti-joins against it.
+    corrupt X3), so the next run left-anti-joins the doc_ids that committed
+    runs completed: an exam run records them in a ``processed_docs`` table
+    (a doc with zero questions has no ``questions`` row), an html run reads
+    them from its own ``main_content`` (one row per doc, never rewritten).
     Re-running after a crash therefore touches only unfinished documents, and
     appends are idempotent at the document level.
   * **quarantine**: F1 contract violations (enem_pdf_extractor.py:81-100
@@ -26,11 +30,13 @@ table but ``runs`` holds one ``run_id=<id>`` dir per run:
     out_dir/questions/       exam runs; partitioned by (year, day)
     out_dir/images/          exam runs with process_images
     out_dir/quarantine/      exam runs
-    out_dir/main_content/    html runs
+    out_dir/main_content/    html runs; also their resume set
     out_dir/anchors/         html runs with with_anchors
     out_dir/fetch_log/       html stream and icetable runs
-    out_dir/lineage/
-    out_dir/processed_docs/
+    out_dir/lineage/         one parquet object per run, put by the driver
+                             through runfs (no Spark job)
+    out_dir/processed_docs/  exam runs (html runs of older layouts too;
+                             nothing reads those any more)
     out_dir/runs/            one marker object per committed run, put by the
                              driver through runfs (no Spark job)
 
@@ -131,7 +137,7 @@ def clear_stale_run_dirs(out_dir: str, run_id: str, tables) -> None:
     committed-visible)."""
     fs = runfs.fs_for(out_dir)
     for table in tables:
-        fs.delete_prefix(f"{out_dir}/{table}/run_id={run_id}")
+        fs.delete_prefix(_run_dir(out_dir, table, run_id))
 
 
 RUNS_MARKER_SCHEMA = T.StructType(
@@ -165,8 +171,8 @@ def append_run_marker(
     table append-only. No Spark job runs (``spark`` is unused; the
     signature is shared with every caller). Spark reads the file back with
     exactly ``RUNS_MARKER_SCHEMA``."""
-    buf = pa.BufferOutputStream()
-    pq.write_table(
+    _put_parquet(
+        f"{out_dir}/runs/part-{uuid.uuid4().hex}.parquet",
         pa.table(
             {
                 "run_id": [run_id],
@@ -175,11 +181,24 @@ def append_run_marker(
             },
             schema=_RUNS_MARKER_ARROW,
         ),
-        buf,
     )
-    runfs.fs_for(out_dir).write_bytes(
-        f"{out_dir}/runs/part-{uuid.uuid4().hex}.parquet",
-        buf.getvalue().to_pybytes(),
+
+
+def _put_parquet(path: str, table: pa.Table) -> None:
+    """Publish ``table`` as one parquet object at ``path``: serialized on
+    the driver and put through the store's runfs ``write_bytes``, an
+    atomic whole-object put (a reader sees all of it or none)."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(table, buf)
+    runfs.fs_for(path).write_bytes(path, buf.getvalue().to_pybytes())
+
+
+def _collect_arrow(frame: DataFrame) -> pa.Table:
+    """``frame``'s rows, collected to the driver (one Spark job), as a
+    pyarrow table of ``frame``'s schema — for small aggregates that
+    :func:`write_run_table` then puts without a Spark write."""
+    return pa.Table.from_pylist(
+        [r.asDict() for r in frame.collect()], schema=to_arrow_schema(frame.schema)
     )
 
 
@@ -187,14 +206,28 @@ def append_run_marker(
 _PARTITION_BY = {"questions": ("year", "day")}
 
 
-def write_run_table(out_dir: str, table: str, run_id: str, frame: DataFrame) -> None:
-    """Overwrite ``<table>/run_id=<id>`` with ``frame``: the one Spark
-    write of the run protocol (overwrite makes a crashed attempt's retry
-    under the same id idempotent)."""
+def _run_dir(out_dir: str, table: str, run_id: str) -> str:
+    """The one spelling of a run's dir in a run table."""
+    return f"{out_dir}/{table}/run_id={run_id}"
+
+
+def write_run_table(
+    out_dir: str, table: str, run_id: str, frame: DataFrame | pa.Table
+) -> None:
+    """Overwrite ``<table>/run_id=<id>`` with ``frame`` (overwrite makes a
+    crashed attempt's retry under the same id idempotent). A DataFrame is
+    one Spark write; a pyarrow table (a driver-collected aggregate such as
+    ``lineage``) replaces the dir with one parquet object put through
+    runfs, like the ``runs`` marker, and runs no Spark job."""
+    path = _run_dir(out_dir, table, run_id)
+    if isinstance(frame, pa.Table):
+        runfs.fs_for(path).delete_prefix(path)
+        _put_parquet(f"{path}/part-00000.parquet", frame)
+        return
     writer = frame.write.mode("overwrite")
     if table in _PARTITION_BY:
         writer = writer.partitionBy(*_PARTITION_BY[table])
-    writer.parquet(runfs.spark_path(f"{out_dir}/{table}/run_id={run_id}"))
+    writer.parquet(runfs.spark_path(path))
 
 
 def commit_run(
@@ -207,8 +240,9 @@ def commit_run(
 ) -> None:
     """Commit one run: the whole write side of the exactly-once protocol.
 
-    ``tables`` maps each table the run owns to the frame this attempt
-    writes there, or to None when it writes nothing there. Frames are
+    ``tables`` maps each table the run owns to the frame (a DataFrame, or
+    a pyarrow table collected on the driver) this attempt writes there, or
+    to None when it writes nothing there. Frames are
     written in the map's order (:func:`write_run_table`); the None tables'
     dirs under this id are deleted, since a crashed prior attempt of the
     SAME id may have written them and the marker would make those rows
@@ -438,6 +472,10 @@ def committed_questions(spark: SparkSession, out_dir: str) -> DataFrame | None:
     return committed_table(spark, out_dir, "questions")
 
 
+def _total_pages(lineage_rows: pa.Table) -> int:
+    return sum(lineage_rows.column("input_pages").to_pylist())
+
+
 EXAM_TABLES = ("questions", "lineage", "processed_docs", "images", "quarantine")
 
 
@@ -489,7 +527,10 @@ def run_extraction(
     paged = instrumented_page_stage(pv, cfg).persist()
     new_quarantine = questions = imgs = None
     try:
-        n_pages = paged.count()
+        # the lineage rows stand in for a count: one job fills the cache
+        # and yields both the page total and the table's content
+        lineage_rows = _collect_arrow(partition_lineage(paged))
+        n_pages = _total_pages(lineage_rows)
         n_questions = n_images = 0
 
         new_quarantine = quarantined.select("url", "year", "day", "kind", "color")
@@ -551,7 +592,7 @@ def run_extraction(
             n_questions = questions.count()
             tables.update(
                 questions=questions if n_questions else None,
-                lineage=partition_lineage(paged),
+                lineage=lineage_rows,
                 processed_docs=paged.select("doc_id").distinct(),
             )
             if cfg.process_images:
@@ -595,7 +636,20 @@ def committed_main_content(spark: SparkSession, out_dir: str) -> DataFrame | Non
     return committed_table(spark, out_dir, "main_content")
 
 
-HTML_TABLES = ("main_content", "anchors", "lineage", "processed_docs")
+HTML_TABLES = ("main_content", "anchors", "lineage")
+
+
+def html_partition_lineage(extracted: DataFrame) -> DataFrame:
+    """Per-partition metrics aggregate over the instrumented HTML stage,
+    the html run's ``lineage`` table (run_id lives in the path, as in
+    :func:`partition_lineage`)."""
+    return extracted.groupBy("part_id").agg(
+        F.count("*").alias("input_pages"),
+        F.sum((F.col("main_chars") > 0).cast("long")).alias("nonempty_main"),
+        F.sum(F.col("n_blocks").cast("long")).alias("total_blocks"),
+        F.sum(F.col("n_content_blocks").cast("long")).alias("content_blocks"),
+        F.round(F.sum("wall_ms"), 3).alias("wall_ms"),
+    )
 
 
 def run_html_extraction(
@@ -612,11 +666,15 @@ def run_html_extraction(
     :func:`commit_run`). The unit of work is the document (one page row),
     so resume anti-joins committed doc_ids and a rerun is a no-op.
 
-    Tables: main_content/ lineage/ processed_docs/ runs (+ anchors/ when
-    ``with_anchors``: the per-anchor link-text table, exploded from the
-    same single Arrow crossing) — a directory can host EITHER an ENEM run
-    tree or an html run tree, not both (they share processed_docs/runs
-    semantics but different payload tables).
+    Tables: main_content/ lineage/ runs (+ anchors/ when ``with_anchors``:
+    the per-anchor link-text table, exploded from the same single Arrow
+    crossing). Resume reads the doc_ids of committed ``main_content``,
+    which holds one row per completed doc, so no processed_docs table is
+    written (an out_dir whose older runs wrote one resumes the same: each
+    of those runs wrote main_content for the same docs). ``lineage`` is
+    collected in place of the row count and put from the driver. A
+    directory can host EITHER an ENEM run tree or an html run tree, not
+    both (they share the runs ledger but different payload tables).
 
     with_anchors is NOT retroactive: resume skips every committed doc
     regardless of which flag its run used, so flipping the flag on over an
@@ -645,7 +703,10 @@ def run_html_extraction(
     committed = committed_id_set(out_dir)
     run_id = derive_replay_run_id(committed, run_id)
     work = pages.select("doc_id", "url", "html")
-    done = processed_doc_ids(spark, out_dir, "bigint", committed)
+    done = committed_table(
+        spark, out_dir, "main_content", committed,
+        schema="doc_id bigint, run_id string",
+    )
     # definitely-missing detection: prior committed runs exist and no
     # committed run wrote anchors -> those docs will never appear in it
     backfill_needed = bool(
@@ -655,11 +716,14 @@ def run_html_extraction(
     )
     if done is not None:
         # unbounded across runs -> no broadcast hint; AQE handles small case
-        work = work.join(done, "doc_id", "left_anti")
+        work = work.join(done.select("doc_id"), "doc_id", "left_anti")
 
     extracted = instrumented_html_stage(work, with_anchors=with_anchors).persist()
     try:
-        n_pages = extracted.count()
+        # the lineage rows stand in for a count: one job fills the cache
+        # and yields both the page total and the table's content
+        lineage_rows = _collect_arrow(html_partition_lineage(extracted))
+        n_pages = _total_pages(lineage_rows)
         if n_pages == 0 and fetch_log is None:
             # nothing to do — write nothing (an empty overwrite of a reused
             # run_id dir must not erase a previous attempt's output)
@@ -691,18 +755,7 @@ def run_html_extraction(
                     .filter(F.col("a").isNotNull())
                     .select("doc_id", "url", "a.pos", "a.href", "a.anchor_text")
                 )
-            tables["lineage"] = extracted.groupBy("part_id").agg(
-                F.count("*").alias("input_pages"),
-                F.sum((F.col("main_chars") > 0).cast("long")).alias(
-                    "nonempty_main"
-                ),
-                F.sum(F.col("n_blocks").cast("long")).alias("total_blocks"),
-                F.sum(F.col("n_content_blocks").cast("long")).alias(
-                    "content_blocks"
-                ),
-                F.round(F.sum("wall_ms"), 3).alias("wall_ms"),
-            )
-            tables["processed_docs"] = extracted.select("doc_id").distinct()
+            tables["lineage"] = lineage_rows
         commit_run(spark, out_dir, run_id, tables, n_pages, n_pages)
     finally:
         extracted.unpersist()

@@ -76,6 +76,25 @@ def _start(
     return writer.start()
 
 
+def _persisted_nonempty(process_batch):
+    """``process_batch`` as a foreachBatch body that runs it only on a
+    non-empty micro-batch, over the batch persisted once. Every action on
+    an unpersisted foreachBatch frame re-runs the stream's stateful stage
+    (its state store commit included), so the emptiness probe is a
+    ``count()`` that fills the cache every later action reads; the batch
+    is released in the finally."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df = batch_df.persist()
+        try:
+            if batch_df.count():
+                process_batch(batch_df, batch_id)
+        finally:
+            batch_df.unpersist()
+
+    return run
+
+
 def read_pages_stream(
     spark: SparkSession,
     input_dir: str,
@@ -661,8 +680,8 @@ def start_html_stream(
     STATS_COMPACT_MIN_RUNS = 64
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # batch_df is persisted (_persisted_nonempty): the HTML stage, the
+        # fetch_log write and the stats fold all read the one cached pass
         spark = batch_df.sparkSession
         # A fresh checkpoint incarnation restarts batch ids at 0, so the
         # base id can already be COMMITTED by an older incarnation with
@@ -722,7 +741,10 @@ def start_html_stream(
                     spark, stats_dir, min_runs=STATS_COMPACT_MIN_RUNS
                 )
 
-    return _start(pages_stream, process_batch, checkpoint_dir, available_now)
+    return _start(
+        pages_stream, _persisted_nonempty(process_batch), checkpoint_dir,
+        available_now,
+    )
 
 
 def start_ice_ingest_stream(
@@ -769,8 +791,6 @@ def start_ice_ingest_stream(
         )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         spark = batch_df.sparkSession
         if _committed(spark, batch_id):
             return  # checkpoint replay of an already-committed batch
@@ -803,7 +823,10 @@ def start_ice_ingest_stream(
                 return
             raise
 
-    return _start(pages_stream, process_batch, checkpoint_dir, available_now)
+    return _start(
+        pages_stream, _persisted_nonempty(process_batch), checkpoint_dir,
+        available_now,
+    )
 
 
 def stream_interval_join(

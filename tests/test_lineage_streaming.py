@@ -9,7 +9,7 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from enem_spark import corpus
 from enem_spark.extract import ExtractorConfig, extract_questions
@@ -258,17 +258,16 @@ def test_stale_dirs_from_crashed_attempt_not_committed(spark, pages_df, tmp_path
 
 def _plant_crash_leftovers(spark, out: str) -> None:
     """What a crashed attempt under the uncommitted id ``crashed`` can leave
-    behind: a processed_docs part file cut short mid-write, a garbage part
+    behind: a part file of the table resume reads (processed_docs for exam
+    runs, main_content for html runs) cut short mid-write, a garbage part
     file deep in the questions partition tree, and a main_content file
     whose doc_id has another type than the committed runs'."""
     import glob
 
-    done = sorted(glob.glob(f"{out}/processed_docs/run_id=r1/part-*.parquet"))[0]
+    resumed = "processed_docs" if os.path.isdir(f"{out}/processed_docs") else "main_content"
+    done = sorted(glob.glob(f"{out}/{resumed}/run_id=r1/part-*.parquet"))[0]
     with open(done, "rb") as fh:
         head = fh.read()
-    os.makedirs(f"{out}/processed_docs/run_id=crashed")
-    with open(f"{out}/processed_docs/run_id=crashed/part-00000-cut.parquet", "wb") as fh:
-        fh.write(head[: len(head) // 2])
     os.makedirs(f"{out}/questions/run_id=crashed/year=2021/day=1")
     with open(
         f"{out}/questions/run_id=crashed/year=2021/day=1/part-00000-junk.parquet", "wb"
@@ -278,6 +277,9 @@ def _plant_crash_leftovers(spark, out: str) -> None:
         [("not-a-bigint", "https://ex.org/crashed", "text")],
         "doc_id string, url string, main_text string",
     ).write.parquet(f"{out}/main_content/run_id=crashed")
+    os.makedirs(f"{out}/{resumed}/run_id=crashed", exist_ok=True)
+    with open(f"{out}/{resumed}/run_id=crashed/part-00000-cut.parquet", "wb") as fh:
+        fh.write(head[: len(head) // 2])
 
 
 def _all_rows(df) -> list[str]:
@@ -438,6 +440,86 @@ def test_marker_commit_and_committed_reads_run_no_spark_job(spark, tmp_path):
     done = lineage.processed_doc_ids(spark, out, "string")
     assert sorted(r.doc_id for r in done.collect()) == ["d1", "d2"]
     assert done.schema.simpleString() == "struct<doc_id:string>"
+
+
+def test_html_run_spark_job_count(spark, tmp_path):
+    """One html run over a small frame into a fresh out_dir starts a
+    pinned number of Spark jobs: the lineage aggregate is collected in
+    place of the row count and put from the driver, and no processed_docs
+    table is written (with a Spark-written lineage and processed_docs the
+    same run took 8 jobs: a shuffle and a write for each)."""
+    from enem_spark.lineage import run_html_extraction
+
+    pages = _html_pages(spark, range(6))
+    out = str(tmp_path / "jobs")
+    n = _spark_jobs_started(
+        spark, lambda: run_html_extraction(spark, pages, out, run_id="r1")
+    )
+    assert n == 4
+
+
+def test_html_run_layout_and_driver_lineage_reads_with_spark_lineage(
+    spark, tmp_path
+):
+    """An html run commits no processed_docs dir, and its lineage run dir
+    holds one parquet object. A Spark-written lineage run dir (a DataFrame
+    through write_run_table) and the driver-written one read back as one
+    table with the Spark aggregate's column names and types."""
+    import glob
+
+    from enem_spark import lineage
+
+    out = str(tmp_path / "layout")
+    pages = _html_pages(spark, range(6))
+    s = lineage.run_html_extraction(spark, pages, out, run_id="r1")
+    assert s["input_pages"] == 6
+    assert not os.path.exists(f"{out}/processed_docs")
+    assert os.listdir(f"{out}/lineage/run_id=r1") == ["part-00000.parquet"]
+
+    # the same aggregate, written by Spark under another run id
+    agg = lineage.html_partition_lineage(
+        lineage.instrumented_html_stage(pages.select("doc_id", "url", "html"))
+    )
+    lineage.write_run_table(out, "lineage", "r0", agg)
+    assert glob.glob(f"{out}/lineage/run_id=r0/part-*.parquet")
+
+    both = spark.read.parquet(f"{out}/lineage")
+    want = [(f.name, f.dataType) for f in agg.schema] + [("run_id", T.StringType())]
+    assert [(f.name, f.dataType) for f in both.schema] == want
+    totals = {
+        r.run_id: r.p
+        for r in both.groupBy("run_id").agg(F.sum("input_pages").alias("p")).collect()
+    }
+    assert totals == {"r0": 6, "r1": 6}
+
+
+def test_html_rerun_noop_over_legacy_processed_docs_layout(spark, tmp_path):
+    """An out_dir whose earlier html run was committed with the old layout
+    (a processed_docs dir beside its main_content) resumes from
+    main_content: a rerun over the same pages with a new run_id is a
+    no-op, and new pages are the only ones extracted."""
+    from enem_spark import lineage
+
+    out = str(tmp_path / "legacy")
+    lineage.run_html_extraction(spark, _html_pages(spark, range(6)), out, run_id="r1")
+    spark.createDataFrame([(i,) for i in range(6)], "doc_id bigint").write.mode(
+        "overwrite"
+    ).parquet(f"{out}/processed_docs/run_id=r1")
+    want = _all_rows(lineage.committed_main_content(spark, out))
+
+    s2 = lineage.run_html_extraction(
+        spark, _html_pages(spark, range(6)), out, run_id="r2"
+    )
+    assert s2["input_pages"] == 0 and s2["main_rows"] == 0
+    assert lineage.committed_id_set(out) == {"r1"}
+    assert _all_rows(lineage.committed_main_content(spark, out)) == want
+
+    s3 = lineage.run_html_extraction(
+        spark, _html_pages(spark, range(9)), out, run_id="r3"
+    )
+    assert s3["input_pages"] == 3
+    done = lineage.committed_main_content(spark, out)
+    assert sorted(r.doc_id for r in done.select("doc_id").collect()) == list(range(9))
 
 
 def test_driver_marker_reads_back_through_spark_with_marker_schema(spark, tmp_path):
