@@ -184,13 +184,13 @@ def append_run_marker(
     )
 
 
-def _put_parquet(path: str, table: pa.Table) -> None:
+def _put_parquet(path: str, table: pa.Table, durable: bool = True) -> None:
     """Publish ``table`` as one parquet object at ``path``: serialized on
     the driver and put through the store's runfs ``write_bytes``, an
     atomic whole-object put (a reader sees all of it or none)."""
     buf = pa.BufferOutputStream()
     pq.write_table(table, buf)
-    runfs.fs_for(path).write_bytes(path, buf.getvalue().to_pybytes())
+    runfs.fs_for(path).write_bytes(path, buf.getvalue().to_pybytes(), durable=durable)
 
 
 def _collect_arrow(frame: DataFrame) -> pa.Table:
@@ -218,11 +218,13 @@ def write_run_table(
     crashed attempt's retry under the same id idempotent). A DataFrame is
     one Spark write; a pyarrow table (a driver-collected aggregate such as
     ``lineage``) replaces the dir with one parquet object put through
-    runfs, like the ``runs`` marker, and runs no Spark job."""
+    runfs, like the ``runs`` marker, and runs no Spark job. That put is
+    not fsynced: like the Spark-written tables, the object is read only
+    once the run's marker (the one durable put of a commit) names it."""
     path = _run_dir(out_dir, table, run_id)
     if isinstance(frame, pa.Table):
         runfs.fs_for(path).delete_prefix(path)
-        _put_parquet(f"{path}/part-00000.parquet", frame)
+        _put_parquet(f"{path}/part-00000.parquet", frame, durable=False)
         return
     writer = frame.write.mode("overwrite")
     if table in _PARTITION_BY:

@@ -71,10 +71,17 @@ def scheme_of(path: str) -> str | None:
     return m.group(1) if m else None
 
 
-def _atomic_publish(local_path: str, data: bytes, exclusive: bool) -> None:
+def _atomic_publish(
+    local_path: str, data: bytes, exclusive: bool, durable: bool = True
+) -> None:
     """Write ``data`` so it appears under ``local_path`` with its FULL
     content in one step — the object-store 'whole object or nothing'
     visibility rule, enforced locally with tmp + fsync + link/replace.
+    ``durable=False`` skips both fsyncs (file and directory entry): the
+    put stays whole-or-nothing for readers but is no more crash-durable
+    than a Spark write, for objects that only become visible through a
+    later durable commit object (an fsync's latency is the disk's, and
+    on a shared disk it varies from one call to the next).
     ``exclusive`` gives conditional-put semantics: the race loser gets
     FileExistsError with the content already durable at publish time (a
     create-then-write window would let a concurrent reader observe, or a
@@ -89,8 +96,9 @@ def _atomic_publish(local_path: str, data: bytes, exclusive: bool) -> None:
     tmp = os.path.join(head, f".{tail}.tmp.{os.getpid()}.{uuid.uuid4().hex[:12]}")
     with open(tmp, "wb") as fh:
         fh.write(data)
-        fh.flush()
-        os.fsync(fh.fileno())
+        if durable:
+            fh.flush()
+            os.fsync(fh.fileno())
     try:
         if exclusive:
             try:
@@ -103,6 +111,8 @@ def _atomic_publish(local_path: str, data: bytes, exclusive: bool) -> None:
     finally:
         if tmp is not None and os.path.exists(tmp):
             os.unlink(tmp)
+    if not durable:
+        return
     dfd = os.open(os.path.dirname(local_path) or ".", os.O_RDONLY)
     try:
         os.fsync(dfd)  # make the new directory entry itself durable
@@ -155,10 +165,12 @@ class LocalRunFS:
         with open(self._local(path), "rb") as fh:
             return fh.read()
 
-    def write_bytes(self, path: str, data: bytes) -> None:
+    def write_bytes(self, path: str, data: bytes, durable: bool = True) -> None:
+        """Atomic whole-object put; ``durable=False`` as in
+        :func:`_atomic_publish` (object stores are durable at put time)."""
         local = self._local(path)
         os.makedirs(os.path.dirname(local) or ".", exist_ok=True)
-        _atomic_publish(local, data, exclusive=False)
+        _atomic_publish(local, data, exclusive=False, durable=durable)
 
     def create_exclusive(self, path: str, data: bytes) -> None:
         """Conditional put: raises FileExistsError for the race loser —
@@ -278,10 +290,10 @@ class MockObjectRunFS(LocalRunFS):
         with open(self._logged("read", path), "rb") as fh:
             return fh.read()
 
-    def write_bytes(self, path: str, data: bytes) -> None:
+    def write_bytes(self, path: str, data: bytes, durable: bool = True) -> None:
         local = self._logged("put", path)
         os.makedirs(os.path.dirname(local) or ".", exist_ok=True)
-        _atomic_publish(local, data, exclusive=False)
+        _atomic_publish(local, data, exclusive=False, durable=durable)
 
     def create_exclusive(self, path: str, data: bytes) -> None:
         local = self._logged("conditional_put", path)

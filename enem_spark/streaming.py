@@ -82,7 +82,8 @@ def _persisted_nonempty(process_batch):
     an unpersisted foreachBatch frame re-runs the stream's stateful stage
     (its state store commit included), so the emptiness probe is a
     ``count()`` that fills the cache every later action reads; the batch
-    is released in the finally."""
+    is released in the finally, blocking, so no block removal of this
+    batch still runs when the next one starts."""
 
     def run(batch_df: DataFrame, batch_id: int) -> None:
         batch_df = batch_df.persist()
@@ -90,7 +91,7 @@ def _persisted_nonempty(process_batch):
             if batch_df.count():
                 process_batch(batch_df, batch_id)
         finally:
-            batch_df.unpersist()
+            batch_df.unpersist(blocking=True)
 
     return run
 

@@ -88,6 +88,30 @@ def test_prefix_ops_are_idempotent_and_recursive(mockfs):
     assert not mockfs.exists(f"{base}/run_id=r1")
 
 
+def test_only_the_marker_put_is_fsynced(tmp_path, monkeypatch):
+    """A driver-put run table (lineage) is published whole but not
+    fsynced, like the Spark-written tables beside it; the runs marker,
+    which makes them visible, is fsynced (file and directory entry)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "out")
+    synced = []
+    real_fsync = os.fsync
+    monkeypatch.setattr(runfs.os, "fsync", lambda fd: synced.append(fd) or real_fsync(fd))
+
+    rows = pa.table({"part_id": [0, 1], "input_pages": [3, 4]})
+    lineage.write_run_table(out, "lineage", "r1", rows)
+    assert synced == []
+    run_dir = f"{out}/lineage/run_id=r1"
+    assert os.listdir(run_dir) == ["part-00000.parquet"]
+    assert pq.read_table(f"{run_dir}/part-00000.parquet").equals(rows)
+
+    append_run_marker(None, out, "r1")
+    assert len(synced) == 2
+    assert committed_id_set(out) == {"r1"}
+
+
 def test_crashed_marker_put_leftover_is_invisible(spark, tmp_path, monkeypatch):
     """A crash between the temp write and the publish of a marker put
     leaves the temp file in ``runs/``. Its name must be one every reader
